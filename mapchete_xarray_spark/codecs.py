@@ -19,11 +19,6 @@ metadata ``(w, h, fmt)`` (``BASELINE.json`` input_hint).  Codecs:
   factors ≤ 2.
 - ``webp``: REAL lossless WebP / VP8L bitstream (vp8l.py, LZ77 +
   prefix codes + transforms); lossy VP8 refused.
-- ``gif``: REAL GIF87a/89a bitstream (gif.py, LZW + palettes +
-  interlace); encode requires <= 256 distinct colors.
-- ``bmp``: REAL Windows DIB (bmp.py, palettized/16/24/32 bpp,
-  BITFIELDS masks, RLE8/RLE4).
-- ``ppm``: REAL Netpbm P1-P6 (netpbm.py).
 
 All functions operate on whole numpy arrays and are called from Arrow
 batch UDFs only — never per row from Python.
@@ -329,18 +324,6 @@ def encode_image(arr: np.ndarray, fmt: str) -> bytes:
         from . import vp8l
 
         return vp8l.encode(arr)
-    if fmt == "gif":
-        from . import gif
-
-        return gif.encode(arr)
-    if fmt == "bmp":
-        from . import bmp
-
-        return bmp.encode(arr)
-    if fmt == "ppm":
-        from . import netpbm
-
-        return netpbm.encode(arr)
     raise ValueError(f"unknown fmt: {fmt}")
 
 
@@ -368,27 +351,6 @@ def decode_image(payload: bytes, w: int, h: int, fmt: str) -> np.ndarray:
         arr = _vp8l.decode(bytes(payload))
         if arr.shape[:2] != (h, w):
             raise ValueError(f"webp decodes to {arr.shape[:2]}, metadata says {(h, w)}")
-        return arr
-    if fmt == "gif":
-        from . import gif as _gif
-
-        arr = _gif.decode(bytes(payload))
-        if arr.shape[:2] != (h, w):
-            raise ValueError(f"gif decodes to {arr.shape[:2]}, metadata says {(h, w)}")
-        return arr
-    if fmt == "bmp":
-        from . import bmp as _bmp
-
-        arr = _bmp.decode(bytes(payload))
-        if arr.shape[:2] != (h, w):
-            raise ValueError(f"bmp decodes to {arr.shape[:2]}, metadata says {(h, w)}")
-        return arr
-    if fmt == "ppm":
-        from . import netpbm as _netpbm
-
-        arr = _netpbm.decode(bytes(payload))
-        if arr.shape[:2] != (h, w):
-            raise ValueError(f"ppm decodes to {arr.shape[:2]}, metadata says {(h, w)}")
         return arr
     if fmt not in ("raw", "q8"):
         raise ValueError(f"unknown fmt: {fmt}")

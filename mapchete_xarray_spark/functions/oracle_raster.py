@@ -152,11 +152,6 @@ def base_planes(
     return _base_build(n, zoom, bands)[0]
 
 
-def base_counts(n: int = _N_BASE, zoom: int = _ZOOM, bands: int = _BANDS) -> dict:
-    """{(tile_row, tile_col): n_sources} of the base sink."""
-    return _base_build(n, zoom, bands)[1]
-
-
 def zonal_moment_partials(
     planes: dict, zones: pd.DataFrame, zoom: int = _ZOOM
 ) -> list[tuple]:

@@ -3,8 +3,8 @@
 Round-7 de-stubbing of the last image-codec gap (VERDICT r6 missing
 #3): the reference pipeline's fixtures are real camera files decoded
 by rasterio (``/root/reference/tests/testdata/create_s2_samples.py:
-96-124``); this module gives ``operators/multimodal.decode_external``
-a REAL bitstream path for the most common wild format.  Spec: ITU-T
+96-124``); this module gives ``codecs.decode_image`` and ``avi.py``'s
+MJPEG frames a REAL bitstream path for the most common wild format.  Spec: ITU-T
 T.81 (public).  WebP/video stay honestly stubbed — VP8 is out of
 reach without a codec library; baseline JPEG is not.
 
@@ -33,9 +33,8 @@ per-block Python loop over vectorized-quantized coefficients —
 acceptable because encode runs inside Arrow batches on small images
 and the hot storage formats stay raw/q8/dct.
 
-Called from Arrow batch UDFs only (multimodal.decode_external,
-codecs.encode_image/decode_image dispatch) — never per row from the
-driver.
+Called from Arrow batch UDFs only (codecs.encode_image/decode_image
+dispatch, avi.py frame decode) — never per row from the driver.
 """
 
 from __future__ import annotations

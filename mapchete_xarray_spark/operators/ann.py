@@ -18,8 +18,8 @@ equi-join on the component index) — that is the DuckDB oracle.  The
 DataFrame EXECUTION paths compute candidate cosines map-side instead
 (``_pairwise_cosine``: one double array per side, zip_with+aggregate
 fold — 1/d-th the shuffle of the exploded join), and the exact
-all-pairs/top-k baselines run as Arrow-batched numpy GEMMs
-(``cosine_pairs_arrow_df``, ``cosine_topk_pandas``).
+all-pairs baseline runs as Arrow-batched numpy GEMM
+(``cosine_pairs_arrow_df``).
 """
 
 from __future__ import annotations
@@ -879,54 +879,3 @@ def cosine_pairs_blocked_df(emb, threshold: float = 0.4, n_blocks: int = 8):
         return pd.concat(out, ignore_index=True)
 
     return rep.groupBy("gi", "gj").applyInPandas(gemm, schema)
-
-
-def cosine_topk_pandas(data, queries, k: int, id_col="vec_id", vec_col="embedding"):
-    """Arrow-batched exact top-k for high-dim vectors: the query
-    matrix is broadcast, each data batch does one numpy matmul.
-    Returns (qid, vec_id, cosine, rn)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import functions as F  # noqa: F401
-    from pyspark.sql import types as T
-
-    q_pdf = queries.select(id_col, vec_col).toPandas()
-    qm = np.stack(q_pdf[vec_col].to_numpy()).astype(np.float64)
-    qn = np.linalg.norm(qm, axis=1, keepdims=True)
-    qids = q_pdf[id_col].to_numpy()
-    bc = data.sparkSession.sparkContext.broadcast((qm, qn, qids))
-
-    schema = T.StructType(
-        [
-            T.StructField("qid", T.LongType()),
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("cosine", T.DoubleType()),
-        ]
-    )
-
-    def run(batches):
-        qm, qn, qids = bc.value
-        for b in batches:
-            dm = np.stack(b[vec_col].to_numpy()).astype(np.float64)
-            dn = np.linalg.norm(dm, axis=1, keepdims=True)
-            cos = (qm @ dm.T) / (qn @ dn.T)
-            n_q, n_d = cos.shape
-            out = pd.DataFrame(
-                {
-                    "qid": np.repeat(qids, n_d),
-                    "vec_id": np.tile(b[id_col].to_numpy(), n_q),
-                    "cosine": cos.ravel(),
-                }
-            )
-            yield out[out.qid != out.vec_id]
-
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    allp = data.select(id_col, vec_col).mapInPandas(run, schema)
-    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
-    return (
-        allp.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k)
-        .withColumn("rn", F.col("rn").cast("int"))
-    )

@@ -47,6 +47,7 @@ DuckDB recursive-CTE oracles in queries.py.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -104,6 +105,27 @@ def _edge_digest(e: DataFrame):
     return row.n, row.h
 
 
+def min_label_union_find(n: int, ui: np.ndarray, vi: np.ndarray) -> np.ndarray:
+    """Vectorized hook-and-compress union-find over ``n`` nodes and the
+    index edges ``(ui[j], vi[j])``.  Parents only ever decrease, the
+    component minimum is a fixpoint, and at convergence ``parent[x]``
+    IS the minimum index of x's component.  Shared by the driver
+    finish below and ``labeling.label_plane``'s per-tile run union."""
+    parent = np.arange(n, dtype=np.int64)
+    while True:
+        pu, pv = parent[ui], parent[vi]
+        if bool(np.all(pu == pv)):
+            return parent
+        lo = np.minimum(pu, pv)
+        np.minimum.at(parent, ui, lo)
+        np.minimum.at(parent, vi, lo)
+        while True:
+            pp = parent[parent]
+            if np.array_equal(pp, parent):
+                break
+            parent = pp
+
+
 def _driver_finish(e: DataFrame) -> DataFrame:
     """Finish the CC on the driver: called only when the edge digest
     has shown the set fits ``driver_finish_edges`` (the pull is
@@ -113,7 +135,6 @@ def _driver_finish(e: DataFrame) -> DataFrame:
     single-task limit funnel).  Labels via a vectorized numpy
     hook-and-compress union-find — min-member labels, exactly the star
     iteration's fixpoint labels."""
-    import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
 
@@ -131,24 +152,9 @@ def _driver_finish(e: DataFrame) -> DataFrame:
     us, vs = pdf["u"].to_numpy(), pdf["v"].to_numpy()
     nodes, idx = np.unique(np.concatenate([us, vs]), return_inverse=True)
     ui, vi = idx[: len(us)], idx[len(us):]
-    # hook-and-compress min-label union-find: node indices are sorted
-    # by node VALUE (np.unique), so index-space minima are value-space
-    # minima; parents only ever decrease, the component minimum is a
-    # fixpoint, and at convergence every node's parent IS its
-    # component's minimum member.
-    parent = np.arange(len(nodes))
-    while True:
-        pu, pv = parent[ui], parent[vi]
-        if bool(np.all(pu == pv)):
-            break
-        lo = np.minimum(pu, pv)
-        np.minimum.at(parent, ui, lo)
-        np.minimum.at(parent, vi, lo)
-        while True:
-            pp = parent[parent]
-            if np.array_equal(pp, parent):
-                break
-            parent = pp
+    # node indices are sorted by node VALUE (np.unique), so index-space
+    # minima are value-space minima
+    parent = min_label_union_find(len(nodes), ui, vi)
     return spark.createDataFrame(
         pd.DataFrame({"id": nodes, "component": nodes[parent]}), schema
     )

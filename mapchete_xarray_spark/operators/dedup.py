@@ -652,31 +652,6 @@ def simhash_pairs_df(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
     )
 
 
-def ngrams_df(docs: DataFrame, n: int = 3, with_h: bool = False) -> DataFrame:
-    """(doc_id, tok, h60[, h]) distinct character n-grams with the
-    60-bit refine fingerprint (shape-compatible with _jaccard_refine).
-    ``with_h`` adds the 32-bit minhash input so the grams can feed
-    minhash_signatures_df (the over-threshold LSH candidate path)."""
-    cols = [
-        "doc_id",
-        "tok",
-        "cast(conv(substring(md5(tok), 1, 15), 16, 10) as bigint) as h60",
-    ]
-    if with_h:
-        cols.append("cast(conv(substring(md5(tok), 1, 8), 16, 10) as bigint) as h")
-    return (
-        docs.where(F.length("text") >= n)
-        # per-doc distinct is doc-local: in-row array_distinct instead
-        # of a global distinct() Exchange (same rule as tokens_df)
-        .selectExpr(
-            "doc_id",
-            f"explode(array_distinct(transform(sequence(1, length(text) - {n - 1}), "
-            f"p -> substring(text, p, {n})))) as tok",
-        )
-        .selectExpr(*cols)
-    )
-
-
 def _ngram_candidate_estimate(meta: DataFrame) -> int:
     """EXACT candidate-pair count of the (lang, length-band ± 1)
     blocking join, from per-bucket sizes only.  The per-bucket count

@@ -43,6 +43,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import grid
+from .cc import connected_components, min_label_union_find
 
 _SCAN_SCHEMA = T.StructType(
     [
@@ -116,22 +117,8 @@ def label_plane(arr: np.ndarray, nodata=None):
         # dedup edge pairs (many pixel pairs per run pair)
         pk = np.unique(ui * k + vi)
         ui, vi = pk // k, pk % k
-    # hook-and-compress min-label union-find (same kernel as cc.py's
-    # driver finish): at convergence parent[r] = min run id of r's
-    # component
-    parent = np.arange(k, dtype=np.int64)
-    while True:
-        pu, pv = parent[ui], parent[vi]
-        if bool(np.all(pu == pv)):
-            break
-        lo = np.minimum(pu, pv)
-        np.minimum.at(parent, ui, lo)
-        np.minimum.at(parent, vi, lo)
-        while True:
-            pp = parent[parent]
-            if np.array_equal(pp, parent):
-                break
-            parent = pp
+    # at convergence parent[r] = min run id of r's component
+    parent = min_label_union_find(k, ui, vi)
     # compaction: first-encounter order over runs in scan order == the
     # ascending order of the component-min roots
     uniq_roots = np.unique(parent)
@@ -283,8 +270,6 @@ def _labeled_nodes(
     ncols, lmax)`` where ``labeled`` has one row per LOCAL component:
     (id, tile_index, val, n_px, min_r, min_c, max_r, max_c,
     component)."""
-    from .cc import connected_components
-
     zoom_v = int(zoom)
     tile_px = pyr.tile_size * pyr.metatiling
     ncols = pyr.matrix_width(zoom_v)

@@ -8,31 +8,16 @@ Real in this sandbox (numpy-only):
   the "feature-extract" stage of a training-data pipeline.
 - ``resize_images``: nearest-neighbor resize to a target (w, h),
   re-encode with the same codec — the canonical preprocessing op.
+- ``sample_video_frames`` (r8): REAL video frame sampling for
+  MJPEG-in-AVI payloads — avi.py walks the RIFF container (pure
+  struct), each frame chunk is a standalone baseline JPEG jpeg.decode
+  handles; every-Nth / evenly-spaced / timestamp sampling, decode
+  cost per sampled frame only.
+- ``audio_features``: rms / zcr / spectral centroid over PCM16 clips.
 
-- ``decode_external(fmt='png')``: REAL bitstream PNG decode (stdlib
-  zlib + numpy, codecs.py) — emits fmt='raw' rows every downstream
-  operator consumes unchanged.
-- ``decode_external(fmt='jpeg')``: REAL baseline JFIF decode (pure
-  numpy Huffman + vectorized IDCT, jpeg.py), cross-checked against
-  the JVM ImageIO decoder via Spark's image datasource.
-- ``sample_video_frames`` + ``decode_external(fmt='mjpeg')`` (r8):
-  REAL video frame sampling for MJPEG-in-AVI payloads — avi.py walks
-  the RIFF container (pure struct), each frame chunk is a standalone
-  baseline JPEG jpeg.decode handles; every-Nth / evenly-spaced /
-  timestamp sampling, decode cost per sampled frame only.
-
-- ``decode_external(fmt='webp')`` / ``(fmt='gif')`` (r8): REAL
-  lossless-WebP (vp8l.py) and GIF (gif.py) bitstream decodes;
-  ``sample_video_frames`` sniffs the container and also samples
-  animated WebP and animated GIF with spec compositing.
-
-STUBBED (libs not in container; the Spark-side plumbing — schema,
-batch shape, partitioning — is real and tested):
-- Lossy VP8 inside WebP: needs a real codec library (RFC 6386's
-  probability/dequant tables are not reproducible here); raises
-  NotImplementedError naming it.  Likewise inter-frame video codecs
-  (h264/VP9/…) inside AVI refuse with the fourcc — only MJPG
-  streams decode without ffmpeg.
+STUBBED (libs not in container): inter-frame video codecs
+(h264/VP9/…) inside AVI refuse with the fourcc — only MJPG streams
+decode without ffmpeg.
 """
 
 from __future__ import annotations
@@ -164,177 +149,6 @@ def resize_images(images: DataFrame, target_w: int, target_h: int) -> DataFrame:
     )
 
 
-def augment_images(
-    images: DataFrame,
-    crop_w: int,
-    crop_h: int,
-    seed: int = 0,
-    flip_prob: float = 0.5,
-    brightness: float = 0.2,
-) -> DataFrame:
-    """Training-data augmentation: seeded random crop + horizontal
-    flip + brightness jitter, Arrow-batched (decode per (w, h, fmt)
-    cohort, transform vectorized, re-encode per image).
-
-    REPRODUCIBILITY is the design constraint: each image's RNG is
-    seeded from md5(image_id) ⊕ seed, NOT from the task/partition, so
-    the augmentation of a given image is identical under any
-    partitioning, any retry, any cluster size — a re-run of a 10^12
-    row job (or a replayed micro-batch) produces byte-identical
-    samples.  Crops larger than the source clamp to the full image;
-    output is always (crop_w, crop_h) via nearest resample of the
-    cropped window."""
-    import hashlib
-
-    out_schema = T.StructType(
-        [
-            T.StructField("image_id", T.StringType(), False),
-            T.StructField("bytes", T.BinaryType(), False),
-            T.StructField("w", T.IntegerType(), False),
-            T.StructField("h", T.IntegerType(), False),
-            T.StructField("fmt", T.StringType(), False),
-            T.StructField("flipped", T.BooleanType(), False),
-            T.StructField("crop_x", T.IntegerType(), False),
-            T.StructField("crop_y", T.IntegerType(), False),
-        ]
-    )
-    fp, br = float(flip_prob), float(brightness)
-
-    def _img_rng(image_id: str) -> np.random.Generator:
-        h64 = int.from_bytes(
-            hashlib.md5(image_id.encode()).digest()[:8], "big"
-        )
-        return np.random.default_rng(h64 ^ (int(seed) & 0xFFFFFFFFFFFFFFFF))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            if not len(b):
-                continue
-            rows = []
-            for (w, h, fmt), pos in b.groupby(["w", "h", "fmt"], sort=False).indices.items():
-                sub = b.iloc[pos]
-                w, h = int(w), int(h)
-                stack = _stack_group(sub, w, h, str(fmt))
-                cw, ch = min(crop_w, w), min(crop_h, h)
-                for i, image_id in enumerate(sub["image_id"]):
-                    rng = _img_rng(image_id)
-                    x0 = int(rng.integers(0, w - cw + 1))
-                    y0 = int(rng.integers(0, h - ch + 1))
-                    flip = bool(rng.random() < fp)
-                    scale = 1.0 + float(rng.uniform(-br, br))
-                    win = stack[i, y0 : y0 + ch, x0 : x0 + cw]
-                    if flip:
-                        win = win[:, ::-1]
-                    if (cw, ch) != (crop_w, crop_h):
-                        sy = np.clip(
-                            (np.arange(crop_h) + 0.5) * ch / crop_h, 0, ch - 1
-                        ).astype(np.int64)
-                        sx = np.clip(
-                            (np.arange(crop_w) + 0.5) * cw / crop_w, 0, cw - 1
-                        ).astype(np.int64)
-                        win = win[sy][:, sx]
-                    out = np.clip(
-                        win.astype(np.float64) * scale + 0.5, 0, 255
-                    ).astype(np.uint8)
-                    rows.append(
-                        (
-                            image_id,
-                            codecs.encode_image(np.ascontiguousarray(out), fmt),
-                            crop_w,
-                            crop_h,
-                            fmt,
-                            flip,
-                            x0,
-                            y0,
-                        )
-                    )
-            yield pd.DataFrame(rows, columns=[f.name for f in out_schema.fields])
-
-    return images.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(
-        run, out_schema
-    )
-
-
-def decode_external(images: DataFrame, fmt: str) -> DataFrame:
-    """Bitstream decode of externally-produced image payloads.
-
-    ``fmt='png'`` (round 7) and ``fmt='jpeg'`` (round 7) are REAL —
-    pure numpy+stdlib decoders (codecs._png_decode_bytes: chunk CRCs,
-    all five scanline filters, grey/RGB/RGBA 8-bit; jpeg.decode:
-    baseline SOF0/1 Huffman + IDCT, 4:4:4/4:2:2/4:2:0, restart
-    markers — verified against the JVM's ImageIO decoder through
-    Spark's image datasource in tests/test_jpeg.py).  Output rows
-    carry the decoded pixels as ``fmt='raw'`` so every downstream
-    operator (decode_stats, resize, augment) consumes them unchanged.
-    ``fmt='mjpeg'`` (round 8) decodes the FIRST frame of an
-    MJPEG-in-AVI container (full sampling: ``sample_video_frames``).
-    ``fmt='webp'`` (round 8) decodes lossless WebP (VP8L — prefix
-    codes, LZ77, color cache, all four transforms; vp8l.py, verified
-    against a real libwebp-encoded stream); lossy VP8 stays honestly
-    refused — its boolean arithmetic decoder + intra prediction +
-    loop filter genuinely need a codec library."""
-    if fmt not in ("png", "jpeg", "mjpeg", "webp", "gif", "bmp", "ppm"):
-        raise NotImplementedError(
-            f"decoding fmt={fmt!r} requires an image codec library "
-            "(libvips/ffmpeg), none of which exist in this sandbox; "
-            "supported here: 'png', 'jpeg', 'webp' (lossless/VP8L), "
-            "'gif', 'bmp', 'ppm' (netpbm P1-P6) and 'mjpeg' (first "
-            "frame of an MJPEG-in-AVI container) — pure numpy+stdlib "
-            "bitstream decoders — plus 'raw'/'q8'/'dct' via "
-            "codecs.decode_image"
-        )
-    out_schema = T.StructType(
-        [
-            T.StructField("image_id", T.StringType(), False),
-            T.StructField("bytes", T.BinaryType(), False),
-            T.StructField("w", T.IntegerType(), False),
-            T.StructField("h", T.IntegerType(), False),
-            T.StructField("fmt", T.StringType(), False),
-        ]
-    )
-
-    if fmt == "png":
-        decode_one = codecs._png_decode_bytes
-    elif fmt == "mjpeg":
-        from .. import avi as _avi
-
-        def decode_one(payload: bytes):
-            return next(_avi.frames(payload, [0]))[1]
-    elif fmt == "webp":
-        from .. import vp8l as _vp8l
-
-        decode_one = _vp8l.decode
-    elif fmt == "gif":
-        from .. import gif as _gif
-
-        decode_one = _gif.decode
-    elif fmt == "bmp":
-        from .. import bmp as _bmp
-
-        decode_one = _bmp.decode
-    elif fmt == "ppm":
-        from .. import netpbm as _netpbm
-
-        decode_one = _netpbm.decode
-    else:
-        from .. import jpeg
-
-        decode_one = jpeg.decode
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for r in b.itertuples():
-                arr = decode_one(bytes(r.bytes))
-                h, w = arr.shape[:2]
-                rows.append(
-                    (r.image_id, arr.tobytes(order="C"), w, h, "raw")
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in out_schema.fields])
-
-    return images.select("image_id", "bytes").mapInPandas(run, out_schema)
-
-
 FRAMES_SCHEMA = T.StructType(
     [
         T.StructField("video_id", T.StringType(), False),
@@ -361,55 +175,26 @@ def sample_video_frames(
     library needed.  Sampling: ``every=N`` takes every Nth frame;
     default takes ``n_frames`` evenly spaced across the video.  Output
     rows carry decoded RGB as fmt='raw' (downstream decode_stats /
-    resize / phash consume them unchanged).  Non-MJPG codecs refuse
-    loudly inside the batch (avi.parse_avi).  Animated WebP payloads
-    (RIFF fourcc 'WEBP', VP8L-coded frames) route through
-    ``vp8l.anim_frames`` with the container's blend/dispose
-    compositing — same sampling semantics, timestamps from the
-    cumulative frame durations.  1→n fan-out inside Arrow batches;
-    decode cost is per SAMPLED frame only (animated WebP decodes up
-    to the largest sampled index: compositing state is cumulative)."""
+    resize / phash consume them unchanged).  Non-MJPG codecs and
+    non-AVI payloads refuse loudly inside the batch (avi.parse_avi).
+    1→n fan-out inside Arrow batches; decode cost is per SAMPLED frame
+    only."""
     from .. import avi as _avi
-    from .. import gif as _gif
-    from .. import vp8l as _vp8l
-
-    def _sample_idxs(n_total: int) -> list[int]:
-        if every is not None:
-            return list(range(0, n_total, every))
-        k = min(n_frames, n_total)
-        return sorted(
-            {
-                int(round(i * (n_total - 1) / max(k - 1, 1)))
-                for i in range(k)
-            }
-        )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
             rows = []
             for r in b.itertuples():
-                payload = bytes(getattr(r, bytes_col))
-                if payload[:6] in (b"GIF87a", b"GIF89a"):
-                    n_total = _gif.gif_info(payload)["n_frames"]
-                    sampled = [
-                        (i, round(t_ms / 1000.0, 6), rgb)
-                        for i, t_ms, rgb in _gif.gif_frames(
-                            payload, _sample_idxs(n_total)
-                        )
-                    ]
-                elif payload[8:12] == b"WEBP":
-                    n_total = _vp8l.anim_info(payload)["n_frames"]
-                    sampled = [
-                        (i, round(t_ms / 1000.0, 6), rgb)
-                        for i, t_ms, rgb in _vp8l.anim_frames(
-                            payload, _sample_idxs(n_total)
-                        )
-                    ]
-                elif every is not None:
+                payload = bytes(r.bytes)
+                if every is not None:
                     sampled = _avi.frame_sample(payload, every=every)
                 else:
                     info = _avi.parse_avi(payload)
-                    idxs = _sample_idxs(info.n_frames)
+                    n = info.n_frames
+                    k = min(n_frames, n)
+                    idxs = sorted(
+                        {int(round(i * (n - 1) / max(k - 1, 1))) for i in range(k)}
+                    )
                     sampled = [
                         (i, round(i / info.fps, 6), rgb)
                         for i, rgb in _avi.frames(payload, idxs)
@@ -417,10 +202,7 @@ def sample_video_frames(
                 for i, t, rgb in sampled:
                     hh, ww = rgb.shape[:2]
                     rows.append(
-                        (
-                            getattr(r, id_col), i, t, ww, hh,
-                            rgb.tobytes(order="C"), "raw",
-                        )
+                        (r.video_id, i, t, ww, hh, rgb.tobytes(order="C"), "raw")
                     )
             yield pd.DataFrame(rows, columns=[f.name for f in FRAMES_SCHEMA.fields])
 

@@ -978,14 +978,6 @@ def _docs_sql_query(gen, **kw):
     return fn
 
 
-def _emb_sql_query(gen, **kw):
-    def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-        _t(spark, sf_dir, "embeddings").createOrReplaceTempView("embeddings")
-        return spark.sql(gen("spark", **kw))
-
-    return fn
-
-
 from .operators import ann as _ann  # noqa: E402
 from .operators import dedup as _dd  # noqa: E402
 

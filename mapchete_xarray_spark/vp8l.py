@@ -20,10 +20,8 @@ Independent decode coverage for LZ77/cache comes from hand-assembled
 spec streams and the external CPython-committed fixture (an ALPH
 alpha plane is a VP8L-coded image; tests/data/python_16x16.webp).
 
-Beyond still images (round-8 additions): ALPH alpha-plane decode
-(raw or VP8L-coded, all four row-filter methods) and animated WebP
-(``anim_frames``: ANMF walk + the container spec's blend/dispose
-compositing), both VP8L-only.
+Beyond still images (round-8 addition): ALPH alpha-plane decode
+(raw or VP8L-coded, all four row-filter methods).
 
 Lossy VP8 is refused with a clear error: its boolean arithmetic
 decoder + intra prediction + loop filter genuinely need a codec
@@ -1017,119 +1015,3 @@ def _encode_palette(bw: _BitWriter, arr: np.ndarray, colors: np.ndarray) -> None
     planes[:, 0] = 255
     planes[:, 2] = idx.reshape(-1).astype(np.uint8)
     _write_literal_image(bw, planes, top_level=True, width=idx.shape[1])
-
-
-# ---------------------------------------------------------------------------
-# Animated WebP (VP8X + ANIM/ANMF) — frame sampling with the container
-# spec's blend/dispose compositing.  Frames must be VP8L-coded (lossy
-# VP8 frames refuse, as everywhere in this module).
-# ---------------------------------------------------------------------------
-
-
-def _u24(b: bytes, off: int) -> int:
-    return b[off] | (b[off + 1] << 8) | (b[off + 2] << 16)
-
-
-def _anim_parse(data: bytes):
-    """→ (canvas_w, canvas_h, bg_rgba, frames) where frames is a list
-    of dicts {x, y, w, h, duration_ms, blend, dispose, chunk}."""
-    chunks = list(_riff_chunks(bytes(data)))
-    tags = [t for t, _ in chunks]
-    if b"VP8X" not in tags:
-        raise ValueError("not an extended WebP (no VP8X chunk)")
-    vp8x = dict(chunks)[b"VP8X"]
-    if not vp8x[0] & 0x02:
-        raise ValueError("WebP has no animation flag set")
-    cw = 1 + _u24(vp8x, 4)
-    ch = 1 + _u24(vp8x, 7)
-    bg = (0, 0, 0, 0)
-    frames = []
-    for tag, body in chunks:
-        if tag == b"ANIM":
-            # spec field order: blue, green, red, alpha
-            bg = (body[2], body[1], body[0], body[3])  # as (r, g, b, a)
-        elif tag == b"ANMF":
-            sub = body[16:]
-            subchunks = {}
-            pos = 0
-            while pos + 8 <= len(sub):
-                t = sub[pos : pos + 4]
-                (ln,) = struct.unpack_from("<I", sub, pos + 4)
-                subchunks.setdefault(t, sub[pos + 8 : pos + 8 + ln])
-                pos += 8 + ln + (ln & 1)
-            if b"VP8 " in subchunks and b"VP8L" not in subchunks:
-                raise NotImplementedError(
-                    "animated WebP frame is lossy VP8 — this module "
-                    "decodes VP8L (lossless) frames only"
-                )
-            if b"VP8L" not in subchunks:
-                raise ValueError("ANMF frame has no image chunk")
-            flags = body[15]
-            frames.append(
-                {
-                    "x": 2 * _u24(body, 0),
-                    "y": 2 * _u24(body, 3),
-                    "w": 1 + _u24(body, 6),
-                    "h": 1 + _u24(body, 9),
-                    "duration_ms": _u24(body, 12),
-                    "blend": not (flags & 0x02),  # bit1 set = DO NOT blend
-                    "dispose": bool(flags & 0x01),
-                    "chunk": subchunks[b"VP8L"],
-                }
-            )
-    if not frames:
-        raise ValueError("animated WebP has no ANMF frames")
-    return cw, ch, bg, frames
-
-
-def anim_info(data: bytes) -> dict:
-    cw, ch, bg, frames = _anim_parse(data)
-    return {
-        "canvas_w": cw,
-        "canvas_h": ch,
-        "n_frames": len(frames),
-        "durations_ms": [f["duration_ms"] for f in frames],
-    }
-
-
-def anim_frames(data: bytes, indices=None):
-    """Yield (frame_idx, t_ms, (h, w, 3) uint8 RGB) composited canvas
-    states for the requested frame indices (all frames by default).
-    Every frame up to the largest requested index is decoded —
-    compositing state is cumulative."""
-    cw, ch, bg, frames = _anim_parse(data)
-    want = sorted(set(range(len(frames)) if indices is None else indices))
-    if want and (want[0] < 0 or want[-1] >= len(frames)):
-        raise ValueError(f"frame index out of range 0..{len(frames) - 1}")
-    canvas = np.zeros((ch, cw, 4), dtype=np.float64)  # [r, g, b, a]
-    bg_arr = np.array(bg, dtype=np.float64)
-    t_ms = 0
-    for i, fr in enumerate(frames[: (want[-1] + 1) if want else 0]):
-        img = decode_vp8l_chunk(fr["chunk"])  # (h, w, 4) [a, r, g, b]
-        if img.shape[:2] != (fr["h"], fr["w"]):
-            raise ValueError(
-                f"ANMF frame {i} decodes to {img.shape[:2]}, header says "
-                f"{(fr['h'], fr['w'])}"
-            )
-        rgba = img[:, :, [1, 2, 3, 0]].astype(np.float64)
-        ys, xs = slice(fr["y"], fr["y"] + fr["h"]), slice(fr["x"], fr["x"] + fr["w"])
-        if fr["blend"]:
-            dst = canvas[ys, xs]
-            sa = rgba[:, :, 3:4] / 255.0
-            da = dst[:, :, 3:4] / 255.0
-            oa = sa + da * (1.0 - sa)
-            rgb = np.where(
-                oa > 0,
-                (rgba[:, :, :3] * sa + dst[:, :, :3] * da * (1.0 - sa))
-                / np.maximum(oa, 1e-12),
-                0.0,
-            )
-            canvas[ys, xs, :3] = rgb
-            canvas[ys, xs, 3] = oa[:, :, 0] * 255.0
-        else:
-            canvas[ys, xs] = rgba
-        if i in want:
-            yield i, t_ms, np.clip(np.rint(canvas[:, :, :3]), 0, 255).astype(np.uint8)
-        t_ms += fr["duration_ms"]
-        if fr["dispose"]:
-            canvas[ys, xs] = bg_arr

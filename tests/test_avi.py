@@ -15,7 +15,7 @@ import struct
 import numpy as np
 import pytest
 
-from mapchete_xarray_spark import avi, jpeg
+from mapchete_xarray_spark import avi, jpeg, vp8l
 
 FIXTURE = os.path.join(os.path.dirname(__file__), "data", "moving_square_8f.avi")
 
@@ -79,8 +79,15 @@ class TestContainer:
     def test_not_riff(self):
         with pytest.raises(ValueError, match="RIFF"):
             avi.parse_avi(b"\x89PNG" + b"\x00" * 32)
+        with pytest.raises(ValueError, match="RIFF"):
+            avi.parse_avi(b"GIF89a" + b"\x00" * 32)
         with pytest.raises(ValueError, match="AVI"):
             avi.parse_avi(b"RIFF" + struct.pack("<I", 8) + b"WAVE" + b"\x00" * 8)
+        # a real (lossless) WebP is a RIFF form too, just not 'AVI '
+        webp = vp8l.encode(np.zeros((4, 4, 3), np.uint8))
+        assert webp[:4] == b"RIFF" and webp[8:12] == b"WEBP"
+        with pytest.raises(ValueError, match="AVI"):
+            avi.parse_avi(webp)
 
 
 @pytest.mark.spark
@@ -105,32 +112,3 @@ class TestSparkVideo:
         got = np.frombuffer(bytes(row.frame_bytes), np.uint8).reshape(48, 64, 3)
         np.testing.assert_array_equal(got, want)
         assert row.t_sec == 0.5
-
-    def test_decode_external_mjpeg_first_frame(self, spark):
-        from mapchete_xarray_spark.operators.multimodal import decode_external
-
-        buf = open(FIXTURE, "rb").read()
-        imgs = spark.createDataFrame(
-            [("v0", bytearray(buf))], "image_id string, bytes binary"
-        )
-        out = decode_external(imgs, "mjpeg").toPandas()
-        assert list(out.fmt) == ["raw"]
-        _, want = next(avi.frames(buf, [0]))
-        got = np.frombuffer(bytes(out.iloc[0].bytes), np.uint8).reshape(48, 64, 3)
-        np.testing.assert_array_equal(got, want)
-
-    def test_lossy_webp_still_refused(self, spark):
-        # lossless WebP (VP8L) became real in round 8 (vp8l.py, see
-        # tests/test_vp8l.py); a LOSSY VP8 payload must still fail
-        # loudly inside the batch
-        from mapchete_xarray_spark.operators.multimodal import decode_external
-
-        lossy = open(
-            os.path.join(os.path.dirname(__file__), "data", "python_16x16.webp"),
-            "rb",
-        ).read()
-        imgs = spark.createDataFrame(
-            [("w0", bytearray(lossy))], "image_id string, bytes binary"
-        )
-        with pytest.raises(Exception, match="lossy VP8"):
-            decode_external(imgs, "webp").collect()

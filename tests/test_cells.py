@@ -211,9 +211,12 @@ class TestCodecs:
             decode_image(payload, 16, 8, "dct")
 
     def test_bad_fmt_raises(self):
-        # webp/gif/bmp became real codecs in round 8 — exr stays unknown
-        with pytest.raises(ValueError):
-            encode_image(self._img(), "exr")
+        for fmt in ("exr", "gif", "bmp", "ppm"):
+            with pytest.raises(ValueError, match="unknown fmt"):
+                encode_image(self._img(), fmt)
+        for fmt in ("gif", "bmp", "ppm"):
+            with pytest.raises(ValueError, match="unknown fmt"):
+                decode_image(b"\x00" * 12, 2, 2, fmt)
         with pytest.raises(ValueError):
             decode_image(b"\x00" * 12, 2, 2, "png")
 

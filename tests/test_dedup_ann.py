@@ -400,15 +400,6 @@ class TestANN:
         # unit norm (spherical k-means invariant)
         assert np.allclose(np.linalg.norm(a, axis=1), 1.0)
 
-    def test_pandas_cosine_topk_matches(self, spark, embeddings):
-        pdf, sdf = embeddings
-        q = sdf.where(F.col("vec_id") < 5)
-        got = ann.cosine_topk_pandas(sdf, q, k=3).toPandas()
-        # rounding differs (no pre-round) — compare sets at k=3
-        expected = self._brute_topk(pdf, 3, 5)
-        for qi in range(5):
-            assert set(got[got.qid == qi].vec_id.tolist()) == set(expected[qi])
-
     def test_lsh_first_table_emission(self, spark, embeddings):
         """Multi-table OR-amplification candidates must be emitted
         exactly once (first-table emission replaced the candidate
@@ -543,68 +534,6 @@ class TestMultimodal:
         arr = codecs.decode_image(out.iloc[0].bytes, 16, 16, out.iloc[0].fmt)
         assert arr.shape == (16, 16, 3)
 
-    def test_augment_deterministic_and_partition_invariant(self, spark):
-        """Augmentation must be reproducible by IMAGE, not by task:
-        the per-image RNG seeds from md5(image_id) ⊕ seed, so any
-        repartitioning/retry yields byte-identical samples, and a
-        different seed yields different ones."""
-        from mapchete_xarray_spark.operators.multimodal import augment_images
-
-        imgs = self._images(spark, 24)
-
-        def key(rows):
-            return {
-                r.image_id: (bytes(r.bytes), r.flipped, r.crop_x, r.crop_y)
-                for r in rows
-            }
-
-        a = key(augment_images(imgs, 16, 16, seed=1).collect())
-        b = key(augment_images(imgs.repartition(7), 16, 16, seed=1).collect())
-        assert a == b
-        c = key(augment_images(imgs, 16, 16, seed=2).collect())
-        assert a != c
-        assert {r[1] for r in a.values()} == {True, False}  # both outcomes at p=.5
-
-    def test_augment_matches_numpy_reference(self, spark):
-        """Pixel-exact parity with an independent numpy replay of the
-        documented rng draw order (crop x, crop y, flip, brightness)."""
-        import hashlib
-
-        from mapchete_xarray_spark.operators.multimodal import augment_images
-
-        imgs = self._images(spark, 8).where("fmt = 'raw'")
-        src = {r.image_id: r for r in imgs.collect()}
-        assert src, "need raw-format images"
-        out = {
-            r.image_id: r
-            for r in augment_images(imgs, 20, 12, seed=3, brightness=0.3).collect()
-        }
-        for image_id, r in src.items():
-            arr = np.frombuffer(bytes(r.bytes), np.uint8).reshape(r.h, r.w, 3)
-            h64 = int.from_bytes(hashlib.md5(image_id.encode()).digest()[:8], "big")
-            rng = np.random.default_rng(h64 ^ 3)
-            cw, ch = min(20, r.w), min(12, r.h)
-            x0 = int(rng.integers(0, r.w - cw + 1))
-            y0 = int(rng.integers(0, r.h - ch + 1))
-            flip = bool(rng.random() < 0.5)
-            scale = 1.0 + float(rng.uniform(-0.3, 0.3))
-            win = arr[y0 : y0 + ch, x0 : x0 + cw]
-            if flip:
-                win = win[:, ::-1]
-            if (cw, ch) != (20, 12):
-                sy = np.clip((np.arange(12) + 0.5) * ch / 12, 0, ch - 1).astype(np.int64)
-                sx = np.clip((np.arange(20) + 0.5) * cw / 20, 0, cw - 1).astype(np.int64)
-                win = win[sy][:, sx]
-            want = np.clip(win.astype(np.float64) * scale + 0.5, 0, 255).astype(np.uint8)
-            got = np.frombuffer(bytes(out[image_id].bytes), np.uint8).reshape(12, 20, 3)
-            assert np.array_equal(got, want), image_id
-
-    def test_decode_external_stub(self, spark):
-        from mapchete_xarray_spark.operators.multimodal import decode_external
-
-        with pytest.raises(NotImplementedError, match="codec"):
-            decode_external(self._images(spark, 1), "exr")
-
     def test_video_frame_fanout(self, spark):
         # r8: sample_video_frames is a REAL MJPEG-in-AVI decoder now —
         # feed the committed container fixture (full decode-parity
@@ -618,13 +547,17 @@ class TestMultimodal:
             os.path.join(os.path.dirname(__file__), "data", "moving_square_8f.avi"),
             "rb",
         ).read()
+        # non-default column names: the operator renames them on select
         vids = spark.createDataFrame(
             [(f"vid{i}", bytearray(buf)) for i in range(3)],
-            "video_id string, bytes binary",
+            "clip string, payload binary",
         )
-        out = sample_video_frames(vids, n_frames=4).toPandas()
+        out = sample_video_frames(
+            vids, n_frames=4, id_col="clip", bytes_col="payload"
+        ).toPandas()
         assert len(out) == 12
         assert sorted(set(out.frame_idx)) == [0, 2, 5, 7]
+        assert sorted(set(out.video_id)) == ["vid0", "vid1", "vid2"]
 
 
 @pytest.mark.spark

@@ -3,8 +3,8 @@ tests with a hand-assembled bitstream written independently in this
 file, encoder round-trips across subsampling/quality/restart, a real
 external fixture (Spark's own mllib sample images — produced by a
 real camera/encoder chain), a cross-decoder check against the JVM's
-ImageIO via Spark's image datasource, and the de-stubbed
-decode_external Spark path."""
+ImageIO via Spark's image datasource, and the decode_stats Spark
+path."""
 
 import os
 import struct
@@ -181,21 +181,6 @@ class TestSparkPaths:
         assert np.abs(
             jvm.mean(axis=(0, 1)) - ours.mean(axis=(0, 1))
         ).max() < 1.0
-
-    def test_decode_external_jpeg(self, spark):
-        imgs = [_gradient(12, 10), _gradient(9, 17)]
-        payloads = [jpeg.encode(a, quality=95) for a in imgs]
-        pdf = pd.DataFrame(
-            {"image_id": ["a", "b"], "bytes": payloads}
-        )
-        from mapchete_xarray_spark.operators.multimodal import decode_external
-
-        out = decode_external(spark.createDataFrame(pdf), "jpeg").toPandas()
-        assert set(out.fmt) == {"raw"}
-        for image_id, payload in zip(("a", "b"), payloads):
-            row = out[out.image_id == image_id].iloc[0]
-            got = np.frombuffer(row["bytes"], np.uint8).reshape(row.h, row.w, 3)
-            np.testing.assert_array_equal(got, jpeg.decode(payload))
 
     def test_decode_stats_accepts_jpeg(self, spark):
         """JPEG payload rows flow through the same feature-extract

@@ -1,6 +1,6 @@
 """Pure zlib+numpy PNG codec (codecs.py round 7): spec-level filter
 tests, committed real-world fixtures, encoder round-trip, and the
-de-stubbed decode_external Spark path."""
+Spark paths (JVM ImageIO cross-check, decode_stats)."""
 
 import os
 import struct
@@ -232,23 +232,6 @@ class TestEncoder:
 
 @pytest.mark.spark
 class TestSparkPaths:
-    def test_decode_external_png(self, spark):
-        imgs = [RNG.integers(0, 256, (12, 10, 3), dtype=np.uint8) for _ in range(6)]
-        pdf = pd.DataFrame(
-            {
-                "image_id": [f"im{i}" for i in range(6)],
-                "bytes": [_png_encode(a) for a in imgs],
-            }
-        )
-        from mapchete_xarray_spark.operators.multimodal import decode_external
-
-        out = decode_external(spark.createDataFrame(pdf), "png").toPandas()
-        assert set(out.fmt) == {"raw"}
-        for i, a in enumerate(imgs):
-            row = out[out.image_id == f"im{i}"].iloc[0]
-            got = np.frombuffer(row["bytes"], np.uint8).reshape(row.h, row.w, 3)
-            np.testing.assert_array_equal(got, a)
-
     def test_adam7_cross_decoder_vs_jvm_imageio(self, spark, tmp_path):
         """Encode Adam7 with _png_encode, decode with the JVM's
         ImageIO (Spark's image datasource — a fully independent PNG
@@ -274,14 +257,6 @@ class TestSparkPaths:
         np.testing.assert_array_equal(
             _png_decode_bytes(p.read_bytes()), img
         )
-
-    def test_decode_external_unknown_fmt_still_stubbed(self, spark):
-        # webp/gif/bmp became real in round 8; formats
-        # with no pure-python path keep the honest refusal
-        from mapchete_xarray_spark.operators.multimodal import decode_external
-
-        with pytest.raises(NotImplementedError, match="exr"):
-            decode_external(spark.range(1), "exr")
 
     def test_decode_stats_accepts_png(self, spark):
         """End-to-end: PNG payload rows flow through the same

@@ -1,6 +1,6 @@
 """Lossless WebP (VP8L) codec — spec-level hand-assembled bitstreams,
 encoder round-trips, the external libwebp-encoded fixture, and the
-Spark decode_external path.
+Spark decode_stats path.
 
 tests/data/python_16x16.webp is CPython's own committed test asset
 (Lib/test/imghdrdata/python.webp, PSF-licensed) — a lossy VP8 file
@@ -8,7 +8,6 @@ whose ALPH alpha plane is a REAL libwebp-produced VP8L stream: the
 interop proof an own-encoder round-trip can't give."""
 
 import os
-import struct
 import zlib
 
 import numpy as np
@@ -259,26 +258,6 @@ class TestExternalFixture:
     def test_not_webp_rejected(self):
         with pytest.raises(ValueError, match="RIFF"):
             vp8l.decode(b"\x89PNG\r\n\x1a\n" + b"\x00" * 24)
-
-
-@pytest.mark.spark
-class TestSparkPaths:
-    def test_decode_external_webp(self, spark):
-        imgs = [RNG.integers(0, 256, (12, 10, 3), dtype=np.uint8) for _ in range(4)]
-        pdf = pd.DataFrame(
-            {
-                "image_id": [f"w{i}" for i in range(4)],
-                "bytes": [vp8l.encode(a) for a in imgs],
-            }
-        )
-        from mapchete_xarray_spark.operators.multimodal import decode_external
-
-        out = decode_external(spark.createDataFrame(pdf), "webp").toPandas()
-        assert set(out.fmt) == {"raw"}
-        for i, a in enumerate(imgs):
-            row = out[out.image_id == f"w{i}"].iloc[0]
-            got = np.frombuffer(row["bytes"], np.uint8).reshape(row.h, row.w, 3)
-            np.testing.assert_array_equal(got, a)
 
 
 class TestPredictorAndColorTransforms:
@@ -541,149 +520,6 @@ class TestSparkDecodeStats:
             a = w_stats.sort_values("image_id")[col].to_numpy()
             b = r_stats.sort_values("image_id")[col].to_numpy()
             np.testing.assert_array_equal(a, b)
-
-
-def _chunk(tag, body):
-    out = tag + struct.pack("<I", len(body)) + body
-    return out + (b"\x00" if len(body) & 1 else b"")
-
-
-def _vp8l_chunk_of(rgb):
-    return dict(vp8l._riff_chunks(vp8l.encode(rgb)))[b"VP8L"]
-
-
-def _vp8l_chunk_rgba(rgba):
-    """VP8L chunk body for an explicit [a,r,g,b]-plane image (the
-    encoder writes alpha 255; blending tests need real alpha)."""
-    h, w, _ = rgba.shape
-    bw = vp8l._BitWriter()
-    bw.write(0x2F, 8)
-    bw.write(w - 1, 14)
-    bw.write(h - 1, 14)
-    bw.write(1, 1)  # alpha used
-    bw.write(0, 3)
-    bw.write(0, 1)  # no transforms
-    planes = rgba[:, :, [3, 0, 1, 2]].reshape(-1, 4)  # -> [a, r, g, b]
-    vp8l._write_literal_image(bw, np.ascontiguousarray(planes), top_level=True)
-    return bw.done()
-
-
-def _anmf(x, y, w, h, dur, frame_chunk, *, blend=False, dispose=False):
-    flags = (0 if blend else 0x02) | (0x01 if dispose else 0)
-    head = b"".join(
-        v.to_bytes(3, "little") for v in (x // 2, y // 2, w - 1, h - 1, dur)
-    ) + bytes([flags])
-    return _chunk(b"ANMF", head + frame_chunk)
-
-
-def _awebp(canvas_w, canvas_h, anmfs, bg=(0, 0, 0, 0)):
-    vp8x = bytes([0x02, 0, 0, 0]) + (canvas_w - 1).to_bytes(3, "little") + (
-        canvas_h - 1
-    ).to_bytes(3, "little")
-    # ANIM background stored as B, G, R, A
-    anim = bytes([bg[2], bg[1], bg[0], bg[3]]) + struct.pack("<H", 0)
-    body = b"WEBP" + _chunk(b"VP8X", vp8x) + _chunk(b"ANIM", anim) + b"".join(anmfs)
-    return b"RIFF" + struct.pack("<I", len(body)) + body
-
-
-class TestAnimatedWebP:
-    def _fixture(self):
-        red = np.zeros((4, 4, 3), np.uint8); red[:, :, 0] = 200
-        blue = np.zeros((2, 2, 3), np.uint8); blue[:, :, 2] = 150
-        green = np.zeros((1, 1, 3), np.uint8); green[:, :, 1] = 99
-        frames = [
-            _anmf(0, 0, 4, 4, 100, _chunk(b"VP8L", _vp8l_chunk_of(red))),
-            _anmf(2, 2, 2, 2, 50, _chunk(b"VP8L", _vp8l_chunk_of(blue)),
-                  dispose=True),
-            _anmf(0, 0, 1, 1, 70, _chunk(b"VP8L", _vp8l_chunk_of(green))),
-        ]
-        return _awebp(4, 4, frames), red, blue, green
-
-    def test_info(self):
-        data, *_ = self._fixture()
-        info = vp8l.anim_info(data)
-        assert info == {
-            "canvas_w": 4, "canvas_h": 4, "n_frames": 3,
-            "durations_ms": [100, 50, 70],
-        }
-
-    def test_compositing_with_dispose(self):
-        data, red, blue, green = self._fixture()
-        out = {i: (t, rgb) for i, t, rgb in vp8l.anim_frames(data)}
-        assert set(out) == {0, 1, 2}
-        t0, f0 = out[0]
-        assert t0 == 0
-        np.testing.assert_array_equal(f0, red)
-        t1, f1 = out[1]
-        assert t1 == 100
-        want1 = red.copy(); want1[2:4, 2:4] = blue
-        np.testing.assert_array_equal(f1, want1)
-        t2, f2 = out[2]
-        assert t2 == 150
-        # frame 1's rect disposed to transparent-black background,
-        # then the single green pixel lands at (0, 0)
-        want2 = red.copy(); want2[2:4, 2:4] = 0; want2[0, 0] = green[0, 0]
-        np.testing.assert_array_equal(f2, want2)
-
-    def test_index_selection(self):
-        data, *_ = self._fixture()
-        got = [i for i, _, _ in vp8l.anim_frames(data, [0, 2])]
-        assert got == [0, 2]
-        with pytest.raises(ValueError, match="out of range"):
-            list(vp8l.anim_frames(data, [5]))
-
-    def test_alpha_blend_formula(self):
-        """A half-transparent blue frame alpha-blended over opaque red,
-        checked against the container spec's blend formula computed
-        independently here."""
-        red = np.zeros((2, 2, 3), np.uint8); red[:, :, 0] = 200
-        rgba = np.zeros((2, 2, 4), np.uint8)
-        rgba[:, :, 2] = 150; rgba[:, :, 3] = 128
-        frames = [
-            _anmf(0, 0, 2, 2, 10, _chunk(b"VP8L", _vp8l_chunk_of(red))),
-            _anmf(0, 0, 2, 2, 10, _chunk(b"VP8L", _vp8l_chunk_rgba(rgba)),
-                  blend=True),
-        ]
-        data = _awebp(2, 2, frames)
-        _, _, f1 = list(vp8l.anim_frames(data, [1]))[0]
-        sa, da = 128 / 255.0, 1.0
-        oa = sa + da * (1 - sa)
-        want_r = round((0 * sa + 200 * da * (1 - sa)) / oa)
-        want_b = round((150 * sa + 0 * da * (1 - sa)) / oa)
-        assert f1[0, 0, 0] == want_r and f1[0, 0, 2] == want_b
-
-    def test_lossy_frames_refused(self):
-        head = b"".join(v.to_bytes(3, "little") for v in (0, 0, 1, 1, 10)) \
-            + bytes([0x02])
-        anmf = _chunk(b"ANMF", head + _chunk(b"VP8 ", b"\x00" * 10))
-        with pytest.raises(NotImplementedError, match="lossy"):
-            vp8l.anim_info(_awebp(2, 2, [anmf]))
-
-
-@pytest.mark.spark
-class TestSparkAnimatedWebP:
-    def test_sample_video_frames_routes_webp(self, spark):
-        from mapchete_xarray_spark.operators.multimodal import sample_video_frames
-
-        imgs = [
-            np.full((4, 4, 3), v, np.uint8) for v in (10, 60, 110, 160, 210)
-        ]
-        anmfs = [
-            _anmf(0, 0, 4, 4, 40, _chunk(b"VP8L", _vp8l_chunk_of(a)))
-            for a in imgs
-        ]
-        data = _awebp(4, 4, anmfs)
-        pdf = pd.DataFrame({"video_id": ["aw0"], "bytes": [data]})
-        out = sample_video_frames(
-            spark.createDataFrame(pdf), n_frames=3
-        ).toPandas().sort_values("frame_idx")
-        assert list(out.frame_idx) == [0, 2, 4]
-        assert list(out.t_sec) == [0.0, 0.08, 0.16]
-        for _, row in out.iterrows():
-            got = np.frombuffer(
-                row["frame_bytes"], np.uint8
-            ).reshape(row.h, row.w, 3)
-            np.testing.assert_array_equal(got, imgs[int(row.frame_idx)])
 
 
 class TestLZ77Emission:
