@@ -280,7 +280,7 @@ def refresh_xyz(
         ]
     )
     tiles = (
-        base.where(chunk_in_list_pred(base, chunks))
+        base.where(chunk_in_list_pred(chunks))
         .where(key_pred)
         .where(
             (F.col("ts_idx") == int(meta["ts_idx"]))

@@ -476,7 +476,7 @@ def refresh_focal(
 
     base = src_td.read(spark)
     if src_keys:
-        base = base.where(chunk_in_list_pred(base, src_keys))
+        base = base.where(chunk_in_list_pred(src_keys))
     base = base.drop("chunk_row", "chunk_col", "attempt_id")
 
     out = focal_map(

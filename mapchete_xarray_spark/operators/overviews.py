@@ -205,7 +205,7 @@ def _pruned_base_read(spark, base_td, ov_chunks, ct: int, max_keys: int = 10_000
             return base
     from ..sources.tiledir import chunk_in_list_pred
 
-    return base.where(chunk_in_list_pred(base, base_keys))
+    return base.where(chunk_in_list_pred(base_keys))
 
 
 def refresh_overviews(

@@ -486,7 +486,7 @@ def refresh_regrid(
         if src_keys:
             from ..sources.tiledir import chunk_in_list_pred
 
-            base = base.where(chunk_in_list_pred(base, src_keys))
+            base = base.where(chunk_in_list_pred(src_keys))
     base = base.drop("chunk_row", "chunk_col", "attempt_id")
 
     out = regrid_tiles(

@@ -617,7 +617,7 @@ def refresh_zonal(
         metatiling=int(base_td.cfg.metatiling),
     )
     base = base_td.read(spark)
-    pruned = base.where(chunk_in_list_pred(base, set(changed))).drop(
+    pruned = base.where(chunk_in_list_pred(set(changed))).drop(
         "chunk_row", "chunk_col", "attempt_id"
     )
     recomputed = partials_fn(

@@ -37,7 +37,10 @@ recorded — every read path filters data to COMMITTED attempts
 invisible, the next ``mode="continue"`` run re-plans those chunks
 (they're not in the manifest) and writes them under a fresh attempt,
 and the result has exactly one committed row per (tile, band, ts_idx).
-``vacuum()`` reclaims orphan attempt directories.
+A write whose input fails validation is refused the same way: its
+checks are observed on the data write and raise before the manifest
+append, leaving an invisible attempt.  ``vacuum()`` reclaims orphan
+and refused attempt directories.
 """
 
 from __future__ import annotations
@@ -48,8 +51,11 @@ import uuid
 from dataclasses import asdict, dataclass, field
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession
+from py4j.protocol import Py4JJavaError
+from pyarrow import fs as pafs
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .. import grid
 from . import fs as _fs
@@ -59,28 +65,41 @@ class TileDirError(ValueError):
     pass
 
 
-def _maybe_broadcast(df: DataFrame, max_rows: int = 5_000_000) -> DataFrame:
-    """Broadcast-hint a manifest-derived key table only while it is
-    actually broadcastable (16-byte chunk keys: 5M rows ≈ 80 MB hash
-    relation).  A z14 global sink has ~4M chunks — near the line — so
-    the decision is SIZED, not hardcoded (same discipline as the
-    dedup refine's auto-broadcast): past the cap the join is left
-    unhinted and AQE picks from the real sizes."""
-    if df.limit(max_rows + 1).count() <= max_rows:
-        return F.broadcast(df)
-    return df
+_MANIFEST_SCHEMA = (
+    "chunk_row long, chunk_col long, n_rows long, n_tiles long, n_bytes long, "
+    "n_source_images long, min_tile_row long, max_tile_row long, min_tile_col long, "
+    "max_tile_col long, attempt_id string, written_at double, generation long"
+)
 
 
-def chunk_in_list_pred(df: DataFrame, keys) -> "F.Column":
-    """``(chunk_row, chunk_col) IN (...)`` predicate with literal
-    tuples TYPED to match ``df``'s chunk columns: parquet partition
-    discovery types them INT on a populated sink while the empty-sink
-    read path types them BIGINT, and a struct IN across mismatched
-    element types is a DATATYPE_MISMATCH analysis error, not a
-    coercion.  Kept as a literal IN-list (not a join) so Catalyst can
-    turn it into directory-level PartitionFilters."""
-    suf = "L" if dict(df.dtypes).get("chunk_row") == "bigint" else ""
-    in_list = ", ".join(f"({r}{suf}, {c}{suf})" for r, c in sorted(keys))
+def _maybe_broadcast(df: DataFrame, rows: int, max_rows: int = 5_000_000) -> DataFrame:
+    """Broadcast-hint a key table while it is broadcastable (16-byte
+    chunk keys: 5M rows ≈ 80 MB hash relation).  ``rows`` is an upper
+    bound the caller already holds (the manifest row count bounds every
+    manifest-derived key set), so sizing runs no probe job; past the
+    cap the join is left unhinted and AQE picks from the real sizes."""
+    return F.broadcast(df) if rows <= max_rows else df
+
+
+def _observed(spark: SparkSession, obs: Observation) -> dict | None:
+    """The metrics an action reported to ``obs``, or None when the plan
+    that ran no longer held the observed node (AQE replaces a subtree it
+    proves empty): callers then run the explicit job, never a default.
+    Metrics arrive via the listener bus, drained first so None is final."""
+    try:
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    except Py4JJavaError:  # bus timeout: reads as missing, the job decides
+        pass
+    reported = obs._jo.future().isCompleted() and obs._jo.getRow().length()
+    return obs.get if reported else None
+
+
+def chunk_in_list_pred(keys) -> "F.Column":
+    """``(chunk_row, chunk_col) IN (...)`` predicate over the BIGINT
+    chunk columns every read path yields (the data schema is pinned).
+    Kept as a literal IN-list (not a join) so Catalyst can turn it
+    into directory-level PartitionFilters."""
+    in_list = ", ".join(f"({r}L, {c}L)" for r, c in sorted(keys))
     return F.expr(f"(chunk_row, chunk_col) in ({in_list})")
 
 
@@ -268,6 +287,7 @@ class TileDirectory:
         self.cfg = config
         self.path = config.path  # URI as Spark sees it
         self._fs, self._root = _fs.resolve(config.path, filesystem)
+        self._state: tuple = ((), None)  # (manifest listing, its state)
 
     # -- DDL ---------------------------------------------------------------
 
@@ -397,8 +417,9 @@ class TileDirectory:
         Two-phase commit: data files land under attempt_id=<id>
         partitions first, then the manifest rows (the commit record)
         are appended.  Readers only see manifest-committed attempts,
-        so a crash between the phases leaves invisible orphans, never
-        duplicates (see module docstring).
+        so a crash between the phases — or an input check failing
+        there — leaves invisible orphans, never duplicates (see
+        module docstring).
 
         ``overwrite`` does NOT pre-delete the data tree (a crash
         mid-rewrite would lose the sink, and readers would watch it
@@ -411,6 +432,8 @@ class TileDirectory:
         ``vacuum()``'s grace window."""
         if mode not in ("continue", "overwrite", "refresh"):
             raise TileDirError(f"unknown write mode: {mode}")
+        from ..operators.mosaic import TILE_BANDS_SCHEMA
+
         spark = tiles.sparkSession
         # leading letter keeps Spark's partition-value type inference
         # on STRING even for an all-digit hex suffix
@@ -418,50 +441,35 @@ class TileDirectory:
         data_path = _fs.join(self.path, "data")
         # overwrite publishes by bumping the generation at commit time
         # (see _commit_manifest); continue/refresh stay in the current
-        gen = self._current_generation(spark) + (1 if mode == "overwrite" else 0)
+        gen, n_manifest = self._manifest_state(spark) or (0, 0)
+        gen += mode == "overwrite"
 
-        # persist the tile rows once: the same materialization feeds
-        # the ts validation scan, the continue-mode pruning, the data
-        # write AND the manifest aggregate — before this persist the
-        # validation count ran the whole upstream pipeline (incl. the
-        # applyInPandas paste) a second time on every time-axis write
-        t0 = self._with_chunk(tiles).persist()
+        # INPUT checks, before any pruning (bad rows raise even when
+        # resume would skip their chunks).  Sinks are SINGLE-zoom: chunk
+        # keys, upsert merge keys, bounds pruning and read_tile_array
+        # ignore tile_zoom, so two zooms would collide in one chunk (a
+        # pyramid is one sink per level, see operators/overviews); the
+        # time axis is fixed.
+        nsteps = len(self.cfg.time_steps)
+        bad_ts = (F.col("ts_idx") < 0) | (F.col("ts_idx") >= nsteps) if nsteps else F.lit(False)
+        checks = [
+            F.count(F.lit(1)).alias("rows_in"),
+            F.sum((F.col("tile_zoom") != int(self.cfg.zoom)).cast("long")).alias("bad_zoom"),
+            F.sum(bad_ts.cast("long")).alias("bad_ts"),
+        ]
+        # cast to the pinned sink schema, persisted once for the data
+        # write AND the manifest aggregate; observed BELOW the persist,
+        # the checks count each row once, as the cache is built (the
+        # range sampler and the manifest aggregate re-read cached rows)
+        obs_in = Observation()
+        t0 = self._with_chunk(
+            tiles.select(*[F.col(f.name).cast(f.dataType) for f in TILE_BANDS_SCHEMA.fields])
+            .observe(obs_in, *checks)
+        ).persist()
         t = t0
-        if "tile_zoom" in t.columns:
-            # sinks are SINGLE-zoom by design: chunk keys, upsert merge
-            # keys, bounds pruning and read_tile_array all ignore
-            # tile_zoom, so same-(row, col) tiles at different zooms
-            # would collide in one chunk (last-writer-wins hides one
-            # zoom's attempt; single-tile reads would mix zooms).  A
-            # multi-zoom pyramid is one sink per level — see
-            # operators/overviews.build_overviews.
-            bad_zoom = (
-                t.where(F.col("tile_zoom") != int(self.cfg.zoom)).limit(1).count()
-            )
-            if bad_zoom:
-                t0.unpersist()
-                raise TileDirError(
-                    f"tile_zoom differs from the sink zoom {self.cfg.zoom} "
-                    "(a TileDirectory holds exactly one zoom level; write "
-                    "each pyramid level to its own sink)"
-                )
-        if self.cfg.time_steps:
-            # validate the INPUT, before any pruning: the fixed-axis
-            # rule is a data-integrity gate — bad rows raise even when
-            # resume would have skipped their chunks anyway
-            nsteps = len(self.cfg.time_steps)
-            bad = t.where((F.col("ts_idx") < 0) | (F.col("ts_idx") >= nsteps)).limit(1).count()
-            if bad:
-                t0.unpersist()
-                raise TileDirError(
-                    f"time slice index outside the fixed {nsteps}-step axis "
-                    "(the time axis can never be extended)"
-                )
         done = self.manifest_chunks(spark)
         if mode == "continue" and done is not None:
-            t = t.join(
-                _maybe_broadcast(done), ["chunk_row", "chunk_col"], "left_anti"
-            )
+            t = t.join(_maybe_broadcast(done, n_manifest), ["chunk_row", "chunk_col"], "left_anti")
         # chunk-aligned write: one file per (chunk) partition dir, rows
         # sorted by tile then band for row-group pruning on tile ranges
         tcs = max(int(self.cfg.time_chunksize), 1)
@@ -491,6 +499,21 @@ class TileDirectory:
             .partitionBy("chunk_row", "chunk_col", "attempt_id")
             .parquet(data_path)
         )
+        got = _observed(spark, obs_in) or t0.agg(*checks).first().asDict()
+        if got["bad_zoom"] or got["bad_ts"]:
+            # refused BEFORE the commit: the attempt just written is
+            # invisible to every reader and vacuum() reclaims it
+            t0.unpersist()
+            raise TileDirError(
+                f"tile_zoom differs from the sink zoom {self.cfg.zoom} "
+                "(a TileDirectory holds exactly one zoom level; write "
+                "each pyramid level to its own sink)"
+                if got["bad_zoom"] else
+                f"time slice index outside the fixed {nsteps}-step axis "
+                "(the time axis can never be extended)"
+            )
+        stats = [F.count(F.lit(1)).alias("chunks"), F.sum("n_tiles").alias("tiles")]
+        obs_m = Observation()
         m = (
             t.groupBy("chunk_row", "chunk_col")
             .agg(
@@ -525,10 +548,8 @@ class TileDirectory:
                     .agg(F.max("written_at").alias("w"))
                     .collect()
                 ]
-        self._commit_manifest(m, replace=(mode == "overwrite"))
-        stats = m.agg(
-            F.count("*").alias("chunks"), F.sum("n_tiles").alias("tiles")
-        ).collect()[0]
+        self._commit_manifest(m.observe(obs_m, *stats), replace=(mode == "overwrite"))
+        st = _observed(spark, obs_m) or m.agg(*stats).first().asDict()
         t0.unpersist()
         if superseded:
             # reclaim superseded attempts at the swap so readers stop
@@ -561,7 +582,8 @@ class TileDirectory:
                     pass  # never-written empty chunk / already gone
             if deleted_any:
                 spark.catalog.refreshByPath(_fs.join(self.path, "data"))
-        return {"attempt_id": attempt, "chunks": stats.chunks or 0, "tiles": stats.tiles or 0}
+        return {"attempt_id": attempt, "chunks": st["chunks"], "tiles": st["tiles"] or 0,
+                "rows_in": got["rows_in"]}
 
     def upsert(self, tiles: DataFrame, merge: bool = False) -> dict:
         """Tile-level upsert: new rows REPLACE same-(tile, band,
@@ -596,17 +618,15 @@ class TileDirectory:
         ]
         key_cols = ["tile_row", "tile_col", "band", "ts_idx"]
         new = self._with_chunk(tiles.select(*cols)).persist()
-        chunks = new.select("chunk_row", "chunk_col").distinct()
-        keys = new.select(*key_cols).distinct()
-        prior = self._data_df(spark).join(
-            _maybe_broadcast(chunks), ["chunk_row", "chunk_col"], "semi"
-        )
-        carried = prior.join(
-            _maybe_broadcast(keys), key_cols, "left_anti"
-        ).select(*cols)
+        # the batch row count bounds both distinct key sets
+        n_new = new.count()
+        chunks = _maybe_broadcast(new.select("chunk_row", "chunk_col").distinct(), n_new)
+        keys = _maybe_broadcast(new.select(*key_cols).distinct(), n_new)
+        prior = self._data_df(spark).join(chunks, ["chunk_row", "chunk_col"], "semi")
+        carried = prior.join(keys, key_cols, "left_anti").select(*cols)
         batch = new.select(*cols)
         if merge:
-            old = prior.join(_maybe_broadcast(keys), key_cols, "semi").select(
+            old = prior.join(keys, key_cols, "semi").select(
                 *key_cols,
                 F.col("payload").alias("payload_prev"),
                 F.col("n_sources").alias("n_sources_prev"),
@@ -676,34 +696,53 @@ class TileDirectory:
         fence the commit point; the generation does the publishing."""
         m.write.mode("append").parquet(_fs.join(self.path, "manifest"))
 
-    def _manifest_df(self, spark: SparkSession) -> DataFrame | None:
-        """Raw manifest rows with the ``generation`` column normalized
-        (manifests written before the generation scheme read as 0).
+    def _manifest_files(self) -> list:
+        """One listing of the manifest's parquet files (Spark's job
+        commit renames whole files in, so a listed file is complete)."""
+        sel = pafs.FileSelector(_fs.join(self._root, "manifest"), allow_not_found=True)
+        return [
+            fi
+            for fi in self._fs.get_file_info(sel)
+            if fi.type == pafs.FileType.File and fi.path.endswith(".parquet")
+        ]
 
-        mergeSchema is REQUIRED here, not an option: a legacy sink that
-        gets its first new-code append holds manifest files both with
-        and without the generation column, and plain parquet inference
-        picks ONE file's schema — either the column vanishes (an
-        overwrite's generation bump is lost, stale chunks stay visible)
-        or it appears with NULL for legacy rows (``generation == gen``
-        then drops every legacy commit: reads go empty and
-        continue-mode rewrites finished chunks).  Merged schema +
-        coalesce(generation, 0) makes both file populations read
-        consistently.  The manifest is one row per write call × chunk —
-        footer-merging cost is negligible at any scale."""
-        if not _fs.has_files(self._fs, _fs.join(self._root, "manifest")):
+    def _read_manifest(self, spark: SparkSession, *paths: str) -> DataFrame:
+        """Manifest rows (default: the whole manifest dir) under the
+        PINNED schema, with ``generation`` normalized: files written
+        before the generation scheme lack the column, parquet fills it
+        with NULL, and coalesce(generation, 0) makes legacy and
+        new-code files read consistently in one scan — no schema
+        inference and no mergeSchema footer-merge job.  Coalesced to
+        one partition: the manifest is one row per write call × chunk,
+        so its grouping, distinct and broadcast need no shuffle."""
+        m = spark.read.schema(_MANIFEST_SCHEMA).parquet(*(paths or [_fs.join(self.path, "manifest")]))
+        return m.withColumn(
+            "generation", F.coalesce(F.col("generation"), F.lit(0).cast("long"))
+        ).coalesce(1)
+
+    def _manifest_df(self, spark: SparkSession) -> DataFrame | None:
+        """Raw manifest rows under the pinned schema, None before the
+        first commit.  No mergeSchema: legacy files' missing
+        ``generation`` reads as NULL → 0 (see _read_manifest)."""
+        return self._read_manifest(spark) if self._manifest_files() else None
+
+    def _manifest_state(self, spark: SparkSession) -> tuple[int, int] | None:
+        """(current generation, manifest row count), None before the
+        first commit.  One one-row aggregate, memoized per manifest
+        listing: manifest files are immutable and uniquely named, so
+        the listing versions the log and repeated consults within a
+        write or read cost a listing, not a job.  The row count is an
+        upper bound on every manifest-derived key set (resume chunks,
+        visible attempts) — it sizes their broadcasts without probes."""
+        key = tuple(sorted((fi.path, fi.size, fi.mtime_ns) for fi in self._manifest_files()))
+        if not key:
             return None
-        m = spark.read.option("mergeSchema", "true").parquet(
-            _fs.join(self.path, "manifest")
-        )
-        if "generation" not in m.columns:
-            m = m.withColumn("generation", F.lit(0).cast("long"))
-        else:
-            m = m.withColumn(
-                "generation",
-                F.coalesce(F.col("generation").cast("long"), F.lit(0).cast("long")),
-            )
-        return m
+        if self._state[0] != key:
+            r = self._read_manifest(spark).agg(
+                F.max("generation").alias("generation"), F.count(F.lit(1)).alias("rows")
+            ).collect()[0]
+            self._state = (key, (int(r.generation or 0), int(r.rows)))
+        return self._state[1]
 
     def compact_manifest(self, spark: SparkSession, min_files: int = 2) -> dict:
         """Rewrite the append-only manifest into one file — the
@@ -711,14 +750,14 @@ class TileDirectory:
 
         Every write/upsert/refresh appends a manifest file, so after N
         maintenance cycles (a long-running streaming ingest is the
-        canonical case) each read pays an O(N) listing + footer merge;
+        canonical case) each read pays an O(N) listing + file scan;
         the streaming bench measured batch latency creeping ~1.3× over
         10 batches from exactly this.  Compaction restores O(1).
 
         CRASH-SAFE WITH NO COMMIT PROTOCOL, because every manifest
         consumer is duplicate-tolerant by construction
-        (manifest_chunks/committed_attempts end in ``distinct``,
-        visible_chunk_attempts in a groupBy-max, _current_generation in
+        (manifest_chunks ends in ``distinct``,
+        visible_chunk_attempts in a groupBy-max, the generation in
         ``max``): the combined file is appended FIRST (Spark's parquet
         job commit is atomic), then exactly the snapshot's old files
         are deleted — a crash between the two leaves duplicated rows,
@@ -741,56 +780,31 @@ class TileDirectory:
         in-flight scans drain first.
 
         Returns {files_before, files_after, rows, compacted}."""
-        from pyarrow import fs as pafs
-
-        mdir = _fs.join(self._root, "manifest")
-        sel = pafs.FileSelector(mdir, allow_not_found=True)
-        snapshot = [
-            fi
-            for fi in self._fs.get_file_info(sel)
-            if fi.type == pafs.FileType.File and fi.path.endswith(".parquet")
-        ]
+        snapshot = self._manifest_files()
         if len(snapshot) < max(int(min_files), 2):
-            return {
-                "files_before": len(snapshot),
-                "files_after": len(snapshot),
-                "rows": None,
-                "compacted": False,
-            }
+            n = len(snapshot)
+            return {"files_before": n, "files_after": n, "rows": None, "compacted": False}
         # in-filesystem listing paths → spark-readable paths (URI
         # sinks keep their scheme via the self.path root)
         root = self._root.rstrip("/")
-        spark_paths = [
-            self.path.rstrip("/") + fi.path[len(root):] for fi in snapshot
-        ]
-        m = spark.read.option("mergeSchema", "true").parquet(*spark_paths)
-        if "generation" not in m.columns:
-            m = m.withColumn("generation", F.lit(0).cast("long"))
-        else:
-            m = m.withColumn(
-                "generation",
-                F.coalesce(F.col("generation").cast("long"), F.lit(0).cast("long")),
-            )
-        n_rows = m.count()  # manifest is tiny: one row per write × chunk
-        m.coalesce(1).write.mode("append").parquet(_fs.join(self.path, "manifest"))
+        m = self._read_manifest(
+            spark, *(self.path.rstrip("/") + fi.path[len(root):] for fi in snapshot)
+        )
+        obs = Observation()
+        m.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode("append").parquet(
+            _fs.join(self.path, "manifest")
+        )
+        n_rows = (_observed(spark, obs) or {"rows": m.count()})["rows"]
         for fi in snapshot:
             try:
                 self._fs.delete_file(fi.path)
             except (FileNotFoundError, OSError):
                 pass  # another maintainer got it first — rows are safe
         spark.catalog.refreshByPath(_fs.join(self.path, "manifest"))
-        return {
-            "files_before": len(snapshot),
-            "files_after": 1,
-            "rows": int(n_rows),
-            "compacted": True,
-        }
+        return {"files_before": len(snapshot), "files_after": 1, "rows": n_rows, "compacted": True}
 
     def _current_generation(self, spark: SparkSession) -> int:
-        m = self._manifest_df(spark)
-        if m is None:
-            return 0
-        return int(m.agg(F.max("generation")).first()[0] or 0)
+        return (self._manifest_state(spark) or (0, 0))[0]
 
     # -- resume / existence ----------------------------------------------------
 
@@ -798,24 +812,13 @@ class TileDirectory:
         """Chunks committed in the CURRENT generation — after an
         overwrite, older generations are invisible, so continue-mode
         must treat their chunks as not-done."""
-        m = self._manifest_df(spark)
-        if m is None:
+        state = self._manifest_state(spark)
+        if state is None:
             return None
-        gen = self._current_generation(spark)
         return (
-            m.where(F.col("generation") == gen)
+            self._read_manifest(spark)
+            .where(F.col("generation") == state[0])
             .select("chunk_row", "chunk_col")
-            .distinct()
-        )
-
-    def committed_attempts(self, spark: SparkSession) -> DataFrame | None:
-        """Attempt ids the manifest has committed (None = no manifest
-        yet).  One row per write call — tiny at any data scale."""
-        if not _fs.has_files(self._fs, _fs.join(self._root, "manifest")):
-            return None
-        return (
-            spark.read.parquet(_fs.join(self.path, "manifest"))
-            .select("attempt_id")
             .distinct()
         )
 
@@ -830,13 +833,13 @@ class TileDirectory:
         (the parquet analog of the reference's idempotent zarr region
         overwrite — later write wins wholesale, never a row-level
         interleave).  Derived purely from the manifest: tiny."""
-        m = self._manifest_df(spark)
-        if m is None:
+        state = self._manifest_state(spark)
+        if state is None:
             return None
         # only the CURRENT generation is visible: an overwrite bumps
         # the generation in its (append-only) commit, atomically
         # flipping readers off every older attempt
-        m = m.where(F.col("generation") == self._current_generation(spark))
+        m = self._read_manifest(spark).where(F.col("generation") == state[0])
         last = m.groupBy("chunk_row", "chunk_col").agg(
             F.max(F.struct("written_at", "attempt_id")).alias("_w")
         )
@@ -858,10 +861,6 @@ class TileDirectory:
         window are reclaimed (the two-phase-commit gap is seconds; 10
         minutes is conservative).  Pass 0 only when no other writer
         can be in flight (single-writer maintenance, tests)."""
-        import time as _time
-
-        from pyarrow import fs as pafs
-
         visible = self.visible_chunk_attempts(spark)
 
         def _key(path: str):
@@ -880,7 +879,7 @@ class TileDirectory:
         sel = pafs.FileSelector(
             _fs.join(self._root, "data"), recursive=True, allow_not_found=True
         )
-        cutoff = _time.time() - float(min_age_sec)
+        cutoff = time.time() - float(min_age_sec)
         # one streaming pass over the listing: per attempt dir, its
         # newest file mtime (None mtime — e.g. mock filesystems —
         # counts as old, so tests without clocks still reclaim).
@@ -977,7 +976,9 @@ class TileDirectory:
             return t.withColumn("exists", F.lit(False)).drop("chunk_row", "chunk_col")
         return (
             t.join(
-                _maybe_broadcast(done.withColumn("_e", F.lit(True))),
+                _maybe_broadcast(
+                    done.withColumn("_e", F.lit(True)), self._manifest_state(spark)[1]
+                ),
                 ["chunk_row", "chunk_col"],
                 "left",
             )
@@ -988,32 +989,30 @@ class TileDirectory:
     # -- read path ----------------------------------------------------------
 
     def _data_df(self, spark: SparkSession) -> DataFrame:
-        """Scan of the data partition tree, filtered to COMMITTED
+        """Scan of the data partition tree under the pinned schema (the
+        sink's tile-band columns plus the chunk/attempt partition
+        columns — no schema-inference job), filtered to COMMITTED
         attempts (manifest semi-join — the read half of the write
-        path's two-phase commit; orphans from crashed writers are
-        invisible).  An empty or never-committed sink yields an empty
-        DataFrame with the canonical schema instead of a
-        schema-inference error."""
+        path's two-phase commit; orphans from crashed or refused
+        writers are invisible).  An empty or never-committed sink
+        yields an empty DataFrame of the same schema."""
         from ..operators.mosaic import TILE_BANDS_SCHEMA
 
+        schema = T.StructType(
+            TILE_BANDS_SCHEMA.fields + [T.StructField(c, T.LongType()) for c in ("chunk_row", "chunk_col")]
+        ).add("attempt_id", T.StringType())
         visible = self.visible_chunk_attempts(spark)
         if visible is None or not _fs.has_files(
             self._fs, _fs.join(self._root, "data"), recursive=True
         ):
-            empty = spark.createDataFrame([], TILE_BANDS_SCHEMA)
-            return (
-                empty.withColumn("chunk_row", F.lit(0).cast("long"))
-                .withColumn("chunk_col", F.lit(0).cast("long"))
-                .withColumn("attempt_id", F.lit(""))
-                .where(F.lit(False))
-            )
+            return spark.createDataFrame([], schema)
         # broadcast semi-join on (chunk, attempt): the manifest has one
         # row per (write call × chunk); keying the chunk too gives
         # chunk-level last-writer-wins under a double commit (see
         # visible_chunk_attempts).  Sized like the resume anti-join —
-        # unhinted past ~5M chunks
-        return spark.read.parquet(_fs.join(self.path, "data")).join(
-            _maybe_broadcast(visible),
+        # unhinted past ~5M manifest rows
+        return spark.read.schema(schema).parquet(_fs.join(self.path, "data")).join(
+            _maybe_broadcast(visible, self._manifest_state(spark)[1]),
             ["chunk_row", "chunk_col", "attempt_id"],
             "semi",
         )

@@ -191,7 +191,7 @@ def streaming_pyramid_ingest(
     ``compact_every=k`` (0 = off) runs ``compact_manifest`` on the
     base and every overview sink each k batches: every micro-batch
     appends one manifest file per touched sink, so a long-running
-    ingest otherwise pays an O(#batches) listing + footer merge
+    ingest otherwise pays an O(#batches) listing + manifest scan
     inside every upsert/refresh.  At 10-batch scale that cost is
     noise (BENCH/STREAMING.md — compaction's own ~1-2 s per
     compacting batch is the larger term there); the win is at

@@ -2,6 +2,7 @@
 build/read/refresh/export round-trips + the config gates."""
 
 import json
+import uuid
 
 import numpy as np
 import pandas as pd
@@ -38,6 +39,28 @@ def _images_pdf(n=10, lon0=-120.0, lat0=30.0):
         columns=["image_id", "bytes", "w", "h", "fmt",
                  "minx", "miny", "maxx", "maxy"],
     )
+
+
+# Spark jobs `write_base` + `build` may launch on the fixture below:
+# the first plan budget (ROADMAP item 5).  Each fresh-sink write is a
+# range-sampled data write plus the manifest append; each level read
+# adds the manifest state aggregate and the visible-set broadcast.
+BUILD_JOB_BUDGET = 28
+
+
+def _jobs(spark, fn):
+    """(fn's result, number of Spark jobs it launched), counted through
+    a job group once the listener bus has fed the status store."""
+    sc = spark.sparkContext
+    group = f"budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _payload_map(df):
@@ -82,6 +105,31 @@ class TestPyramidDirectory:
             for r in pd_dir.read(spark).select("tile_zoom").distinct().collect()
         }
         assert zs == {ZOOM, ZOOM - 1, ZOOM - 2}
+
+    def test_bookkeeping_job_budget(self, spark, tmp_path):
+        """Sink bookkeeping runs a fixed handful of jobs: the manifest
+        and data tree are read under pinned schemas (no inference or
+        mergeSchema job), the manifest state is one memoized one-row
+        aggregate, and the write's checks and counts are observed on
+        the writes — so a write + two-level build stays in budget, and
+        every level's stats carry the observed input row count."""
+        pd_dir = self._pd(tmp_path)
+        pd_dir.prepare()
+        tiles = materialize_tiles(
+            spark.createDataFrame(_images_pdf()), PYR, ZOOM, bands=3
+        )
+        _, n_write = _jobs(spark, lambda: pd_dir.write_base(tiles))
+        stats, n_build = _jobs(spark, lambda: pd_dir.build(spark))
+        assert n_write + n_build <= BUILD_JOB_BUDGET, (n_write, n_build)
+        assert [s["rows_in"] for s in stats] == [
+            pd_dir.level(z).read(spark).count() for z in pd_dir.zooms[1:]
+        ]
+        # a committed sink's read plans with ONE job (the state
+        # aggregate) and a repeat over the same manifest with none
+        td = pd_dir.level(ZOOM - 2)
+        _, n_read = _jobs(spark, lambda: td.read(spark))
+        _, n_again = _jobs(spark, lambda: td.read(spark))
+        assert (n_read, n_again) == (1, 0)
 
     def test_build_is_resumable_noop(self, spark, tmp_path):
         pd_dir = self._pd(tmp_path)

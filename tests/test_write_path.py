@@ -328,10 +328,10 @@ class TestTileDirectory:
         monkeypatch.undo()
         assert collected_cols, "vacuum ran no victim batches"
         for cols in collected_cols:
-            # allowed: path-projected victim batches + the scalar
-            # generation aggregate (one row).  Forbidden: anything
-            # attempt-set-shaped.
-            assert cols in (["path"], ["max(generation)"]), (
+            # allowed: path-projected victim batches + the one-row
+            # manifest state aggregate (generation, row count).
+            # Forbidden: anything attempt-set-shaped.
+            assert cols in (["path"], ["generation", "rows"]), (
                 f"vacuum collected non-victim frame: {cols}"
             )
         assert ["path"] in collected_cols
@@ -793,6 +793,74 @@ class TestTileDirectory:
             TileDirConfig(path=str(tmp_path), bands=None)
         with pytest.raises(TileDirError, match="pattern"):
             TileDirConfig(path=str(tmp_path), time={"start": "2022-01-01"})
+
+
+@pytest.mark.spark
+class TestObservedWriteChecks:
+    """The write's input checks and returned counts are Observations
+    on the data and manifest writes: a refused write is an uncommitted
+    attempt, and a missing observation falls back to the explicit job."""
+
+    def _td(self, tmp_path, name="out.tiledir"):
+        td = TileDirectory(
+            TileDirConfig(
+                path=str(tmp_path / name), zoom=ZOOM, bounds=(-180.0, 40.0, -160.0, 55.0)
+            )
+        )
+        td.prepare()
+        return td
+
+    def test_refused_write_is_an_invisible_attempt(self, spark, images, tmp_path):
+        td = self._td(tmp_path)
+        tiles = materialize_tiles(images, PYR, ZOOM, bands=3)
+        td.write(tiles)
+        data_dir = tmp_path / "out.tiledir" / "data"
+
+        def view():
+            vis = sorted(map(tuple, td.visible_chunk_attempts(spark).collect()))
+            rows = td.read(spark).select("tile_row", "tile_col", "band", "attempt_id")
+            return vis, sorted(map(tuple, rows.collect()))
+
+        def attempts():
+            return {p for p in data_dir.rglob("attempt_id=*") if p.is_dir()}
+
+        before, dirs = view(), attempts()
+        wrong = tiles.withColumn("tile_zoom", F.lit(ZOOM - 1))
+        # every bad row falls in a committed chunk, so resume prunes
+        # them all: the INPUT is still validated
+        with pytest.raises(TileDirError, match="one zoom level"):
+            td.write(wrong, mode="continue")
+        assert view() == before
+        # a refresh writes the bad rows before the check refuses them:
+        # the attempt lands on disk uncommitted and vacuum reclaims it
+        with pytest.raises(TileDirError, match="one zoom level"):
+            td.write(wrong, mode="refresh")
+        refused = attempts() - dirs
+        assert refused
+        assert view() == before
+        victims = td.vacuum(spark, min_age_sec=0)
+        assert {v.rsplit("/", 1)[-1] for v in victims} == {p.name for p in refused}
+        assert attempts() == dirs
+        assert view() == before
+
+    def test_missing_observation_runs_the_explicit_job(
+        self, spark, images, tmp_path, monkeypatch
+    ):
+        from mapchete_xarray_spark.sources import tiledir
+
+        tiles = materialize_tiles(images, PYR, ZOOM, bands=3)
+        observed = self._td(tmp_path, "a.tiledir").write(tiles)
+        assert observed["rows_in"] == tiles.count() > 0
+        monkeypatch.setattr(tiledir, "_observed", lambda spark, obs: None)
+        td = self._td(tmp_path, "b.tiledir")
+        fallback = td.write(tiles)
+        del observed["attempt_id"], fallback["attempt_id"]
+        assert fallback == observed
+        with pytest.raises(TileDirError, match="one zoom level"):
+            td.write(tiles.withColumn("tile_zoom", F.lit(ZOOM - 1)), mode="refresh")
+        td.write(tiles, mode="refresh")
+        st = td.compact_manifest(spark)
+        assert st["compacted"] and st["rows"] == 2 * observed["chunks"]
 
 
 class TestObjectStorePaths:
