@@ -225,7 +225,6 @@ def refresh_xyz(
     cache_path: str,
     changed_tiles,
     *,
-    max_keys: int = 10_000,
     filesystem=None,
 ) -> dict:
     """Incremental cache maintenance (the maintenance-family
@@ -243,7 +242,7 @@ def refresh_xyz(
     drift from it.
 
     Returns ``{"tiles": n, "bytes": total}``."""
-    from ..sources.tiledir import TileDirError, chunk_in_list_pred
+    from ..sources.tiledir import TileDirError, pull_refresh_keys
 
     fsys, root = _fs.resolve(str(cache_path), filesystem)
     meta = json.loads(_fs.read_text(fsys, _fs.join(root, "metadata.json")))
@@ -252,25 +251,15 @@ def refresh_xyz(
             f"cache at {cache_path} is {meta['grid']}/z{meta['zoom']}, "
             f"base sink is {td.cfg.grid_name}/z{td.cfg.zoom}"
         )
-    ct = int(td.cfg.chunk_tiles)
-    changed = [
-        (int(r.tile_row), int(r.tile_col))
-        for r in changed_tiles.select("tile_row", "tile_col")
-        .distinct()
-        .limit(max_keys + 1)
-        .collect()
-    ]
-    if len(changed) > max_keys:
-        raise TileDirError(
-            f"refresh_xyz: more than {max_keys:,} changed tiles — that is "
-            f"a full rebuild; run export_xyz instead"
-        )
+    # the cache's unit is the tile, not the chunk: pull the changed
+    # tiles themselves
+    changed = pull_refresh_keys(
+        changed_tiles.select("tile_row", "tile_col"), "refresh_xyz", "run export_xyz instead"
+    )
     if not changed:
         return {"tiles": 0, "bytes": 0}
-    chunks = {(r // ct, c // ct) for r, c in changed}
 
     band_order = [int(b) for b in meta["band_order"]]
-    base = td.read(spark)
     key_pred = F.struct(
         F.col("tile_row").cast("long"), F.col("tile_col").cast("long")
     ).isin(
@@ -280,7 +269,7 @@ def refresh_xyz(
         ]
     )
     tiles = (
-        base.where(chunk_in_list_pred(chunks))
+        td.read_covering(spark, [(r, r, c, c) for r, c in changed])
         .where(key_pred)
         .where(
             (F.col("ts_idx") == int(meta["ts_idx"]))

@@ -384,7 +384,6 @@ def refresh_focal(
     pixelbuffer: int | None = None,
     fill_value: float = 0,
     wrap_x: bool = True,
-    max_keys: int = 10_000,
 ) -> dict:
     """Incremental stencil maintenance: after some source tiles were
     re-written, recompute ONLY the destination chunks their change can
@@ -398,10 +397,11 @@ def refresh_focal(
     chunk cover.  Refresh commits whole chunks, so the source read
     window is the covered chunks' tiles plus a one-tile halo ring —
     every recomputed tile sees its full neighborhood, and window-edge
-    tiles (whose neighborhoods are clipped) are filtered out before
-    the write.  Focal params must match the ones the destination was
-    built with (the refresh recomputes, it cannot introspect)."""
-    from ..sources.tiledir import TileDirError, chunk_in_list_pred
+    tiles (whose neighborhoods are clipped) are dropped by the
+    chunk-complete write.  Focal params must match the ones the
+    destination was built with (the refresh recomputes, it cannot
+    introspect)."""
+    from ..sources.tiledir import TileDirError
 
     if src_td.cfg.grid_name != dst_td.cfg.grid_name:
         raise TileDirError(
@@ -418,66 +418,36 @@ def refresh_focal(
     nrows = pyr.matrix_height(zoom)
     ncols = pyr.matrix_width(zoom)
     wrap = bool(wrap_x) and ncols >= 3
-    ct = int(dst_td.cfg.chunk_tiles)
-    bct = int(src_td.cfg.chunk_tiles)
-
-    changed = [
-        (int(r.tile_row), int(r.tile_col))
-        for r in changed_tiles.select("tile_row", "tile_col")
-        .distinct()
-        .limit(max_keys + 1)
-        .collect()
-    ]
-    if len(changed) > max_keys:
-        raise TileDirError(
-            f"refresh_focal: more than {max_keys:,} changed tiles — that "
-            f"is a full rebuild; run focal_map over the whole source and "
-            f"write with mode='overwrite' instead"
-        )
-    if not changed:
-        return {"attempt_id": None, "chunks": 0, "tiles": 0}
 
     # dilate by one tile: a change reaches every neighbor whose halo
     # reads it
-    dilated = set()
-    for tr, tc in changed:
-        for dr in (-1, 0, 1):
-            for dc in (-1, 0, 1):
-                r2, c2 = tr + dr, tc + dc
-                if r2 < 0 or r2 >= nrows:
-                    continue
-                if c2 < 0 or c2 >= ncols:
-                    if not wrap:
-                        continue
-                    c2 %= ncols
-                dilated.add((r2, c2))
-    dst_chunks = sorted({(r // ct, c // ct) for r, c in dilated})
+    col = f"pmod(tile_col + dc, {ncols})" if wrap else "tile_col + dc"
+    dilated = (
+        changed_tiles.selectExpr("explode(array(-1, 0, 1)) as dr", "tile_row", "tile_col")
+        .selectExpr("tile_row + dr as tile_row", "explode(array(-1, 0, 1)) as dc", "tile_col")
+        .selectExpr("tile_row", f"{col} as tile_col")
+        .where(f"tile_row between 0 and {nrows - 1} and tile_col between 0 and {ncols - 1}")
+    )
+    dst_chunks = dst_td.touched_chunks(
+        dilated,
+        "refresh_focal",
+        "run focal_map over the whole source and write with mode='overwrite' instead",
+    )
+    if not dst_chunks:
+        return {"attempt_id": None, "chunks": 0, "tiles": 0}
 
     # source window: covered chunks' tile ranges + a one-tile halo
-    # ring, as source chunk keys (arithmetic cap before enumerating —
-    # the regrid discipline)
-    src_keys: set | None = set()
-    for cr, cc in dst_chunks:
-        r_lo, r_hi = cr * ct - 1, (cr + 1) * ct
-        c_lo, c_hi = cc * ct - 1, (cc + 1) * ct
-        rch_lo, rch_hi = max(r_lo, 0) // bct, min(r_hi, nrows - 1) // bct
-        cch = set(range(max(c_lo, 0) // bct, min(c_hi, ncols - 1) // bct + 1))
-        if wrap:
-            if c_lo < 0:
-                cch.add((ncols - 1) // bct)
-            if c_hi >= ncols:
-                cch.add(0)
-        if (rch_hi - rch_lo + 1) * len(cch) + len(src_keys) > max_keys:
-            src_keys = None  # IN-list stops paying: full scan
-            break
-        for br in range(rch_lo, rch_hi + 1):
-            for bc in cch:
-                src_keys.add((br, bc))
-
-    base = src_td.read(spark)
-    if src_keys:
-        base = base.where(chunk_in_list_pred(src_keys))
-    base = base.drop("chunk_row", "chunk_col", "attempt_id")
+    # ring, the ring's off-matrix column wrapping to the far edge
+    window = []
+    for key in dst_chunks:
+        r_lo, r_hi, c_lo, c_hi = dst_td.chunk_range(key)
+        r_lo, r_hi = max(r_lo - 1, 0), min(r_hi + 1, nrows - 1)
+        window.append((r_lo, r_hi, max(c_lo - 1, 0), min(c_hi + 1, ncols - 1)))
+        if wrap and c_lo == 0:
+            window.append((r_lo, r_hi, ncols - 1, ncols - 1))
+        if wrap and c_hi + 1 >= ncols:
+            window.append((r_lo, r_hi, 0, 0))
+    base = src_td.read_covering(spark, window)
 
     out = focal_map(
         base,
@@ -491,13 +461,4 @@ def refresh_focal(
         fill_value=fill_value,
         wrap_x=wrap_x,
     )
-    # keep ONLY the covered chunks: window-edge tiles computed with a
-    # clipped neighborhood would corrupt untouched chunks
-    keep = spark.createDataFrame(dst_chunks, "_cr long, _cc long")
-    out = (
-        out.withColumn("_cr", F.expr(f"tile_row div {ct}"))
-        .withColumn("_cc", F.expr(f"tile_col div {ct}"))
-        .join(F.broadcast(keep), ["_cr", "_cc"])
-        .drop("_cr", "_cc")
-    )
-    return dst_td.write(out, mode="refresh")
+    return dst_td.refresh_chunks(out, dst_chunks)

@@ -40,7 +40,6 @@ def batched_group_map(
     keys: list,
     reduce_one,
     schema,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """See module docstring.  ``keys`` must be sortable columns; the
     output contains one row per distinct key, ordered arbitrarily."""
@@ -84,25 +83,19 @@ def batched_group_map(
         if not saw:
             yield pd.DataFrame([], columns=cols)
 
-    if not num_partitions:
-        # r9: pin the partition count EXPLICITLY (an explicit
-        # numPartitions is exempt from AQE coalescing).  The work
-        # behind this exchange is per-GROUP Python+numpy compute, not
-        # proportional to shuffle bytes — when an upstream
-        # optimization shrinks the shuffled payload (overview quarter
-        # planes, regrid crops), AQE's byte-based coalescing would
-        # collapse the stage onto a fraction of the cores and
-        # serialize the real work (measured: overview_derive 8.1 →
-        # 18.4 s at sf1 before this pin).  defaultParallelism — the
-        # cluster's total core count — is the scale-adaptive choice:
-        # one wave of Python workers with every core busy (pinning to
-        # spark.sql.shuffle.partitions, typically 2× cores, measured
-        # ~25% slower on the 3-stage overview_build at sf0.1: twice
-        # the per-task Arrow/worker overhead for the same cores).
-        num_partitions = df.sparkSession.sparkContext.defaultParallelism or None
-    rep = (
-        df.repartition(num_partitions, *keys)
-        if num_partitions
-        else df.repartition(*keys)
-    )
-    return rep.sortWithinPartitions(*keys).mapInPandas(run, schema)
+    # r9: pin the partition count EXPLICITLY (an explicit
+    # numPartitions is exempt from AQE coalescing).  The work behind
+    # this exchange is per-GROUP Python+numpy compute, not
+    # proportional to shuffle bytes — when an upstream optimization
+    # shrinks the shuffled payload (overview quarter planes, regrid
+    # crops), AQE's byte-based coalescing would collapse the stage
+    # onto a fraction of the cores and serialize the real work
+    # (measured: overview_derive 8.1 → 18.4 s at sf1 before this
+    # pin).  defaultParallelism — the cluster's total core count — is
+    # the scale-adaptive choice: one wave of Python workers with every
+    # core busy (pinning to spark.sql.shuffle.partitions, typically 2×
+    # cores, measured ~25% slower on the 3-stage overview_build at
+    # sf0.1: twice the per-task Arrow/worker overhead for the same
+    # cores).
+    n = df.sparkSession.sparkContext.defaultParallelism
+    return df.repartition(n, *keys).sortWithinPartitions(*keys).mapInPandas(run, schema)

@@ -177,37 +177,6 @@ def overview_level(
     )
 
 
-def _pruned_base_read(spark, base_td, ov_chunks, ct: int, max_keys: int = 10_000):
-    """Base-level read restricted to the children of the given
-    overview chunks, as a (chunk_row, chunk_col) IN-list on the BASE
-    sink's PARTITION columns — the filter Catalyst can turn into
-    directory pruning (PartitionFilters), which a join on derived
-    tile columns never could.
-
-    The full-scan fallback gates on the number of EMITTED IN-list
-    tuples (``base_keys``), not the overview chunk count: when the
-    base sink's chunk_tiles is smaller than the overview's, each
-    overview chunk expands to ((2·ct/bct)+1)² base keys, so a
-    chunk-count gate could admit a 10k×16+-tuple struct IN-list — a
-    giant Catalyst expression that cliffs planning/codegen.  The key
-    enumeration aborts the moment it crosses the cap, so an oversized
-    refresh never materializes the full key set either."""
-    base = base_td.read(spark)
-    bct = int(base_td.cfg.chunk_tiles)
-    base_keys = set()
-    for cr, cc in ov_chunks:
-        for br in range(cr * ct * 2 // bct, ((cr + 1) * ct * 2 - 1) // bct + 1):
-            for bc in range(cc * ct * 2 // bct, ((cc + 1) * ct * 2 - 1) // bct + 1):
-                base_keys.add((br, bc))
-        if len(base_keys) > max_keys:
-            # past the cap the IN-list stops paying and a full scan is
-            # the honest plan
-            return base
-    from ..sources.tiledir import chunk_in_list_pred
-
-    return base.where(chunk_in_list_pred(base_keys))
-
-
 def refresh_overviews(
     spark,
     base_td,
@@ -224,9 +193,12 @@ def refresh_overviews(
     ``changed_tiles``: (tile_row, tile_col) at the BASE zoom — e.g.
     the keys of a reprocessing job's output.  The refresh unit is the
     overview CHUNK (refresh writes must cover complete chunks), so
-    every parent in a touched chunk is rebuilt from its children: at
-    10^12 tiles a k-tile change reads O(k) chunk neighborhoods, not
-    the pyramid.  Returns the sink write stats."""
+    every parent in a touched chunk is rebuilt from its children, read
+    as a chunk-pruned base scan: at 10^12 tiles a k-tile change reads
+    O(k) chunk neighborhoods, not the pyramid.  The chunk layout and
+    the pull cap live in ``TileDirectory``'s refresh kernel; only the
+    ``div 2`` parent geometry is this operator's.  Returns the sink
+    write stats."""
     from ..sources.tiledir import TileDirError
 
     if int(ov_td.cfg.zoom) != int(base_td.cfg.zoom) - 1:
@@ -234,40 +206,25 @@ def refresh_overviews(
             f"refresh_overviews maintains one level: base zoom "
             f"{base_td.cfg.zoom}, overview zoom {ov_td.cfg.zoom}"
         )
-    ct = int(ov_td.cfg.chunk_tiles)
-    # the changed set is small by contract → the touched overview
-    # chunks are a bounded driver list, which lets the child read push
-    # a (chunk_row, chunk_col) IN-list onto the BASE sink's partition
-    # columns — without it the broadcast join on derived columns
-    # cannot prune and every refresh scans the whole base level's
-    # payload bytes (the O(k) claim would be false at the design
-    # point).  Past ~10k touched chunks the IN-list stops paying and
-    # a full-scan refresh is the honest plan anyway.
-    ov_chunks = [
-        (int(r._cr), int(r._cc))
-        for r in changed_tiles.selectExpr(
-            f"(tile_row div 2) div {ct} as _cr",
-            f"(tile_col div 2) div {ct} as _cc",
-        )
-        .distinct()
-        .collect()
-    ]
+    ov_chunks = ov_td.touched_chunks(
+        changed_tiles,
+        "refresh_overviews",
+        "run overview_level over the whole base and write with mode='overwrite' instead",
+        rows="tile_row div 2",
+        cols="tile_col div 2",
+    )
     if not ov_chunks:
         return {"attempt_id": None, "chunks": 0, "tiles": 0}
-    base = _pruned_base_read(spark, base_td, ov_chunks, ct).drop(
-        "chunk_row", "chunk_col"
-    )
-    chunks = spark.createDataFrame(ov_chunks, "_cr long, _cc long")
-    kids = (
-        base.withColumn("_cr", F.expr(f"(tile_row div 2) div {ct}"))
-        .withColumn("_cc", F.expr(f"(tile_col div 2) div {ct}"))
-        .join(F.broadcast(chunks), ["_cr", "_cc"])
-        .drop("_cr", "_cc")
-    )
+    # an overview tile range's children: rows/cols [2·lo, 2·hi + 1]
+    children = []
+    for key in ov_chunks:
+        r_lo, r_hi, c_lo, c_hi = ov_td.chunk_range(key)
+        children.append((2 * r_lo, 2 * r_hi + 1, 2 * c_lo, 2 * c_hi + 1))
+    kids = base_td.read_covering(spark, children)
     # fill belongs to the level being WRITTEN: absent-child quadrants
     # must carry the overview sink's nodata, not the base's
     lvl = overview_level(kids, method=method, fill_value=ov_td.cfg.fill_value)
-    return ov_td.write(lvl, mode="refresh")
+    return ov_td.refresh_chunks(lvl, ov_chunks)
 
 
 def refresh_pyramid(
@@ -312,37 +269,3 @@ def refresh_pyramid(
         prev_td = ov_td
     return stats
 
-
-def build_overviews(
-    tiles: DataFrame,
-    levels: int,
-    method: str = "average",
-    fill_value: int = 0,
-) -> DataFrame:
-    """The full pyramid: base rows unioned with ``levels`` coarser
-    zooms, each derived from the level below (so a 3-level build is 3
-    chained single shuffles over geometrically shrinking data, ~4/3 of
-    one base pass in total).  Returns one TILE_BANDS_SCHEMA frame.
-
-    SINK NOTE: a ``TileDirectory`` holds exactly ONE zoom level (its
-    chunk/merge keys deliberately ignore tile_zoom, and ``write``
-    refuses rows at any other zoom) — to persist a pyramid, split this
-    union by ``tile_zoom`` and write each level to its own sink, as
-    ``plans.job`` and ``streaming.streaming_pyramid_ingest`` do."""
-    from pyspark import StorageLevel
-
-    if levels < 1:
-        raise ValueError("levels must be >= 1")
-    out = tiles
-    level = tiles
-    for i in range(levels):
-        level = overview_level(level, method=method, fill_value=fill_value)
-        if i < levels - 1:
-            # each level is BOTH a union branch and the next level's
-            # input; without a persist the deeper levels' lineage
-            # re-runs every shallower assemble stage (ReuseExchange is
-            # not guaranteed, e.g. under AQE replanning) and the
-            # "~4/3 of one base pass" claim breaks to O(L) passes
-            level = level.persist(StorageLevel.MEMORY_AND_DISK)
-        out = out.unionByName(level)
-    return out

@@ -366,7 +366,6 @@ def refresh_regrid(
     src_td,
     dst_td,
     changed_tiles: DataFrame,
-    max_keys: int = 10_000,
 ) -> dict:
     """Incremental cross-grid maintenance: after some source tiles
     were re-written, recompute ONLY the destination chunks their
@@ -390,12 +389,14 @@ def refresh_regrid(
       intersection is symmetric, and the closed boundary convention
       only ever ADDS zero-pixel sources.
 
-    The source read is then a (chunk_row, chunk_col) IN-list on the
-    source sink's partition columns (directory pruning), with the
-    ``refresh_overviews`` honesty rule: past ``max_keys`` emitted
-    tuples — or a non-power-of-two ``chunk_tiles`` — a full scan is
-    the better plan and is used instead.  At 10^12 tiles a k-tile
-    change costs O(k) chunk neighborhoods on both sides."""
+    The source read is then chunk-pruned by ``TileDirectory``'s
+    refresh kernel, which falls back to a full scan past its key cap;
+    a non-power-of-two ``chunk_tiles`` has no inverse cover and scans
+    in full too.  A forward cover past the cap (a coarse→fine refresh
+    can cover millions of destination chunks from one changed tile —
+    src z2 → dst z16 is ~4M chunks) raises: that is a full regrid, not
+    an incremental one.  At 10^12 tiles a k-tile change costs O(k)
+    chunk neighborhoods on both sides."""
     import math
 
     from ..sources.tiledir import TileDirError
@@ -418,76 +419,30 @@ def refresh_regrid(
     sz, dz = int(src_td.cfg.zoom), int(dst_td.cfg.zoom)
     ct = int(dst_td.cfg.chunk_tiles)
 
-    # forward cover: changed source tiles → touched destination chunks.
-    # CAPPED at max_keys BEFORE collecting (a coarse→fine refresh can
-    # cover millions of destination chunks from one changed tile —
-    # e.g. src z2 → dst z16 is ~4M chunks): a change set that big is
-    # not incremental, and the honest answer is a full regrid, not a
-    # driver OOM.
+    # forward cover: changed source tiles → touched destination chunks
     rng = cover_ranges_sql(s_grid, sz, d_grid, dz)
-    touched = (
-        changed_tiles.select("tile_row", "tile_col")
-        .distinct()
-        .where(F.expr(rng["valid"]))
-        .withColumn("cov_r_lo", F.expr(rng["r_lo"]))
-        .withColumn("cov_r_hi", F.expr(rng["r_hi"]))
-        .withColumn("cov_c_lo", F.expr(rng["c_lo"]))
-        .withColumn("cov_c_hi", F.expr(rng["c_hi"]))
-        .selectExpr(
-            f"explode(sequence(cov_r_lo div {ct}, cov_r_hi div {ct})) as _cr",
-            "cov_c_lo",
-            "cov_c_hi",
-        )
-        .selectExpr("_cr", f"explode(sequence(cov_c_lo div {ct}, cov_c_hi div {ct})) as _cc")
-        .distinct()
+    dst_chunks = dst_td.touched_chunks(
+        changed_tiles.where(F.expr(rng["valid"])),
+        f"refresh_regrid (src zoom {sz} → dst zoom {dz})",
+        "run regrid_tiles over the whole source and write with mode='overwrite' instead",
+        rows=(rng["r_lo"], rng["r_hi"]),
+        cols=(rng["c_lo"], rng["c_hi"]),
     )
-    dst_chunks = [(int(r._cr), int(r._cc)) for r in touched.limit(max_keys + 1).collect()]
-    if len(dst_chunks) > max_keys:
-        raise TileDirError(
-            f"refresh_regrid: the change set touches more than {max_keys:,} "
-            f"destination chunks (src zoom {sz} → dst zoom {dz}) — that is a "
-            f"full rebuild, not an incremental refresh; run regrid_tiles over "
-            f"the whole source and write with mode='overwrite' instead"
-        )
     if not dst_chunks:
         return {"attempt_id": None, "chunks": 0, "tiles": 0}
-    chunks_df = spark.createDataFrame(dst_chunks, "_cr long, _cc long")
 
-    # inverse cover: whole destination chunks → source chunk IN-list
-    base = src_td.read(spark)
+    # inverse cover: whole destination chunks → source tile ranges
+    ranges = []
     k = int(math.log2(ct)) if ct > 0 and (ct & (ct - 1)) == 0 else None
     if k is not None and dz - k >= 0:
         inv = cover_ranges_sql(d_grid, dz - k, s_grid, sz, row="_cr", col="_cc")
         ranges = (
-            chunks_df.where(F.expr(inv["valid"]))
-            .selectExpr(
-                f"{inv['r_lo']} as r_lo",
-                f"{inv['r_hi']} as r_hi",
-                f"{inv['c_lo']} as c_lo",
-                f"{inv['c_hi']} as c_hi",
-            )
+            spark.createDataFrame(dst_chunks, "_cr long, _cc long")
+            .where(F.expr(inv["valid"]))
+            .selectExpr(inv["r_lo"], inv["r_hi"], inv["c_lo"], inv["c_hi"])
             .collect()
         )
-        bct = int(src_td.cfg.chunk_tiles)
-        src_keys: set | None = set()
-        for r in ranges:
-            rlo, rhi = int(r.r_lo) // bct, int(r.r_hi) // bct
-            clo, chi = int(r.c_lo) // bct, int(r.c_hi) // bct
-            # bail ARITHMETICALLY before enumerating: one wide-zoom-gap
-            # range can span millions of keys, and a cap that is only
-            # consulted between ranges would enumerate (and hold) all
-            # of them on the driver first
-            if (rhi - rlo + 1) * (chi - clo + 1) + len(src_keys) > max_keys:
-                src_keys = None  # IN-list stops paying: full scan
-                break
-            for br in range(rlo, rhi + 1):
-                for bc in range(clo, chi + 1):
-                    src_keys.add((br, bc))
-        if src_keys:
-            from ..sources.tiledir import chunk_in_list_pred
-
-            base = base.where(chunk_in_list_pred(src_keys))
-    base = base.drop("chunk_row", "chunk_col", "attempt_id")
+    base = src_td.read_covering(spark, ranges)
 
     out = regrid_tiles(
         base,
@@ -498,14 +453,4 @@ def refresh_regrid(
         fill_value=dst_td.cfg.fill_value,
         tile_size=int(src_td.cfg.tile_size),
     )
-    # keep ONLY the touched chunks: the pruned base legitimately emits
-    # partial content for destination tiles OUTSIDE them (their source
-    # neighborhoods were not read) — writing those would corrupt
-    # untouched chunks
-    out = (
-        out.withColumn("_cr", F.expr(f"tile_row div {ct}"))
-        .withColumn("_cc", F.expr(f"tile_col div {ct}"))
-        .join(F.broadcast(chunks_df), ["_cr", "_cc"])
-        .drop("_cr", "_cc")
-    )
-    return dst_td.write(out, mode="refresh")
+    return dst_td.refresh_chunks(out, dst_chunks)

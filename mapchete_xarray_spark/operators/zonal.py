@@ -559,7 +559,6 @@ def refresh_zonal(
     changed_tiles: DataFrame,
     *,
     nodata: float | None = None,
-    max_keys: int = 10_000,
     kind: str = "moments",
 ):
     """Incremental zonal maintenance (the materialized-aggregate
@@ -582,8 +581,6 @@ def refresh_zonal(
     Returns ``(new_partials, finalized)``; the caller persists
     ``new_partials`` for the next round (it is the materialized
     aggregate — bounded by zone-tile intersections, parquet-tiny)."""
-    from ..sources.tiledir import TileDirError, chunk_in_list_pred
-
     try:
         partials_fn, finalize_fn = _ZONAL_KINDS[kind]
     except KeyError:
@@ -592,22 +589,9 @@ def refresh_zonal(
             f"{kind!r}"
         ) from None
 
-    ct = int(base_td.cfg.chunk_tiles)
-    changed = [
-        (int(r._cr), int(r._cc))
-        for r in changed_tiles.selectExpr(
-            f"tile_row div {ct} as _cr", f"tile_col div {ct} as _cc"
-        )
-        .distinct()
-        .limit(max_keys + 1)
-        .collect()
-    ]
-    if len(changed) > max_keys:
-        raise TileDirError(
-            f"refresh_zonal: more than {max_keys:,} changed chunks — that "
-            f"is a full rebuild; run zonal_partials over the whole base "
-            f"instead"
-        )
+    changed = base_td.touched_chunks(
+        changed_tiles, "refresh_zonal", "run zonal_partials over the whole base instead"
+    )
     if not changed:
         return old_partials, finalize_fn(old_partials)
 
@@ -616,26 +600,12 @@ def refresh_zonal(
         tile_size=int(base_td.cfg.tile_size),
         metatiling=int(base_td.cfg.metatiling),
     )
-    base = base_td.read(spark)
-    pruned = base.where(chunk_in_list_pred(set(changed))).drop(
-        "chunk_row", "chunk_col", "attempt_id"
-    )
+    pruned = base_td.read_covering(spark, [base_td.chunk_range(k) for k in changed])
     recomputed = partials_fn(
         pruned, zones, pyr, int(base_td.cfg.zoom), nodata=nodata
     )
-    # drop the changed chunks' old rows; the struct IN-list mirrors
-    # chunk_in_list_pred (bounded by max_keys above)
-    keep_pred = ~F.struct(
-        F.expr(f"tile_row div {ct}").cast("long").alias("r"),
-        F.expr(f"tile_col div {ct}").cast("long").alias("c"),
-    ).isin(
-        [
-            F.struct(F.lit(r).cast("long"), F.lit(c).cast("long"))
-            for r, c in changed
-        ]
-    )
-    kept = old_partials.where(keep_pred)
-    new_partials = kept.unionByName(recomputed)
+    # splice: the changed chunks' old rows give way to the recomputed
+    new_partials = old_partials.where(~base_td.in_chunks(changed)).unionByName(recomputed)
     return new_partials, finalize_fn(new_partials)
 
 

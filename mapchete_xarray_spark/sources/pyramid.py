@@ -173,11 +173,6 @@ class PyramidDirectory:
 
     # -- read / serve -----------------------------------------------------------
 
-    def compact_manifests(self, spark: SparkSession) -> dict:
-        """Manifest compaction (commit-log checkpoint) across every
-        level sink — see TileDirectory.compact_manifest."""
-        return {z: self.level(z).compact_manifest(spark) for z in self.zooms}
-
     def streaming_ingest(
         self, images: DataFrame, checkpoint_dir: str, merge: bool = False,
         compact_every: int = 0,

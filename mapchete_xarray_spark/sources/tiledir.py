@@ -94,13 +94,33 @@ def _observed(spark: SparkSession, obs: Observation) -> dict | None:
     return obs.get if reported else None
 
 
-def chunk_in_list_pred(keys) -> "F.Column":
-    """``(chunk_row, chunk_col) IN (...)`` predicate over the BIGINT
-    chunk columns every read path yields (the data schema is pinned).
-    Kept as a literal IN-list (not a join) so Catalyst can turn it
-    into directory-level PartitionFilters."""
+# The one bound on an incremental refresh: keys it pulls to the driver
+# and chunk keys it emits as an IN-list.  A change past it is a full
+# rebuild, not a refresh.
+REFRESH_MAX_KEYS = 10_000
+
+
+def chunk_in_list_pred(keys, row: str = "chunk_row", col: str = "chunk_col") -> "F.Column":
+    """``(row, col) IN (...)`` over BIGINT chunk keys: by default the
+    chunk partition columns every read path yields (the data schema is
+    pinned).  Kept as a literal IN-list (not a join) so Catalyst can
+    turn it into directory-level PartitionFilters."""
     in_list = ", ".join(f"({r}L, {c}L)" for r, c in sorted(keys))
-    return F.expr(f"(chunk_row, chunk_col) in ({in_list})")
+    return F.expr(f"({row}, {col}) in ({in_list})")
+
+
+def pull_refresh_keys(keys: DataFrame, what: str, instead: str) -> list[tuple]:
+    """The distinct rows of ``keys`` as int tuples: an incremental
+    refresh's one driver pull, a single ``limit``-ed collect.  More than
+    REFRESH_MAX_KEYS keys is not incremental — raise, naming the full
+    rebuild to run ``instead``, rather than pull an archive-sized list."""
+    rows = keys.distinct().limit(REFRESH_MAX_KEYS + 1).collect()
+    if len(rows) > REFRESH_MAX_KEYS:
+        raise TileDirError(
+            f"{what}: the change touches more than {REFRESH_MAX_KEYS:,} keys — "
+            f"that is a full rebuild; {instead}"
+        )
+    return [tuple(int(v) for v in r) for r in rows]
 
 
 def normalize_step(s) -> str:
@@ -548,7 +568,7 @@ class TileDirectory:
                     .agg(F.max("written_at").alias("w"))
                     .collect()
                 ]
-        self._commit_manifest(m.observe(obs_m, *stats), replace=(mode == "overwrite"))
+        self._commit_manifest(m.observe(obs_m, *stats))
         st = _observed(spark, obs_m) or m.agg(*stats).first().asDict()
         t0.unpersist()
         if superseded:
@@ -677,7 +697,7 @@ class TileDirectory:
         finally:
             new.unpersist()
 
-    def _commit_manifest(self, m: DataFrame, replace: bool = False) -> None:
+    def _commit_manifest(self, m: DataFrame) -> None:
         """THE commit point: once these rows are visible, the attempt's
         data is committed.  Spark's parquet job commit is itself a
         rename from a _temporary dir, so a crash mid-append leaves no
@@ -691,9 +711,7 @@ class TileDirectory:
         that window would leave data with an empty manifest — every
         read empty and a subsequent vacuum() reclaiming every attempt.
         The append-only manifest stays tiny (one row per write × chunk)
-        and superseded-generation rows are dead weight vacuum ignores.
-        ``replace`` is kept in the signature for callers/tests that
-        fence the commit point; the generation does the publishing."""
+        and superseded-generation rows are dead weight vacuum ignores."""
         m.write.mode("append").parquet(_fs.join(self.path, "manifest"))
 
     def _manifest_files(self) -> list:
@@ -802,9 +820,6 @@ class TileDirectory:
                 pass  # another maintainer got it first — rows are safe
         spark.catalog.refreshByPath(_fs.join(self.path, "manifest"))
         return {"files_before": len(snapshot), "files_after": 1, "rows": n_rows, "compacted": True}
-
-    def _current_generation(self, spark: SparkSession) -> int:
-        return (self._manifest_state(spark) or (0, 0))[0]
 
     # -- resume / existence ----------------------------------------------------
 
@@ -985,6 +1000,80 @@ class TileDirectory:
             .withColumn("exists", F.coalesce(F.col("_e"), F.lit(False)))
             .drop("_e", "chunk_row", "chunk_col")
         )
+
+    # -- incremental refresh -------------------------------------------------
+    #
+    # Every refresh kind (overviews, focal, regrid, xyz, zonal) makes one
+    # decision in three steps — which of this sink's chunks a change
+    # touches, which source chunks to read, which chunks to rewrite — and
+    # the chunk layout behind all three lives here.  Operators speak in
+    # inclusive tile ranges (r_lo, r_hi, c_lo, c_hi) and chunk keys.
+
+    def chunk_range(self, key) -> tuple[int, int, int, int]:
+        """Inclusive tile range (r_lo, r_hi, c_lo, c_hi) of chunk ``key``."""
+        ct = int(self.cfg.chunk_tiles)
+        r, c = key
+        return r * ct, (r + 1) * ct - 1, c * ct, (c + 1) * ct - 1
+
+    def touched_chunks(
+        self, changes: DataFrame, what: str, instead: str, rows="tile_row", cols="tile_col"
+    ) -> list[tuple[int, int]]:
+        """This sink's chunks that ``changes`` touch, through the bounded
+        ``pull_refresh_keys``.  ``rows``/``cols`` are SQL expressions
+        over its columns: a tile index, or a (lo, hi) pair for an
+        inclusive tile range.  Ranges explode at CHUNK granularity (one
+        coarse→fine change can cover millions of tiles)."""
+        ct = int(self.cfg.chunk_tiles)
+
+        def chunk(e) -> str:
+            if isinstance(e, str):
+                return f"({e}) div {ct}"
+            return f"explode(sequence(({e[0]}) div {ct}, ({e[1]}) div {ct}))"
+
+        # one generator per select: one axis each
+        keys = changes.selectExpr(f"{chunk(rows)} as chunk_row", "*").selectExpr(
+            "chunk_row", f"{chunk(cols)} as chunk_col"
+        )
+        return pull_refresh_keys(keys, what, instead)
+
+    def read_covering(self, spark: SparkSession, ranges) -> DataFrame:
+        """Committed rows of the chunks covering inclusive tile
+        ``ranges``, as a chunk IN-list on the partition columns — the
+        filter Catalyst turns into directory pruning (PartitionFilters),
+        which a join on derived tile columns never could.  The cap
+        counts EMITTED keys and is checked arithmetically before a range
+        enumerates (one wide range can span millions of chunks): past
+        REFRESH_MAX_KEYS, or with no ranges, the IN-list stops paying
+        and the read is a full scan.  Chunk and attempt columns are
+        dropped: the rows feed an operator."""
+        ct = int(self.cfg.chunk_tiles)
+        keys: set | None = set()
+        for r_lo, r_hi, c_lo, c_hi in ranges:
+            rs = range(int(r_lo) // ct, int(r_hi) // ct + 1)
+            cs = range(int(c_lo) // ct, int(c_hi) // ct + 1)
+            if len(rs) * len(cs) + len(keys) > REFRESH_MAX_KEYS:
+                keys = None
+                break
+            keys.update((r, c) for r in rs for c in cs)
+        df = self.read(spark)
+        if keys:
+            df = df.where(chunk_in_list_pred(keys))
+        return df.drop("chunk_row", "chunk_col", "attempt_id")
+
+    def in_chunks(self, keys) -> "F.Column":
+        """Rows whose (tile_row, tile_col) lies in one of the chunks
+        ``keys`` (derived from the tile columns, so any tile-keyed
+        frame qualifies)."""
+        ct = int(self.cfg.chunk_tiles)
+        return chunk_in_list_pred(keys, f"tile_row div {ct}", f"tile_col div {ct}")
+
+    def refresh_chunks(self, tiles: DataFrame, keys) -> dict:
+        """Chunk-complete refresh write: keep only ``tiles`` rows in
+        the chunks ``keys`` and commit them with ``mode="refresh"``.
+        An operator run over a pruned window also emits tiles outside
+        the chunks it recomputed, with partial neighborhoods; writing
+        those would corrupt chunks the change never touched."""
+        return self.write(tiles.where(self.in_chunks(keys)), mode="refresh")
 
     # -- read path ----------------------------------------------------------
 

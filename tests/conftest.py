@@ -1,5 +1,6 @@
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -28,3 +29,25 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
+
+
+def _jobs(spark, fn):
+    """(fn's result, number of Spark jobs it launched), counted through
+    a job group once the listener bus has fed the status store."""
+    sc = spark.sparkContext
+    group = f"budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.fixture
+def spark_jobs(spark):
+    """``spark_jobs(fn)`` → (fn's result, Spark jobs it launched): the
+    job-budget probe plan-budget tests assert against."""
+    return lambda fn: _jobs(spark, fn)

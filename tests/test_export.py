@@ -17,6 +17,10 @@ from mapchete_xarray_spark.sources.tiledir import (
 
 TPX = 16
 ZOOM = 3
+# Spark jobs the incremental refresh test below may launch: the count
+# it ran before the refresh kinds shared one chunk-refresh kernel in
+# sources/tiledir.py (the kernel must not add jobs).
+REFRESH_JOBS = 7
 
 
 def _sink(spark, tmp_path, bands=3, dtype="uint8", name="base"):
@@ -148,7 +152,7 @@ class TestExportXYZ:
         with pytest.raises(ValueError, match="uint8 sink"):
             export_xyz(spark, td16, str(tmp_path / "x"))
 
-    def test_refresh_xyz_incremental(self, spark, tmp_path):
+    def test_refresh_xyz_incremental(self, spark, tmp_path, spark_jobs, monkeypatch):
         """Change one base tile, refresh: only that tile's cache
         object is re-put (others keep their mtime), and it decodes to
         the new pixels."""
@@ -171,13 +175,15 @@ class TestExportXYZ:
         changed = spark.createDataFrame(
             [(2, 3)], "tile_row long, tile_col long"
         )
-        stats = refresh_xyz(spark, td, out, changed)
+        stats, n_jobs = spark_jobs(lambda: refresh_xyz(spark, td, out, changed))
+        assert n_jobs <= REFRESH_JOBS, n_jobs
         assert stats["tiles"] == 1 and stats["bytes"] == TPX * TPX * 3
         img = read_xyz_tile(out, 2, 3)
         assert (img == 77).all()
         assert os.path.getmtime(untouched) == mtime0
 
         # empty no-op; oversized refuses; wrong cache refuses
+        from mapchete_xarray_spark.sources import tiledir
         from mapchete_xarray_spark.sources.tiledir import TileDirError
 
         empty = spark.createDataFrame([], "tile_row long, tile_col long")
@@ -186,8 +192,9 @@ class TestExportXYZ:
             [(r, c) for r in range(4) for c in range(4)],
             "tile_row long, tile_col long",
         )
-        with pytest.raises(TileDirError, match="full rebuild"):
-            refresh_xyz(spark, td, out, big, max_keys=3)
+        with monkeypatch.context() as m, pytest.raises(TileDirError, match="full rebuild"):
+            m.setattr(tiledir, "REFRESH_MAX_KEYS", 3)
+            refresh_xyz(spark, td, out, big)
         other = _sink(spark, tmp_path, name="otherzoom")
         object.__setattr__(other.cfg, "zoom", ZOOM + 1)
         with pytest.raises(TileDirError, match="base sink is"):

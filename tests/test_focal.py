@@ -17,6 +17,10 @@ from mapchete_xarray_spark.operators.mosaic import TILE_BANDS_SCHEMA
 TPX = 16
 ZOOM = 1  # geodetic z1: 2 rows x 4 cols — wrap active, every edge case present
 PYR = grid.Pyramid("geodetic", tile_size=TPX)
+# Spark jobs the incremental refresh test below may launch: the count
+# it ran before the refresh kinds shared one chunk-refresh kernel in
+# sources/tiledir.py (the kernel must not add jobs).
+REFRESH_JOBS = 13
 NROWS, NCOLS = 2, 4
 
 
@@ -260,7 +264,7 @@ class TestFocal:
         with pytest.raises(TileDirError, match="same-zoom"):
             Job(bad).run(spark)
 
-    def test_refresh_focal_incremental_matches_full(self, spark, tmp_path):
+    def test_refresh_focal_incremental_matches_full(self, spark, tmp_path, spark_jobs, monkeypatch):
         """Change one base tile, refresh: the derived sink must equal a
         full focal recompute of the CURRENT base — including neighbor
         tiles in ADJACENT chunks (the dilation), while chunks outside
@@ -315,11 +319,11 @@ class TestFocal:
             [(Z, 3, 5, 0, 0, TPX, TPX, "uint8", newplane.tobytes(), 9)],
             TILE_BANDS_SCHEMA,
         ))
-        stats = refresh_focal(
-            spark, src, dst,
-            spark.createDataFrame([(3, 5)], "tile_row long, tile_col long"),
-            stat="mean", size=3,
+        changed = spark.createDataFrame([(3, 5)], "tile_row long, tile_col long")
+        stats, n_jobs = spark_jobs(
+            lambda: refresh_focal(spark, src, dst, changed, stat="mean", size=3)
         )
+        assert n_jobs <= REFRESH_JOBS, n_jobs
         assert stats["tiles"] > 0
 
         want = {
@@ -342,6 +346,7 @@ class TestFocal:
         assert flipped and flipped != set(before)
 
         # empty change set no-ops; oversized change set raises
+        from mapchete_xarray_spark.sources import tiledir
         from mapchete_xarray_spark.sources.tiledir import TileDirError
 
         empty = spark.createDataFrame([], "tile_row long, tile_col long")
@@ -350,8 +355,9 @@ class TestFocal:
             [(r, c) for r in range(4) for c in range(4)],
             "tile_row long, tile_col long",
         )
-        with pytest.raises(TileDirError, match="full rebuild"):
-            refresh_focal(spark, src, dst, big, stat="mean", max_keys=3)
+        with monkeypatch.context() as m, pytest.raises(TileDirError, match="full rebuild"):
+            m.setattr(tiledir, "REFRESH_MAX_KEYS", 3)
+            refresh_focal(spark, src, dst, big, stat="mean")
 
     def test_streaming_focal_ingest(self, spark, tmp_path):
         """Micro-batched stencil maintenance end to end: drop-folder →

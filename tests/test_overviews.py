@@ -13,9 +13,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from mapchete_xarray_spark.operators.mosaic import TILE_BANDS_SCHEMA
-from mapchete_xarray_spark.operators.overviews import build_overviews, overview_level
+from mapchete_xarray_spark.operators.overviews import overview_level
 
 N = 16  # tile edge (even, small for pixel goldens)
+# Spark jobs the incremental refresh test below may launch: the count
+# it ran before the refresh kinds shared one chunk-refresh kernel in
+# sources/tiledir.py (the kernel must not add jobs).
+REFRESH_JOBS = 10
 
 
 def _tile_row(zoom, row, col, band, plane, n_sources=1, ts_idx=0):
@@ -101,15 +105,17 @@ class TestOverviews:
 
     def test_two_levels_chain_and_row_counts(self, spark):
         """A full 4x4 block of children at z5 → 4 parents at z4 → 1 at
-        z3; build_overviews returns base ∪ both levels, and the z3
-        tile equals decimating twice."""
+        z3: two chained overview_level calls yield base ∪ both levels,
+        and the z3 tile equals decimating twice."""
         rng = np.random.default_rng(11)
         planes = {
             (r, c): rng.integers(0, 256, (N, N), dtype=np.uint8)
             for r in range(4, 8)
             for c in range(4, 8)
         }
-        pyr = build_overviews(self._children(spark, planes), levels=2)
+        base = self._children(spark, planes)
+        z4_rows = overview_level(base)
+        pyr = base.unionByName(z4_rows).unionByName(overview_level(z4_rows))
         counts = {
             r.tile_zoom: r.n
             for r in pyr.groupBy("tile_zoom").agg(F.count("*").alias("n")).collect()
@@ -199,7 +205,7 @@ class TestOverviews:
         zooms = {t[0] for t in a}
         assert zooms == {5, 4}
 
-    def test_incremental_refresh(self, spark, tmp_path):
+    def test_incremental_refresh(self, spark, tmp_path, spark_jobs):
         """Incremental pyramid maintenance: rewrite ONE base tile →
         refresh_overviews recomputes only its overview chunk (new
         attempt for that chunk; unrelated chunks keep their original
@@ -250,7 +256,10 @@ class TestOverviews:
         changed = spark.createDataFrame(
             pd.DataFrame({"tile_row": [2], "tile_col": [2]})
         )
-        refresh_overviews(spark, base_td, ov_td, changed)
+        _, n_jobs = spark_jobs(
+            lambda: refresh_overviews(spark, base_td, ov_td, changed)
+        )
+        assert n_jobs <= REFRESH_JOBS, n_jobs
 
         after = {
             (r.chunk_row, r.chunk_col): r.attempt_id
@@ -289,7 +298,6 @@ class TestOverviews:
         a PartitionFilters IN-list on the chunk partition columns —
         without it every refresh scans the whole base level's payload
         (the O(k) claim would be false at the design point)."""
-        from mapchete_xarray_spark.operators.overviews import _pruned_base_read
         from mapchete_xarray_spark.sources.tiledir import (
             TileDirConfig,
             TileDirectory,
@@ -305,11 +313,40 @@ class TestOverviews:
         )
         td.prepare()
         td.write(self._children(spark, planes))
-        pruned = _pruned_base_read(spark, td, [(0, 0)], 2)
+        # the children of overview chunk (0, 0) at chunk_tiles=2
+        pruned = td.read_covering(spark, [(0, 3, 0, 3)])
         plan = pruned._jdf.queryExecution().executedPlan().toString()
         assert "PartitionFilters: [named_struct" in plan and " IN " in plan
         rows = pruned.collect()
         assert {(r.tile_row, r.tile_col) for r in rows} == {(2, 2)}
+
+    def test_refresh_pull_is_capped(self, spark, tmp_path, monkeypatch):
+        """The touched overview chunks reach the driver through the
+        shared bounded pull: past REFRESH_MAX_KEYS the refresh refuses
+        as a full rebuild instead of collecting an unbounded list."""
+        from mapchete_xarray_spark.operators.overviews import refresh_overviews
+        from mapchete_xarray_spark.sources import tiledir
+        from mapchete_xarray_spark.sources.tiledir import (
+            TileDirConfig,
+            TileDirectory,
+            TileDirError,
+        )
+
+        sinks = []
+        for name, zoom in (("b", 5), ("o", 4)):
+            td = TileDirectory(
+                TileDirConfig(path=str(tmp_path / name), zoom=zoom, bands=1,
+                              tile_size=N, chunk_tiles=2)
+            )
+            td.prepare()
+            sinks.append(td)
+        # four base tiles whose parents sit in four overview chunks
+        changed = spark.createDataFrame(
+            pd.DataFrame({"tile_row": [0, 0, 8, 8], "tile_col": [0, 8, 0, 8]})
+        )
+        monkeypatch.setattr(tiledir, "REFRESH_MAX_KEYS", 3)
+        with pytest.raises(TileDirError, match="full rebuild"):
+            refresh_overviews(spark, *sinks, changed)
 
     def test_refresh_uses_overview_fill(self, spark, tmp_path):
         """Absent-child quadrants must carry the OVERVIEW sink's
@@ -575,7 +612,7 @@ class TestOverviews:
 
 @pytest.mark.spark
 class TestPrunedReadGate:
-    def test_gate_counts_inlist_tuples_not_chunks(self, spark, tmp_path):
+    def test_gate_counts_inlist_tuples_not_chunks(self, spark, tmp_path, monkeypatch):
         """The full-scan fallback must gate on the EMITTED IN-list size
         (base keys), not the overview chunk count (ADVICE r4): a base
         chunk_tiles smaller than the overview's expands each overview
@@ -583,7 +620,7 @@ class TestPrunedReadGate:
         a giant Catalyst struct IN-list that cliffs planning."""
         import numpy as np
 
-        from mapchete_xarray_spark.operators.overviews import _pruned_base_read
+        from mapchete_xarray_spark.sources import tiledir
         from mapchete_xarray_spark.sources.tiledir import (
             TileDirConfig,
             TileDirectory,
@@ -600,15 +637,18 @@ class TestPrunedReadGate:
             pd.DataFrame(rows, columns=[f.name for f in TILE_BANDS_SCHEMA.fields]),
             TILE_BANDS_SCHEMA,
         ))
-        # bct=1, ov ct=2 → ONE overview chunk expands to 16 base keys:
-        # a max_keys=8 cap must fall back to the full scan even though
-        # the chunk count (1) is tiny
-        full = _pruned_base_read(spark, td, [(0, 0)], 2, max_keys=8)
+        # bct=1, ov ct=2 → ONE overview chunk's children (base tiles
+        # 0..3 × 0..3) are 16 base keys: a cap of 8 must fall back to
+        # the full scan even though the chunk count (1) is tiny
+        children = [(0, 3, 0, 3)]
+        monkeypatch.setattr(tiledir, "REFRESH_MAX_KEYS", 8)
+        full = td.read_covering(spark, children)
         plan = full._jdf.queryExecution().executedPlan().toString()
         assert "PartitionFilters: [named_struct" not in plan
         # under the cap the IN-list prunes as before and rows agree
         # (Catalyst renders long lists as INSET, short ones as IN)
-        pruned = _pruned_base_read(spark, td, [(0, 0)], 2, max_keys=100)
+        monkeypatch.setattr(tiledir, "REFRESH_MAX_KEYS", 100)
+        pruned = td.read_covering(spark, children)
         plan2 = pruned._jdf.queryExecution().executedPlan().toString()
         assert "PartitionFilters: [named_struct" in plan2
         assert " IN " in plan2 or "INSET" in plan2
@@ -644,9 +684,8 @@ class TestPyramidCascade:
         return td
 
     def test_three_level_cascade(self, spark, tmp_path, monkeypatch):
-        import mapchete_xarray_spark.operators.overviews as ovmod
         from mapchete_xarray_spark.operators.overviews import refresh_pyramid
-        from mapchete_xarray_spark.sources.tiledir import TileDirError
+        from mapchete_xarray_spark.sources.tiledir import TileDirectory, TileDirError
 
         rng = np.random.default_rng(11)
         # 4x4 base block rows/cols 8..11 → z4 parents (4..5, 4..5) →
@@ -680,15 +719,15 @@ class TestPyramidCascade:
 
         # spy on the pruned base read: every level of the cascade must
         # reach Catalyst as a PartitionFilters IN-list (chunk pruning)
-        orig = ovmod._pruned_base_read
+        orig = TileDirectory.read_covering
         plans = []
 
-        def spy(spark_, td_, chunks_, ct_, **kw):
-            df = orig(spark_, td_, chunks_, ct_, **kw)
+        def spy(td_, spark_, ranges_):
+            df = orig(td_, spark_, ranges_)
             plans.append(df._jdf.queryExecution().executedPlan().toString())
             return df
 
-        monkeypatch.setattr(ovmod, "_pruned_base_read", spy)
+        monkeypatch.setattr(TileDirectory, "read_covering", spy)
         stats = refresh_pyramid(spark, base, [ov4, ov3, ov2], changed)
         assert len(stats) == 3 and all(s["chunks"] >= 1 for s in stats)
         assert len(plans) == 3

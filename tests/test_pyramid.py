@@ -2,7 +2,6 @@
 build/read/refresh/export round-trips + the config gates."""
 
 import json
-import uuid
 
 import numpy as np
 import pandas as pd
@@ -48,21 +47,6 @@ def _images_pdf(n=10, lon0=-120.0, lat0=30.0):
 BUILD_JOB_BUDGET = 28
 
 
-def _jobs(spark, fn):
-    """(fn's result, number of Spark jobs it launched), counted through
-    a job group once the listener bus has fed the status store."""
-    sc = spark.sparkContext
-    group = f"budget-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def _payload_map(df):
     return {
         (r.tile_zoom, r.tile_row, r.tile_col, r.band): r.payload
@@ -106,7 +90,7 @@ class TestPyramidDirectory:
         }
         assert zs == {ZOOM, ZOOM - 1, ZOOM - 2}
 
-    def test_bookkeeping_job_budget(self, spark, tmp_path):
+    def test_bookkeeping_job_budget(self, spark, tmp_path, spark_jobs):
         """Sink bookkeeping runs a fixed handful of jobs: the manifest
         and data tree are read under pinned schemas (no inference or
         mergeSchema job), the manifest state is one memoized one-row
@@ -118,8 +102,8 @@ class TestPyramidDirectory:
         tiles = materialize_tiles(
             spark.createDataFrame(_images_pdf()), PYR, ZOOM, bands=3
         )
-        _, n_write = _jobs(spark, lambda: pd_dir.write_base(tiles))
-        stats, n_build = _jobs(spark, lambda: pd_dir.build(spark))
+        _, n_write = spark_jobs(lambda: pd_dir.write_base(tiles))
+        stats, n_build = spark_jobs(lambda: pd_dir.build(spark))
         assert n_write + n_build <= BUILD_JOB_BUDGET, (n_write, n_build)
         assert [s["rows_in"] for s in stats] == [
             pd_dir.level(z).read(spark).count() for z in pd_dir.zooms[1:]
@@ -127,8 +111,8 @@ class TestPyramidDirectory:
         # a committed sink's read plans with ONE job (the state
         # aggregate) and a repeat over the same manifest with none
         td = pd_dir.level(ZOOM - 2)
-        _, n_read = _jobs(spark, lambda: td.read(spark))
-        _, n_again = _jobs(spark, lambda: td.read(spark))
+        _, n_read = spark_jobs(lambda: td.read(spark))
+        _, n_again = spark_jobs(lambda: td.read(spark))
         assert (n_read, n_again) == (1, 0)
 
     def test_build_is_resumable_noop(self, spark, tmp_path):

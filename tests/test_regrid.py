@@ -13,6 +13,10 @@ from mapchete_xarray_spark.operators.mosaic import TILE_BANDS_SCHEMA
 from mapchete_xarray_spark.operators.regrid import cover_ranges_sql, regrid_tiles
 
 TPX = 16  # small tiles keep the brute-force reference cheap
+# Spark jobs the incremental refresh test below may launch: the count
+# it ran before the refresh kinds shared one chunk-refresh kernel in
+# sources/tiledir.py (the kernel must not add jobs).
+REFRESH_JOBS = 15
 
 
 def _plane(row, col, band=0):
@@ -298,7 +302,7 @@ class TestRefreshRegrid:
             for r in dst.read(spark).collect()
         }
 
-    def test_incremental_matches_full_recompute(self, spark, tmp_path):
+    def test_incremental_matches_full_recompute(self, spark, tmp_path, spark_jobs):
         """Change one source tile, refresh: the destination sink must
         equal a full regrid of the CURRENT base — and chunks the
         change didn't touch must keep their original attempts (the
@@ -333,7 +337,8 @@ class TestRefreshRegrid:
         src.upsert(spark.createDataFrame(row, TILE_BANDS_SCHEMA))
 
         ch = spark.createDataFrame([changed], "tile_row long, tile_col long")
-        stats = refresh_regrid(spark, src, dst, ch)
+        stats, n_jobs = spark_jobs(lambda: refresh_regrid(spark, src, dst, ch))
+        assert n_jobs <= REFRESH_JOBS, n_jobs
         assert stats["tiles"] > 0
 
         # pixel parity with a full recompute over the CURRENT base
@@ -380,11 +385,12 @@ class TestRefreshRegrid:
         stats = refresh_regrid(spark, src, dst, ch)
         assert stats["tiles"] == 0
 
-    def test_oversized_change_set_raises(self, spark, tmp_path):
-        """A change set whose forward cover exceeds max_keys destination
+    def test_oversized_change_set_raises(self, spark, tmp_path, monkeypatch):
+        """A change set whose forward cover exceeds REFRESH_MAX_KEYS destination
         chunks is a full rebuild, not an incremental refresh — raise
         with guidance instead of collecting millions of chunk keys."""
         from mapchete_xarray_spark.operators.regrid import refresh_regrid
+        from mapchete_xarray_spark.sources import tiledir
         from mapchete_xarray_spark.sources.tiledir import TileDirError
 
         src, dst = self._sinks(spark, tmp_path)
@@ -393,8 +399,9 @@ class TestRefreshRegrid:
             [(r, c) for r in range(2, 6) for c in range(16)],
             "tile_row long, tile_col long",
         )
-        with pytest.raises(TileDirError, match="full rebuild"):
-            refresh_regrid(spark, src, dst, ch, max_keys=3)
+        with monkeypatch.context() as m, pytest.raises(TileDirError, match="full rebuild"):
+            m.setattr(tiledir, "REFRESH_MAX_KEYS", 3)
+            refresh_regrid(spark, src, dst, ch)
 
 @pytest.mark.spark
 class TestStreamingRegrid:

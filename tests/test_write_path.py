@@ -263,7 +263,7 @@ class TestTileDirectory:
 
         boom = RuntimeError("killed between data and manifest append")
 
-        def crash(_m, replace=False):
+        def crash(_m):
             raise boom
 
         monkeypatch.setattr(td, "_commit_manifest", crash)
@@ -359,7 +359,7 @@ class TestTileDirectory:
             (r.chunk_row, r.chunk_col, r.attempt_id)
             for r in td.visible_chunk_attempts(spark).collect()
         }
-        gen_before = td._current_generation(spark)
+        gen_before = td._manifest_state(spark)[0]
 
         st = td.compact_manifest(spark)
         assert st["compacted"] and st["files_before"] == files_before
@@ -374,7 +374,7 @@ class TestTileDirectory:
             for r in td.visible_chunk_attempts(spark).collect()
         }
         assert after_vis == before_vis
-        assert td._current_generation(spark) == gen_before
+        assert td._manifest_state(spark)[0] == gen_before
         # single-file manifest: a second compaction is a no-op
         assert td.compact_manifest(spark)["compacted"] is False
 
@@ -603,7 +603,7 @@ class TestTileDirectory:
 
         # crash BEFORE the swap: data of the new attempt already on
         # disk, manifest untouched → readers still see the old view
-        def crash(_m, replace=False):
+        def crash(_m):
             raise RuntimeError("killed before manifest swap")
 
         monkeypatch.setattr(td, "_commit_manifest", crash)

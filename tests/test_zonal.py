@@ -18,6 +18,10 @@ from mapchete_xarray_spark.sources.aoi import aoi_pandas
 TPX = 16
 ZOOM = 3  # geodetic z3: 8 x 16 tiles, pixel = 1.40625 deg
 PYR = grid.Pyramid("geodetic", tile_size=TPX)
+# Spark jobs the incremental refresh test below may launch: the count
+# it ran before the refresh kinds shared one chunk-refresh kernel in
+# sources/tiledir.py (the kernel must not add jobs).
+REFRESH_JOBS = 3
 
 
 def _planes_pdf(seed=11, bands=2, tiles=None, ts_idx=0, nodata_frac=0.0):
@@ -415,7 +419,7 @@ class TestRasterZonal:
 
 
 class TestRefreshZonal:
-    def test_incremental_matches_full(self, spark, tmp_path):
+    def test_incremental_matches_full(self, spark, tmp_path, spark_jobs, monkeypatch):
         """Change one base tile, splice-refresh the persisted partials:
         the refreshed stats must equal a full zonal recompute of the
         CURRENT base, while untouched chunks' partial rows survive the
@@ -463,7 +467,10 @@ class TestRefreshZonal:
         changed = spark.createDataFrame(
             [(3, 5)], "tile_row long, tile_col long"
         )
-        new_partials, stats = refresh_zonal(spark, src, zones, old, changed)
+        (new_partials, stats), n_jobs = spark_jobs(
+            lambda: refresh_zonal(spark, src, zones, old, changed)
+        )
+        assert n_jobs <= REFRESH_JOBS, n_jobs
 
         want = {
             (r.aoi_id, r.band, r.ts_idx): r
@@ -501,14 +508,16 @@ class TestRefreshZonal:
         assert same is old
 
         # oversized change set refuses — full rebuild territory
+        from mapchete_xarray_spark.sources import tiledir
         from mapchete_xarray_spark.sources.tiledir import TileDirError
 
         big = spark.createDataFrame(
             [(r, c) for r in range(6) for c in range(6)],
             "tile_row long, tile_col long",
         )
-        with pytest.raises(TileDirError, match="full rebuild"):
-            refresh_zonal(spark, src, zones, old, big, max_keys=3)
+        with monkeypatch.context() as m, pytest.raises(TileDirError, match="full rebuild"):
+            m.setattr(tiledir, "REFRESH_MAX_KEYS", 3)
+            refresh_zonal(spark, src, zones, old, big)
 
     def test_zonal_store_generations(self, spark, tmp_path):
         from mapchete_xarray_spark.operators.zonal import (
