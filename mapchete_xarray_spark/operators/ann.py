@@ -25,6 +25,9 @@ all-pairs baseline runs as Arrow-batched numpy GEMM
 from __future__ import annotations
 
 N_PLANES = 12
+# block size of cosine_pairs_arrow_df's distributed GEMM past the
+# broadcast budget
+BLOCK_TARGET_BYTES = 64 << 20
 
 
 def _hex2int(engine: str, h: str) -> str:
@@ -222,7 +225,7 @@ def _emb_bytes_est(emb) -> int:
     return int(n) * (d * 8 + 24)
 
 
-def _pairwise_cosine(cand, emb, a: str, b: str, broadcast_max_bytes: int = 256 << 20):
+def _pairwise_cosine(cand, emb, a: str, b: str):
     """Candidate (a, b) id pairs → exact cosine, MAP-SIDE: the
     embedding rides as ONE double array per side and the dot product
     is a `zip_with` + `aggregate` fold inside the projection — the
@@ -235,12 +238,14 @@ def _pairwise_cosine(cand, emb, a: str, b: str, broadcast_max_bytes: int = 256 <
     176.9 s; this refine is the fix).  The SQL texts keep the
     relational join as the DuckDB oracle.
 
-    Sized like _jaccard_refine: the per-side vec table is broadcast
-    under ``broadcast_max_bytes`` (bytes ≈ n·(8d+24)), else a hinted
-    SHUFFLE_HASH equi-join on the id.  Emits the candidate columns
-    plus `_dot`, `_na`, `_nb` (for pre-round threshold predicates) and
-    the round-6 `cosine`."""
+    Sized like _jaccard_refine: ``sizing.broadcast_or_shuffle`` over
+    the per-side vec table (bytes ≈ n·(8d+24)) — broadcast under the
+    budget, else a hinted SHUFFLE_HASH equi-join on the id.  Emits the
+    candidate columns plus `_dot`, `_na`, `_nb` (for pre-round
+    threshold predicates) and the round-6 `cosine`."""
     from pyspark.sql import functions as F
+
+    from .. import sizing
 
     vecs = emb.selectExpr(
         "vec_id", "transform(embedding, x -> cast(x as double)) as _v"
@@ -249,10 +254,9 @@ def _pairwise_cosine(cand, emb, a: str, b: str, broadcast_max_bytes: int = 256 <
     )
     va = vecs.selectExpr(f"vec_id as {a}", "_v as _va", "_nrm as _na")
     vb = vecs.selectExpr(f"vec_id as {b}", "_v as _vb", "_nrm as _nb")
-    if _emb_bytes_est(emb) <= broadcast_max_bytes:
-        va, vb = F.broadcast(va), F.broadcast(vb)
-    else:
-        va, vb = va.hint("shuffle_hash"), vb.hint("shuffle_hash")
+    est_bytes = _emb_bytes_est(emb)
+    va = sizing.broadcast_or_shuffle(va, est_bytes)
+    vb = sizing.broadcast_or_shuffle(vb, est_bytes)
     return (
         cand.join(va, a)
         .join(vb, b)
@@ -469,6 +473,8 @@ def ann_topk_ivf_df(
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
+    from .. import sizing
+
     if centroids is None:
         centroids = ivf_centroids(n_cells)
     spark = emb.sparkSession
@@ -542,14 +548,12 @@ def ann_topk_ivf_df(
     # existing vec_id-hash partitioning — a hot cell's members stay
     # spread across every task in proportion to partition balance
     # (which hashes the ID, not the cell), and no cell ever serializes
-    # onto one reducer.  Sized like every other broadcast: past ~5M
-    # probe rows the hint is dropped and AQE (skew-join splitting)
-    # arbitrates from real sizes.
-    probe_side = (
-        F.broadcast(probe) if int(n_queries) * int(n_probe) <= 5_000_000 else probe
-    )
+    # onto one reducer.  Sized like every other key broadcast: past
+    # ``sizing.MAX_DRIVER_ROWS`` probe rows the hint is dropped and AQE
+    # (skew-join splitting) arbitrates from real sizes.
     cand = (
-        probe_side.join(assign, "cell")
+        sizing.broadcast_if_small(probe, int(n_queries) * int(n_probe))
+        .join(assign, "cell")
         .where(F.col("vec_id") != F.col("qid"))
         .selectExpr("qid", "vec_id as did")
     )
@@ -675,25 +679,21 @@ def cosine_pairs_lsh_df(
     )
 
 
-def cosine_pairs_arrow_df(
-    emb,
-    threshold: float = 0.4,
-    broadcast_max_bytes: int = 256 << 20,
-    block_target_bytes: int = 64 << 20,
-):
+def cosine_pairs_arrow_df(emb, threshold: float = 0.4):
     """Exact all-pairs cosine ≥ threshold via Arrow-batched matmul.
 
     SIZED two-path execution (VERDICT r3 wrong #2 — the old
     unconditional driver `toPandas()` OOMed the driver at the design
     point before Spark saw a task):
 
-    - under ``broadcast_max_bytes`` (matrix bytes ≈ n·(8d+16), the
-      `_jaccard_refine` sizing discipline): the unit-normalized matrix
-      is broadcast once, each id batch does ONE numpy GEMM against it
-      — fastest shape when the matrix fits an executor.
+    - under ``sizing.BROADCAST_MAX_BYTES`` (matrix bytes ≈ n·(8d+24),
+      the `_jaccard_refine` sizing discipline): the unit-normalized
+      matrix is broadcast once, each id batch does ONE numpy GEMM
+      against it — fastest shape when the matrix fits an executor.
     - over the cap: NO driver collect at all — the fully distributed
-      block-pair GEMM (``cosine_pairs_blocked_df``), each executor
-      task seeing only two O(block) slices.
+      block-pair GEMM (``cosine_pairs_blocked_df``) over
+      ``BLOCK_TARGET_BYTES`` blocks, each executor task seeing only two
+      O(block) slices.
 
     Same rows either way, equal to cosine_pairs_sql — this is the
     EXECUTION path for the labeled exact baseline; the relational
@@ -711,12 +711,14 @@ def cosine_pairs_arrow_df(
     import pandas as pd
     from pyspark.sql import types as T
 
+    from .. import sizing
+
     est_bytes = _emb_bytes_est(emb)
-    if est_bytes > broadcast_max_bytes:
-        n_blocks = max(2, math.ceil(est_bytes / block_target_bytes))
+    if est_bytes > sizing.BROADCAST_MAX_BYTES:
+        n_blocks = max(2, math.ceil(est_bytes / BLOCK_TARGET_BYTES))
         return cosine_pairs_blocked_df(emb, threshold, n_blocks)
 
-    pdf = emb.select("vec_id", "embedding").toPandas()  # sized: fits broadcast_max_bytes
+    pdf = emb.select("vec_id", "embedding").toPandas()  # sized: fits the broadcast budget
     ids = pdf.vec_id.to_numpy()
     m = np.stack(pdf.embedding.to_numpy()).astype(np.float64)
     u = m / np.linalg.norm(m, axis=1, keepdims=True)

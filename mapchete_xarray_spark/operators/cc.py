@@ -51,6 +51,8 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import sizing
+
 
 def _dedup_edges(e: DataFrame) -> DataFrame:
     """Canonical undirected edge list: (u, v) with u < v, no dups, no
@@ -128,7 +130,7 @@ def min_label_union_find(n: int, ui: np.ndarray, vi: np.ndarray) -> np.ndarray:
 
 def _driver_finish(e: DataFrame) -> DataFrame:
     """Finish the CC on the driver: called only when the edge digest
-    has shown the set fits ``driver_finish_edges`` (the pull is
+    has shown the set fits ``sizing.MAX_DRIVER_ROWS`` (the pull is
     bounded by an exact count, the same bounded-driver-list discipline
     as the engine's other driver-side reads: regrid/focal/zonal key
     gates — and the collect is a parallel Arrow ``toPandas``, not a
@@ -166,7 +168,6 @@ def connected_components(
     dst: str = "dst",
     max_iterations: int = 25,
     assume_canonical: bool = False,
-    driver_finish_edges: int = 5_000_000,
 ) -> DataFrame:
     """→ (id, component): every node of ``edges``, labeled with the
     MINIMUM node id of its connected component (a deterministic
@@ -186,9 +187,9 @@ def connected_components(
     of the whole CC job: the input graph is the biggest the iteration
     ever sees, every round shrinks it).
 
-    ``driver_finish_edges`` (r9): before and between rounds, an edge
-    set whose digest count is at or below this cap is finished with
-    vectorized union-find on the driver (``_driver_finish`` —
+    Driver finish (r9): before and between rounds, an edge set whose
+    digest count is at or below ``sizing.MAX_DRIVER_ROWS`` is finished
+    with vectorized union-find on the driver (``_driver_finish`` —
     identical min-member labels; the digest runs anyway as the
     convergence check, so the decision costs no extra job and the
     pull is gated on an exact count).  The star rounds exist because
@@ -205,7 +206,7 @@ def connected_components(
         e = _dedup_edges(e)
     e = e.localCheckpoint(eager=True)
     prev = _edge_digest(e)
-    if prev[0] <= driver_finish_edges:
+    if prev[0] <= sizing.MAX_DRIVER_ROWS:
         return _driver_finish(e)
     for _ in range(max_iterations):
         # large-star output feeds small-star, which consumes its input
@@ -219,7 +220,7 @@ def connected_components(
         e = e_next
         if cur == prev:
             break
-        if cur[0] <= driver_finish_edges:
+        if cur[0] <= sizing.MAX_DRIVER_ROWS:
             return _driver_finish(e)
         prev = cur
     else:

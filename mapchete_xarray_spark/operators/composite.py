@@ -50,8 +50,6 @@ def temporal_composite(
     tiles: DataFrame,
     method: str = "median",
     nodata: float | None = None,
-    sparse: bool = False,
-    multi_broadcast_max: int = 2_000_000,
 ) -> DataFrame:
     """Per-pixel reduction over the time axis of TILE_BANDS_SCHEMA
     planes → one plane per (tile, band) with ``ts_idx = 0``.
@@ -65,64 +63,13 @@ def temporal_composite(
     cast back to the plane dtype round-half-up (the overview/focal
     convention), so integer-dtype composites are bit-deterministic
     under any partitioning.  ``n_sources`` sums over the stack.
-
-    ``sparse`` (opt-in): execution split for sparsely-observed
-    archives (most tile-bands have ONE plane — a one-observation
-    composite of an integer plane is the plane itself).  A key-only
-    count probe finds the multi-plane key set; when it is
-    broadcastable (``multi_broadcast_max``), single-plane integer
-    tiles pass through PURE JVM — no shuffle, no Arrow — and only
-    multi-plane stacks (plus float singles, whose raw-NaN pixels must
-    follow the hole rule) cross the exchange into Python.  The probe
-    and each branch RE-EXECUTE the upstream scan, so the split only
-    pays when the input is cheap to rescan (cached, or a
-    column-pruned sink read) AND Arrow transport dominates — measured
-    A/B on the ~1.05-planes/key sf1 fixture: dense 20.1 s vs split
-    17.3 s (and dense 2.2 s vs split 3.9 s at sf0.1, where the probe
-    swamps the gain) — hence OPT-IN, not the default.  Dense
-    archives auto-fall back (every key multi → split is pointless).
     """
-    from pyspark.sql import functions as F
-
     if method not in _METHODS:
         raise ValueError(f"unknown composite method {method!r}")
     meth = method
     nd = None if nodata is None else float(nodata)
     fill = 0.0 if nd is None else nd
     keys = ["tile_zoom", "tile_row", "tile_col", "band"]
-
-    if sparse is not False:
-        kc = tiles.groupBy(*keys).count()
-        st = kc.agg(
-            F.count("*").alias("tot"),
-            F.sum(F.when(F.col("count") > 1, 1).otherwise(0)).alias("multi"),
-        ).first()
-        tot, multi = int(st["tot"] or 0), int(st["multi"] or 0)
-        # the split pays off only if some singles exist AND the
-        # multi-key set broadcasts; otherwise dense is strictly better
-        if 0 < multi < tot and multi <= multi_broadcast_max or (
-            multi == 0 and tot > 0
-        ):
-            multi_keys = F.broadcast(
-                kc.where(F.col("count") > 1).select(*keys)
-            )
-            singles = tiles.join(multi_keys, keys, "left_anti")
-            floats = F.col("dtype").isin("float32", "float64")
-            jvm_singles = singles.where(~floats)
-            py_in = tiles.join(multi_keys, keys, "left_semi").unionByName(
-                singles.where(floats)
-            )
-            jvm_out = jvm_singles.select(
-                "tile_zoom", "tile_row", "tile_col", "band",
-                F.lit(0).alias("ts_idx"),
-                "height", "width", "dtype", "payload", "n_sources",
-            )
-            dense = _composite_dense(py_in, meth, nd, fill, keys)
-            return jvm_out.unionByName(dense)
-    return _composite_dense(tiles, meth, nd, fill, keys)
-
-
-def _composite_dense(tiles: DataFrame, meth, nd, fill, keys) -> DataFrame:
 
     def reduce_one(key, pdf):
         zoom_v, row_v, col_v, band_v = (int(k) for k in key)
@@ -135,9 +82,7 @@ def _composite_dense(tiles: DataFrame, meth, nd, fill, keys) -> DataFrame:
             # in float64 and rounds back to itself): values round-trip
             # exactly and holes stay holes (nd → NaN → fill == nd).
             # Floats are excluded — a raw-NaN pixel maps to fill in
-            # the general path, which a passthrough would keep.  This
-            # is the same rule the sparse JVM passthrough applies
-            # upstream; here it covers the forced-dense path.
+            # the general path, which a passthrough would keep.
             r = pdf.iloc[0]
             return (
                 zoom_v, row_v, col_v, band_v, 0,

@@ -277,6 +277,8 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import sizing
+
 _JACCARD = (
     "cast(round(cast(n_common as double) / (na + nb - n_common), 4) as double)"
 )
@@ -431,11 +433,7 @@ def _band_keys(sig: DataFrame) -> DataFrame:
     )
 
 
-def lsh_near_dup_pairs_df(
-    docs: DataFrame,
-    jaccard_threshold: float = 0.8,
-    broadcast_sets: bool | None = None,
-) -> DataFrame:
+def lsh_near_dup_pairs_df(docs: DataFrame, jaccard_threshold: float = 0.8) -> DataFrame:
     """Same rows as lsh_near_dup_pairs_sql, as a staged pipeline:
     per-doc fingerprint-set arrays (map-only, persisted once) →
     in-row signatures → band buckets (equi-join key) → candidate
@@ -444,7 +442,7 @@ def lsh_near_dup_pairs_df(
     refine's 60-bit ones.)"""
     sets = _persist(doc_hash_sets(docs, with_h=True))
     cand = _lsh_band_candidates(sets)
-    return _jaccard_refine(cand, sets, jaccard_threshold, broadcast_sets)
+    return _jaccard_refine(cand, sets, jaccard_threshold)
 
 
 def first_collision_pred(pairs, level_col: str = "band") -> str:
@@ -499,13 +497,7 @@ def _lsh_band_candidates(sets: DataFrame) -> DataFrame:
     )
 
 
-def _jaccard_refine(
-    cand: DataFrame,
-    sets: DataFrame,
-    threshold: float,
-    broadcast_sets: bool | None = None,
-    broadcast_max_bytes: int = 256 << 20,
-) -> DataFrame:
+def _jaccard_refine(cand: DataFrame, sets: DataFrame, threshold: float) -> DataFrame:
     """cand (doc_a, doc_b) → exact token/gram-set Jaccard ≥ threshold,
     over a per-doc fingerprint-array table ``sets`` (doc_id, h60s —
     doc_hash_sets output; one bigint array per doc, built map-side).
@@ -517,27 +509,18 @@ def _jaccard_refine(
     ``array_intersect`` over longs: zero exploded shuffle, no per-pair
     string hashing, O(|a|+|b|) per pair.
 
-    broadcast_sets=None (default) SIZES the decision instead of
-    hardcoding it: the payload is one 8-byte fingerprint per set
-    element, so ``sum(size(h60s)) * 9`` bounds its bytes within ~15%
-    (a cheap agg over the persisted arrays); broadcast only under
-    ``broadcast_max_bytes`` (256 MiB — comfortably inside an executor,
-    measured ~2.5x over the shuffle plan at bench scale).  Past that —
-    ~10^8 docs would rupture driver/executor memory — the plan
-    degrades to a SHUFFLE_HASH equi-join on doc id with identical rows
-    (hinted, so Catalyst can't re-broadcast the oversized side from a
-    stale size estimate)."""
-    if broadcast_sets is None:
-        est_bytes = (
-            sets.selectExpr("coalesce(sum(size(h60s)), 0) as n").first()[0] * 9
-        )
-        broadcast_sets = est_bytes <= broadcast_max_bytes
+    The broadcast is SIZED, not hardcoded: the payload is one 8-byte
+    fingerprint per set element, so ``sum(size(h60s)) * 9`` bounds its
+    bytes within ~15% (a cheap agg over the persisted arrays), and
+    ``sizing.broadcast_or_shuffle`` broadcasts under the budget.  Past
+    it — ~10^8 docs would rupture driver/executor memory — the plan
+    degrades to a SHUFFLE_HASH equi-join on doc id with identical
+    rows."""
+    est_bytes = sets.selectExpr("coalesce(sum(size(h60s)), 0) as n").first()[0] * 9
     sa = sets.select(F.col("doc_id").alias("doc_a"), F.col("h60s").alias("sa"))
     sb = sets.select(F.col("doc_id").alias("doc_b"), F.col("h60s").alias("sb"))
-    if broadcast_sets:
-        sa, sb = F.broadcast(sa), F.broadcast(sb)
-    else:
-        sa, sb = sa.hint("shuffle_hash"), sb.hint("shuffle_hash")
+    sa = sizing.broadcast_or_shuffle(sa, est_bytes)
+    sb = sizing.broadcast_or_shuffle(sb, est_bytes)
     return (
         cand.join(sa, "doc_a")
         .join(sb, "doc_b")
@@ -672,7 +655,6 @@ def _ngram_candidate_estimate(meta: DataFrame) -> int:
 def ngram_jaccard_pairs_df(
     docs: DataFrame,
     threshold: float = 0.55,
-    broadcast_sets: bool | None = None,
     max_candidates: int = 2_000_000,
     on_oversize: str = "lsh",
 ) -> DataFrame:
@@ -744,7 +726,7 @@ def ngram_jaccard_pairs_df(
             .where(F.expr("_la = _lb and abs(_ca - _cb) <= 16"))
             .select("doc_a", "doc_b")
         )
-        return _jaccard_refine(cand, grams, threshold, broadcast_sets)
+        return _jaccard_refine(cand, grams, threshold)
     grams = _persist(doc_hash_sets(docs, ngram=3))
     a = meta.select(
         F.col("doc_id").alias("doc_a"), "lang", F.col("n_chars").alias("ca"), "band"
@@ -760,7 +742,7 @@ def ngram_jaccard_pairs_df(
         .where((F.col("doc_a") < F.col("doc_b")) & (F.expr("abs(ca - cb) <= 16")))
         .select("doc_a", "doc_b")
     )
-    return _jaccard_refine(cand, grams, threshold, broadcast_sets)
+    return _jaccard_refine(cand, grams, threshold)
 
 
 LANG_STOPWORDS = {

@@ -1320,11 +1320,7 @@ def image_phash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .sources.images import images_df
 
     n = _phash_n(sf_dir)
-    # partitions follow the session parallelism: the generator IS the
-    # scan here, and the default n//2000 sizing gave local[32] only 4
-    # synth tasks at the sf0.1 bench (25 at sf1)
-    parts = max(spark.sparkContext.defaultParallelism * 2, n // 2000 or 4)
-    imgs = images_df(spark, n, partitions=parts).select("image_id", "phash")
+    imgs = images_df(spark, n).select("image_id", "phash")
     return _phash_banded_pairs(imgs)
 
 
@@ -1387,8 +1383,7 @@ def overview_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .sources.images import images_df, with_geometry
 
     n = _overview_n(sf_dir)
-    parts = max(spark.sparkContext.defaultParallelism * 2, n // 2000 or 4)
-    imgs = with_geometry(images_df(spark, n, partitions=parts), zoom=6)
+    imgs = with_geometry(images_df(spark, n), zoom=6)
     base = materialize_tiles(imgs, _grid.GEODETIC, 6)
     lvl = base
     out = None
@@ -1440,10 +1435,7 @@ def _overview_base_sink(spark: SparkSession, sf_dir: str):
     td = TileDirectory(cfg)
     td.prepare()
     if td.manifest_chunks(spark) is None:
-        parts = max(spark.sparkContext.defaultParallelism * 2, n // 2000 or 4)
-        imgs = _images.with_geometry(
-            _images.images_df(spark, n, partitions=parts), zoom=6
-        )
+        imgs = _images.with_geometry(_images.images_df(spark, n), zoom=6)
         td.write(_mosaic.materialize_tiles(imgs, _grid.GEODETIC, 6))
     return td
 
@@ -1535,10 +1527,7 @@ def _pyramid_build_sink(spark: SparkSession, sf_dir: str):
     )
     pyr.prepare()
     if pyr.level(4).manifest_chunks(spark) is None:
-        parts = max(spark.sparkContext.defaultParallelism * 2, n // 2000 or 4)
-        imgs = _images.with_geometry(
-            _images.images_df(spark, n, partitions=parts), zoom=6
-        )
+        imgs = _images.with_geometry(_images.images_df(spark, n), zoom=6)
         pyr.write_base(_mosaic.materialize_tiles(imgs, _grid.GEODETIC, 6))
         pyr.build(spark)
     return pyr
@@ -1906,10 +1895,7 @@ def _composite_base_sink(spark: SparkSession, sf_dir: str):
     td = TileDirectory(cfg)
     td.prepare()
     if td.manifest_chunks(spark) is None:
-        parts = max(spark.sparkContext.defaultParallelism * 2, n // 2000 or 4)
-        imgs = _images.with_geometry(
-            _images.images_df(spark, n, partitions=parts), zoom=6
-        )
+        imgs = _images.with_geometry(_images.images_df(spark, n), zoom=6)
         ts_index = {s: i for i, s in enumerate(cfg.time_steps)}
         td.write(
             _mosaic.materialize_tiles(imgs, _grid.GEODETIC, 6, ts_index=ts_index)
@@ -2311,8 +2297,7 @@ def audio_feature_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .sources.audio import audio_df
 
     n = _audio_n(sf_dir)
-    parts = max(spark.sparkContext.defaultParallelism * 2, n // 500 or 4)
-    feats = audio_features(audio_df(spark, n, partitions=parts))
+    feats = audio_features(audio_df(spark, n))
     return feats.select(
         "audio_id",
         "sample_rate",

@@ -19,6 +19,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from .. import sizing
+
 AUDIO_SCHEMA = T.StructType(
     [
         T.StructField("audio_id", T.StringType(), False),
@@ -70,7 +72,7 @@ def _gen_batch(idx: np.ndarray) -> pd.DataFrame:
 
 def audio_df(spark: SparkSession, n: int, partitions: int | None = None) -> DataFrame:
     """Distributed deterministic audio table of n clips."""
-    parts = partitions or max(4, min(128, n // 500 or 4))
+    parts = partitions or sizing.source_partitions(spark, n, 500)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:

@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .. import codecs
+from .. import codecs, sizing
 from ..functions import portable
 
 IMAGES_SCHEMA = T.StructType(
@@ -116,7 +116,7 @@ def _gen_batch(idx: np.ndarray) -> pd.DataFrame:
 
 def images_df(spark: SparkSession, n: int, partitions: int | None = None) -> DataFrame:
     """Distributed deterministic images table of n rows."""
-    parts = partitions or max(4, min(256, n // 2000 or 4))
+    parts = partitions or sizing.source_partitions(spark, n, 2000)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:

@@ -58,19 +58,21 @@ class PyramidDirectory:
                 "paths are derived"
             )
         self.path = str(path)
-        self._filesystem = filesystem
         self._fs, self._root = _fs.resolve(self.path, filesystem)
         self.base_zoom = int(base_zoom)
         self.levels = int(levels)
         self.zooms = list(range(self.base_zoom, self.base_zoom - levels - 1, -1))
-        self._tile_cfg = dict(tile_cfg)
-        # validate the shared fields once by constructing the base
-        # config (TileDirConfig's own gates: bands, dtype, time, …)
-        self._base_cfg = TileDirConfig(
-            path=_fs.join(self.path, f"z{self.base_zoom}"),
-            zoom=self.base_zoom,
-            **self._tile_cfg,
-        )
+        # one sink per level, built once so each keeps its memoized
+        # manifest state across calls; the base is built first, so
+        # TileDirConfig's own gates validate the shared fields
+        self._levels = {
+            z: TileDirectory(
+                TileDirConfig(path=_fs.join(self.path, f"z{z}"), zoom=z, **tile_cfg),
+                filesystem=filesystem,
+            )
+            for z in self.zooms
+        }
+        self._base_cfg = self._levels[self.base_zoom].cfg
 
     # -- level access ---------------------------------------------------------
 
@@ -79,11 +81,7 @@ class PyramidDirectory:
             raise TileDirError(
                 f"zoom {zoom} not in pyramid levels {self.zooms}"
             )
-        cfg = TileDirConfig(
-            path=_fs.join(self.path, f"z{zoom}"), zoom=int(zoom),
-            **self._tile_cfg,
-        )
-        return TileDirectory(cfg, filesystem=self._filesystem)
+        return self._levels[zoom]
 
     @property
     def base(self) -> TileDirectory:
@@ -201,6 +199,10 @@ class PyramidDirectory:
         frame serves multi-zoom consumers; single-zoom operators keep
         refusing mixed input, by design)."""
         zs = list(zooms) if zooms is not None else list(self.zooms)
+        if not zs:
+            raise TileDirError(
+                f"read needs at least one zoom; pyramid levels are {self.zooms}"
+            )
         out = None
         for z in zs:
             df = self.level(z).read(spark, **kw)

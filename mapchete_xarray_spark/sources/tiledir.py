@@ -57,7 +57,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .. import grid
+from .. import grid, sizing
 from . import fs as _fs
 
 
@@ -70,15 +70,6 @@ _MANIFEST_SCHEMA = (
     "n_source_images long, min_tile_row long, max_tile_row long, min_tile_col long, "
     "max_tile_col long, attempt_id string, written_at double, generation long"
 )
-
-
-def _maybe_broadcast(df: DataFrame, rows: int, max_rows: int = 5_000_000) -> DataFrame:
-    """Broadcast-hint a key table while it is broadcastable (16-byte
-    chunk keys: 5M rows ≈ 80 MB hash relation).  ``rows`` is an upper
-    bound the caller already holds (the manifest row count bounds every
-    manifest-derived key set), so sizing runs no probe job; past the
-    cap the join is left unhinted and AQE picks from the real sizes."""
-    return F.broadcast(df) if rows <= max_rows else df
 
 
 def _observed(spark: SparkSession, obs: Observation) -> dict | None:
@@ -489,7 +480,8 @@ class TileDirectory:
         t = t0
         done = self.manifest_chunks(spark)
         if mode == "continue" and done is not None:
-            t = t.join(_maybe_broadcast(done, n_manifest), ["chunk_row", "chunk_col"], "left_anti")
+            done = sizing.broadcast_if_small(done, n_manifest)
+            t = t.join(done, ["chunk_row", "chunk_col"], "left_anti")
         # chunk-aligned write: one file per (chunk) partition dir, rows
         # sorted by tile then band for row-group pruning on tile ranges
         tcs = max(int(self.cfg.time_chunksize), 1)
@@ -640,8 +632,8 @@ class TileDirectory:
         new = self._with_chunk(tiles.select(*cols)).persist()
         # the batch row count bounds both distinct key sets
         n_new = new.count()
-        chunks = _maybe_broadcast(new.select("chunk_row", "chunk_col").distinct(), n_new)
-        keys = _maybe_broadcast(new.select(*key_cols).distinct(), n_new)
+        chunks = sizing.broadcast_if_small(new.select("chunk_row", "chunk_col").distinct(), n_new)
+        keys = sizing.broadcast_if_small(new.select(*key_cols).distinct(), n_new)
         prior = self._data_df(spark).join(chunks, ["chunk_row", "chunk_col"], "semi")
         carried = prior.join(keys, key_cols, "left_anti").select(*cols)
         batch = new.select(*cols)
@@ -651,22 +643,17 @@ class TileDirectory:
                 F.col("payload").alias("payload_prev"),
                 F.col("n_sources").alias("n_sources_prev"),
             )
-            # `old` rows carry FULL tile planes — the generic 5M-row
-            # gate was sized for 16-byte chunk keys and would happily
+            # `old` rows carry FULL tile planes — the key-table row
+            # cap was sized for 16-byte chunk keys and would happily
             # force a multi-GB broadcast here (125k 256² uint8 tiles ≈
-            # 8 GB).  Size by BYTES instead: rows × plane size under a
-            # 256 MiB cap broadcasts (the ann.py discipline); past it
-            # the hint flips to SHUFFLE_HASH so Catalyst can't
-            # re-broadcast the oversized side off a stale estimate.
+            # 8 GB).  Size by BYTES instead: rows × plane size against
+            # the broadcast budget, counting at most one row past it.
             px = self.cfg.tile_size * self.cfg.metatiling + 2 * self.cfg.pixelbuffer
             row_bytes = px * px * np.dtype(self.cfg.dtype).itemsize + 64
-            cap_rows = max(1, (256 << 20) // int(row_bytes))
-            old_hinted = (
-                F.broadcast(old)
-                if old.limit(cap_rows + 1).count() <= cap_rows
-                else old.hint("shuffle_hash")
-            )
-            joined = batch.join(old_hinted, key_cols, "left")
+            cap_rows = sizing.BROADCAST_MAX_BYTES // row_bytes
+            n_old = old.limit(cap_rows + 1).count()
+            old = sizing.broadcast_or_shuffle(old, n_old * row_bytes)
+            joined = batch.join(old, key_cols, "left")
             fv = int(self.cfg.fill_value)
             from ..operators.mosaic import TILE_BANDS_SCHEMA
 
@@ -991,7 +978,7 @@ class TileDirectory:
             return t.withColumn("exists", F.lit(False)).drop("chunk_row", "chunk_col")
         return (
             t.join(
-                _maybe_broadcast(
+                sizing.broadcast_if_small(
                     done.withColumn("_e", F.lit(True)), self._manifest_state(spark)[1]
                 ),
                 ["chunk_row", "chunk_col"],
@@ -1099,9 +1086,9 @@ class TileDirectory:
         # row per (write call × chunk); keying the chunk too gives
         # chunk-level last-writer-wins under a double commit (see
         # visible_chunk_attempts).  Sized like the resume anti-join —
-        # unhinted past ~5M manifest rows
+        # unhinted past sizing.MAX_DRIVER_ROWS manifest rows
         return spark.read.schema(schema).parquet(_fs.join(self.path, "data")).join(
-            _maybe_broadcast(visible, self._manifest_state(spark)[1]),
+            sizing.broadcast_if_small(visible, self._manifest_state(spark)[1]),
             ["chunk_row", "chunk_col", "attempt_id"],
             "semi",
         )

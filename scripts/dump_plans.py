@@ -7,6 +7,8 @@ Usage: python scripts/dump_plans.py <tag> <outdir> [query ...]
   tag     e.g. 'before' / 'after'
   outdir  e.g. plans/r09
   query   registered query names; default: the full bench list
+          (bench.BENCH_QUERIES).  A query whose plan cannot be built
+          here (e.g. a missing input fixture) is reported and skipped.
 """
 
 from __future__ import annotations
@@ -23,7 +25,10 @@ CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 def main() -> None:
     tag = sys.argv[1]
     outdir = sys.argv[2]
-    names = sys.argv[3:]
+    if len(sys.argv) > 3:
+        names = sys.argv[3:]
+    else:
+        from bench import BENCH_QUERIES as names
     os.makedirs(outdir, exist_ok=True)
 
     from pyspark.sql import SparkSession
@@ -50,7 +55,11 @@ def main() -> None:
         if name not in registry:
             print(f"SKIP {name}: not registered", file=sys.stderr)
             continue
-        df = registry[name](spark, SF_DIR)
+        try:
+            df = registry[name](spark, SF_DIR)
+        except Exception as e:  # noqa: BLE001 — report, dump the rest
+            print(f"SKIP {name}: {type(e).__name__}: {str(e)[:200]}", file=sys.stderr)
+            continue
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )

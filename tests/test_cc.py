@@ -9,6 +9,7 @@ tests/test_queries_oracle.py (DuckDB recursive CTE)."""
 import numpy as np
 import pytest
 
+from mapchete_xarray_spark import sizing
 from mapchete_xarray_spark.operators.cc import connected_components
 
 
@@ -95,19 +96,20 @@ class TestConnectedComponents:
         rows = {r.id: r.component for r in out.collect()}
         assert rows == {i: 0 for i in range(40)}
 
-    def test_nonconvergence_raises(self, spark):
+    def test_nonconvergence_raises(self, spark, monkeypatch):
         df = spark.createDataFrame([(i, i + 1) for i in range(64)], "src long, dst long")
+        # MAX_DRIVER_ROWS=0: the small-graph shortcut would otherwise
+        # legitimately finish this chain in round 0
+        monkeypatch.setattr(sizing, "MAX_DRIVER_ROWS", 0)
         with pytest.raises(RuntimeError, match="did not converge"):
-            # driver_finish_edges=0: the small-graph shortcut would
-            # otherwise legitimately finish this chain in round 0
-            connected_components(df, max_iterations=1, driver_finish_edges=0)
+            connected_components(df, max_iterations=1)
 
     def test_no_driver_materialization(self):
         """The distributed iteration may pull only per-round scalar
         digests to the driver — never edges or components (the 100 TB
         contract).  r9 adds ONE sanctioned exception: the
         digest-gated ``_driver_finish`` small-graph shortcut, whose
-        collect is bounded by ``driver_finish_edges`` (the same
+        collect is bounded by ``sizing.MAX_DRIVER_ROWS`` (the same
         bounded-driver-list discipline as the regrid/focal/zonal key
         gates).  Source audit: driver pulls appear ONLY inside
         ``_driver_finish``; the loop body itself stays pull-free."""
@@ -123,12 +125,12 @@ class TestConnectedComponents:
         # the shortcut must be gated on the digest count, not size
         # estimates
         loop_src = inspect.getsource(cc.connected_components)
-        assert "driver_finish_edges" in loop_src
+        assert "MAX_DRIVER_ROWS" in loop_src
 
-    def test_driver_finish_matches_distributed(self, spark):
+    def test_driver_finish_matches_distributed(self, spark, monkeypatch):
         """The gated driver finish and the pure distributed iteration
         must produce identical labels (the finish is a perf shortcut,
-        never a semantic fork) — forced via driver_finish_edges=0 so
+        never a semantic fork) — forced via MAX_DRIVER_ROWS=0 so
         the distributed path stays covered now that small graphs take
         the shortcut by default."""
         rng = np.random.default_rng(11)
@@ -149,12 +151,12 @@ class TestConnectedComponents:
             fast = {
                 r.id: r.component for r in connected_components(df).collect()
             }
-            dist = {
-                r.id: r.component
-                for r in connected_components(
-                    df, driver_finish_edges=0
-                ).collect()
-            }
+            with monkeypatch.context() as m:
+                m.setattr(sizing, "MAX_DRIVER_ROWS", 0)
+                dist = {
+                    r.id: r.component
+                    for r in connected_components(df).collect()
+                }
             assert fast == dist == _uf_components(es), es
 
 

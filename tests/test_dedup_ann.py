@@ -10,7 +10,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from mapchete_xarray_spark import codecs
+from mapchete_xarray_spark import codecs, sizing
 from mapchete_xarray_spark.operators import ann, dedup
 
 
@@ -439,16 +439,17 @@ class TestANN:
         )
         assert gt == wt
 
-    def test_blocked_pairs_match_broadcast_and_gate(self, spark, embeddings):
+    def test_blocked_pairs_match_broadcast_and_gate(self, spark, embeddings, monkeypatch):
         """VERDICT r3 wrong #2: past the sized cap the exact pairs op
-        must run with NO driver collect.  Forced over (cap=0) the gate
+        must run with NO driver collect.  Forced over (budget 0) the gate
         picks the distributed block-pair GEMM (plan shows the
         applyInPandas node, no local python source), and its rows
         equal the broadcast path's exactly."""
         _, sdf = embeddings
         base = sorted(map(tuple, ann.cosine_pairs_arrow_df(sdf).collect()))
         assert base, "fixture must produce pairs or the test is vacuous"
-        gated = ann.cosine_pairs_arrow_df(sdf, broadcast_max_bytes=0)
+        monkeypatch.setattr(sizing, "BROADCAST_MAX_BYTES", 0)
+        gated = ann.cosine_pairs_arrow_df(sdf)
         plan = gated._jdf.queryExecution().executedPlan().toString()
         assert "FlatMapGroupsInPandas" in plan
         assert sorted(map(tuple, gated.collect())) == base

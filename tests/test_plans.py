@@ -56,31 +56,48 @@ class TestPlanShapes:
             assert "array_intersect" in plan, f"{name} lost the array refine"
             assert "BroadcastHashJoin" in plan, f"{name} lost the broadcast sets"
 
-    def test_dedup_refine_autosizes_broadcast(self, spark, sf_dir):
-        """The refine's broadcast is a sized decision, not a hardcoded
-        hint (ADVICE r2: the hardcoded default was the plan that dies
-        at 10^8 docs).  Under the cap → BroadcastHashJoin; over the cap
-        (forced via broadcast_max_bytes=0) → hinted SHUFFLE_HASH join,
-        same rows."""
-        from mapchete_xarray_spark.operators import dedup
+    @pytest.mark.parametrize("refine", ["dedup", "ann"])
+    def test_dedup_refine_autosizes_broadcast(self, spark, sf_dir, monkeypatch, refine):
+        """The refines' broadcasts are a sized decision, not a
+        hardcoded hint (ADVICE r2: the hardcoded default was the plan
+        that dies at 10^8 docs).  Under the budget → BroadcastHashJoin;
+        over it (forced via sizing.BROADCAST_MAX_BYTES=0) → hinted
+        SHUFFLE_HASH join, same rows — for the Jaccard refine and the
+        cosine refine alike."""
+        from mapchete_xarray_spark import sizing
+        from mapchete_xarray_spark.operators import ann, dedup
 
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(300)
-        sets = dedup.doc_hash_sets(docs).persist()
+        if refine == "dedup":
+            docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(300)
+            sets = dedup.doc_hash_sets(docs).persist()
+            ids = docs.select("doc_id")
+
+            def run(cand):
+                return dedup._jaccard_refine(cand, sets, 0.1)
+        else:
+            sets = spark.read.parquet(f"{sf_dir}/embeddings.parquet").limit(300).persist()
+            ids = sets.selectExpr("vec_id as doc_id")
+
+            def run(cand):
+                return ann._pairwise_cosine(cand, sets, "doc_a", "doc_b").select(
+                    "doc_a", "doc_b", "cosine"
+                )
         cand = (
-            docs.selectExpr("doc_id as doc_a")
-            .crossJoin(docs.selectExpr("doc_id as doc_b"))
+            ids.selectExpr("doc_id as doc_a")
+            .crossJoin(ids.selectExpr("doc_id as doc_b"))
             .where("doc_a < doc_b")
             .limit(500)
         )
-        small = dedup._jaccard_refine(cand, sets, 0.1)
+        small = run(cand)
         assert "BroadcastHashJoin" in _plan(small)
-        big = dedup._jaccard_refine(cand, sets, 0.1, broadcast_max_bytes=0)
+        monkeypatch.setattr(sizing, "BROADCAST_MAX_BYTES", 0)
+        big = run(cand)
         plan_big = _plan(big)
         assert "ShuffledHashJoin" in plan_big
         # identical rows either way (the decision is perf-only)
-        assert sorted(map(tuple, small.collect())) == sorted(
-            map(tuple, big.collect())
-        )
+        rows = sorted(map(tuple, small.collect()))
+        assert rows, "fixture must produce rows or the test is vacuous"
+        assert rows == sorted(map(tuple, big.collect()))
         sets.unpersist()
 
     def test_ann_lsh_planes_are_broadcast(self, spark, sf_dir):

@@ -12,7 +12,7 @@ from mapchete_xarray_spark import codecs, grid
 from mapchete_xarray_spark.operators.mosaic import materialize_tiles
 from mapchete_xarray_spark.operators.overviews import overview_level
 from mapchete_xarray_spark.sources.pyramid import PyramidDirectory
-from mapchete_xarray_spark.sources.tiledir import TileDirError
+from mapchete_xarray_spark.sources.tiledir import TileDirectory, TileDirError
 
 PYR = grid.GEODETIC
 ZOOM = 5
@@ -109,11 +109,28 @@ class TestPyramidDirectory:
             pd_dir.level(z).read(spark).count() for z in pd_dir.zooms[1:]
         ]
         # a committed sink's read plans with ONE job (the state
-        # aggregate) and a repeat over the same manifest with none
-        td = pd_dir.level(ZOOM - 2)
+        # aggregate) and a repeat over the same manifest with none; the
+        # pyramid's own level handle, read above, keeps its state
+        td = TileDirectory(pd_dir.level(ZOOM - 2).cfg)
         _, n_read = spark_jobs(lambda: td.read(spark))
         _, n_again = spark_jobs(lambda: td.read(spark))
         assert (n_read, n_again) == (1, 0)
+        _, n_level = spark_jobs(lambda: pd_dir.level(ZOOM - 2).read(spark))
+        assert n_level == 0
+
+    def test_level_sinks_are_built_once(self, tmp_path):
+        """Each level is ONE TileDirectory for the pyramid's lifetime,
+        so its memoized manifest state survives between calls."""
+        pd_dir = self._pd(tmp_path)
+        for z in pd_dir.zooms:
+            assert pd_dir.level(z) is pd_dir.level(z)
+        assert pd_dir.base is pd_dir.level(ZOOM)
+
+    def test_read_without_zooms_raises(self, spark, tmp_path):
+        pd_dir = self._pd(tmp_path)
+        pd_dir.prepare()
+        with pytest.raises(TileDirError, match=r"\[5, 4, 3\]"):
+            pd_dir.read(spark, zooms=[])
 
     def test_build_is_resumable_noop(self, spark, tmp_path):
         pd_dir = self._pd(tmp_path)

@@ -810,9 +810,10 @@ class TestComposite:
             Job(bad).run(spark)
 
     def test_sparse_split_matches_dense(self, spark):
-        """Mixed sparse/dense fixture: the sized split (singles pure
-        JVM, multis through Python) must be byte-identical to the
-        forced-dense path, for every method, with nodata holes."""
+        """Mixed sparse/dense fixture: for every method, with nodata
+        holes, the single-plane integer tiles come back byte-identical
+        (the dense path's single-plane shortcut) with ts_idx 0 and
+        their own n_sources, next to the two composited stacks."""
         rng = np.random.default_rng(23)
         rows = []
         # 6 single-plane tiles, 2 multi-plane stacks, with holes
@@ -825,32 +826,24 @@ class TestComposite:
                 a[rng.random((4, 4)) < 0.3] = 0
                 rows += [(ZOOM, 5, t, 0, ts, 4, 4, "uint8", a.tobytes(), 1)]
         df = spark.createDataFrame(rows, TILE_BANDS_SCHEMA)
+        singles = {(5, t, 0): (rows[t][8], 0, 3) for t in range(6)}
         for meth in ("median", "mean", "min", "max", "first", "latest"):
-            split = {
+            got = {
                 (r.tile_row, r.tile_col, r.band):
                 (r.payload, r.ts_idx, r.n_sources)
-                for r in temporal_composite(
-                    df, meth, nodata=0, sparse=True
-                ).collect()
+                for r in temporal_composite(df, meth, nodata=0).collect()
             }
-            dense = {
-                (r.tile_row, r.tile_col, r.band):
-                (r.payload, r.ts_idx, r.n_sources)
-                for r in temporal_composite(
-                    df, meth, nodata=0, sparse=False
-                ).collect()
-            }
-            assert split == dense and len(split) == 8, meth
+            assert len(got) == 8, meth
+            assert {k: got[k] for k in singles} == singles, meth
 
     def test_sparse_float_single_follows_nan_rule(self, spark):
         # a raw-NaN pixel in a float single-plane tile maps to fill —
-        # the split must route float singles through Python, not the
-        # JVM passthrough
+        # the single-plane shortcut must not pass float planes through
         a = np.array([[1.5, np.nan]], dtype=np.float32)
         df = spark.createDataFrame(
             [(ZOOM, 0, 0, 0, 0, 1, 2, "float32", a.tobytes(), 1)],
             TILE_BANDS_SCHEMA)
         got, _ = _plane_of(
-            temporal_composite(df, "median", sparse=True), tile=(0, 0),
+            temporal_composite(df, "median"), tile=(0, 0),
             dtype=np.float32)
         assert got[0, 0] == pytest.approx(1.5) and got[0, 1] == 0.0
