@@ -156,7 +156,7 @@ def write_xyz_metadata(
     filesystem=None,
 ) -> None:
     """Create the cache root + ``metadata.json`` (the decode contract
-    a reader — and every later ``refresh_xyz`` — binds to)."""
+    a reader binds to)."""
     m_fs, m_root = _fs.resolve(str(out_path), filesystem)
     _fs.mkdirs(m_fs, m_root)
     _fs.write_text(
@@ -180,8 +180,8 @@ def write_xyz_metadata(
 def _render_tiles(
     tiles, out_uri: str, fmt: str, band_order, zoom_v: int, inject_fs
 ):
-    """groupBy-tile render+put stage shared by full export and
-    incremental refresh.  ``tiles``: (tile_row, tile_col, band,
+    """groupBy-tile render+put stage of ``export_xyz`` and
+    ``export_xyz_manifest``.  ``tiles``: (tile_row, tile_col, band,
     height, width, dtype, payload) rows, already filtered to the
     cache's ts/bands."""
     ext = _FMT_EXT[fmt]
@@ -217,75 +217,6 @@ def _render_tiles(
     return batched_group_map(
         tiles, ["tile_row", "tile_col"], render, _EXPORT_SCHEMA
     )
-
-
-def refresh_xyz(
-    spark,
-    td,
-    cache_path: str,
-    changed_tiles,
-    *,
-    filesystem=None,
-) -> dict:
-    """Incremental cache maintenance (the maintenance-family
-    discipline: overviews / regrid / focal / zonal / now the serving
-    cache): after base tiles were re-written, re-render EXACTLY the
-    changed tiles into the cache — a chunk-pruned base read filtered
-    to the changed keys, the shared render+put stage, nothing else
-    touched.  A k-tile change costs O(k) chunk reads and k object
-    puts; stale tiles elsewhere in the cache are untouched (they were
-    rendered from unchanged base rows, so they are still current).
-
-    Render parameters (fmt / band_order / ts_idx) come from the
-    cache's own ``metadata.json`` — the refresh binds to the contract
-    the cache declared at export, not to caller arguments that could
-    drift from it.
-
-    Returns ``{"tiles": n, "bytes": total}``."""
-    from ..sources.tiledir import TileDirError, pull_refresh_keys
-
-    fsys, root = _fs.resolve(str(cache_path), filesystem)
-    meta = json.loads(_fs.read_text(fsys, _fs.join(root, "metadata.json")))
-    if int(meta["zoom"]) != int(td.cfg.zoom) or meta["grid"] != td.cfg.grid_name:
-        raise TileDirError(
-            f"cache at {cache_path} is {meta['grid']}/z{meta['zoom']}, "
-            f"base sink is {td.cfg.grid_name}/z{td.cfg.zoom}"
-        )
-    # the cache's unit is the tile, not the chunk: pull the changed
-    # tiles themselves
-    changed = pull_refresh_keys(
-        changed_tiles.select("tile_row", "tile_col"), "refresh_xyz", "run export_xyz instead"
-    )
-    if not changed:
-        return {"tiles": 0, "bytes": 0}
-
-    band_order = [int(b) for b in meta["band_order"]]
-    key_pred = F.struct(
-        F.col("tile_row").cast("long"), F.col("tile_col").cast("long")
-    ).isin(
-        [
-            F.struct(F.lit(r).cast("long"), F.lit(c).cast("long"))
-            for r, c in changed
-        ]
-    )
-    tiles = (
-        td.read_covering(spark, [(r, r, c, c) for r, c in changed])
-        .where(key_pred)
-        .where(
-            (F.col("ts_idx") == int(meta["ts_idx"]))
-            & F.col("band").isin(sorted(set(band_order)))
-        )
-        .select("tile_row", "tile_col", "band", "height", "width",
-                "dtype", "payload")
-    )
-    manifest = _render_tiles(
-        tiles, str(cache_path), meta["fmt"], band_order,
-        int(meta["zoom"]), filesystem,
-    )
-    agg = manifest.agg(
-        F.count("*").alias("tiles"), F.sum("n_bytes").alias("bytes")
-    ).collect()[0]
-    return {"tiles": int(agg["tiles"]), "bytes": int(agg["bytes"] or 0)}
 
 
 def read_xyz_tile(

@@ -369,96 +369,3 @@ def focal_map(
         assemble,
         TILE_BANDS_SCHEMA,
     )
-
-
-def refresh_focal(
-    spark,
-    src_td,
-    dst_td,
-    changed_tiles: DataFrame,
-    *,
-    kernel=None,
-    stat: str | None = None,
-    size: int = 3,
-    fn: Callable | None = None,
-    pixelbuffer: int | None = None,
-    fill_value: float = 0,
-    wrap_x: bool = True,
-) -> dict:
-    """Incremental stencil maintenance: after some source tiles were
-    re-written, recompute ONLY the destination chunks their change can
-    reach and commit them as refresh attempts (untouched chunks keep
-    their attempts — the same contract as ``refresh_overviews`` /
-    ``refresh_regrid``).
-
-    The stencil twist: a changed tile perturbs its OWN output and its
-    eight neighbors' (their halos read it), so the changed set is
-    **dilated by one tile** (x-wrapped like the operator) before the
-    chunk cover.  Refresh commits whole chunks, so the source read
-    window is the covered chunks' tiles plus a one-tile halo ring —
-    every recomputed tile sees its full neighborhood, and window-edge
-    tiles (whose neighborhoods are clipped) are dropped by the
-    chunk-complete write.  Focal params must match the ones the
-    destination was built with (the refresh recomputes, it cannot
-    introspect)."""
-    from ..sources.tiledir import TileDirError
-
-    if src_td.cfg.grid_name != dst_td.cfg.grid_name:
-        raise TileDirError(
-            f"refresh_focal is same-grid: source {src_td.cfg.grid_name}, "
-            f"destination {dst_td.cfg.grid_name}"
-        )
-    zoom = int(src_td.cfg.zoom)
-    if zoom != int(dst_td.cfg.zoom):
-        raise TileDirError(
-            f"refresh_focal is same-zoom: source zoom {src_td.cfg.zoom}, "
-            f"destination zoom {dst_td.cfg.zoom}"
-        )
-    pyr = grid.Pyramid(src_td.cfg.grid_name, tile_size=int(src_td.cfg.tile_size))
-    nrows = pyr.matrix_height(zoom)
-    ncols = pyr.matrix_width(zoom)
-    wrap = bool(wrap_x) and ncols >= 3
-
-    # dilate by one tile: a change reaches every neighbor whose halo
-    # reads it
-    col = f"pmod(tile_col + dc, {ncols})" if wrap else "tile_col + dc"
-    dilated = (
-        changed_tiles.selectExpr("explode(array(-1, 0, 1)) as dr", "tile_row", "tile_col")
-        .selectExpr("tile_row + dr as tile_row", "explode(array(-1, 0, 1)) as dc", "tile_col")
-        .selectExpr("tile_row", f"{col} as tile_col")
-        .where(f"tile_row between 0 and {nrows - 1} and tile_col between 0 and {ncols - 1}")
-    )
-    dst_chunks = dst_td.touched_chunks(
-        dilated,
-        "refresh_focal",
-        "run focal_map over the whole source and write with mode='overwrite' instead",
-    )
-    if not dst_chunks:
-        return {"attempt_id": None, "chunks": 0, "tiles": 0}
-
-    # source window: covered chunks' tile ranges + a one-tile halo
-    # ring, the ring's off-matrix column wrapping to the far edge
-    window = []
-    for key in dst_chunks:
-        r_lo, r_hi, c_lo, c_hi = dst_td.chunk_range(key)
-        r_lo, r_hi = max(r_lo - 1, 0), min(r_hi + 1, nrows - 1)
-        window.append((r_lo, r_hi, max(c_lo - 1, 0), min(c_hi + 1, ncols - 1)))
-        if wrap and c_lo == 0:
-            window.append((r_lo, r_hi, ncols - 1, ncols - 1))
-        if wrap and c_hi + 1 >= ncols:
-            window.append((r_lo, r_hi, 0, 0))
-    base = src_td.read_covering(spark, window)
-
-    out = focal_map(
-        base,
-        pyr,
-        zoom,
-        kernel=kernel,
-        stat=stat,
-        size=size,
-        fn=fn,
-        pixelbuffer=pixelbuffer,
-        fill_value=fill_value,
-        wrap_x=wrap_x,
-    )
-    return dst_td.refresh_chunks(out, dst_chunks)

@@ -206,6 +206,14 @@ def refresh_overviews(
             f"refresh_overviews maintains one level: base zoom "
             f"{base_td.cfg.zoom}, overview zoom {ov_td.cfg.zoom}"
         )
+    # write() checks only zoom and ts_idx: a sink on another grid or
+    # tile layout would commit the parents in the wrong place
+    for attr in ("grid_name", "tile_size", "metatiling"):
+        b, o = getattr(base_td.cfg, attr), getattr(ov_td.cfg, attr)
+        if b != o:
+            raise TileDirError(
+                f"refresh_overviews needs matching {attr}: base {b}, overview {o}"
+            )
     ov_chunks = ov_td.touched_chunks(
         changed_tiles,
         "refresh_overviews",

@@ -69,13 +69,11 @@ def cover_ranges_sql(
     src_zoom: int,
     dst_grid: str,
     dst_zoom: int,
-    row: str = "tile_row",
-    col: str = "tile_col",
 ) -> dict[str, str]:
     """SQL strings (identical in Spark SQL and DuckDB — the shared
     dialect surface of functions/portable.py plus exp/atan/degrees)
     for the destination-tile range covered by source tile
-    (``row``, ``col``):
+    (``tile_row``, ``tile_col``):
 
     returns {"valid", "r_lo", "r_hi", "c_lo", "c_hi"} — ``valid``
     must gate the explode (a geodetic tile fully poleward of the
@@ -92,7 +90,7 @@ def cover_ranges_sql(
     # DECIMAL(18) against the mercator constant), flipping exact
     # tile-boundary floors between engines.  One double operand makes
     # the whole chain double (the same discipline as queries._LON).
-    cd, rd = f"cast(({col}) as double)", f"cast(({row}) as double)"
+    cd, rd = "cast((tile_col) as double)", "cast((tile_row) as double)"
     x_l, x_r = f"({sl!r} + {cd} * {sspan!r})", f"({sl!r} + ({cd} + 1.0) * {sspan!r})"
     y_t, y_b = f"({st!r} - {rd} * {sspan!r})", f"({st!r} - ({rd} + 1.0) * {sspan!r})"
     # → lon/lat (identity for geodetic source)
@@ -359,98 +357,3 @@ def cover_counts_sql(
         "select dst_row, dst_col, cast(count(*) as bigint) as n_src_tiles "
         "from cover group by dst_row, dst_col"
     )
-
-
-def refresh_regrid(
-    spark,
-    src_td,
-    dst_td,
-    changed_tiles: DataFrame,
-) -> dict:
-    """Incremental cross-grid maintenance: after some source tiles
-    were re-written, recompute ONLY the destination chunks their
-    reprojected footprints touch and commit them with the sink's
-    ``refresh`` mode (new attempt per covered chunk, chunk-level
-    last-writer-wins — the same contract as ``refresh_overviews``).
-
-    ``changed_tiles``: (tile_row, tile_col) at the SOURCE zoom/grid.
-    The refresh unit is the destination CHUNK (refresh writes must
-    cover complete chunks), so every destination tile in a touched
-    chunk is rebuilt from its FULL covering source set — which the
-    pruned base read must contain even for tiles the change didn't
-    reach.  Both pruning directions reuse ``cover_ranges_sql``:
-
-    - forward (changed src tiles → touched dst chunks): the exact
-      operator cover expressions over the changed keys;
-    - inverse (whole dst chunks → needed src tiles): a chunk of
-      ``chunk_tiles`` = 2^k tiles IS the tile at zoom−k on the same
-      grid (both grids' matrices are powers of two), so the chunk's
-      source cover is the cover of that coarser tile — bbox
-      intersection is symmetric, and the closed boundary convention
-      only ever ADDS zero-pixel sources.
-
-    The source read is then chunk-pruned by ``TileDirectory``'s
-    refresh kernel, which falls back to a full scan past its key cap;
-    a non-power-of-two ``chunk_tiles`` has no inverse cover and scans
-    in full too.  A forward cover past the cap (a coarse→fine refresh
-    can cover millions of destination chunks from one changed tile —
-    src z2 → dst z16 is ~4M chunks) raises: that is a full regrid, not
-    an incremental one.  At 10^12 tiles a k-tile change costs O(k)
-    chunk neighborhoods on both sides."""
-    import math
-
-    from ..sources.tiledir import TileDirError
-
-    s_grid, d_grid = src_td.cfg.grid_name, dst_td.cfg.grid_name
-    if s_grid == d_grid:
-        raise TileDirError("refresh_regrid needs sinks on DIFFERENT grids")
-    if src_td.cfg.tile_size != dst_td.cfg.tile_size:
-        raise TileDirError(
-            f"refresh_regrid needs matching tile sizes: "
-            f"{src_td.cfg.tile_size} vs {dst_td.cfg.tile_size}"
-        )
-    if (
-        src_td.cfg.metatiling != 1
-        or src_td.cfg.pixelbuffer != 0
-        or dst_td.cfg.metatiling != 1
-        or dst_td.cfg.pixelbuffer != 0
-    ):
-        raise TileDirError("refresh_regrid supports plain pyramids only")
-    sz, dz = int(src_td.cfg.zoom), int(dst_td.cfg.zoom)
-    ct = int(dst_td.cfg.chunk_tiles)
-
-    # forward cover: changed source tiles → touched destination chunks
-    rng = cover_ranges_sql(s_grid, sz, d_grid, dz)
-    dst_chunks = dst_td.touched_chunks(
-        changed_tiles.where(F.expr(rng["valid"])),
-        f"refresh_regrid (src zoom {sz} → dst zoom {dz})",
-        "run regrid_tiles over the whole source and write with mode='overwrite' instead",
-        rows=(rng["r_lo"], rng["r_hi"]),
-        cols=(rng["c_lo"], rng["c_hi"]),
-    )
-    if not dst_chunks:
-        return {"attempt_id": None, "chunks": 0, "tiles": 0}
-
-    # inverse cover: whole destination chunks → source tile ranges
-    ranges = []
-    k = int(math.log2(ct)) if ct > 0 and (ct & (ct - 1)) == 0 else None
-    if k is not None and dz - k >= 0:
-        inv = cover_ranges_sql(d_grid, dz - k, s_grid, sz, row="_cr", col="_cc")
-        ranges = (
-            spark.createDataFrame(dst_chunks, "_cr long, _cc long")
-            .where(F.expr(inv["valid"]))
-            .selectExpr(inv["r_lo"], inv["r_hi"], inv["c_lo"], inv["c_hi"])
-            .collect()
-        )
-    base = src_td.read_covering(spark, ranges)
-
-    out = regrid_tiles(
-        base,
-        s_grid,
-        sz,
-        d_grid,
-        dz,
-        fill_value=dst_td.cfg.fill_value,
-        tile_size=int(src_td.cfg.tile_size),
-    )
-    return dst_td.refresh_chunks(out, dst_chunks)

@@ -33,10 +33,9 @@ Zones absent from the output had no pixel centers inside them (or
 only nodata): join semantics, not zero rows — the caller left-joins
 the zone table if it wants explicit empties.
 
-``refresh_zonal`` maintains the partials incrementally (the
-materialized-aggregate discipline): a partial row depends only on its
-own tile, so a base change replaces exactly the changed chunks' rows
-— min/max need no subtraction.
+Every partial row carries its tile key: a partial depends only on its
+own tile, so partials are a per-tile materialized aggregate that
+merges in any grouping.
 """
 
 from __future__ import annotations
@@ -211,11 +210,8 @@ def zonal_partials(
 ) -> DataFrame:
     """MAP-ONLY per-plane moment partials: one row per (tile, zone,
     band, ts_idx) hit with (cnt, s, ss, mn, mx) — no shuffle at all;
-    the output partitioning inherits the input's.  This is both the
-    first stage of ``zonal_stats`` and the materialized-aggregate unit
-    ``refresh_zonal`` maintains (a partial row depends only on its own
-    tile, so a base change replaces exactly the changed chunks' rows —
-    min/max need no subtraction).
+    the output partitioning inherits the input's.  This is the first
+    stage of ``zonal_stats``; each row depends only on its own tile.
 
     ``zones``: pandas (aoi_id, wkb, minx, miny, maxx, maxy) — the
     ``sources.aoi`` shape; broadcast (small by contract, the same
@@ -251,9 +247,9 @@ def zonal_finalize(
     """Merge moment partials (the ``_PARTIAL_SCHEMA`` moment columns)
     into the final per-zone stats — the ONE tiny shuffle.  Moments are
     associative, so finalize is indifferent to how partials were
-    produced (a fresh ``zonal_partials`` pass, a ``refresh_zonal``
-    splice, or ``raster_zonal_stats``'s label-keyed partials — pass
-    ``keys=("label", "band", "ts_idx")`` for those)."""
+    produced (a ``zonal_partials`` pass, or ``raster_zonal_stats``'s
+    label-keyed partials — pass ``keys=("label", "band", "ts_idx")``
+    for those)."""
     keys = list(keys)
     n = F.col("n_pixels").cast("double")
     return (
@@ -336,10 +332,9 @@ def zonal_hist_partials(
     zone, band, ts_idx, pixel value) with its count — the exact
     per-zone histogram's summable unit, bounded by the dtype's value
     range per zone-tile intersection (≤256 rows for uint8), never by
-    pixel count.  Value counts are associative like moments, so the
-    same splice discipline maintains them (``refresh_zonal(kind=
-    'hist')``), and EXACT percentiles derive downstream without any
-    pixel ever crossing a wire.
+    pixel count.  Value counts are associative like moments, so EXACT
+    percentiles derive downstream without any pixel ever crossing a
+    wire.
 
     Integer-dtype planes only: an exact value histogram over float
     pixels is one row per distinct float (the partial volume loses its
@@ -546,147 +541,6 @@ def raster_zonal_stats(
 
     partials = joined.mapInPandas(emit, _RASTER_PARTIAL_SCHEMA)
     return zonal_finalize(partials, keys=("label", "band", "ts_idx"))
-
-
-_ZONAL_KINDS = {}
-
-
-def refresh_zonal(
-    spark,
-    base_td,
-    zones: pd.DataFrame,
-    old_partials: DataFrame,
-    changed_tiles: DataFrame,
-    *,
-    nodata: float | None = None,
-    kind: str = "moments",
-):
-    """Incremental zonal maintenance (the materialized-aggregate
-    discipline, same family as ``refresh_overviews`` /
-    ``refresh_regrid`` / ``refresh_focal``): after some base tiles
-    were re-written, recompute ONLY the changed chunks' partials from
-    a chunk-pruned base read, splice them into the kept partials, and
-    finalize.
-
-    Zonal stats can't be maintained by subtracting the old
-    contribution (min/max are not invertible) — but per-tile partials
-    make subtraction unnecessary: the chunk is the recompute unit, and
-    a k-tile change re-reads O(k) chunks, never the archive.
-
-    ``kind``: ``'moments'`` (count/sum/sumsq/min/max →
-    ``zonal_finalize`` stats) or ``'hist'`` (exact value counts →
-    ``zonal_hist_finalize`` histogram, integer dtypes); the splice is
-    kind-agnostic because every partial schema carries its tile key.
-
-    Returns ``(new_partials, finalized)``; the caller persists
-    ``new_partials`` for the next round (it is the materialized
-    aggregate — bounded by zone-tile intersections, parquet-tiny)."""
-    try:
-        partials_fn, finalize_fn = _ZONAL_KINDS[kind]
-    except KeyError:
-        raise ValueError(
-            f"refresh_zonal kind must be one of {sorted(_ZONAL_KINDS)}: "
-            f"{kind!r}"
-        ) from None
-
-    changed = base_td.touched_chunks(
-        changed_tiles, "refresh_zonal", "run zonal_partials over the whole base instead"
-    )
-    if not changed:
-        return old_partials, finalize_fn(old_partials)
-
-    pyr = grid.Pyramid(
-        base_td.cfg.grid_name,
-        tile_size=int(base_td.cfg.tile_size),
-        metatiling=int(base_td.cfg.metatiling),
-    )
-    pruned = base_td.read_covering(spark, [base_td.chunk_range(k) for k in changed])
-    recomputed = partials_fn(
-        pruned, zones, pyr, int(base_td.cfg.zoom), nodata=nodata
-    )
-    # splice: the changed chunks' old rows give way to the recomputed
-    new_partials = old_partials.where(~base_td.in_chunks(changed)).unionByName(recomputed)
-    return new_partials, finalize_fn(new_partials)
-
-
-_ZONAL_KINDS.update(
-    {
-        "moments": (zonal_partials, zonal_finalize),
-        "hist": (zonal_hist_partials, zonal_hist_finalize),
-    }
-)
-
-
-class ZonalStore:
-    """Parquet store for the zonal moment partials — the persisted
-    form of the materialized aggregate ``refresh_zonal`` maintains.
-
-    Publishing follows the TileDirectory stance adapted to a
-    whole-table aggregate: each ``publish(df, gen)`` writes a fresh
-    ``gen=<id>/`` parquet directory, then swaps the single-object
-    ``_CURRENT`` pointer — readers between the data write and the
-    pointer swap see the previous generation intact (object-store put
-    of one small object is the atomic primitive, exactly the
-    metadata.json discipline in ``sources/fs.py``).  Re-publishing the
-    same generation overwrites in place, so an at-least-once caller
-    (a foreachBatch replay using ``batch_id`` as the generation) is
-    idempotent.  The generation BEFORE the previous is reclaimed at
-    publish time — one-generation reader grace, same stance as the
-    sink vacuum; the store is single-writer by contract (one streaming
-    query), so no attempt fencing is needed."""
-
-    def __init__(self, path: str, filesystem=None, schema=None):
-        from ..sources import fs as _fs
-
-        self.path = str(path)
-        self._fs, self._root = _fs.resolve(self.path, filesystem)
-        self._fsmod = _fs
-        # the partial schema this store holds: moments by default,
-        # _HIST_PARTIAL_SCHEMA for a histogram store
-        self.schema = schema if schema is not None else _PARTIAL_SCHEMA
-
-    def _ptr(self) -> str:
-        return self._fsmod.join(self._root, "_CURRENT")
-
-    def current_generation(self):
-        """Published generation id, or None for a virgin store."""
-        if not self._fsmod.exists(self._fs, self._ptr()):
-            return None
-        return int(self._fsmod.read_text(self._fs, self._ptr()).strip())
-
-    def read(self, spark) -> DataFrame:
-        """Current partials (empty typed frame for a virgin store, so
-        a first refresh splices into nothing)."""
-        gen = self.current_generation()
-        if gen is None:
-            return spark.createDataFrame([], self.schema)
-        return spark.read.schema(self.schema).parquet(
-            self._fsmod.join(self.path, f"gen={gen}")
-        )
-
-    def publish(self, partials: DataFrame, gen: int) -> None:
-        gen = int(gen)
-        prev = self.current_generation()
-        if prev is not None and gen < prev:
-            raise ValueError(
-                f"ZonalStore generation must not move backwards "
-                f"(current {prev}, publish {gen}) — single-writer contract"
-            )
-        partials.write.mode("overwrite").parquet(
-            self._fsmod.join(self.path, f"gen={gen}")
-        )
-        self._fsmod.write_text(self._fs, self._ptr(), str(gen))
-        # reclaim everything older than the immediately-previous
-        # generation (kept as reader grace)
-        from pyarrow import fs as pafs
-
-        sel = pafs.FileSelector(self._root, allow_not_found=True)
-        for fi in self._fs.get_file_info(sel):
-            name = fi.path.rsplit("/", 1)[-1]
-            if fi.type == pafs.FileType.Directory and name.startswith("gen="):
-                g = int(name[4:])
-                if g < gen and (prev is None or g != prev):
-                    self._fs.delete_dir(fi.path)
 
 
 def zonal_stats_bruteforce(

@@ -217,8 +217,8 @@ class PyramidDirectory:
         layout need that motivated this facade: every level lands
         under its own ``<z>/<x>/<y>.<ext>`` prefix of the same root,
         and the cache ``metadata.json`` declares the full zoom set
-        (``zooms``; ``zoom`` stays the base level so per-level
-        ``refresh_xyz`` keeps binding against it)."""
+        (``zooms``; ``zoom`` stays the base level, so the single-zoom
+        reader ``read_xyz_tile`` serves base tiles from it)."""
         from ..operators.export import (
             default_band_order,
             export_xyz,

@@ -100,20 +100,6 @@ def chunk_in_list_pred(keys, row: str = "chunk_row", col: str = "chunk_col") -> 
     return F.expr(f"({row}, {col}) in ({in_list})")
 
 
-def pull_refresh_keys(keys: DataFrame, what: str, instead: str) -> list[tuple]:
-    """The distinct rows of ``keys`` as int tuples: an incremental
-    refresh's one driver pull, a single ``limit``-ed collect.  More than
-    REFRESH_MAX_KEYS keys is not incremental — raise, naming the full
-    rebuild to run ``instead``, rather than pull an archive-sized list."""
-    rows = keys.distinct().limit(REFRESH_MAX_KEYS + 1).collect()
-    if len(rows) > REFRESH_MAX_KEYS:
-        raise TileDirError(
-            f"{what}: the change touches more than {REFRESH_MAX_KEYS:,} keys — "
-            f"that is a full rebuild; {instead}"
-        )
-    return [tuple(int(v) for v in r) for r in rows]
-
-
 def normalize_step(s) -> str:
     """Canonical 19-char 'YYYY-MM-DD HH:MM:SS' form for a time-axis
     step.  Bare dates are padded to midnight; 'T' separators become
@@ -990,8 +976,8 @@ class TileDirectory:
 
     # -- incremental refresh -------------------------------------------------
     #
-    # Every refresh kind (overviews, focal, regrid, xyz, zonal) makes one
-    # decision in three steps — which of this sink's chunks a change
+    # An overview refresh (operators/overviews.refresh_overviews) makes
+    # one decision in three steps — which of this sink's chunks a change
     # touches, which source chunks to read, which chunks to rewrite — and
     # the chunk layout behind all three lives here.  Operators speak in
     # inclusive tile ranges (r_lo, r_hi, c_lo, c_hi) and chunk keys.
@@ -1003,25 +989,29 @@ class TileDirectory:
         return r * ct, (r + 1) * ct - 1, c * ct, (c + 1) * ct - 1
 
     def touched_chunks(
-        self, changes: DataFrame, what: str, instead: str, rows="tile_row", cols="tile_col"
+        self, changes: DataFrame, what: str, instead: str, rows: str, cols: str
     ) -> list[tuple[int, int]]:
-        """This sink's chunks that ``changes`` touch, through the bounded
-        ``pull_refresh_keys``.  ``rows``/``cols`` are SQL expressions
-        over its columns: a tile index, or a (lo, hi) pair for an
-        inclusive tile range.  Ranges explode at CHUNK granularity (one
-        coarse→fine change can cover millions of tiles)."""
+        """This sink's chunks that ``changes`` touch, as int tuples.
+        ``rows``/``cols`` are SQL tile-index expressions over its
+        columns.  The keys come to the driver in one ``limit``-ed
+        collect: more than REFRESH_MAX_KEYS keys is not incremental —
+        raise, naming the full rebuild to run ``instead``, rather than
+        pull an archive-sized list."""
         ct = int(self.cfg.chunk_tiles)
-
-        def chunk(e) -> str:
-            if isinstance(e, str):
-                return f"({e}) div {ct}"
-            return f"explode(sequence(({e[0]}) div {ct}, ({e[1]}) div {ct}))"
-
-        # one generator per select: one axis each
-        keys = changes.selectExpr(f"{chunk(rows)} as chunk_row", "*").selectExpr(
-            "chunk_row", f"{chunk(cols)} as chunk_col"
+        keys = (
+            changes.selectExpr(
+                f"({rows}) div {ct} as chunk_row", f"({cols}) div {ct} as chunk_col"
+            )
+            .distinct()
+            .limit(REFRESH_MAX_KEYS + 1)
+            .collect()
         )
-        return pull_refresh_keys(keys, what, instead)
+        if len(keys) > REFRESH_MAX_KEYS:
+            raise TileDirError(
+                f"{what}: the change touches more than {REFRESH_MAX_KEYS:,} keys — "
+                f"that is a full rebuild; {instead}"
+            )
+        return [(int(r), int(c)) for r, c in keys]
 
     def read_covering(self, spark: SparkSession, ranges) -> DataFrame:
         """Committed rows of the chunks covering inclusive tile
@@ -1047,20 +1037,16 @@ class TileDirectory:
             df = df.where(chunk_in_list_pred(keys))
         return df.drop("chunk_row", "chunk_col", "attempt_id")
 
-    def in_chunks(self, keys) -> "F.Column":
-        """Rows whose (tile_row, tile_col) lies in one of the chunks
-        ``keys`` (derived from the tile columns, so any tile-keyed
-        frame qualifies)."""
-        ct = int(self.cfg.chunk_tiles)
-        return chunk_in_list_pred(keys, f"tile_row div {ct}", f"tile_col div {ct}")
-
     def refresh_chunks(self, tiles: DataFrame, keys) -> dict:
         """Chunk-complete refresh write: keep only ``tiles`` rows in
-        the chunks ``keys`` and commit them with ``mode="refresh"``.
-        An operator run over a pruned window also emits tiles outside
-        the chunks it recomputed, with partial neighborhoods; writing
-        those would corrupt chunks the change never touched."""
-        return self.write(tiles.where(self.in_chunks(keys)), mode="refresh")
+        the chunks ``keys`` (derived from the tile columns) and commit
+        them with ``mode="refresh"``.  An operator run over a pruned
+        window also emits tiles outside the chunks it recomputed, with
+        partial neighborhoods; writing those would corrupt chunks the
+        change never touched."""
+        ct = int(self.cfg.chunk_tiles)
+        in_chunks = chunk_in_list_pred(keys, f"tile_row div {ct}", f"tile_col div {ct}")
+        return self.write(tiles.where(in_chunks), mode="refresh")
 
     # -- read path ----------------------------------------------------------
 

@@ -559,188 +559,3 @@ class TestMultimodal:
         assert len(out) == 12
         assert sorted(set(out.frame_idx)) == [0, 2, 5, 7]
         assert sorted(set(out.video_id)) == ["vid0", "vid1", "vid2"]
-
-
-@pytest.mark.spark
-class TestStreaming:
-    def test_watermark_drops_late_rows(self, spark, tmp_path):
-        """Watermark semantics pinned to observed output, not a config
-        flag: after the watermark passed an event's window, a late
-        arrival for that window is DROPPED — the emitted count
-        excludes it.  Two checkpointed availableNow runs over a
-        parquet drop-folder (watermark persists in the checkpoint)."""
-        import pandas as pd
-        from pyspark.sql import types as T
-
-        from mapchete_xarray_spark.streaming.ingest import streaming_tile_counts
-
-        schema = T.StructType(
-            [
-                T.StructField("key", T.LongType()),
-                T.StructField("timestamp", T.TimestampType()),
-            ]
-        )
-        src = tmp_path / "events"
-        src.mkdir()
-        ckpt = str(tmp_path / "ckpt")
-        out = str(tmp_path / "counts")
-
-        def drop(ts_list):
-            pdf = pd.DataFrame(
-                {"key": [1] * len(ts_list), "timestamp": pd.to_datetime(ts_list)}
-            )
-            spark.createDataFrame(pdf, schema).coalesce(1).write.parquet(
-                str(src), mode="append"
-            )
-
-        def run():
-            stream = spark.readStream.schema(schema).parquet(str(src))
-            pts = stream.selectExpr(
-                "key", "timestamp", "cast(10.0 as double) as lon", "cast(47.0 as double) as lat"
-            )
-            q = (
-                streaming_tile_counts(pts, window="10 seconds", watermark="30 seconds")
-                .writeStream.format("parquet")
-                .option("path", out)
-                .outputMode("append")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(120)
-
-        # batch 1: watermark advances to 12:00:45 - 30s = 12:00:15,
-        # which CLOSES window 12:00:00-10 (emitted, count 1)
-        drop(
-            [
-                "2024-01-01 12:00:05",
-                "2024-01-01 12:00:15",
-                "2024-01-01 12:00:15",
-                "2024-01-01 12:00:45",
-            ]
-        )
-        run()
-        # batch 2, the two sides of the watermark contract:
-        # - 12:00:03 targets the CLOSED (already-emitted) 00:00-10
-        #   window → dropped, the emitted count must stay 1
-        # - 12:00:12 is late but its 00:10-20 window is still open
-        #   (end 00:20 > watermark 00:15) → aggregated: lateness
-        #   within the allowance is kept, that is the point of the
-        #   30s watermark
-        # - 12:01:30 advances the watermark so 10-20 and 40-50 close
-        drop(
-            ["2024-01-01 12:00:03", "2024-01-01 12:00:12", "2024-01-01 12:01:30"]
-        )
-        run()
-        rows = spark.read.parquet(out).collect()
-        got = {r.window_start.strftime("%H:%M:%S"): r.n_images for r in rows}
-        starts = [r.window_start.strftime("%H:%M:%S") for r in rows]
-        assert starts.count("12:00:00") == 1, "closed window re-emitted"
-        assert got["12:00:00"] == 1, (
-            f"row late past its closed window was counted: {got['12:00:00']}"
-        )
-        assert got["12:00:10"] == 3, "in-allowance late row was wrongly dropped"
-        assert got["12:00:40"] == 1
-
-    def test_stateful_first_seen_dedup(self, spark, tmp_path):
-        """applyInPandasWithState first-seen dedup: uniques emitted
-        once; state survives a checkpointed restart (second drop with
-        overlapping fingerprints emits only the genuinely new ones)."""
-        import pandas as pd
-        from pyspark.sql import types as T
-
-        from mapchete_xarray_spark.streaming.ingest import streaming_first_seen
-
-        schema = T.StructType(
-            [
-                T.StructField("fp", T.StringType()),
-                T.StructField("doc_id", T.StringType()),
-            ]
-        )
-        src = tmp_path / "drops"
-        src.mkdir()
-        ckpt = str(tmp_path / "ckpt")
-        out = str(tmp_path / "uniques")
-
-        def run():
-            # parquet sink: the memory sink cannot recover from a
-            # checkpoint, and checkpointed-restart is the point here
-            stream = spark.readStream.schema(schema).parquet(str(src))
-            q = (
-                streaming_first_seen(stream)
-                .writeStream.format("parquet")
-                .option("path", out)
-                .outputMode("append")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(120)
-            return {(r.fp, r.doc_id) for r in spark.read.parquet(out).collect()}
-
-        batch1 = pd.DataFrame(
-            {"fp": ["a", "a", "b", "c"], "doc_id": ["d0", "d1", "d2", "d3"]}
-        )
-        spark.createDataFrame(batch1).coalesce(1).write.parquet(
-            str(src), mode="append"
-        )
-        got1 = run()
-        assert {f for f, _ in got1} == {"a", "b", "c"}
-        assert len(got1) == 3  # one emission per fingerprint
-        # second drop: a/b are dups (state must suppress them), d is new
-        batch2 = pd.DataFrame(
-            {"fp": ["a", "b", "d", "d"], "doc_id": ["d4", "d5", "d6", "d7"]}
-        )
-        spark.createDataFrame(batch2).coalesce(1).write.parquet(
-            str(src), mode="append"
-        )
-        got2 = run()
-        # parquet output is cumulative: old uniques + exactly one new
-        assert {f for f, _ in got2} == {"a", "b", "c", "d"}
-        assert len(got2) == 4  # a/b dups suppressed by recovered state
-
-    def test_file_stream_tile_counts(self, spark, tmp_path):
-        from mapchete_xarray_spark.streaming.ingest import (
-            run_to_memory,
-            streaming_tile_counts,
-        )
-
-        # drop a parquet batch into the ingest folder with event times
-        pdf = pd.DataFrame(
-            {
-                "key": np.arange(500, dtype=np.int64),
-                "timestamp": pd.Timestamp("2024-01-01 00:00:00")
-                + pd.to_timedelta(np.arange(500) % 25, unit="s"),
-            }
-        )
-        src_dir = str(tmp_path / "stream_in")
-        spark.createDataFrame(pdf).write.parquet(src_dir)
-        from mapchete_xarray_spark.functions import portable
-
-        stream = (
-            spark.readStream.schema("key long, timestamp timestamp")
-            .parquet(src_dir)
-            .withColumn("lon", F.expr(portable.synth_lon_sql("key")))
-            .withColumn("lat", F.expr(portable.synth_lat_sql("key")))
-        )
-        counts = streaming_tile_counts(stream, zoom=5, window="10 seconds")
-        q = run_to_memory(counts, "tcounts", timeout_sec=120)
-        out = spark.sql("select * from tcounts").toPandas()
-        q.stop()
-        assert out.n_images.sum() == 500
-        assert (out.window_end - out.window_start == pd.Timedelta("10 seconds")).all()
-        # batch parity: same rows through the batch path
-        batch = spark.createDataFrame(pdf)
-        batch = batch.withColumn("lon", F.expr(portable.synth_lon_sql("key"))).withColumn(
-            "lat", F.expr(portable.synth_lat_sql("key"))
-        )
-        from mapchete_xarray_spark.functions.tiling import with_tile_columns
-
-        b = (
-            with_tile_columns(batch, "lon", "lat", "geodetic", 5)
-            .groupBy("tile_id")
-            .agg(F.count("*").alias("n"))
-            .toPandas()
-        )
-        stream_by_tile = out.groupby("tile_id").n_images.sum()
-        assert dict(stream_by_tile) == dict(zip(b.tile_id, b.n))

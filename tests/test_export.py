@@ -17,10 +17,6 @@ from mapchete_xarray_spark.sources.tiledir import (
 
 TPX = 16
 ZOOM = 3
-# Spark jobs the incremental refresh test below may launch: the count
-# it ran before the refresh kinds shared one chunk-refresh kernel in
-# sources/tiledir.py (the kernel must not add jobs).
-REFRESH_JOBS = 7
 
 
 def _sink(spark, tmp_path, bands=3, dtype="uint8", name="base"):
@@ -151,113 +147,6 @@ class TestExportXYZ:
         td16 = _sink(spark, tmp_path, dtype="uint16", name="u16")
         with pytest.raises(ValueError, match="uint8 sink"):
             export_xyz(spark, td16, str(tmp_path / "x"))
-
-    def test_refresh_xyz_incremental(self, spark, tmp_path, spark_jobs, monkeypatch):
-        """Change one base tile, refresh: only that tile's cache
-        object is re-put (others keep their mtime), and it decodes to
-        the new pixels."""
-        import os
-
-        from mapchete_xarray_spark.operators.export import refresh_xyz
-
-        td = _sink(spark, tmp_path)
-        out = str(tmp_path / "cache")
-        export_xyz(spark, td, out, fmt="raw")
-        untouched = str(tmp_path / "cache" / str(ZOOM) / "4" / "2.raw")
-        mtime0 = os.path.getmtime(untouched)
-
-        newplane = np.full((TPX, TPX), 77, np.uint8)
-        td.upsert(spark.createDataFrame(
-            [(ZOOM, 2, 3, b, 0, TPX, TPX, "uint8", newplane.tobytes(), 9)
-             for b in range(3)],
-            TILE_BANDS_SCHEMA,
-        ))
-        changed = spark.createDataFrame(
-            [(2, 3)], "tile_row long, tile_col long"
-        )
-        stats, n_jobs = spark_jobs(lambda: refresh_xyz(spark, td, out, changed))
-        assert n_jobs <= REFRESH_JOBS, n_jobs
-        assert stats["tiles"] == 1 and stats["bytes"] == TPX * TPX * 3
-        img = read_xyz_tile(out, 2, 3)
-        assert (img == 77).all()
-        assert os.path.getmtime(untouched) == mtime0
-
-        # empty no-op; oversized refuses; wrong cache refuses
-        from mapchete_xarray_spark.sources import tiledir
-        from mapchete_xarray_spark.sources.tiledir import TileDirError
-
-        empty = spark.createDataFrame([], "tile_row long, tile_col long")
-        assert refresh_xyz(spark, td, out, empty) == {"tiles": 0, "bytes": 0}
-        big = spark.createDataFrame(
-            [(r, c) for r in range(4) for c in range(4)],
-            "tile_row long, tile_col long",
-        )
-        with monkeypatch.context() as m, pytest.raises(TileDirError, match="full rebuild"):
-            m.setattr(tiledir, "REFRESH_MAX_KEYS", 3)
-            refresh_xyz(spark, td, out, big)
-        other = _sink(spark, tmp_path, name="otherzoom")
-        object.__setattr__(other.cfg, "zoom", ZOOM + 1)
-        with pytest.raises(TileDirError, match="base sink is"):
-            refresh_xyz(spark, other, out, changed)
-
-    def test_streaming_xyz_ingest(self, spark, tmp_path):
-        """Micro-batched serving-cache maintenance end to end: the
-        final cache decodes equal to the final base for every tile."""
-        from mapchete_xarray_spark import grid as _g
-        from mapchete_xarray_spark.sources.images import images_df
-        from mapchete_xarray_spark.streaming.ingest import (
-            streaming_xyz_ingest,
-        )
-
-        pdf = images_df(spark, 16).toPandas()
-        rng = np.random.default_rng(53)
-        for i, lon_lo in [(0, -100.0), (1, 20.0)]:
-            part = pdf.iloc[i * 8 : (i + 1) * 8].copy()
-            lon = rng.uniform(lon_lo, lon_lo + 25, len(part))
-            lat = rng.uniform(-40, 40, len(part))
-            part["minx"], part["maxx"] = lon - 1.0, lon + 1.0
-            part["miny"], part["maxy"] = lat - 1.0, lat + 1.0
-            (tmp_path / "drop").mkdir(exist_ok=True)
-            spark.createDataFrame(part).coalesce(1).write.mode(
-                "append"
-            ).parquet(str(tmp_path / "drop"))
-        schema = spark.read.parquet(str(tmp_path / "drop")).schema
-
-        base_td = TileDirectory(
-            TileDirConfig(path=str(tmp_path / "base"), zoom=5)
-        )
-        base_td.prepare()
-        cache = str(tmp_path / "cache")
-
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(tmp_path / "drop"))
-        )
-        q = (
-            streaming_xyz_ingest(
-                stream, base_td, cache, _g.GEODETIC, 5,
-                str(tmp_path / "ckpt"), fmt="raw",
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-        planes = {
-            (r.tile_row, r.tile_col, r.band): np.frombuffer(
-                r.payload, np.uint8
-            ).reshape(r.height, r.width)
-            for r in base_td.read(spark).collect()
-        }
-        tiles = {(tr, tc) for (tr, tc, _b) in planes}
-        assert tiles
-        for tr, tc in tiles:
-            img = read_xyz_tile(cache, tr, tc)
-            for b in range(3):
-                np.testing.assert_array_equal(
-                    img[:, :, b], planes[(tr, tc, b)], err_msg=str((tr, tc))
-                )
 
     def test_one_exchange_for_band_assembly(self, spark, tmp_path):
         from mapchete_xarray_spark.operators.export import (

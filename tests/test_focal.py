@@ -17,10 +17,6 @@ from mapchete_xarray_spark.operators.mosaic import TILE_BANDS_SCHEMA
 TPX = 16
 ZOOM = 1  # geodetic z1: 2 rows x 4 cols — wrap active, every edge case present
 PYR = grid.Pyramid("geodetic", tile_size=TPX)
-# Spark jobs the incremental refresh test below may launch: the count
-# it ran before the refresh kinds shared one chunk-refresh kernel in
-# sources/tiledir.py (the kernel must not add jobs).
-REFRESH_JOBS = 13
 NROWS, NCOLS = 2, 4
 
 
@@ -263,165 +259,6 @@ class TestFocal:
         bad = dict(spec, zoom_levels=[4], output={"path": str(tmp_path / "z4"), "bands": 3})
         with pytest.raises(TileDirError, match="same-zoom"):
             Job(bad).run(spark)
-
-    def test_refresh_focal_incremental_matches_full(self, spark, tmp_path, spark_jobs, monkeypatch):
-        """Change one base tile, refresh: the derived sink must equal a
-        full focal recompute of the CURRENT base — including neighbor
-        tiles in ADJACENT chunks (the dilation), while chunks outside
-        the change's reach keep their original attempts."""
-        from mapchete_xarray_spark.operators.focal import refresh_focal
-        from mapchete_xarray_spark.sources.tiledir import (
-            TileDirConfig,
-            TileDirectory,
-        )
-
-        Z = 3
-        pyr3 = grid.Pyramid("geodetic", tile_size=TPX)
-        src = TileDirectory(
-            TileDirConfig(path=str(tmp_path / "base"), zoom=Z, bands=1,
-                          tile_size=TPX, chunk_tiles=2)
-        )
-        dst = TileDirectory(
-            TileDirConfig(path=str(tmp_path / "smooth"), zoom=Z, bands=1,
-                          tile_size=TPX, chunk_tiles=2)
-        )
-        src.prepare()
-        dst.prepare()
-
-        rng = np.random.default_rng(31)
-        rows = [
-            (Z, r, c, 0, 0, TPX, TPX, "uint8",
-             rng.integers(0, 255, (TPX, TPX)).astype(np.uint8).tobytes(), 1)
-            for r in range(2, 6) for c in range(4, 10)
-        ]
-        src.write(spark.createDataFrame(rows, TILE_BANDS_SCHEMA))
-
-        def full(base_td):
-            return focal_map(
-                base_td.read(spark).drop("chunk_row", "chunk_col", "attempt_id"),
-                pyr3, Z, stat="mean", size=3,
-            )
-
-        dst.write(full(src))
-        before = {
-            (int(r.chunk_row), int(r.chunk_col)): r.attempt_id
-            for r in dst.visible_chunk_attempts(spark).collect()
-        }
-        got0 = {
-            (x.tile_row, x.tile_col): x.payload
-            for x in dst.read(spark).collect()
-        }
-
-        # re-write one tile at a chunk corner (3,5): its dilation
-        # crosses into three neighboring chunks
-        newplane = np.full((TPX, TPX), 200, dtype=np.uint8)
-        src.upsert(spark.createDataFrame(
-            [(Z, 3, 5, 0, 0, TPX, TPX, "uint8", newplane.tobytes(), 9)],
-            TILE_BANDS_SCHEMA,
-        ))
-        changed = spark.createDataFrame([(3, 5)], "tile_row long, tile_col long")
-        stats, n_jobs = spark_jobs(
-            lambda: refresh_focal(spark, src, dst, changed, stat="mean", size=3)
-        )
-        assert n_jobs <= REFRESH_JOBS, n_jobs
-        assert stats["tiles"] > 0
-
-        want = {
-            (x.tile_row, x.tile_col): x.payload for x in full(src).collect()
-        }
-        got = {
-            (x.tile_row, x.tile_col): x.payload
-            for x in dst.read(spark).collect()
-        }
-        assert set(want) <= set(got)
-        assert all(got[k] == v for k, v in want.items())
-        # the change propagated to a neighbor tile's output
-        assert got[(3, 6)] != got0[(3, 6)] and len(want) > 0
-
-        after = {
-            (int(r.chunk_row), int(r.chunk_col)): r.attempt_id
-            for r in dst.visible_chunk_attempts(spark).collect()
-        }
-        flipped = {k for k in before if after.get(k) != before[k]}
-        assert flipped and flipped != set(before)
-
-        # empty change set no-ops; oversized change set raises
-        from mapchete_xarray_spark.sources import tiledir
-        from mapchete_xarray_spark.sources.tiledir import TileDirError
-
-        empty = spark.createDataFrame([], "tile_row long, tile_col long")
-        assert refresh_focal(spark, src, dst, empty, stat="mean")["tiles"] == 0
-        big = spark.createDataFrame(
-            [(r, c) for r in range(4) for c in range(4)],
-            "tile_row long, tile_col long",
-        )
-        with monkeypatch.context() as m, pytest.raises(TileDirError, match="full rebuild"):
-            m.setattr(tiledir, "REFRESH_MAX_KEYS", 3)
-            refresh_focal(spark, src, dst, big, stat="mean")
-
-    def test_streaming_focal_ingest(self, spark, tmp_path):
-        """Micro-batched stencil maintenance end to end: drop-folder →
-        foreachBatch materialize + base upsert + incremental focal
-        refresh; the final derived sink equals a full focal recompute
-        of the final base."""
-        from mapchete_xarray_spark import grid as _g
-        from mapchete_xarray_spark.sources.images import images_df
-        from mapchete_xarray_spark.sources.tiledir import (
-            TileDirConfig,
-            TileDirectory,
-        )
-        from mapchete_xarray_spark.streaming.ingest import (
-            streaming_focal_ingest,
-        )
-
-        pdf = images_df(spark, 24).toPandas()
-        rng = np.random.default_rng(41)
-        for i, lon_lo in [(0, -100.0), (1, 20.0)]:
-            part = pdf.iloc[i * 12 : (i + 1) * 12].copy()
-            lon = rng.uniform(lon_lo, lon_lo + 25, len(part))
-            lat = rng.uniform(-40, 40, len(part))
-            part["minx"], part["maxx"] = lon - 1.0, lon + 1.0
-            part["miny"], part["maxy"] = lat - 1.0, lat + 1.0
-            (tmp_path / "drop").mkdir(exist_ok=True)
-            spark.createDataFrame(part).coalesce(1).write.mode("append").parquet(
-                str(tmp_path / "drop")
-            )
-        schema = spark.read.parquet(str(tmp_path / "drop")).schema
-
-        base_td = TileDirectory(TileDirConfig(path=str(tmp_path / "base"), zoom=5))
-        base_td.prepare()
-        dst_td = TileDirectory(TileDirConfig(path=str(tmp_path / "shade"), zoom=5))
-        dst_td.prepare()
-
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(tmp_path / "drop"))
-        )
-        q = (
-            streaming_focal_ingest(
-                stream, base_td, dst_td, _g.GEODETIC, 5,
-                str(tmp_path / "ckpt"), fn=hillshade(z_factor=2.0),
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-        want = {
-            (x.tile_row, x.tile_col, x.band): x.payload
-            for x in focal_map(
-                base_td.read(spark).drop("chunk_row", "chunk_col", "attempt_id"),
-                _g.GEODETIC, 5, fn=hillshade(z_factor=2.0),
-            ).collect()
-        }
-        got = {
-            (x.tile_row, x.tile_col, x.band): x.payload
-            for x in dst_td.read(spark).collect()
-        }
-        assert set(want) <= set(got)
-        assert all(got[k] == v for k, v in want.items())
-        assert len(want) > 0
 
     def test_errors(self, spark):
         G = _global_array()

@@ -16,10 +16,10 @@ from mapchete_xarray_spark.operators.mosaic import TILE_BANDS_SCHEMA
 from mapchete_xarray_spark.operators.overviews import overview_level
 
 N = 16  # tile edge (even, small for pixel goldens)
-# Spark jobs the incremental refresh test below may launch: the count
-# it ran before the refresh kinds shared one chunk-refresh kernel in
-# sources/tiledir.py (the kernel must not add jobs).
-REFRESH_JOBS = 10
+# Spark jobs the incremental refresh test below may launch (measured:
+# a one-chunk refresh through the chunk-refresh kernel in
+# sources/tiledir.py).
+REFRESH_JOBS = 9
 
 
 def _tile_row(zoom, row, col, band, plane, n_sources=1, ts_idx=0):
@@ -344,9 +344,46 @@ class TestOverviews:
         changed = spark.createDataFrame(
             pd.DataFrame({"tile_row": [0, 0, 8, 8], "tile_col": [0, 8, 0, 8]})
         )
-        monkeypatch.setattr(tiledir, "REFRESH_MAX_KEYS", 3)
-        with pytest.raises(TileDirError, match="full rebuild"):
+        with monkeypatch.context() as m, pytest.raises(TileDirError, match="full rebuild"):
+            m.setattr(tiledir, "REFRESH_MAX_KEYS", 3)
             refresh_overviews(spark, *sinks, changed)
+        # under the cap, the prepared-but-empty base is a no-op refresh,
+        # not an AnalysisException: the empty-sink read types the chunk
+        # columns BIGINT, and the pruning IN-list's literals must match
+        one = spark.createDataFrame(
+            pd.DataFrame({"tile_row": [8], "tile_col": [8]})
+        )
+        assert refresh_overviews(spark, *sinks, one)["tiles"] == 0
+
+    @pytest.mark.parametrize(
+        "attr, value",
+        [("grid_name", "mercator"), ("tile_size", 2 * N), ("metatiling", 2)],
+    )
+    def test_refresh_refuses_mismatched_sinks(self, spark, tmp_path, attr, value):
+        """An overview sink on another grid or tile layout than its
+        base would receive parents in the wrong place (the sink write
+        checks only zoom and ts_idx): the refresh refuses, naming both
+        values."""
+        from mapchete_xarray_spark.operators.overviews import refresh_overviews
+        from mapchete_xarray_spark.sources.tiledir import (
+            TileDirConfig,
+            TileDirectory,
+            TileDirError,
+        )
+
+        layout = {"bands": 1, "tile_size": N, "chunk_tiles": 2}
+        base_td = TileDirectory(
+            TileDirConfig(path=str(tmp_path / "b"), zoom=5, **layout)
+        )
+        ov_td = TileDirectory(
+            TileDirConfig(path=str(tmp_path / "o"), zoom=4, **{**layout, attr: value})
+        )
+        changed = spark.createDataFrame(
+            pd.DataFrame({"tile_row": [3], "tile_col": [3]})
+        )
+        base = getattr(base_td.cfg, attr)
+        with pytest.raises(TileDirError, match=f"{attr}: base {base}, overview {value}"):
+            refresh_overviews(spark, base_td, ov_td, changed)
 
     def test_refresh_uses_overview_fill(self, spark, tmp_path):
         """Absent-child quadrants must carry the OVERVIEW sink's
@@ -509,6 +546,22 @@ class TestOverviews:
             for x in ov3_td.read(spark).collect()
         }
         assert got_ov3 == want_ov3
+
+        # a restart over the same checkpoint resumes after the committed
+        # batches: nothing is replayed, so no sink gains an attempt
+        def attempts():
+            return [
+                {tuple(r) for r in td.visible_chunk_attempts(spark).collect()}
+                for td in (base_td, ov_td, ov3_td)
+            ]
+
+        before = attempts()
+        restart = streaming_pyramid_ingest(
+            stream, base_td, [ov_td, ov3_td], _g.GEODETIC, 5,
+            str(tmp_path / "ckpt"),
+        ).trigger(availableNow=True).start()
+        assert restart.awaitTermination(120)
+        assert attempts() == before
 
     def test_streaming_compact_every_bounds_manifest_files(self, spark, tmp_path):
         """compact_every=1: after a 4-batch ingest the base/overview

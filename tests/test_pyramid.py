@@ -261,7 +261,7 @@ class TestPyramidDirectory:
             assert any((out / str(z)).rglob("*.q8")), f"no tiles under {z}/"
         meta = json.loads((out / "metadata.json").read_text())
         assert meta["zooms"] == pd_dir.zooms
-        assert meta["zoom"] == ZOOM  # per-level refresh_xyz still binds
+        assert meta["zoom"] == ZOOM  # read_xyz_tile reads the base level
         # a rendered top-level tile decodes to its sink planes
         z = pd_dir.zooms[-1]
         r = pd_dir.level(z).read(spark).where(F.col("band") == 0).first()

@@ -13,10 +13,6 @@ from mapchete_xarray_spark.operators.mosaic import TILE_BANDS_SCHEMA
 from mapchete_xarray_spark.operators.regrid import cover_ranges_sql, regrid_tiles
 
 TPX = 16  # small tiles keep the brute-force reference cheap
-# Spark jobs the incremental refresh test below may launch: the count
-# it ran before the refresh kinds shared one chunk-refresh kernel in
-# sources/tiledir.py (the kernel must not add jobs).
-REFRESH_JOBS = 15
 
 
 def _plane(row, col, band=0):
@@ -270,205 +266,3 @@ class TestRegridJobSurface:
         }
         with pytest.raises(TileDirError, match="matching tile sizes"):
             Job(spec).run(spark)
-
-
-@pytest.mark.spark
-class TestRefreshRegrid:
-    def _sinks(self, spark, tmp_path):
-        from mapchete_xarray_spark.sources.tiledir import (
-            TileDirConfig,
-            TileDirectory,
-        )
-
-        src = TileDirectory(
-            TileDirConfig(
-                path=str(tmp_path / "geo"), zoom=3, bands=1,
-                tile_size=TPX, chunk_tiles=2,
-            )
-        )
-        dst = TileDirectory(
-            TileDirConfig(
-                path=str(tmp_path / "merc"), zoom=3, bands=1,
-                grid_name="mercator", tile_size=TPX, chunk_tiles=2,
-            )
-        )
-        src.prepare()
-        dst.prepare()
-        return src, dst
-
-    def _dst_pixels(self, spark, dst):
-        return {
-            (r.tile_row, r.tile_col, r.band): r.payload
-            for r in dst.read(spark).collect()
-        }
-
-    def test_incremental_matches_full_recompute(self, spark, tmp_path, spark_jobs):
-        """Change one source tile, refresh: the destination sink must
-        equal a full regrid of the CURRENT base — and chunks the
-        change didn't touch must keep their original attempts (the
-        incremental claim)."""
-        from mapchete_xarray_spark.operators.regrid import refresh_regrid
-
-        src, dst = self._sinks(spark, tmp_path)
-        keys = [(r, c) for r in range(2, 6) for c in range(4, 10)]
-        src.write(_tiles_df(spark, 3, keys))
-        base0 = src.read(spark).drop("chunk_row", "chunk_col", "attempt_id")
-        dst.write(regrid_tiles(base0, "geodetic", 3, "mercator", 3, tile_size=TPX))
-        # materialize the PRE-change reference now: base0 is lazy over
-        # the sink and would see the upsert below on a later collect
-        want0 = {
-            (r.tile_row, r.tile_col, r.band): r.payload
-            for r in regrid_tiles(
-                base0, "geodetic", 3, "mercator", 3, tile_size=TPX
-            ).collect()
-        }
-        before = {
-            (int(r.chunk_row), int(r.chunk_col)): r.attempt_id
-            for r in dst.visible_chunk_attempts(spark).collect()
-        }
-
-        # re-write one source tile with new content (tile-level upsert)
-        changed = (3, 5)
-        newplane = np.full((TPX, TPX), 200, dtype=np.uint8)
-        row = [(3, changed[0], changed[1], 0, 0, TPX, TPX, "uint8",
-                newplane.tobytes(), 9)]
-        from mapchete_xarray_spark.operators.mosaic import TILE_BANDS_SCHEMA
-
-        src.upsert(spark.createDataFrame(row, TILE_BANDS_SCHEMA))
-
-        ch = spark.createDataFrame([changed], "tile_row long, tile_col long")
-        stats, n_jobs = spark_jobs(lambda: refresh_regrid(spark, src, dst, ch))
-        assert n_jobs <= REFRESH_JOBS, n_jobs
-        assert stats["tiles"] > 0
-
-        # pixel parity with a full recompute over the CURRENT base
-        base1 = src.read(spark).drop("chunk_row", "chunk_col", "attempt_id")
-        want = {
-            (r.tile_row, r.tile_col, r.band): r.payload
-            for r in regrid_tiles(
-                base1, "geodetic", 3, "mercator", 3, tile_size=TPX
-            ).collect()
-        }
-        got = self._dst_pixels(spark, dst)
-        assert set(want) <= set(got)
-        assert all(got[k] == v for k, v in want.items())
-        # the change was visible end-to-end: the refreshed destination
-        # differs from the pre-change full regrid somewhere
-        assert want != want0
-
-        # untouched chunks kept their attempts; touched ones flipped
-        after = {
-            (int(r.chunk_row), int(r.chunk_col)): r.attempt_id
-            for r in dst.visible_chunk_attempts(spark).collect()
-        }
-        flipped = {k for k in before if after.get(k) != before[k]}
-        assert flipped and flipped != set(before)
-
-    def test_no_op_change_set(self, spark, tmp_path):
-        from mapchete_xarray_spark.operators.regrid import refresh_regrid
-
-        src, dst = self._sinks(spark, tmp_path)
-        src.write(_tiles_df(spark, 3, [(2, 4)]))
-        empty = spark.createDataFrame([], "tile_row long, tile_col long")
-        assert refresh_regrid(spark, src, dst, empty)["tiles"] == 0
-
-    def test_empty_source_sink(self, spark, tmp_path):
-        """A prepared-but-empty source sink must yield a no-op refresh,
-        not an AnalysisException: the empty-sink read path types the
-        chunk columns BIGINT, and the pruning IN-list's literals must
-        match (review finding: bare int tuples were a
-        DATATYPE_MISMATCH analysis error against STRUCT<bigint,bigint>)."""
-        from mapchete_xarray_spark.operators.regrid import refresh_regrid
-
-        src, dst = self._sinks(spark, tmp_path)
-        ch = spark.createDataFrame([(3, 5)], "tile_row long, tile_col long")
-        stats = refresh_regrid(spark, src, dst, ch)
-        assert stats["tiles"] == 0
-
-    def test_oversized_change_set_raises(self, spark, tmp_path, monkeypatch):
-        """A change set whose forward cover exceeds REFRESH_MAX_KEYS destination
-        chunks is a full rebuild, not an incremental refresh — raise
-        with guidance instead of collecting millions of chunk keys."""
-        from mapchete_xarray_spark.operators.regrid import refresh_regrid
-        from mapchete_xarray_spark.sources import tiledir
-        from mapchete_xarray_spark.sources.tiledir import TileDirError
-
-        src, dst = self._sinks(spark, tmp_path)
-        src.write(_tiles_df(spark, 3, [(2, 4)]))
-        ch = spark.createDataFrame(
-            [(r, c) for r in range(2, 6) for c in range(16)],
-            "tile_row long, tile_col long",
-        )
-        with monkeypatch.context() as m, pytest.raises(TileDirError, match="full rebuild"):
-            m.setattr(tiledir, "REFRESH_MAX_KEYS", 3)
-            refresh_regrid(spark, src, dst, ch)
-
-@pytest.mark.spark
-class TestStreamingRegrid:
-    def test_streaming_regrid_ingest(self, spark, tmp_path):
-        """Micro-batched cross-grid maintenance end to end: parquet
-        drop-folder → foreachBatch materialize + base upsert +
-        incremental regrid; the final mercator sink equals a full
-        regrid of the final geodetic base."""
-        from mapchete_xarray_spark import grid as _g
-        from mapchete_xarray_spark.sources.images import images_df
-        from mapchete_xarray_spark.sources.tiledir import (
-            TileDirConfig,
-            TileDirectory,
-        )
-        from mapchete_xarray_spark.streaming.ingest import (
-            streaming_regrid_ingest,
-        )
-
-        pdf = images_df(spark, 30).toPandas()
-        rng = np.random.default_rng(11)
-        for i, lon_lo in [(0, -120.0), (1, 40.0)]:
-            part = pdf.iloc[i * 15 : (i + 1) * 15].copy()
-            lon = rng.uniform(lon_lo, lon_lo + 30, len(part))
-            lat = rng.uniform(-45, 45, len(part))
-            part["minx"], part["maxx"] = lon - 1.0, lon + 1.0
-            part["miny"], part["maxy"] = lat - 1.0, lat + 1.0
-            (tmp_path / "drop").mkdir(exist_ok=True)
-            spark.createDataFrame(part).coalesce(1).write.mode("append").parquet(
-                str(tmp_path / "drop")
-            )
-        schema = spark.read.parquet(str(tmp_path / "drop")).schema
-
-        base_td = TileDirectory(TileDirConfig(path=str(tmp_path / "base"), zoom=5))
-        base_td.prepare()
-        dst_td = TileDirectory(
-            TileDirConfig(path=str(tmp_path / "merc"), zoom=5, grid_name="mercator")
-        )
-        dst_td.prepare()
-
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(tmp_path / "drop"))
-        )
-        q = (
-            streaming_regrid_ingest(
-                stream, base_td, dst_td, _g.GEODETIC, 5, str(tmp_path / "ckpt")
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-        want = {
-            (x.tile_row, x.tile_col, x.band): x.payload
-            for x in regrid_tiles(
-                base_td.read(spark).drop("chunk_row", "chunk_col", "attempt_id"),
-                "geodetic",
-                5,
-                "mercator",
-                5,
-            ).collect()
-        }
-        got = {
-            (x.tile_row, x.tile_col, x.band): x.payload
-            for x in dst_td.read(spark).collect()
-        }
-        assert set(want) <= set(got)
-        assert all(got[k] == v for k, v in want.items())
-        assert len(want) > 0

@@ -9,7 +9,6 @@ from mapchete_xarray_spark import grid
 from mapchete_xarray_spark.operators.composite import temporal_composite
 from mapchete_xarray_spark.operators.mosaic import TILE_BANDS_SCHEMA
 from mapchete_xarray_spark.operators.zonal import (
-    zonal_finalize,
     zonal_stats,
     zonal_stats_bruteforce,
 )
@@ -18,10 +17,6 @@ from mapchete_xarray_spark.sources.aoi import aoi_pandas
 TPX = 16
 ZOOM = 3  # geodetic z3: 8 x 16 tiles, pixel = 1.40625 deg
 PYR = grid.Pyramid("geodetic", tile_size=TPX)
-# Spark jobs the incremental refresh test below may launch: the count
-# it ran before the refresh kinds shared one chunk-refresh kernel in
-# sources/tiledir.py (the kernel must not add jobs).
-REFRESH_JOBS = 3
 
 
 def _planes_pdf(seed=11, bands=2, tiles=None, ts_idx=0, nodata_frac=0.0):
@@ -122,6 +117,15 @@ class TestZonal:
         # payloads never cross an Exchange
         assert plan.count("Exchange") == 1, plan
 
+    def test_partials_are_map_only(self, spark):
+        from mapchete_xarray_spark.operators.zonal import zonal_partials
+
+        planes = _planes_pdf(tiles=[(3, 5)])
+        df = spark.createDataFrame(planes, TILE_BANDS_SCHEMA)
+        plan = (zonal_partials(df, aoi_pandas(10), PYR, ZOOM)
+                ._jdf.queryExecution().executedPlan().toString())
+        assert "Exchange" not in plan, plan
+
 
 def _member_values_bruteforce(planes, zones, nodata=None):
     """Independent membership: full-tile PNPOLY per (plane, zone) —
@@ -207,67 +211,6 @@ class TestZonalHistogram:
         df = spark.createDataFrame(planes, TILE_BANDS_SCHEMA)
         with pytest.raises(Exception, match="integer dtype"):
             zonal_histogram(df, aoi_pandas(30), PYR, ZOOM).collect()
-
-    def test_refresh_hist_matches_full(self, spark, tmp_path):
-        from mapchete_xarray_spark.operators.zonal import (
-            _HIST_PARTIAL_SCHEMA,
-            refresh_zonal,
-            zonal_hist_partials,
-            zonal_histogram,
-        )
-        from mapchete_xarray_spark.sources.tiledir import (
-            TileDirConfig,
-            TileDirectory,
-        )
-
-        src = TileDirectory(
-            TileDirConfig(path=str(tmp_path / "base"), zoom=ZOOM, bands=1,
-                          tile_size=TPX, chunk_tiles=2)
-        )
-        src.prepare()
-        rng = np.random.default_rng(42)
-        rows = [
-            (ZOOM, r, c, 0, 0, TPX, TPX, "uint8",
-             rng.integers(1, 255, (TPX, TPX)).astype(np.uint8).tobytes(), 1)
-            for r in range(2, 5) for c in range(3, 8)
-        ]
-        src.write(spark.createDataFrame(rows, TILE_BANDS_SCHEMA))
-        zones = aoi_pandas(30)
-
-        def base_planes():
-            return src.read(spark).drop(
-                "chunk_row", "chunk_col", "attempt_id"
-            )
-
-        ppath = str(tmp_path / "hist_partials")
-        zonal_hist_partials(base_planes(), zones, PYR, ZOOM).write.parquet(
-            ppath
-        )
-        old = spark.read.schema(_HIST_PARTIAL_SCHEMA).parquet(ppath)
-
-        src.upsert(spark.createDataFrame(
-            [(ZOOM, 3, 5, 0, 0, TPX, TPX, "uint8",
-              np.full((TPX, TPX), 200, np.uint8).tobytes(), 9)],
-            TILE_BANDS_SCHEMA,
-        ))
-        changed = spark.createDataFrame(
-            [(3, 5)], "tile_row long, tile_col long"
-        )
-        _np, hist = refresh_zonal(
-            spark, src, zones, old, changed, kind="hist"
-        )
-        got = {
-            (r.aoi_id, r.band, r.ts_idx, r.val): r.cnt for r in hist.collect()
-        }
-        want = {
-            (r.aoi_id, r.band, r.ts_idx, r.val): r.cnt
-            for r in zonal_histogram(base_planes(), zones, PYR, ZOOM).collect()
-        }
-        assert got == want and want
-
-        with pytest.raises(ValueError, match="kind must be"):
-            refresh_zonal(spark, src, zones, old, changed, kind="nope")
-
 
 class TestRasterZonal:
     def _pair(self, spark, seed=81, label_vals=(0, 1, 2, 3)):
@@ -416,227 +359,6 @@ class TestRasterZonal:
             for r in zonal_stats(vdf, zones, PYR, ZOOM).collect()
         }
         assert by_label == {1: by_zone["z1"], 2: by_zone["z2"]}
-
-
-class TestRefreshZonal:
-    def test_incremental_matches_full(self, spark, tmp_path, spark_jobs, monkeypatch):
-        """Change one base tile, splice-refresh the persisted partials:
-        the refreshed stats must equal a full zonal recompute of the
-        CURRENT base, while untouched chunks' partial rows survive the
-        splice byte-identical."""
-        from mapchete_xarray_spark.operators.zonal import (
-            _PARTIAL_SCHEMA,
-            refresh_zonal,
-            zonal_partials,
-        )
-        from mapchete_xarray_spark.sources.tiledir import (
-            TileDirConfig,
-            TileDirectory,
-        )
-
-        src = TileDirectory(
-            TileDirConfig(path=str(tmp_path / "base"), zoom=ZOOM, bands=1,
-                          tile_size=TPX, chunk_tiles=2)
-        )
-        src.prepare()
-        rng = np.random.default_rng(41)
-        rows = [
-            (ZOOM, r, c, 0, 0, TPX, TPX, "uint8",
-             rng.integers(1, 255, (TPX, TPX)).astype(np.uint8).tobytes(), 1)
-            for r in range(2, 5) for c in range(3, 8)
-        ]
-        src.write(spark.createDataFrame(rows, TILE_BANDS_SCHEMA))
-        zones = aoi_pandas(30)
-
-        def base_planes():
-            return src.read(spark).drop(
-                "chunk_row", "chunk_col", "attempt_id"
-            )
-
-        # persist the materialized aggregate, as a real caller would —
-        # partials must not lazily re-read the mutated base
-        ppath = str(tmp_path / "partials")
-        zonal_partials(base_planes(), zones, PYR, ZOOM).write.parquet(ppath)
-        old = spark.read.schema(_PARTIAL_SCHEMA).parquet(ppath)
-
-        newplane = np.full((TPX, TPX), 200, dtype=np.uint8)
-        src.upsert(spark.createDataFrame(
-            [(ZOOM, 3, 5, 0, 0, TPX, TPX, "uint8", newplane.tobytes(), 9)],
-            TILE_BANDS_SCHEMA,
-        ))
-        changed = spark.createDataFrame(
-            [(3, 5)], "tile_row long, tile_col long"
-        )
-        (new_partials, stats), n_jobs = spark_jobs(
-            lambda: refresh_zonal(spark, src, zones, old, changed)
-        )
-        assert n_jobs <= REFRESH_JOBS, n_jobs
-
-        want = {
-            (r.aoi_id, r.band, r.ts_idx): r
-            for r in zonal_stats(base_planes(), zones, PYR, ZOOM).collect()
-        }
-        got = {(r.aoi_id, r.band, r.ts_idx): r for r in stats.collect()}
-        assert set(got) == set(want) and want
-        for k, w in want.items():
-            g = got[k]
-            assert (g.n_pixels, g.px_sum, g.px_min, g.px_max) == (
-                w.n_pixels, w.px_sum, w.px_min, w.px_max), k
-            assert g.px_mean == w.px_mean and g.px_std == w.px_std, k
-        # the change is visible: tile (3,5) sits in some zone at 30 zones
-        before = {(r.aoi_id, r.band, r.ts_idx): r.px_sum
-                  for r in zonal_finalize(old).collect()}
-        assert any(before[k] != got[k].px_sum for k in got if k in before)
-
-        # untouched chunks' rows pass through the splice unchanged
-        ct = 2
-        old_keep = {
-            tuple(r) for r in old.where(
-                f"(tile_row div {ct}, tile_col div {ct}) != (1, 2)"
-            ).collect()
-        }
-        new_keep = {
-            tuple(r) for r in new_partials.where(
-                f"(tile_row div {ct}, tile_col div {ct}) != (1, 2)"
-            ).collect()
-        }
-        assert old_keep == new_keep and old_keep
-
-        # empty change set no-ops (same partials object back)
-        empty = spark.createDataFrame([], "tile_row long, tile_col long")
-        same, _ = refresh_zonal(spark, src, zones, old, empty)
-        assert same is old
-
-        # oversized change set refuses — full rebuild territory
-        from mapchete_xarray_spark.sources import tiledir
-        from mapchete_xarray_spark.sources.tiledir import TileDirError
-
-        big = spark.createDataFrame(
-            [(r, c) for r in range(6) for c in range(6)],
-            "tile_row long, tile_col long",
-        )
-        with monkeypatch.context() as m, pytest.raises(TileDirError, match="full rebuild"):
-            m.setattr(tiledir, "REFRESH_MAX_KEYS", 3)
-            refresh_zonal(spark, src, zones, old, big)
-
-    def test_zonal_store_generations(self, spark, tmp_path):
-        from mapchete_xarray_spark.operators.zonal import (
-            _PARTIAL_SCHEMA,
-            ZonalStore,
-        )
-
-        store = ZonalStore(str(tmp_path / "store"))
-        assert store.current_generation() is None
-        empty = store.read(spark)
-        assert empty.count() == 0
-        assert empty.schema == _PARTIAL_SCHEMA
-
-        row = [(3, 5, "aoi1", 0, 0, 4, 10.0, 30.0, 1.0, 4.0)]
-        store.publish(spark.createDataFrame(row, _PARTIAL_SCHEMA), 0)
-        assert store.current_generation() == 0
-        assert store.read(spark).count() == 1
-
-        row2 = row + [(3, 6, "aoi1", 0, 0, 2, 6.0, 20.0, 2.0, 4.0)]
-        store.publish(spark.createDataFrame(row2, _PARTIAL_SCHEMA), 1)
-        store.publish(spark.createDataFrame(row2, _PARTIAL_SCHEMA), 2)
-        assert store.current_generation() == 2
-        assert store.read(spark).count() == 2
-        # grace: previous generation survives, older reclaimed
-        import os
-
-        gens = sorted(
-            d for d in os.listdir(tmp_path / "store") if d.startswith("gen=")
-        )
-        assert gens == ["gen=1", "gen=2"]
-
-        # same-generation re-publish (replay) overwrites in place
-        store.publish(spark.createDataFrame(row, _PARTIAL_SCHEMA), 2)
-        assert store.read(spark).count() == 1
-        # backwards move refuses — single-writer contract
-        with pytest.raises(ValueError, match="backwards"):
-            store.publish(spark.createDataFrame(row, _PARTIAL_SCHEMA), 1)
-
-    def test_streaming_zonal_ingest(self, spark, tmp_path):
-        """Micro-batched materialized-aggregate maintenance end to
-        end: drop-folder → foreachBatch materialize + base upsert +
-        incremental partials splice + generation publish; the final
-        store, finalized, equals a full zonal recompute of the final
-        base."""
-        from mapchete_xarray_spark import grid as _g
-        from mapchete_xarray_spark.operators.zonal import ZonalStore
-        from mapchete_xarray_spark.sources.aoi import aoi_pandas as _aoi
-        from mapchete_xarray_spark.sources.images import images_df
-        from mapchete_xarray_spark.sources.tiledir import (
-            TileDirConfig,
-            TileDirectory,
-        )
-        from mapchete_xarray_spark.streaming.ingest import (
-            streaming_zonal_ingest,
-        )
-
-        pdf = images_df(spark, 24).toPandas()
-        rng = np.random.default_rng(43)
-        for i, lon_lo in [(0, -100.0), (1, 20.0)]:
-            part = pdf.iloc[i * 12 : (i + 1) * 12].copy()
-            lon = rng.uniform(lon_lo, lon_lo + 25, len(part))
-            lat = rng.uniform(-40, 40, len(part))
-            part["minx"], part["maxx"] = lon - 1.0, lon + 1.0
-            part["miny"], part["maxy"] = lat - 1.0, lat + 1.0
-            (tmp_path / "drop").mkdir(exist_ok=True)
-            spark.createDataFrame(part).coalesce(1).write.mode(
-                "append"
-            ).parquet(str(tmp_path / "drop"))
-        schema = spark.read.parquet(str(tmp_path / "drop")).schema
-
-        base_td = TileDirectory(
-            TileDirConfig(path=str(tmp_path / "base"), zoom=5)
-        )
-        base_td.prepare()
-        store = ZonalStore(str(tmp_path / "store"))
-        zones = _aoi(40)
-
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(tmp_path / "drop"))
-        )
-        q = (
-            streaming_zonal_ingest(
-                stream, base_td, zones, store, _g.GEODETIC, 5,
-                str(tmp_path / "ckpt"),
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        assert store.current_generation() is not None
-
-        pyr5 = grid.Pyramid("geodetic", tile_size=int(base_td.cfg.tile_size))
-        want = {
-            (r.aoi_id, r.band, r.ts_idx): (r.n_pixels, r.px_sum, r.px_min,
-                                           r.px_max, r.px_mean, r.px_std)
-            for r in zonal_stats(
-                base_td.read(spark).drop(
-                    "chunk_row", "chunk_col", "attempt_id"
-                ),
-                zones, pyr5, 5,
-            ).collect()
-        }
-        got = {
-            (r.aoi_id, r.band, r.ts_idx): (r.n_pixels, r.px_sum, r.px_min,
-                                           r.px_max, r.px_mean, r.px_std)
-            for r in zonal_finalize(store.read(spark)).collect()
-        }
-        assert got == want and want
-
-    def test_partials_are_map_only(self, spark):
-        from mapchete_xarray_spark.operators.zonal import zonal_partials
-
-        planes = _planes_pdf(tiles=[(3, 5)])
-        df = spark.createDataFrame(planes, TILE_BANDS_SCHEMA)
-        plan = (zonal_partials(df, aoi_pandas(10), PYR, ZOOM)
-                ._jdf.queryExecution().executedPlan().toString())
-        assert "Exchange" not in plan, plan
 
 
 def _stack_rows(stacks, tile=(1, 1), band=0, dtype="uint8"):
