@@ -6,138 +6,133 @@ below it (mapchete/_processing.py — the reference plugin itself is
 single-zoom, `_output.py:343-349`, but its host always builds the
 pyramid this way; GDAL's BuildOverviews is the raster twin).
 
-Spark shape (one shuffle per level, the canonical overview build):
+Spark shape (ONE shuffle for every level of the pyramid):
 
-- each (zoom, row, col, band, ts_idx) tile-band row maps to its
-  parent (row//2, col//2) carrying its quadrant (row%2, col%2) —
-  pure Catalyst arithmetic, no UDF;
-- groupBy the parent key → ``applyInPandas`` over ≤4 child rows:
-  decode the raw plane, 2× decimate (``average`` of each 2x2 block
-  or ``nearest`` top-left), paste into the parent quadrant; absent
-  children stay fill_value (empty tiles are absent by contract,
-  reference ``_output.py:362-364``).
+- map side, each (zoom, row, col, band, ts_idx) tile-band row is
+  decimated ``levels`` times in a chain (``average`` of each 2x2
+  block, round-half-up back to the plane dtype at every step, or
+  ``nearest`` top-left); the level-L result is a 2^-L-edge piece of
+  the level-L ancestor (row >> L, col >> L), placed at block offset
+  (row mod 2^L, col mod 2^L);
+- one exchange on the ancestor key, then one batched assemble pastes
+  the pieces into a fill_value canvas; absent children stay
+  fill_value (empty tiles are absent by contract, reference
+  ``_output.py:362-364``).
 
-At 10^12 tiles each level is ~1/4 the rows of the level below, so the
-whole pyramid costs ~4/3 of one extra pass over the base level; the
-parent key is the shuffle key with the same skew properties as the
-base tile key (hot city blobs shrink by 4x per level).
+This equals chaining single-level builds exactly: a level-L pixel
+depends only on a 2^L x 2^L block inside one base tile, and an all-fill
+block decimates to fill, so the fill quadrants an intermediate level
+would carry contribute nothing but fill.  ``overview_level`` is the
+one-level case of the same kernel.
+
+At 10^12 tiles the pieces of level L are 1/4^L of the base bytes, so
+the whole pyramid shuffles ~1/3 of one pass over the base level; the
+ancestor key has the same skew properties as the base tile key (hot
+city blobs shrink by 4x per level).
 """
 
 from __future__ import annotations
 
+import math
+from typing import Iterator
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from .groupmap import batched_group_map
 from .mosaic import TILE_BANDS_SCHEMA
 
+# a decimated piece of a base tile, keyed by its level-L ancestor;
+# height/width are the ANCESTOR canvas dims (the child's original
+# edge), the piece payload is (height / 2^L)^2 and (qr, qc) its block
+# offset in piece units
+_PIECE_SCHEMA = T.StructType(
+    [
+        T.StructField("tile_zoom", T.IntegerType(), False),
+        T.StructField("p_row", T.LongType(), False),
+        T.StructField("p_col", T.LongType(), False),
+        T.StructField("qr", T.IntegerType(), False),
+        T.StructField("qc", T.IntegerType(), False),
+        T.StructField("band", T.IntegerType(), False),
+        T.StructField("ts_idx", T.IntegerType(), False),
+        T.StructField("height", T.IntegerType(), False),
+        T.StructField("width", T.IntegerType(), False),
+        T.StructField("dtype", T.StringType(), False),
+        T.StructField("payload", T.BinaryType(), False),
+        T.StructField("n_sources", T.IntegerType(), False),
+    ]
+)
 
-def overview_level(
+
+def _decimate(arr: np.ndarray, method: str) -> np.ndarray:
+    """One 2x step down: ``nearest`` keeps the top-left pixel;
+    ``average`` means each 2x2 block in float64 and rounds half up back
+    to an integer plane dtype (GDAL 'average' overview semantics)."""
+    if method == "nearest":
+        return arr[::2, ::2]
+    if np.issubdtype(arr.dtype, np.integer) and arr.dtype.itemsize <= 4:
+        # the same value in int64: a block sum s of such ints is exact
+        # in float64 too, so floor(s / 4 + 0.5) == (s + 2) >> 2
+        s = arr[::2, ::2].astype(np.int64) + arr[1::2, ::2] + arr[::2, 1::2] + arr[1::2, 1::2]
+        return ((s + 2) >> 2).astype(arr.dtype)
+    half = arr.shape[0] // 2
+    m = arr.reshape(half, 2, half, 2).astype(np.float64).mean(axis=(1, 3))
+    if np.issubdtype(arr.dtype, np.integer):
+        return np.floor(m + 0.5).astype(arr.dtype)
+    return m.astype(arr.dtype)
+
+
+def overview_levels(
     tiles: DataFrame,
+    levels: int,
     method: str = "average",
     fill_value: int = 0,
 ) -> DataFrame:
-    """One pyramid level up: tile-band rows at zoom z → rows at z-1.
+    """Every pyramid level above single-zoom tile-band rows at zoom z:
+    rows at z-1 … z-``levels`` in one frame (``tile_zoom`` tells them
+    apart), from one decimate pass and one exchange.
 
     Input/output schema is ``TILE_BANDS_SCHEMA`` (what
     ``materialize_tiles`` emits and ``TileDirectory.write`` accepts),
-    so levels chain and every level is sink-compatible.  Tile planes
-    must be square with an even edge (the 256/512 grid sizes always
-    are); ``n_sources`` aggregates as the sum over present children.
-    """
+    so every level is sink-compatible.  Tile planes must be square with
+    an edge divisible by 2^levels (the 256/512 grid sizes are);
+    ``n_sources`` aggregates as the sum over present descendants."""
     if method not in ("average", "nearest"):
         raise ValueError(f"unknown overview method {method!r}")
-
-    child = tiles.select(
-        (F.col("tile_zoom") - F.lit(1)).alias("tile_zoom"),
-        F.expr("tile_row div 2").cast("long").alias("p_row"),
-        F.expr("tile_col div 2").cast("long").alias("p_col"),
-        (F.col("tile_row") % 2).cast("int").alias("qr"),
-        (F.col("tile_col") % 2).cast("int").alias("qc"),
-        "band",
-        "ts_idx",
-        "height",
-        "width",
-        "dtype",
-        "payload",
-        "n_sources",
-    )
-
+    levels = int(levels)
+    if levels < 1:
+        raise ValueError(f"overview needs levels >= 1, got {levels}")
     fv = int(fill_value)
-    meth = method
-
-    # r9 (guide §2.3, shuffle fewer bytes): each child's 2× decimation
-    # depends only on that child, so it runs MAP-SIDE before the parent
-    # exchange — the shuffle then carries quarter planes (payload/4)
-    # instead of full child planes.  The assemble stage only pastes.
-    import pandas as pd
-
-    from typing import Iterator
+    cols = [f.name for f in _PIECE_SCHEMA.fields]
 
     def decimate(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [
-            "tile_zoom", "p_row", "p_col", "qr", "qc", "band", "ts_idx",
-            "height", "width", "dtype", "payload", "n_sources",
-        ]
         for pdf in batches:
             rows = []
             for r in pdf.itertuples():
                 h, w = int(r.height), int(r.width)
-                if h != w or h % 2:
+                if h != w or h % (1 << levels):
                     raise ValueError(
-                        f"overview needs square even-edge tiles, got {h}x{w}"
+                        f"overview of {levels} level(s) needs square tiles "
+                        f"with an edge divisible by {1 << levels}, got {h}x{w}"
                     )
                 dt = np.dtype(r.dtype)
-                arr = np.frombuffer(r.payload, dtype=dt).reshape(h, w)
-                half = h // 2
-                if meth == "nearest":
-                    ds = arr[::2, ::2]
-                else:
-                    # mean in float64, round-half-up back to the plane
-                    # dtype (GDAL 'average' overview semantics for
-                    # integer bands)
-                    m = (
-                        arr.reshape(half, 2, half, 2)
-                        .astype(np.float64)
-                        .mean(axis=(1, 3))
+                ds = np.frombuffer(r.payload, dtype=dt).reshape(h, w)
+                row, col = int(r.tile_row), int(r.tile_col)
+                for lv in range(1, levels + 1):
+                    ds = _decimate(ds, method)
+                    rows.append(
+                        (
+                            int(r.tile_zoom) - lv, row >> lv, col >> lv,
+                            row & ((1 << lv) - 1), col & ((1 << lv) - 1),
+                            int(r.band), int(r.ts_idx), h, w, str(dt),
+                            np.ascontiguousarray(ds).tobytes(), int(r.n_sources),
+                        )
                     )
-                    ds = (
-                        np.floor(m + 0.5).astype(dt)
-                        if np.issubdtype(dt, np.integer)
-                        else m.astype(dt)
-                    )
-                rows.append(
-                    (
-                        int(r.tile_zoom), int(r.p_row), int(r.p_col),
-                        int(r.qr), int(r.qc), int(r.band), int(r.ts_idx),
-                        h, w, str(dt),
-                        np.ascontiguousarray(ds).tobytes(), int(r.n_sources),
-                    )
-                )
             yield pd.DataFrame(rows, columns=cols)
 
-    from pyspark.sql import types as T
-
-    quarter_schema = T.StructType(
-        [
-            T.StructField("tile_zoom", T.IntegerType(), False),
-            T.StructField("p_row", T.LongType(), False),
-            T.StructField("p_col", T.LongType(), False),
-            T.StructField("qr", T.IntegerType(), False),
-            T.StructField("qc", T.IntegerType(), False),
-            T.StructField("band", T.IntegerType(), False),
-            T.StructField("ts_idx", T.IntegerType(), False),
-            # height/width are the PARENT canvas dims (the child's
-            # original edge); the quarter payload is (height/2)²
-            T.StructField("height", T.IntegerType(), False),
-            T.StructField("width", T.IntegerType(), False),
-            T.StructField("dtype", T.StringType(), False),
-            T.StructField("payload", T.BinaryType(), False),
-            T.StructField("n_sources", T.IntegerType(), False),
-        ]
-    )
-    quarters = child.mapInPandas(decimate, quarter_schema)
+    pieces = tiles.mapInPandas(decimate, _PIECE_SCHEMA)
 
     def assemble(key, pdf):
         zoom_v, row_v, col_v, band_v, ts_v = (int(k) for k in key)
@@ -146,35 +141,36 @@ def overview_level(
         dt = np.dtype(pdf.dtype.iloc[0])
         canvas = np.full((h, w), fv, dtype=dt)
         n_src = 0
-        half = h // 2
         for r in pdf.itertuples():
-            ds = np.frombuffer(r.payload, dtype=dt).reshape(half, half)
-            r0, c0 = int(r.qr) * half, int(r.qc) * half
-            canvas[r0 : r0 + half, c0 : c0 + half] = ds
+            side = math.isqrt(len(r.payload) // dt.itemsize)
+            ds = np.frombuffer(r.payload, dtype=dt).reshape(side, side)
+            r0, c0 = int(r.qr) * side, int(r.qc) * side
+            canvas[r0 : r0 + side, c0 : c0 + side] = ds
             n_src += int(r.n_sources)
         return (
-            zoom_v,
-            row_v,
-            col_v,
-            band_v,
-            ts_v,
-            h,
-            w,
-            str(dt),
-            np.ascontiguousarray(canvas).tobytes(),
-            n_src,
+            zoom_v, row_v, col_v, band_v, ts_v, h, w, str(dt),
+            np.ascontiguousarray(canvas).tobytes(), n_src,
         )
 
-    from .groupmap import batched_group_map
-
-    # ≤4-child groups: batched per Arrow batch (groupmap), not
-    # per-group applyInPandas — same single exchange on the parent key
+    # small groups (≤4^L pieces): batched per Arrow batch (groupmap),
+    # not per-group applyInPandas — one exchange on the ancestor key
     return batched_group_map(
-        quarters,
+        pieces,
         ["tile_zoom", "p_row", "p_col", "band", "ts_idx"],
         assemble,
         TILE_BANDS_SCHEMA,
     )
+
+
+def overview_level(
+    tiles: DataFrame,
+    method: str = "average",
+    fill_value: int = 0,
+) -> DataFrame:
+    """One pyramid level up: tile-band rows at zoom z → rows at z-1
+    (``overview_levels`` with one level; levels chain, since input and
+    output are both ``TILE_BANDS_SCHEMA``)."""
+    return overview_levels(tiles, 1, method=method, fill_value=fill_value)
 
 
 def refresh_overviews(

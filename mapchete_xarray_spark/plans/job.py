@@ -110,7 +110,7 @@ def overviews_process(images: DataFrame, job: "Job") -> DataFrame:
     ``base_zoom - job.zoom`` (>= 1).  Returns TILE rows at job.zoom,
     so Job.run hands them straight to the sink.  Params:
     ``overview_method`` ('average' default, or 'nearest')."""
-    from ..operators.overviews import overview_level
+    from ..operators.overviews import overview_levels
     from ..sources.tiledir import TileDirectory, TileDirError
 
     src = TileDirectory.open(
@@ -127,9 +127,9 @@ def overviews_process(images: DataFrame, job: "Job") -> DataFrame:
     # fill belongs to the level being WRITTEN: absent-child quadrants
     # carry THIS job's output nodata, not the base archive's
     fill = job._out_cfg.fill_value
-    for _ in range(levels):
-        tiles = overview_level(tiles, method=method, fill_value=fill)
-    return tiles
+    return overview_levels(tiles, levels, method=method, fill_value=fill).where(
+        f"tile_zoom = {int(job.zoom)}"
+    )
 
 
 @register_process("regrid")

@@ -1379,26 +1379,26 @@ def overview_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_overviews.py."""
     from . import grid as _grid
     from .operators.mosaic import materialize_tiles
-    from .operators.overviews import overview_level
     from .sources.images import images_df, with_geometry
 
     n = _overview_n(sf_dir)
     imgs = with_geometry(images_df(spark, n), zoom=6)
-    base = materialize_tiles(imgs, _grid.GEODETIC, 6)
-    lvl = base
-    out = None
-    for _ in range(2):
-        lvl = overview_level(lvl)
-        sel = lvl.selectExpr(
-            "tile_zoom",
-            "tile_row",
-            "tile_col",
-            "band",
-            "n_sources",
-            "cast(crc32(payload) as bigint) as checksum",
-        )
-        out = sel if out is None else out.unionByName(sel)
-    return out
+    return _overview_checksums(materialize_tiles(imgs, _grid.GEODETIC, 6))
+
+
+def _overview_checksums(base: DataFrame) -> DataFrame:
+    """Per derived tile-band crc32 checksums of the two overview levels
+    above ``base``, derived in one ``overview_levels`` pass."""
+    from .operators.overviews import overview_levels
+
+    return overview_levels(base, 2).selectExpr(
+        "tile_zoom",
+        "tile_row",
+        "tile_col",
+        "band",
+        "n_sources",
+        "cast(crc32(payload) as bigint) as checksum",
+    )
 
 
 QUERIES["overview_build"] = overview_build
@@ -1452,23 +1452,8 @@ def overview_derive(spark: SparkSession, sf_dir: str) -> DataFrame:
     and determinism contract identical to overview_build's (crc32
     checksums; rows-only driver check — pixel semantics are not ANSI
     SQL)."""
-    from .operators.overviews import overview_level
-
     td = _overview_base_sink(spark, sf_dir)
-    lvl = td.read(spark).drop("chunk_row", "chunk_col", "attempt_id")
-    out = None
-    for _ in range(2):
-        lvl = overview_level(lvl)
-        sel = lvl.selectExpr(
-            "tile_zoom",
-            "tile_row",
-            "tile_col",
-            "band",
-            "n_sources",
-            "cast(crc32(payload) as bigint) as checksum",
-        )
-        out = sel if out is None else out.unionByName(sel)
-    return out
+    return _overview_checksums(td.read(spark).drop("chunk_row", "chunk_col", "attempt_id"))
 
 
 def _checksum_rows_oracle(rows, cols=None) -> str:
@@ -1536,7 +1521,7 @@ def _pyramid_build_sink(spark: SparkSession, sf_dir: str):
 def pyramid_build_checksums(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The multi-zoom PyramidDirectory facade as a driver-visible
     query (VERDICT r6 task 6): build a 3-level pyramid THROUGH the
-    facade (base write → committed-sink chained derives → per-level
+    facade (base write → one-pass derive of every level → per-level
     crash-atomic commits) and emit per derived tile-band crc32
     checksums read back FROM the level sinks — so the compare pins
     the whole write→commit→read round-trip per level, not just the

@@ -15,10 +15,20 @@ Reference framing: the reference's zarr archive is single-zoom too
 (one ``process_zoom`` per config, ``zarr.py``); the pyramid is
 mapchete's HOST concept (baselevels / ``mapchete convert``'s zoom
 descent).  This facade is that host workflow as a first-class engine
-surface: build (base → chained ``overview_level`` writes, each level
-derived from the previously COMMITTED sink so a crash resumes at the
-level boundary), cascading incremental refresh, whole-pyramid reads,
-and whole-pyramid XYZ cache export.
+surface: build (every level derived from the base in one
+``overview_levels`` pass, each level committing its own manifest),
+cascading incremental refresh, whole-pyramid reads, and whole-pyramid
+XYZ cache export.
+
+Build reads no level back.  ``write_base`` keeps its persisted base
+rows while they are the whole committed base level (the sink had no
+committed chunk before that write, or it was an overwrite) and the
+base manifest has not changed since; otherwise ``build`` reads the
+committed base.  Crash resume holds without reading levels back: each
+level still commits its own manifest in continue mode, and a fresh
+process re-derives every level from the committed base, so the levels
+committed before the crash skip all their chunks and the rest are
+written.
 """
 
 from __future__ import annotations
@@ -27,6 +37,7 @@ import json
 from dataclasses import asdict
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from . import fs as _fs
 from .tiledir import TileDirConfig, TileDirectory, TileDirError
@@ -73,6 +84,10 @@ class PyramidDirectory:
             for z in self.zooms
         }
         self._base_cfg = self._levels[self.base_zoom].cfg
+        # (base manifest key, persisted rows) of the last write_base
+        # that defined the whole base level; build or the next
+        # write_base releases it
+        self._base_rows: tuple | None = None
 
     # -- level access ---------------------------------------------------------
 
@@ -137,24 +152,52 @@ class PyramidDirectory:
     # -- write / build / refresh ----------------------------------------------
 
     def write_base(self, tiles: DataFrame, mode: str = "continue") -> dict:
-        return self.base.write(tiles, mode=mode)
+        if self._base_rows is not None:
+            self._base_rows[1].unpersist()
+            self._base_rows = None
+        stats, rows = self.base._write(tiles, mode, keep=True)
+        if rows is not None:
+            self._base_rows = (self.base._manifest_key(), rows)
+        return stats
 
     def build(self, spark: SparkSession, method: str = "average") -> list[dict]:
-        """Derive every coarser level from the one below it —
-        SEQUENTIALLY, each level reading the previously COMMITTED sink
-        (the refresh_pyramid ordering contract), so a crash resumes at
-        a level boundary via continue-mode; re-running a finished
-        build writes nothing."""
-        from ..operators.overviews import overview_level
+        """Derive every coarser level from the base in one pass
+        (``overview_levels``: one decimate pass, one exchange, one
+        assemble), then commit the levels top-down from the base, each
+        through its own continue-mode write — so a crash resumes at a
+        level boundary and re-running a finished build writes nothing.
+        The base rows come from the last ``write_base`` when they are
+        still the whole committed base (see the module docstring),
+        else from a read of the committed base."""
+        from ..operators.overviews import overview_levels
 
-        stats = []
-        prev = self.base
-        for z in self.zooms[1:]:
-            src = prev.read(spark).drop("chunk_row", "chunk_col", "attempt_id")
-            td = self.level(z)
-            stats.append(td.write(overview_level(src, method=method), mode="continue"))
-            prev = td
-        return stats
+        memo, self._base_rows = self._base_rows, None
+        lv = None
+        try:
+            if memo is not None and memo[0] == self.base._manifest_key():
+                src = memo[1]
+            else:
+                src = self.base.read(spark)
+            lv = overview_levels(
+                src.drop("chunk_row", "chunk_col", "attempt_id"), self.levels,
+                method=method, fill_value=self._base_cfg.fill_value,
+            ).persist()
+            stats = []
+            for z in self.zooms[1:]:
+                stats.append(
+                    self.level(z).write(lv.where(F.col("tile_zoom") == z), mode="continue")
+                )
+                # the first level write has cached every level: the
+                # base rows are consumed
+                if memo is not None:
+                    memo[1].unpersist()
+                    memo = None
+            return stats
+        finally:
+            if lv is not None:
+                lv.unpersist()
+            if memo is not None:
+                memo[1].unpersist()
 
     def refresh(
         self, spark: SparkSession, changed_tiles: DataFrame,

@@ -427,6 +427,20 @@ class TileDirectory:
         attempts (provably not in-flight) are reclaimed immediately
         after the swap, while uncommitted orphans are left to
         ``vacuum()``'s grace window."""
+        return self._write(tiles, mode, reader_grace_sec)[0]
+
+    def _write(
+        self,
+        tiles: DataFrame,
+        mode: str = "continue",
+        reader_grace_sec: float = 300.0,
+        keep: bool = False,
+    ) -> tuple[dict, DataFrame | None]:
+        """``write``, returning (stats, rows).  With ``keep``, ``rows``
+        are the persisted, schema-cast input rows (chunk columns
+        included) when this write defined the whole level — no chunk
+        was committed before it, or ``mode="overwrite"`` — and the
+        caller owns their unpersist; otherwise ``rows`` is None."""
         if mode not in ("continue", "overwrite", "refresh"):
             raise TileDirError(f"unknown write mode: {mode}")
         from ..operators.mosaic import TILE_BANDS_SCHEMA
@@ -463,125 +477,162 @@ class TileDirectory:
             tiles.select(*[F.col(f.name).cast(f.dataType) for f in TILE_BANDS_SCHEMA.fields])
             .observe(obs_in, *checks)
         ).persist()
-        t = t0
-        done = self.manifest_chunks(spark)
-        if mode == "continue" and done is not None:
-            done = sizing.broadcast_if_small(done, n_manifest)
-            t = t.join(done, ["chunk_row", "chunk_col"], "left_anti")
-        # chunk-aligned write: one file per (chunk) partition dir, rows
-        # sorted by tile then band for row-group pruning on tile ranges
-        tcs = max(int(self.cfg.time_chunksize), 1)
-        # RANGE-partition by tile, not hash-by-chunk: city-clustered
-        # data makes a few chunks hold ~30% of all rows, and hashing on
-        # the chunk key serialized each hot chunk onto one writer task
-        # (measured: the write stage ran at 1x regardless of cores).
-        # Range tasks are balanced and spatially contiguous, so each
-        # task overlaps only a few chunk dirs (partitionBy still routes
-        # rows to their chunk dir; two tasks never write the same FILE,
-        # which is all the zarr safe_chunks discipline requires) and
-        # files-per-chunk stays ~1-2.
-        (
-            t.withColumn("attempt_id", F.lit(attempt))
-            .repartitionByRange("tile_row", "tile_col", "band", "ts_idx")
-            .sortWithinPartitions(
-                F.col("tile_row"),
-                F.col("tile_col"),
-                F.floor(F.col("ts_idx") / tcs),
-                F.col("band"),
-                F.col("ts_idx"),
-            )
-            .write.mode("append")
-            .option("compression", self.cfg.compression)
-            # attempt_id is the LAST partition level: constant per
-            # write, so no extra file fan-out — just commit fencing
-            .partitionBy("chunk_row", "chunk_col", "attempt_id")
-            .parquet(data_path)
-        )
-        got = _observed(spark, obs_in) or t0.agg(*checks).first().asDict()
-        if got["bad_zoom"] or got["bad_ts"]:
-            # refused BEFORE the commit: the attempt just written is
-            # invisible to every reader and vacuum() reclaims it
-            t0.unpersist()
-            raise TileDirError(
-                f"tile_zoom differs from the sink zoom {self.cfg.zoom} "
-                "(a TileDirectory holds exactly one zoom level; write "
-                "each pyramid level to its own sink)"
-                if got["bad_zoom"] else
-                f"time slice index outside the fixed {nsteps}-step axis "
-                "(the time axis can never be extended)"
-            )
-        stats = [F.count(F.lit(1)).alias("chunks"), F.sum("n_tiles").alias("tiles")]
-        obs_m = Observation()
-        m = (
-            t.groupBy("chunk_row", "chunk_col")
-            .agg(
-                F.count("*").alias("n_rows"),
-                F.countDistinct("tile_row", "tile_col").alias("n_tiles"),
-                F.sum(F.length("payload")).alias("n_bytes"),
-                F.sum("n_sources").alias("n_source_images"),
-                F.min("tile_row").alias("min_tile_row"),
-                F.max("tile_row").alias("max_tile_row"),
-                F.min("tile_col").alias("min_tile_col"),
-                F.max("tile_col").alias("max_tile_col"),
-            )
-            .withColumn("attempt_id", F.lit(attempt))
-            .withColumn("written_at", F.lit(time.time()))
-            .withColumn("generation", F.lit(gen).cast("long"))
-        )
-        superseded: list[tuple] = []
-        if mode == "overwrite":
-            # snapshot the attempts this overwrite supersedes BEFORE the
-            # generation bump publishes: every (chunk, attempt) already
-            # COMMITTED in the manifest.  Committed means the writer got
-            # past its commit point, so these dirs are provably not
-            # in-flight — unlike orphans, they need no grace window and
-            # can be reclaimed the moment the new generation is visible.
-            # (One manifest row per write call × chunk — tiny driver
-            # list at any data scale, same bound as vacuum's.)
-            old = self._manifest_df(spark)
-            if old is not None:
-                superseded = [
-                    (int(r.chunk_row), int(r.chunk_col), r.attempt_id, float(r.w))
-                    for r in old.groupBy("chunk_row", "chunk_col", "attempt_id")
-                    .agg(F.max("written_at").alias("w"))
-                    .collect()
-                ]
-        self._commit_manifest(m.observe(obs_m, *stats))
-        st = _observed(spark, obs_m) or m.agg(*stats).first().asDict()
-        t0.unpersist()
-        if superseded:
-            # reclaim superseded attempts at the swap so readers stop
-            # paying the file-listing cost of old attempt dirs — but
-            # only those COMMITTED more than reader_grace_sec ago: a
-            # reader that resolved the pre-swap manifest may still
-            # have an in-flight scan over a recently-committed
-            # attempt, and deleting it mid-scan turns a benign
-            # manifest-flip race (consistent old view) into a hard
-            # FileNotFoundException.  Recent attempts are left to
-            # vacuum(), which reclaims them once they age past its own
-            # grace (they are invisible after the manifest replace).
-            # The lingering-attempts case the immediate reclaim exists
-            # for — a sink overwritten after hours/days — is by
-            # definition past the grace and deletes here.
-            now = time.time()
-            grace = float(reader_grace_sec)
-            deleted_any = False
-            for cr, cc, aid, w in superseded:
-                if now - w <= grace:
-                    continue
-                p = _fs.join(
-                    self._root,
-                    f"data/chunk_row={cr}/chunk_col={cc}/attempt_id={aid}",
+        try:
+            t = t0
+            done = self.manifest_chunks(spark)
+            keep = keep and (done is None or mode == "overwrite")
+            if mode == "continue" and done is not None:
+                done = sizing.broadcast_if_small(done, n_manifest)
+                t = t.join(done, ["chunk_row", "chunk_col"], "left_anti")
+            # chunk-aligned write: one file per (chunk) partition dir, rows
+            # sorted by tile then band for row-group pruning on tile ranges.
+            # The partition columns lead the sort: the planned write needs
+            # its rows ordered by them, and a sort that does not start with
+            # them gets a second sort on those columns alone planned on top,
+            # which scrambles the tile order inside each file
+            tcs = max(int(self.cfg.time_chunksize), 1)
+            # RANGE-partition by chunk then tile, not hash-by-chunk:
+            # city-clustered data makes a few chunks hold ~30% of all rows,
+            # and hashing on the chunk key serialized each hot chunk onto
+            # one writer task (measured: the write stage ran at 1x
+            # regardless of cores).  Range tasks are balanced and cover
+            # contiguous runs of chunks, so a range boundary splits at most
+            # one chunk (partitionBy still routes rows to their chunk dir;
+            # two tasks never write the same FILE, which is all the zarr
+            # safe_chunks discipline requires) and files-per-chunk stays
+            # ~1.  One task per core, as an explicit count AQE does not
+            # coalesce: the write costs per file and per compressed byte,
+            # not per shuffled byte, and AQE's byte-sized coalescing ran a
+            # 29-file overview level write as one task.
+            n_tasks = spark.sparkContext.defaultParallelism
+            (
+                t.withColumn("attempt_id", F.lit(attempt))
+                .repartitionByRange(
+                    n_tasks, "chunk_row", "chunk_col", "tile_row", "tile_col", "band", "ts_idx"
                 )
-                try:
-                    self._fs.delete_dir(p)
-                    deleted_any = True
-                except (FileNotFoundError, OSError):
-                    pass  # never-written empty chunk / already gone
-            if deleted_any:
-                spark.catalog.refreshByPath(_fs.join(self.path, "data"))
-        return {"attempt_id": attempt, "chunks": st["chunks"], "tiles": st["tiles"] or 0,
-                "rows_in": got["rows_in"]}
+                .sortWithinPartitions(
+                    "chunk_row",
+                    "chunk_col",
+                    "attempt_id",
+                    F.col("tile_row"),
+                    F.col("tile_col"),
+                    F.floor(F.col("ts_idx") / tcs),
+                    F.col("band"),
+                    F.col("ts_idx"),
+                )
+                .write.mode("append")
+                .option("compression", self.cfg.compression)
+                # attempt_id is the LAST partition level: constant per
+                # write, so no extra file fan-out — just commit fencing
+                .partitionBy("chunk_row", "chunk_col", "attempt_id")
+                .parquet(data_path)
+            )
+            got = _observed(spark, obs_in) or t0.agg(*checks).first().asDict()
+            if got["bad_zoom"] or got["bad_ts"]:
+                # refused BEFORE the commit: the attempt just written is
+                # invisible to every reader and vacuum() reclaims it
+                raise TileDirError(
+                    f"tile_zoom differs from the sink zoom {self.cfg.zoom} "
+                    "(a TileDirectory holds exactly one zoom level; write "
+                    "each pyramid level to its own sink)"
+                    if got["bad_zoom"] else
+                    f"time slice index outside the fixed {nsteps}-step axis "
+                    "(the time axis can never be extended)"
+                )
+            stats = [F.count(F.lit(1)).alias("chunks"), F.sum("n_tiles").alias("tiles")]
+            obs_m = Observation()
+            # per (chunk, tile), then per chunk, over rows hash-partitioned
+            # on the chunk key: both aggregates reuse that one exchange
+            # (countDistinct plans two) and it carries no payload bytes
+            m = (
+                t.select(
+                    "chunk_row", "chunk_col", "tile_row", "tile_col",
+                    F.length("payload").alias("nb"), "n_sources",
+                )
+                .repartition("chunk_row", "chunk_col")
+                .groupBy("chunk_row", "chunk_col", "tile_row", "tile_col")
+                .agg(
+                    F.count("*").alias("n"),
+                    F.sum("nb").alias("nb"),
+                    F.sum("n_sources").alias("ns"),
+                )
+                .groupBy("chunk_row", "chunk_col")
+                .agg(
+                    F.sum("n").alias("n_rows"),
+                    F.count("*").alias("n_tiles"),
+                    F.sum("nb").alias("n_bytes"),
+                    F.sum("ns").alias("n_source_images"),
+                    F.min("tile_row").alias("min_tile_row"),
+                    F.max("tile_row").alias("max_tile_row"),
+                    F.min("tile_col").alias("min_tile_col"),
+                    F.max("tile_col").alias("max_tile_col"),
+                )
+                .withColumn("attempt_id", F.lit(attempt))
+                .withColumn("written_at", F.lit(time.time()))
+                .withColumn("generation", F.lit(gen).cast("long"))
+            )
+            superseded: list[tuple] = []
+            if mode == "overwrite":
+                # snapshot the attempts this overwrite supersedes BEFORE the
+                # generation bump publishes: every (chunk, attempt) already
+                # COMMITTED in the manifest.  Committed means the writer got
+                # past its commit point, so these dirs are provably not
+                # in-flight — unlike orphans, they need no grace window and
+                # can be reclaimed the moment the new generation is visible.
+                # (One manifest row per write call × chunk — tiny driver
+                # list at any data scale, same bound as vacuum's.)
+                old = self._manifest_df(spark)
+                if old is not None:
+                    superseded = [
+                        (int(r.chunk_row), int(r.chunk_col), r.attempt_id, float(r.w))
+                        for r in old.groupBy("chunk_row", "chunk_col", "attempt_id")
+                        .agg(F.max("written_at").alias("w"))
+                        .collect()
+                    ]
+            self._commit_manifest(m.observe(obs_m, *stats))
+            st = _observed(spark, obs_m) or m.agg(*stats).first().asDict()
+            if not keep:
+                t0.unpersist()
+            if superseded:
+                # reclaim superseded attempts at the swap so readers stop
+                # paying the file-listing cost of old attempt dirs — but
+                # only those COMMITTED more than reader_grace_sec ago: a
+                # reader that resolved the pre-swap manifest may still
+                # have an in-flight scan over a recently-committed
+                # attempt, and deleting it mid-scan turns a benign
+                # manifest-flip race (consistent old view) into a hard
+                # FileNotFoundException.  Recent attempts are left to
+                # vacuum(), which reclaims them once they age past its own
+                # grace (they are invisible after the manifest replace).
+                # The lingering-attempts case the immediate reclaim exists
+                # for — a sink overwritten after hours/days — is by
+                # definition past the grace and deletes here.
+                now = time.time()
+                grace = float(reader_grace_sec)
+                deleted_any = False
+                for cr, cc, aid, w in superseded:
+                    if now - w <= grace:
+                        continue
+                    p = _fs.join(
+                        self._root,
+                        f"data/chunk_row={cr}/chunk_col={cc}/attempt_id={aid}",
+                    )
+                    try:
+                        self._fs.delete_dir(p)
+                        deleted_any = True
+                    except (FileNotFoundError, OSError):
+                        pass  # never-written empty chunk / already gone
+                if deleted_any:
+                    spark.catalog.refreshByPath(_fs.join(self.path, "data"))
+            return (
+                {"attempt_id": attempt, "chunks": st["chunks"], "tiles": st["tiles"] or 0,
+                 "rows_in": got["rows_in"]},
+                t0 if keep else None,
+            )
+        except BaseException:
+            # a failed write releases its cached input
+            t0.unpersist()
+            raise
 
     def upsert(self, tiles: DataFrame, merge: bool = False) -> dict:
         """Tile-level upsert: new rows REPLACE same-(tile, band,
@@ -717,6 +768,12 @@ class TileDirectory:
         ``generation`` reads as NULL → 0 (see _read_manifest)."""
         return self._read_manifest(spark) if self._manifest_files() else None
 
+    def _manifest_key(self) -> tuple:
+        """The manifest listing as a version key: manifest files are
+        immutable and uniquely named, so an unchanged key means an
+        unchanged commit log."""
+        return tuple(sorted((fi.path, fi.size, fi.mtime_ns) for fi in self._manifest_files()))
+
     def _manifest_state(self, spark: SparkSession) -> tuple[int, int] | None:
         """(current generation, manifest row count), None before the
         first commit.  One one-row aggregate, memoized per manifest
@@ -725,7 +782,7 @@ class TileDirectory:
         write or read cost a listing, not a job.  The row count is an
         upper bound on every manifest-derived key set (resume chunks,
         visible attempts) — it sizes their broadcasts without probes."""
-        key = tuple(sorted((fi.path, fi.size, fi.mtime_ns) for fi in self._manifest_files()))
+        key = self._manifest_key()
         if not key:
             return None
         if self._state[0] != key:

@@ -13,7 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from mapchete_xarray_spark.operators.mosaic import TILE_BANDS_SCHEMA
-from mapchete_xarray_spark.operators.overviews import overview_level
+from mapchete_xarray_spark.operators.overviews import overview_level, overview_levels
 
 N = 16  # tile edge (even, small for pixel goldens)
 # Spark jobs the incremental refresh test below may launch (measured:
@@ -54,6 +54,19 @@ def _plane(df, zoom, row, col, band=0):
 def _avg_ref(arr):
     m = arr.reshape(N // 2, 2, N // 2, 2).astype(np.float64).mean(axis=(1, 3))
     return np.floor(m + 0.5).astype(np.uint8)
+
+
+@pytest.mark.parametrize("dtype", ["uint8", "int8", "uint16", "int16", "uint32", "int32"])
+def test_average_decimation_matches_float64_rounding(dtype):
+    """The integer block sum gives the float64 mean rounded half up,
+    at the dtype's extremes too."""
+    from mapchete_xarray_spark.operators.overviews import _decimate
+
+    info = np.iinfo(dtype)
+    a = np.random.default_rng(1).integers(info.min, info.max, (N, N), dtype=dtype, endpoint=True)
+    a[:2, :2], a[2:4, :2], a[4:6, :2] = info.max, info.min, [[1, 2], [2, 1]]
+    m = a.reshape(N // 2, 2, N // 2, 2).astype(np.float64).mean(axis=(1, 3))
+    assert np.array_equal(_decimate(a, "average"), np.floor(m + 0.5).astype(dtype))
 
 
 @pytest.mark.spark
@@ -133,6 +146,49 @@ class TestOverviews:
         got, meta = _plane(pyr, 3, 1, 1)
         assert np.array_equal(got, want)
         assert meta.n_sources == 16
+
+    @pytest.mark.parametrize("method", ["average", "nearest"])
+    @pytest.mark.parametrize("dtype", ["uint8", "float32"])
+    def test_levels_kernel_matches_chained_levels(self, spark, method, dtype):
+        """One pass over the base equals chaining one-level builds for
+        levels 1-3: chained rounding, absent descendants (their blocks
+        stay the nonzero fill at every level) and n_sources sums."""
+        rng = np.random.default_rng(5)
+        rows = []
+        for r in range(8):
+            for c in range(8, 16):
+                if rng.random() < 0.4:
+                    continue  # absent child
+                for band in range(2):
+                    plane = (rng.random((N, N)) * 250).astype(dtype)
+                    rows.append((5, r, c, band, 0, N, N, dtype, plane.tobytes(), 1 + c % 3))
+        base = spark.createDataFrame(
+            pd.DataFrame(rows, columns=[f.name for f in TILE_BANDS_SCHEMA.fields]),
+            TILE_BANDS_SCHEMA,
+        )
+
+        def rows_of(df):
+            return {
+                (x.tile_zoom, x.tile_row, x.tile_col, x.band):
+                    (x.payload, x.n_sources, x.height, x.width, x.dtype)
+                for x in df.collect()
+            }
+
+        want, lvl = {}, base
+        for _ in range(3):
+            lvl = overview_level(lvl, method=method, fill_value=7)
+            want.update(rows_of(lvl))
+        got = rows_of(overview_levels(base, 3, method=method, fill_value=7))
+        assert {k[0] for k in got} == {4, 3, 2}
+        assert got == want
+        two = rows_of(overview_levels(base, 2, method=method, fill_value=7))
+        assert two == {k: v for k, v in want.items() if k[0] >= 3}
+
+    def test_levels_kernel_needs_divisible_edges(self, spark):
+        p = np.zeros((N, N), dtype=np.uint8)
+        df = overview_levels(self._children(spark, {(0, 0): p}), 5)
+        with pytest.raises(Exception, match="divisible by 32"):
+            df.collect()
 
     def test_job_overviews_process(self, spark, tmp_path):
         """The baselevels workflow through the Job surface: synthesize

@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from mapchete_xarray_spark import codecs, grid
 from mapchete_xarray_spark.operators.mosaic import materialize_tiles
-from mapchete_xarray_spark.operators.overviews import overview_level
+from mapchete_xarray_spark.operators.overviews import overview_level, overview_levels
 from mapchete_xarray_spark.sources.pyramid import PyramidDirectory
 from mapchete_xarray_spark.sources.tiledir import TileDirectory, TileDirError
 
@@ -40,11 +40,12 @@ def _images_pdf(n=10, lon0=-120.0, lat0=30.0):
     )
 
 
-# Spark jobs `write_base` + `build` may launch on the fixture below:
-# the first plan budget (ROADMAP item 5).  Each fresh-sink write is a
-# range-sampled data write plus the manifest append; each level read
-# adds the manifest state aggregate and the visible-set broadcast.
-BUILD_JOB_BUDGET = 28
+# Spark jobs `write_base` + `build` may launch on the fixture below
+# (measured).  Each fresh-sink write is a range-sampled data write of
+# its cached input plus a one-exchange manifest append; build reads no
+# level back and derives every level in one shuffle from the rows
+# write_base kept.
+BUILD_JOB_BUDGET = 21
 
 
 def _payload_map(df):
@@ -117,6 +118,140 @@ class TestPyramidDirectory:
         assert (n_read, n_again) == (1, 0)
         _, n_level = spark_jobs(lambda: pd_dir.level(ZOOM - 2).read(spark))
         assert n_level == 0
+
+    def _written(self, spark, tmp_path, **over):
+        pd_dir = self._pd(tmp_path, **over)
+        pd_dir.prepare()
+        pd_dir.write_base(
+            materialize_tiles(spark.createDataFrame(_images_pdf()), PYR, ZOOM, bands=3)
+        )
+        return pd_dir
+
+    @staticmethod
+    def _forbid_base_read(pd_dir, monkeypatch):
+        def fail(*a, **k):
+            raise AssertionError("build read the committed base")
+
+        monkeypatch.setattr(pd_dir.base, "read", fail)
+
+    @staticmethod
+    def _levels_equal_committed_derive(spark, pd_dir):
+        base = pd_dir.base.read(spark).drop("chunk_row", "chunk_col", "attempt_id")
+        want = _payload_map(overview_levels(base, pd_dir.levels))
+        got = _payload_map(
+            pd_dir.read(spark, zooms=pd_dir.zooms[1:]).select(
+                "tile_zoom", "tile_row", "tile_col", "band", "payload"
+            )
+        )
+        assert got == want and got
+
+    def test_build_fills_absent_quadrants_with_level_fill(self, spark, tmp_path):
+        """Quadrants with no child tile carry the level sinks'
+        fill_value at every level, as refresh_overviews writes them."""
+        pd_dir = self._written(spark, tmp_path, fill_value=7)
+        pd_dir.build(spark)
+        present = {
+            (r.tile_row, r.tile_col)
+            for r in pd_dir.base.read(spark).select("tile_row", "tile_col").collect()
+        }
+        checked = 0
+        for lv, z in enumerate(pd_dir.zooms[1:], start=1):
+            for r in pd_dir.level(z).read(spark).collect():
+                side = r.height >> lv
+                plane = np.frombuffer(r.payload, np.uint8).reshape(r.height, r.width)
+                for i in range(1 << lv):
+                    for j in range(1 << lv):
+                        kid = ((r.tile_row << lv) + i, (r.tile_col << lv) + j)
+                        if kid not in present:
+                            block = plane[i * side:(i + 1) * side, j * side:(j + 1) * side]
+                            assert (block == 7).all(), (z, r.tile_row, r.tile_col, kid)
+                            checked += 1
+        assert checked
+
+    def test_memo_build_matches_build_from_committed_base(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """write_base's in-memory rows and a fresh process's read of the
+        committed base derive byte-identical levels."""
+        import shutil
+
+        pd_dir = self._written(spark, tmp_path / "a")
+        shutil.copytree(tmp_path / "a" / "pyr", tmp_path / "b")
+        self._forbid_base_read(pd_dir, monkeypatch)
+        mem_stats = pd_dir.build(spark)
+        monkeypatch.undo()
+        fresh = PyramidDirectory.open(str(tmp_path / "b"))
+        assert fresh._base_rows is None
+        read_stats = fresh.build(spark)
+        assert [s["tiles"] for s in mem_stats] == [s["tiles"] for s in read_stats]
+        for z in pd_dir.zooms[1:]:
+            got, want = (
+                _payload_map(p.level(z).read(spark).select(
+                    "tile_zoom", "tile_row", "tile_col", "band", "payload"))
+                for p in (pd_dir, fresh)
+            )
+            assert got == want and got
+
+    def test_memo_unused_when_base_had_committed_chunks(self, spark, tmp_path):
+        """A continue write onto a base with committed chunks did not
+        define the whole level: build derives from the committed base."""
+        pd_dir = self._pd(tmp_path)
+        pd_dir.prepare()
+        imgs = spark.createDataFrame(_images_pdf())
+        first, second = imgs.where("image_id < 'img005'"), imgs.where("image_id >= 'img005'")
+        pd_dir.write_base(materialize_tiles(first, PYR, ZOOM, bands=3))
+        pd_dir.write_base(materialize_tiles(second, PYR, ZOOM, bands=3))
+        assert pd_dir._base_rows is None
+        pd_dir.build(spark)
+        self._levels_equal_committed_derive(spark, pd_dir)
+
+    def test_memo_unused_after_base_manifest_changed(self, spark, tmp_path):
+        """A base commit between write_base and build (here a refresh
+        of one chunk with new pixels) invalidates the kept rows."""
+        pd_dir = self._written(spark, tmp_path)
+        assert pd_dir._base_rows is not None
+        one = _images_pdf().iloc[[0]].copy()
+        one.loc[one.index[0], "bytes"] = codecs.encode_image(
+            np.full((64, 64, 3), 200, np.uint8), "raw"
+        )
+        pd_dir.base.write(
+            materialize_tiles(spark.createDataFrame(one), PYR, ZOOM, bands=3),
+            mode="refresh",
+        )
+        pd_dir.build(spark)
+        self._levels_equal_committed_derive(spark, pd_dir)
+
+    def test_no_persisted_rows_outlive_build(self, spark, tmp_path, monkeypatch):
+        """build releases the kept base rows and the all-level cache,
+        also when a level write fails; the next write_base releases
+        rows a build never consumed."""
+        rdds = spark.sparkContext._jsc.getPersistentRDDs
+        before = rdds().size()
+        pd_dir = self._written(spark, tmp_path / "ok")
+        assert rdds().size() > before
+        pd_dir.build(spark)
+        assert pd_dir._base_rows is None and rdds().size() == before
+
+        pd_dir = self._written(spark, tmp_path / "boom")
+        lvl = pd_dir.level(ZOOM - 2)
+
+        def boom(*a, **k):
+            raise RuntimeError("level write failed")
+
+        monkeypatch.setattr(lvl, "write", boom)
+        with pytest.raises(RuntimeError, match="level write failed"):
+            pd_dir.build(spark)
+        monkeypatch.undo()
+        assert pd_dir._base_rows is None and rdds().size() == before
+
+        pd_dir = self._written(spark, tmp_path / "twice")
+        pd_dir.write_base(
+            materialize_tiles(spark.createDataFrame(_images_pdf()), PYR, ZOOM, bands=3),
+            mode="overwrite",
+        )
+        assert pd_dir._base_rows is not None
+        pd_dir.build(spark)
+        assert rdds().size() == before
 
     def test_level_sinks_are_built_once(self, tmp_path):
         """Each level is ONE TileDirectory for the pyramid's lifetime,

@@ -579,6 +579,72 @@ class TestTileDirectory:
         out = materialize_tiles(spark.createDataFrame(img), PYR, ZOOM, bands=3)
         assert out.count() == 0
 
+    def _grid_sink(self, spark, tmp_path):
+        """A 5-step, 2-band sink with 4-tile chunks and an 8x8 block of
+        4x4 tiles (tile (7, 7) absent) for it, in shuffled row order:
+        (sink, tiles, their pandas rows)."""
+        from mapchete_xarray_spark.operators.mosaic import TILE_BANDS_SCHEMA
+
+        steps = [f"2020-01-0{d} 00:00:00" for d in range(1, 6)]
+        td = TileDirectory(
+            self._cfg(tmp_path, bands=2, tile_size=4, chunk_tiles=4,
+                      time={"steps": steps}, time_chunksize=2)
+        )
+        td.prepare()
+        rows = [
+            (ZOOM, r, c, b, t, 4, 4, "uint8", bytes([r, c, b, t]) * 4, 1 + c % 3)
+            for r in range(8) for c in range(8) for b in range(2) for t in range(5)
+            if (r, c) != (7, 7)
+        ]
+        order = np.random.default_rng(5).permutation(len(rows))
+        pdf = pd.DataFrame([rows[i] for i in order],
+                           columns=[f.name for f in TILE_BANDS_SCHEMA.fields])
+        return td, spark.createDataFrame(pdf, TILE_BANDS_SCHEMA).repartition(4), pdf
+
+    def test_manifest_rows_describe_their_chunk(self, spark, tmp_path):
+        """One manifest row per written chunk, with its row, tile,
+        byte and source counts and its tile extent."""
+        td, tiles, pdf = self._grid_sink(spark, tmp_path)
+        st = td.write(tiles)
+        assert (st["chunks"], st["tiles"]) == (4, 63)
+        pdf = pdf.assign(
+            chunk_row=pdf.tile_row // 4, chunk_col=pdf.tile_col // 4,
+            nb=pdf.payload.map(len), tile=list(zip(pdf.tile_row, pdf.tile_col)),
+        )
+        want = {
+            (int(cr), int(cc)): (
+                len(g), g.tile.nunique(), int(g.nb.sum()), int(g.n_sources.sum()),
+                int(g.tile_row.min()), int(g.tile_row.max()),
+                int(g.tile_col.min()), int(g.tile_col.max()),
+            )
+            for (cr, cc), g in pdf.groupby(["chunk_row", "chunk_col"])
+        }
+        got = {
+            (r.chunk_row, r.chunk_col): (
+                r.n_rows, r.n_tiles, r.n_bytes, r.n_source_images,
+                r.min_tile_row, r.max_tile_row, r.min_tile_col, r.max_tile_col,
+            )
+            for r in td._manifest_df(spark).collect()
+        }
+        assert got == want
+
+    def test_data_files_keep_the_tile_order(self, spark, tmp_path):
+        """Every data file holds its rows sorted by (tile_row, tile_col,
+        ts_idx div time_chunksize, band, ts_idx) — the order the write
+        asks for — even though the rows reach the writer in shuffled
+        order and the planned write needs its own order on the
+        partition columns."""
+        import pyarrow.parquet as pq
+
+        td, tiles, _ = self._grid_sink(spark, tmp_path)
+        assert td.write(tiles)["tiles"] == 63
+        files = sorted((tmp_path / "out.tiledir" / "data").rglob("*.parquet"))
+        assert files
+        for f in files:
+            t = pq.read_table(f).to_pandas()
+            key = list(zip(t.tile_row, t.tile_col, t.ts_idx // 2, t.band, t.ts_idx))
+            assert key == sorted(key), f"{f.relative_to(tmp_path)} rows out of order"
+
     def test_overwrite_mode(self, spark, images, tmp_path):
         td = TileDirectory(self._cfg(tmp_path))
         td.prepare()
