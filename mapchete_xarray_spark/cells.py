@@ -14,8 +14,8 @@ Properties the spatial operators rely on:
 - **Locality**: Z-order keeps most neighbors numerically close, so
   ``repartitionByRange("cell_id")`` co-locates spatial neighborhoods.
 - **Ring expansion**: ``cell_ring(zoom,row,col,k)`` enumerates the
-  square ring at Chebyshev distance k — the kNN search frontier
-  (``operators/knn.py``).
+  square ring at Chebyshev distance k (a kNN disk is the union of
+  rings 0..R; ``operators/knn.py`` explodes it in Spark SQL).
 
 All functions vectorized numpy; 64-bit safe to zoom 28 (2*29 bits of
 row/col + 6 bits of zoom).

@@ -620,9 +620,8 @@ def knn_ring_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("key") <= 100)
         .withColumnRenamed("key", "qkey")
     )
-    # start_radius defaults to the density-census auto-opener
-    # (operators/knn.py) — round-1 termination on this fixture without
-    # a hand-tuned constant
+    # one exact pass planned from the cached cell histogram
+    # (operators/knn.py): no radius or census fraction to tune
     out = knn_join(data, q, k=_KNN_K, zoom=6, qid_col="qkey")
     return out.select(
         "qkey",

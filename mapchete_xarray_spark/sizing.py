@@ -36,6 +36,14 @@ def broadcast_or_shuffle(df: DataFrame, est_bytes: int) -> DataFrame:
     return df.hint("shuffle_hash")
 
 
+def estimated_bytes(df: DataFrame) -> int:
+    """Catalyst's size estimate of ``df`` in bytes (exact for a local
+    relation, the file size for a scan; no job runs).  An unknown size
+    reads as the session's huge default, so callers fall to the
+    shuffle branch."""
+    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+
+
 def broadcast_if_small(df: DataFrame, rows: int) -> DataFrame:
     """Broadcast a key table bounded by ``rows`` while it is within the
     driver row cap; past it, leave the join unhinted."""

@@ -8,8 +8,10 @@ The driver records at most 50 entries per round; this sidecar records
 all 58 with the same semantics, so the full surface always has a
 committed hard signal regardless of driver-side caps/truncation.
 
-Usage:  python scripts/self_correctness.py [sf_dir] [out_json]
-        (defaults: /root/testdata/sf0.01, CORRECTNESS_SELF.json)
+Usage:  python scripts/self_correctness.py [sf_dir] [out_json] [names]
+        (defaults: /root/testdata/sf0.01, CORRECTNESS_SELF.json, every
+        query; ``names`` is a comma-separated subset, e.g.
+        knn_ring_expansion,knn_ring_expansion_geo)
 """
 
 from __future__ import annotations
@@ -61,6 +63,7 @@ def _oracle_sql(q, name: str) -> str:
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     out = sys.argv[2] if len(sys.argv) > 2 else "CORRECTNESS_SELF.json"
+    only = set(sys.argv[3].split(",")) if len(sys.argv) > 3 else None
 
     import duckdb
     from pyspark.sql import SparkSession
@@ -85,6 +88,11 @@ def main() -> None:
         )
 
     registry = q.all_queries()
+    if only is not None:
+        unknown = only - set(registry)
+        if unknown:
+            raise SystemExit(f"unknown queries: {sorted(unknown)}")
+        registry = {n: fn for n, fn in registry.items() if n in only}
     results: dict[str, dict] = {}
     for name, fn in registry.items():
         rec: dict = {

@@ -263,8 +263,7 @@ class TestKnnSpark:
             }
         )
         out = knn_join(
-            spark.createDataFrame(data), spark.createDataFrame(qs), k=k, zoom=6,
-            start_radius=2,
+            spark.createDataFrame(data), spark.createDataFrame(qs), k=k, zoom=6
         ).toPandas()
         # brute force
         dx = qs.lon.to_numpy()[:, None] - data.lon.to_numpy()[None, :]
@@ -276,12 +275,12 @@ class TestKnnSpark:
             got = out[out.qkey == qi].sort_values("rn").key.tolist()
             assert got == expected, f"query {qi}"
 
-    def test_nonbroadcast_frontier_matches(self, spark):
-        """VERDICT r3 #8: the promised graceful degradation when the
-        query side outgrows broadcast — broadcast_queries=False turns
-        each round into a hinted shuffle equi-join on the cell; rows
-        must be identical (the termination math never looks at the
-        join strategy)."""
+    def test_nonbroadcast_frontier_matches(self, spark, monkeypatch):
+        """The promised graceful degradation when the query side
+        outgrows broadcast: past the sizing budget the frontier join
+        becomes a hinted shuffle equi-join on the cell; rows must be
+        identical (the plan never looks at the join strategy)."""
+        from mapchete_xarray_spark import sizing
         from mapchete_xarray_spark.operators.knn import knn_join
 
         nd, nq, k = 400, 8, 4
@@ -303,10 +302,12 @@ class TestKnnSpark:
                 }
             )
         )
-        bcast = knn_join(data, qs, k=k, zoom=6, start_radius=2).toPandas()
-        shuf = knn_join(
-            data, qs, k=k, zoom=6, start_radius=2, broadcast_queries=False
-        ).toPandas()
+        bcast = knn_join(data, qs, k=k, zoom=6).toPandas()
+        monkeypatch.setattr(sizing, "BROADCAST_MAX_BYTES", 0)
+        shuffled = knn_join(data, qs, k=k, zoom=6)
+        plan = shuffled._jdf.queryExecution().executedPlan().toString()
+        assert "BroadcastHashJoin" not in plan, plan
+        shuf = shuffled.toPandas()
         key = ["qkey", "rn"]
         assert (
             bcast.sort_values(key).reset_index(drop=True)[["qkey", "key", "rn"]]
@@ -323,6 +324,63 @@ class TestKnnSpark:
             spark.createDataFrame(data), spark.createDataFrame(qs), k=2, zoom=6
         ).toPandas()
         assert out.key.tolist() == [1, 2]
+
+    def test_k_below_one_raises(self, spark):
+        """k = 0 used to filter every candidate, so no query ever
+        finished and the search widened to the full grid."""
+        from mapchete_xarray_spark.operators.knn import knn_join
+
+        data = spark.range(3).selectExpr("id as key", "0.0 lon", "0.0 lat")
+        qs = spark.range(1).selectExpr("id as qkey", "0.0 lon", "0.0 lat")
+        for k in (0, -1):
+            with pytest.raises(ValueError, match="k >= 1"):
+                knn_join(data, qs, k=k)
+
+    def test_nearest_two_cells_away(self, spark):
+        """A query at its cell's corner whose only own-cell point sits
+        at the far corner: the nearest point lies two cells away
+        (distance > span, < √2·span), so the planned disk must reach
+        ring 2 even though the query's own cell already holds k."""
+        from mapchete_xarray_spark.operators.knn import knn_join
+
+        # zoom 3: 22.5° cells; the query's cell is lon [0, 22.5) × lat [22.5, 45)
+        data = pd.DataFrame({"key": [1, 2], "lon": [22.4, -23.0], "lat": [22.6, 44.9]})
+        qs = pd.DataFrame({"qkey": [0], "lon": [0.1], "lat": [44.9]})
+        got = knn_join(
+            spark.createDataFrame(data), spark.createDataFrame(qs), k=1, zoom=3
+        ).toPandas()
+        _assert_knn_equal(got, _knn_brute(data, qs, 1))
+
+    def test_query_outside_the_extent(self, spark):
+        """A query past lon 180 is tiled into the last column but lies
+        outside it, so a planned disk could miss a nearer point a few
+        rows away; such queries search the whole grid."""
+        from mapchete_xarray_spark.operators.knn import knn_join
+
+        # key 1 shares the query's clamped cell (lon [177.1875, 180) ×
+        # lat [-2.8125, 0) at zoom 6); key 2, three rows south, is nearer
+        data = pd.DataFrame(
+            {"key": [1, 2, 3], "lon": [177.2, 179.99, 0.0], "lat": [-2.7, -10.5, 0.0]}
+        )
+        qs = pd.DataFrame({"qkey": [0, 1], "lon": [200.0, 170.0], "lat": [-1.0, 95.0]})
+        got = knn_join(
+            spark.createDataFrame(data), spark.createDataFrame(qs), k=1, zoom=6
+        ).toPandas()
+        _assert_knn_equal(got, _knn_brute(data, qs, 1))
+
+    def test_fewer_points_than_k(self, spark):
+        """With fewer than k points in total every query searches the
+        whole grid and gets all of them, in (dist, key) order."""
+        from mapchete_xarray_spark.operators.knn import knn_join
+
+        data = pd.DataFrame({"key": [7, 3, 5], "lon": [100.0, -60.0, 10.0], "lat": [50.0, -40.0, 0.0]})
+        qs = pd.DataFrame({"qkey": [0, 1], "lon": [-170.0, 12.0], "lat": [-80.0, 1.0]})
+        for haversine in (False, True):
+            got = knn_join(
+                spark.createDataFrame(data), spark.createDataFrame(qs), k=5,
+                haversine=haversine,
+            ).toPandas()
+            _assert_knn_equal(got, _knn_brute(data, qs, 5, haversine), tol=1e-6)
 
 
 def _haversine_np(qlon, qlat, dlon, dlat):
@@ -376,7 +434,6 @@ class TestKnnGeodesic:
             spark.createDataFrame(qs),
             k=k,
             zoom=5,
-            start_radius=1,
             haversine=True,
         ).toPandas()
         exp = self._brute(data, qs, k)
@@ -398,7 +455,6 @@ class TestKnnGeodesic:
             spark.createDataFrame(qs),
             k=1,
             zoom=6,
-            start_radius=1,
             haversine=True,
             stats=stats,
         ).toPandas()
@@ -465,7 +521,6 @@ class TestKnnGeodesic:
             spark.createDataFrame(qs),
             k=3,
             zoom=6,
-            start_radius=2,
             haversine=True,
             stats=stats,
         ).toPandas()
@@ -473,6 +528,22 @@ class TestKnnGeodesic:
         for qk, keys in exp.items():
             assert got[got.qkey == qk].sort_values("rn").key.tolist() == keys
         assert stats["rounds"] == 1, stats
+
+    def test_longitude_past_the_antimeridian(self, spark):
+        """A point stored at lon 200 lies at -160 on the sphere: it is
+        tiled there, so a query at -160.5 finds it (55 km) before the
+        points 2° north (222 km) and at -150 (1150 km)."""
+        from mapchete_xarray_spark.operators.knn import knn_join
+
+        data = pd.DataFrame(
+            {"key": [1, 2, 3], "lon": [200.0, -150.0, -160.5], "lat": [10.0, 10.0, 12.0]}
+        )
+        qs = pd.DataFrame({"qkey": [0, 1], "lon": [-160.5, 199.0], "lat": [10.0, 10.0]})
+        got = knn_join(
+            spark.createDataFrame(data), spark.createDataFrame(qs), k=1, haversine=True
+        ).toPandas()
+        _assert_knn_equal(got, _knn_brute(data, qs, 1, haversine=True), tol=1e-6)
+        assert got.key.tolist() == [1, 1]
 
     def test_haversine_requires_geodetic(self, spark):
         from mapchete_xarray_spark.operators.knn import knn_join
@@ -563,53 +634,200 @@ class TestStrTreeGuards:
             STRtree(boxes, leaf_size=1)
 
 
+def _knn_brute(data, qs, k, haversine=False):
+    """{qkey: [(key, dist), ...]}: every pair's distance, ranked by
+    (dist, key) — the serial reference.  The planar expression keeps
+    the engine's operation order, so its doubles are bit-identical."""
+    qlon, qlat = qs.lon.to_numpy()[:, None], qs.lat.to_numpy()[:, None]
+    dlon, dlat = data.lon.to_numpy()[None, :], data.lat.to_numpy()[None, :]
+    if haversine:
+        d = _haversine_np(qlon, qlat, dlon, dlat)
+    else:
+        d = np.sqrt((dlon - qlon) * (dlon - qlon) + (dlat - qlat) * (dlat - qlat))
+    keys = data.key.to_numpy()
+    out = {}
+    for qi, qk in enumerate(qs.qkey.to_numpy()):
+        order = np.lexsort((keys, d[qi]))[:k]
+        out[int(qk)] = [(int(keys[o]), float(d[qi, o])) for o in order]
+    return out
+
+
+def _assert_knn_equal(got, want, tol=0.0):
+    """Engine rows (qkey, key, dist, rn) equal the reference: same keys
+    in the same rank order, distances within ``tol``."""
+    assert sorted(got.qkey.unique().tolist()) == sorted(want)
+    for qk, exp in want.items():
+        rows = got[got.qkey == qk].sort_values("rn")
+        assert rows.rn.tolist() == list(range(1, len(exp) + 1)), qk
+        assert rows.key.tolist() == [key for key, _ in exp], qk
+        np.testing.assert_allclose(rows.dist.to_numpy(), [d for _, d in exp], rtol=0, atol=tol)
+
+
+def _blob_points(rng, lon0, lat0, width, n_blob, n_background):
+    """A dense square blob (lon wrapped into [-180, 180)) on a sparse
+    worldwide background, keys 0.."""
+    lon = np.concatenate(
+        [lon0 + rng.uniform(0, width, n_blob), rng.uniform(-180, 180, n_background)]
+    )
+    lat = np.concatenate(
+        [lat0 + rng.uniform(0, width, n_blob), rng.uniform(-85, 85, n_background)]
+    )
+    lon = (lon + 180.0) % 360.0 - 180.0
+    return pd.DataFrame({"key": np.arange(len(lon), dtype=np.int64), "lon": lon, "lat": lat})
+
+
+def _append(data, lons, lats):
+    """``data`` plus points at (lons, lats) under fresh keys, which
+    are interleaved so that tie order is not insertion order."""
+    n = len(lons)
+    keys = int(data.key.max()) + 1 + np.random.default_rng(n).permutation(n)
+    return pd.concat(
+        [data, pd.DataFrame({"key": keys, "lon": lons, "lat": lats})], ignore_index=True
+    )
+
+
+def _with_ties(data, lon, lat, step):
+    """Three duplicates of (lon, lat) plus, if ``step``, four points
+    exactly ``step`` away from it (dyadic values: the four distances
+    are equal in floating point)."""
+    lons, lats = [lon] * 3, [lat] * 3
+    if step:
+        lons += [lon - step, lon + step, lon, lon]
+        lats += [lat, lat, lat - step, lat + step]
+    return _append(data, lons, lats)
+
+
 @pytest.mark.spark
-class TestKnnAutoRadius:
-    def test_auto_radius_terminates_round_one(self, spark):
-        """VERDICT r4 #8: the default start_radius comes from a 1%
-        density census (the hot_keys discipline) instead of a caller
-        guess — on the BENCH fixture (sf0.1; the sparse sf0.001 toy
-        genuinely needs disk growth for outlying queries, which no
-        global census can know) the loop must finish in <=2 rounds,
-        and rows must equal the hand-tuned opener's (radius only moves
-        work between rounds, never the result)."""
-        from pyspark.sql import functions as F
+class TestKnnFineLevel:
+    """A dense blob on a sparse background: the blob's coarse cells are
+    searched at the fine zoom.  Queries inside the blob, at its edge
+    (where a fine disk spills into a non-dense neighbour) and in the
+    sparse area beside it must all equal brute force, ties included."""
 
+    def test_planar_blob_matches_bruteforce(self, spark):
         from mapchete_xarray_spark.operators.knn import knn_join
-        from mapchete_xarray_spark.queries import _KNN_K, _points
 
-        sf_dir = "/root/testdata/sf0.1"
-        data = _points(spark, sf_dir, "orders", "o_orderkey")
-        qs = (
-            _points(spark, sf_dir, "customer", "c_custkey")
-            .where(F.col("key") <= 100)
-            .withColumnRenamed("key", "qkey")
+        rng = np.random.default_rng(11)
+        # zoom 3: coarse cells are 22.5°; the blob fills the corner of
+        # the cell lon [0, 22.5) × lat [22.5, 45) up to both borders
+        data = _blob_points(rng, 18.5, 41.0, 4.0, 4000, 1500)
+        data = _with_ties(data, 20.5, 43.0, 2.0**-10)
+        # just across the blob's borders, in sparse coarse cells: only
+        # found if the edge queries' fine disks reach into them
+        data = _append(data, [22.51, 22.53, 20.0, 20.02], [43.0, 43.01, 45.01, 45.02])
+        qs = pd.DataFrame(
+            {
+                "lon": [20.5, 19.0, 21.7, 22.49, 22.45, 20.0, 22.6, 23.5, 40.0, -100.0, 18.4],
+                "lat": [43.0, 42.0, 44.2, 43.0, 44.99, 44.98, 43.0, 45.5, 30.0, -20.0, 40.9],
+            }
         )
+        qs.insert(0, "qkey", np.arange(len(qs), dtype=np.int64))
+        for k in (1, 5, 9):
+            stats = {}
+            got = knn_join(
+                spark.createDataFrame(data), spark.createDataFrame(qs), k=k, zoom=3,
+                stats=stats,
+            ).toPandas()
+            assert stats["fine_parents"] >= 1, stats
+            _assert_knn_equal(got, _knn_brute(data, qs, k))
+
+    @pytest.mark.parametrize(
+        "lon0, lat0, queries, across",
+        [
+            # straddles the antimeridian (the blob's coarse cells are
+            # the first and the last column) on the equator, a row border
+            (178.0, 0.0, [(179.9, 2.0), (-179.9, 0.02), (-178.01, 3.0),
+                          (178.0, 3.99), (-177.5, 2.0), (175.0, 2.0), (179.9, -0.3)],
+             [(179.9, -0.01), (-179.95, -0.02)]),
+            # at 84°N in the top coarse row, against a column border
+            (18.5, 82.0, [(20.5, 84.0), (22.45, 85.9), (22.49, 84.0), (30.0, 84.0),
+                          (20.0, 89.5), (-160.0, 86.0), (20.0, 80.0)],
+             [(22.51, 84.0), (22.53, 85.9)]),
+        ],
+    )
+    def test_haversine_blob_matches_bruteforce(self, spark, lon0, lat0, queries, across):
+        from mapchete_xarray_spark.operators.knn import knn_join
+
+        rng = np.random.default_rng(13)
+        data = _blob_points(rng, lon0, lat0, 4.0, 4000, 1500)
+        q_lon, q_lat = queries[0]
+        data = _with_ties(data, q_lon, q_lat, 0.0)  # duplicates only
+        data = _append(data, [x for x, _ in across], [y for _, y in across])
+        qs = pd.DataFrame(
+            {
+                "qkey": np.arange(len(queries), dtype=np.int64),
+                "lon": [x for x, _ in queries],
+                "lat": [y for _, y in queries],
+            }
+        )
+        for k in (1, 5, 9):
+            stats = {}
+            got = knn_join(
+                spark.createDataFrame(data), spark.createDataFrame(qs), k=k, zoom=3,
+                haversine=True, stats=stats,
+            ).toPandas()
+            assert stats["fine_parents"] >= 1, stats
+            # libm vs JVM trig: distances agree to far below a millimeter
+            _assert_knn_equal(got, _knn_brute(data, qs, k, haversine=True), tol=1e-6)
+
+
+@pytest.mark.spark
+class TestKnnHistogramCache:
+    def test_cached_histogram_serves_later_calls(self, spark, tmp_path):
+        """The histogram is a property of the data version, not of k or
+        the query set: a second call (other k, other queries) reuses it
+        and stays exact, and rewritten files miss the cache."""
+        from mapchete_xarray_spark.operators.knn import knn_join
+
+        rng = np.random.default_rng(5)
+        path = str(tmp_path / "points.parquet")
+        data = _blob_points(rng, -75.0, 39.0, 2.0, 3000, 1000)
+        spark.createDataFrame(data).write.parquet(path)
+        qs = pd.DataFrame(
+            {"qkey": np.arange(6, dtype=np.int64),
+             "lon": [-74.0, -73.1, -76.5, 0.0, 120.0, -74.9],
+             "lat": [40.0, 40.9, 39.5, 0.0, -30.0, 39.1]}
+        )
+        for k, cached in ((5, False), (3, True)):
+            stats = {}
+            got = knn_join(
+                spark.read.parquet(path), spark.createDataFrame(qs.iloc[k - 3 :]), k=k,
+                stats=stats,
+            ).toPandas()
+            assert stats["hist_cached"] is cached
+            _assert_knn_equal(got, _knn_brute(data, qs.iloc[k - 3 :], k))
+        moved = data.assign(lon=data.lon * 0.5)
+        spark.createDataFrame(moved).write.mode("overwrite").parquet(path)
         stats = {}
-        auto = knn_join(
-            data, qs, k=_KNN_K, zoom=6, qid_col="qkey", stats=stats
+        got = knn_join(
+            spark.read.parquet(path), spark.createDataFrame(qs), k=5, stats=stats
         ).toPandas()
-        assert stats["start_radius"] >= 1
-        assert stats["rounds"] <= 2, stats
-        manual = knn_join(
-            data, qs, k=_KNN_K, zoom=6, qid_col="qkey", start_radius=2
-        ).toPandas()
-        key = ["qkey", "rn"]
-        assert (
-            auto.sort_values(key).reset_index(drop=True)[["qkey", "key", "rn"]]
-            .equals(manual.sort_values(key).reset_index(drop=True)[["qkey", "key", "rn"]])
+        assert stats["hist_cached"] is False
+        _assert_knn_equal(got, _knn_brute(moved, qs, 5))
+
+
+@pytest.mark.spark
+def test_knn_job_budget(spark, spark_jobs, tmp_path):
+    """A warm kNN op (histogram cached) is one broadcast of the
+    frontier, the data scan with the join and the partial top-k, and
+    the final top-k: at most 3 Spark jobs."""
+    from mapchete_xarray_spark.operators.knn import knn_join
+
+    rng = np.random.default_rng(9)
+    path = str(tmp_path / "points.parquet")
+    spark.createDataFrame(_blob_points(rng, 16.0, 47.0, 2.0, 5000, 5000)).write.parquet(path)
+    data = spark.read.parquet(path)
+    qs = spark.createDataFrame(
+        pd.DataFrame(
+            {"qkey": np.arange(50, dtype=np.int64),
+             "lon": np.concatenate([rng.uniform(16, 18, 25), rng.uniform(-180, 180, 25)]),
+             "lat": np.concatenate([rng.uniform(47, 49, 25), rng.uniform(-80, 80, 25)])}
         )
-        # VERDICT r5 watch-item 4: the density census is cached per
-        # (table plan, fraction) across session calls — the second
-        # call reuses it (even with a different k: the cached value is
-        # points-per-cell, not the radius) and returns identical rows
-        stats2 = {}
-        again = knn_join(
-            data, qs, k=_KNN_K, zoom=6, qid_col="qkey", stats=stats2
-        ).toPandas()
-        assert stats2["census_cached"] is True
-        assert stats2["start_radius"] == stats["start_radius"]
-        assert (
-            again.sort_values(key).reset_index(drop=True)[["qkey", "key", "rn"]]
-            .equals(auto.sort_values(key).reset_index(drop=True)[["qkey", "key", "rn"]])
-        )
+    )
+    knn_join(data, qs, k=5).collect()
+    stats = {}
+    rows, jobs = spark_jobs(lambda: knn_join(data, qs, k=5, stats=stats).collect())
+    assert stats["hist_cached"] is True
+    assert stats["rounds"] == 1
+    assert len(rows) == 50 * 5
+    assert jobs <= 3, jobs
