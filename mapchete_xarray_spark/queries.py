@@ -55,13 +55,26 @@ def register(name: str, oracle=None):
     return deco
 
 
+def _materialize(table: dict[str, str | Callable[[], str]], name: str) -> str:
+    if callable(table[name]):
+        table[name] = table[name]()
+    return table[name]
+
+
+def resolve_oracle(name: str) -> str:
+    """``name``'s oracle SQL, generated on first use.  Resolved per
+    query, so an oracle that cannot be generated (e.g. one whose
+    fixture is absent) fails only its own record."""
+    for table in (ORACLES, EXTRA_ORACLES):
+        if name in table:
+            return _materialize(table, name)
+    raise KeyError(f"no oracle registered for {name}")
+
+
 def resolve_oracles() -> dict[str, str]:
     """Materialize every driver-facing oracle to its SQL text (invokes
     the lazy generators once and caches the result)."""
-    for k, v in list(ORACLES.items()):
-        if callable(v):
-            ORACLES[k] = v()
-    return dict(ORACLES)
+    return {k: _materialize(ORACLES, k) for k in list(ORACLES)}
 
 
 def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
@@ -73,10 +86,7 @@ def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 def resolve_all_oracles() -> dict[str, str]:
     out = resolve_oracles()
-    for k, v in list(EXTRA_ORACLES.items()):
-        if callable(v):
-            EXTRA_ORACLES[k] = v()
-    out.update(EXTRA_ORACLES)
+    out.update({k: _materialize(EXTRA_ORACLES, k) for k in list(EXTRA_ORACLES)})
     return out
 
 

@@ -48,18 +48,6 @@ def _value_hash(rows, columns):
     return hashlib.md5("\n".join(lines).encode()).hexdigest()
 
 
-def _oracle_sql(q, name: str) -> str:
-    """``name``'s oracle SQL, generated on first use.  Resolved per
-    query, so an oracle that cannot be generated (e.g. one whose
-    fixture is absent) fails only its own record."""
-    for table in (q.ORACLES, q.EXTRA_ORACLES):
-        if name in table:
-            if callable(table[name]):
-                table[name] = table[name]()
-            return table[name]
-    raise KeyError(f"no oracle registered for {name}")
-
-
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     out = sys.argv[2] if len(sys.argv) > 2 else "CORRECTNESS_SELF.json"
@@ -106,7 +94,7 @@ def main() -> None:
             s_cols = [c.lower() for c in sdf.columns]
             s_rows = [tuple(r) for r in sdf.collect()]
             rec["spark_rows"] = len(s_rows)
-            res = con.execute(_oracle_sql(q, name))
+            res = con.execute(q.resolve_oracle(name))
             d_cols = [d[0].lower() for d in res.description]
             d_rows = res.fetchall()
             rec["oracle_rows"] = len(d_rows)

@@ -6,6 +6,16 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from mapchete_xarray_spark import queries as _q  # noqa: E402
+
+# The reference's s2 fixture: the scenes `s2_stack_ingest` reads and the
+# golden zarr its oracle reads.  Tests tied to that one registry entry
+# gate on these very paths and run wherever the fixture exists.
+S2_FIXTURES_PRESENT = os.path.isdir(_q._S2_DIR) and os.path.isdir(_q._S2_GOLDEN)
+S2_FIXTURES_MISSING = (
+    f"reference s2 fixture absent: needs {_q._S2_DIR} and {_q._S2_GOLDEN}"
+)
+
 
 @pytest.fixture(scope="session")
 def spark():

@@ -77,13 +77,19 @@ def test_registry_rotation_contract():
     entries — every entry (driver-facing AND overflow) must carry an
     oracle, the cap must hold, and each demoted entry must leave a
     retained sibling so no operator family goes driver-invisible."""
+    from conftest import S2_FIXTURES_PRESENT
     from mapchete_xarray_spark import queries as q
 
     assert len(q.QUERIES) <= q._DRIVER_QUERY_CAP
-    oracles = q.resolve_all_oracles()
+    oracles = {**q.ORACLES, **q.EXTRA_ORACLES}
     for name in q.all_queries():
         assert name in oracles, f"{name} registered without an oracle"
-        assert isinstance(oracles[name], str) and oracles[name].strip()
+        if name == "s2_stack_ingest" and not S2_FIXTURES_PRESENT:
+            # its golden-zarr oracle is built only where the fixture exists
+            assert callable(oracles[name])
+            continue
+        sql = q.resolve_oracle(name)
+        assert isinstance(sql, str) and sql.strip()
     # rotation bookkeeping: everything demoted this round is actually
     # in the overflow dict, and nothing is in both
     assert set(q.DEMOTED_BY_ROUND[q.CURRENT_ROUND]) == set(q.EXTRA_QUERIES)
