@@ -10,7 +10,7 @@ Layout:
                    cell ids, text/dedup hashing, vector math)
     sources/       deterministic synthetic images/AOI generators,
                    parquet readers
-    operators/     spatial joins (STRtree PIP, ring kNN), mosaic /
+    operators/     spatial joins (bucket-grid PIP, one-pass kNN), mosaic /
                    tile materialization, dedup, text analysis, ANN,
                    gaps-and-islands regions, skew salting
     plans/         job spec (.mapchete-equivalent) validation + pipeline

@@ -5,9 +5,15 @@ Implements exactly what the spatial operators need, from public
 textbook algorithms:
 
 - ``STRtree``: Sort-Tile-Recursive packed R-tree (Leutenegger et al.
-  1997) over rectangles, bulk point/box queries fully vectorized.
-  Built once from the broadcast AOI table on each executor
-  (``operators/pip.py``), queried per Arrow batch.
+  1997) over rectangles, bulk box-overlap queries fully vectorized
+  (the tile → zone lookups of ``operators/zonal.py`` and
+  ``operators/rasterize.py``).
+- ``BoxGrid``: uniform bucket grid over rectangles (CSR list of boxes
+  per cell), the PIP join's per-batch point → envelope filter: one
+  cell lookup, one ``np.repeat`` and the inclusive envelope test.
+- ``EdgeTable``: every ring edge of every polygon in one CSR table;
+  ray-casts all (point, polygon) candidate pairs of a batch in one
+  pass (the PIP join's refine).
 - ``points_in_polygon``: even-odd ray casting, vectorized over the
   point axis, with an on-edge-inclusive tolerance-free convention:
   boundary points count as inside iff the ray-cast parity says so
@@ -30,6 +36,8 @@ import struct
 import numpy as np
 
 __all__ = [
+    "BoxGrid",
+    "EdgeTable",
     "STRtree",
     "points_in_polygon",
     "polygon_wkb",
@@ -155,39 +163,172 @@ def polygon_bounds(rings) -> tuple[float, float, float, float]:
 # ray casting
 # ---------------------------------------------------------------------------
 
+def _crossings(px, py, x0, y0, x1, y1) -> np.ndarray:
+    """Elementwise (broadcasting) crossing rule of the even-odd test:
+    the edge (x0, y0) → (x1, y1) has one endpoint strictly above the
+    point's y and the other at-or-below (half-open in y), and the
+    intersection lies strictly to the right of the point — the classic
+    Franklin PNPOLY convention.  Every ray-cast in the package goes
+    through this one expression, so their results are bit-identical
+    (the DuckDB oracle of ``pip_polygon_strtree`` transcribes the same
+    operand order)."""
+    cond = (y0 > py) != (y1 > py)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        xint = x0 + (py - y0) / (y1 - y0) * (x1 - x0)
+    return cond & (px < xint)
+
+
+def _expand(start: np.ndarray, count: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """CSR expansion: (owner, index) of every slot ``start[i] …
+    start[i] + count[i] - 1``, owner by owner."""
+    owner = np.repeat(np.arange(len(count)), count)
+    idx = np.repeat(start - (np.cumsum(count) - count), count) + np.arange(len(owner))
+    return owner, idx
+
+
+def _ring_edges(rings: list[np.ndarray]) -> tuple[np.ndarray, ...]:
+    """(x0, y0, x1, y1) of every edge of closed rings; a closed ring's
+    edges are ring[:-1] → ring[1:], so no cross-ring edge appears."""
+    if not rings:
+        e = np.empty(0, dtype=np.float64)
+        return e, e, e, e
+    return (
+        np.concatenate([r[:-1, 0] for r in rings]),
+        np.concatenate([r[:-1, 1] for r in rings]),
+        np.concatenate([r[1:, 0] for r in rings]),
+        np.concatenate([r[1:, 1] for r in rings]),
+    )
+
+
 def points_in_polygon(px: np.ndarray, py: np.ndarray, ring) -> np.ndarray:
     """Vectorized even-odd test of points against a polygon geometry.
 
     px, py: (n,) point coords; ring: (m, 2) closed ring OR a list of
     closed rings (exterior(s) + holes — parity over all edges).
-    Returns (n,) bool.  Crossing rule: edge counts if one endpoint is
-    strictly above the point's y and the other is at-or-below
-    (half-open in y), intersection strictly to the right of the
-    point — the classic Franklin PNPOLY convention.
+    Returns (n,) bool; crossing rule: ``_crossings``.
     """
     px = np.asarray(px, dtype=np.float64)
     py = np.asarray(py, dtype=np.float64)
-    if isinstance(ring, np.ndarray):
-        x0, y0 = ring[:-1, 0], ring[:-1, 1]
-        x1, y1 = ring[1:, 0], ring[1:, 1]
-    else:
-        # concatenate edges of every ring; rings are closed, so the
-        # per-ring edge set is ring[:-1] → ring[1:] — no cross-ring
-        # edges are introduced
-        x0 = np.concatenate([r[:-1, 0] for r in ring])
-        y0 = np.concatenate([r[:-1, 1] for r in ring])
-        x1 = np.concatenate([r[1:, 0] for r in ring])
-        y1 = np.concatenate([r[1:, 1] for r in ring])
+    x0, y0, x1, y1 = _ring_edges([ring] if isinstance(ring, np.ndarray) else ring)
     # (n, m) edge conditions; m is small (AOI rings 6-16 vertices)
-    pyv = py[:, None]
-    pxv = px[:, None]
-    cond = (y0[None, :] > pyv) != (y1[None, :] > pyv)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        xint = x0[None, :] + (pyv - y0[None, :]) / (y1[None, :] - y0[None, :]) * (
-            x1[None, :] - x0[None, :]
-        )
-    crossings = cond & (pxv < xint)
+    crossings = _crossings(
+        px[:, None], py[:, None], x0[None, :], y0[None, :], x1[None, :], y1[None, :]
+    )
     return crossings.sum(axis=1) % 2 == 1
+
+
+class EdgeTable:
+    """Every edge of every ring of n polygon geometries in one CSR
+    table: geometry g owns edges ``start[g] : start[g] + count[g]`` of
+    (x0, y0, x1, y1).  ``contains`` ray-casts a whole batch of
+    (point, geometry) pairs in one vectorized pass."""
+
+    def __init__(self, geoms: list[list[np.ndarray]]):
+        """geoms: per geometry, its list of closed rings (``wkb_rings``)."""
+        self.x0, self.y0, self.x1, self.y1 = _ring_edges([r for g in geoms for r in g])
+        self.count = np.array(
+            [sum(len(r) - 1 for r in g) for g in geoms], dtype=np.int64
+        )
+        self.start = np.cumsum(self.count) - self.count
+
+    def contains(self, px: np.ndarray, py: np.ndarray, geom: np.ndarray) -> np.ndarray:
+        """(n,) bool: point i inside geometry ``geom[i]``; equals
+        ``points_in_polygon(px[i:i+1], py[i:i+1], rings of geom[i])``
+        bit for bit.  Each pair expands to its geometry's edges, and
+        crossings are summed per pair with one ``np.bincount``."""
+        pair, edge = _expand(self.start[geom], self.count[geom])
+        hit = _crossings(
+            px[pair], py[pair], self.x0[edge], self.y0[edge], self.x1[edge], self.y1[edge]
+        )
+        return np.bincount(pair[hit], minlength=len(geom)) % 2 == 1
+
+
+# ---------------------------------------------------------------------------
+# uniform bucket grid
+# ---------------------------------------------------------------------------
+
+class BoxGrid:
+    """Uniform grid over n rectangles with a CSR list of boxes per cell
+    (``offsets`` into ``cell_boxes``; boxes in table order within a
+    cell).  The grid spans the union envelope; the square cell side is
+    the median box extent, widened until the grid has at most
+    ``MAX_CELLS`` cells and at most ``MAX_CELLS + 4 n`` (box, cell)
+    entries, so a table of huge boxes cannot blow up the lists.
+
+    A box is listed in every cell between its floored corners, and a
+    point's cell is floored by the same expression; floor is monotone,
+    so every box that contains a point (inclusive edges) is listed in
+    the point's cell."""
+
+    MAX_CELLS = 1 << 16
+
+    def __init__(self, boxes: np.ndarray):
+        """boxes: (n, 4) [minx, miny, maxx, maxy]."""
+        boxes = np.asarray(boxes, dtype=np.float64)
+        if boxes.ndim != 2 or boxes.shape[1] != 4:
+            raise ValueError("boxes must be (n, 4)")
+        if not np.isfinite(boxes).all():
+            raise ValueError("boxes must be finite")
+        self.boxes = boxes
+        n = len(boxes)
+        if n == 0:
+            self.x0 = self.y0 = 0.0
+            self.side = 1.0
+            self.nx = self.ny = 0
+            self.offsets = np.zeros(1, dtype=np.int64)
+            self.cell_boxes = np.empty(0, dtype=np.int64)
+            return
+        self.x0, self.y0 = float(boxes[:, 0].min()), float(boxes[:, 1].min())
+        span = max(float(boxes[:, 2].max()) - self.x0, float(boxes[:, 3].max()) - self.y0)
+        side = float(np.median(np.maximum(boxes[:, 2] - boxes[:, 0], boxes[:, 3] - boxes[:, 1])))
+        self.side = max(side, span / np.sqrt(self.MAX_CELLS)) or 1.0
+        while True:
+            cx0, cy0 = self._cell(boxes[:, 0], boxes[:, 1])
+            cx1, cy1 = self._cell(boxes[:, 2], boxes[:, 3])
+            self.nx, self.ny = int(cx1.max()) + 1, int(cy1.max()) + 1
+            per_box = (cx1 - cx0 + 1) * (cy1 - cy0 + 1)
+            if (
+                self.nx * self.ny <= self.MAX_CELLS
+                and per_box.sum() <= self.MAX_CELLS + 4 * n
+            ):
+                break
+            self.side *= 2.0
+        cx0, cy0, cx1, cy1, per_box = (
+            a.astype(np.int64) for a in (cx0, cy0, cx1, cy1, per_box)
+        )
+        # explode each box to its cells: k-th entry of box b is cell
+        # (cx0 + k % w, cy0 + k // w) with w its width in cells
+        box, k = _expand(np.zeros(n, dtype=np.int64), per_box)
+        w = (cx1 - cx0 + 1)[box]
+        cell = (cy0[box] + k // w) * self.nx + cx0[box] + k % w
+        order = np.argsort(cell, kind="stable")
+        self.cell_boxes = box[order]
+        self.offsets = np.zeros(self.nx * self.ny + 1, dtype=np.int64)
+        np.cumsum(np.bincount(cell, minlength=self.nx * self.ny), out=self.offsets[1:])
+
+    def _cell(self, x: np.ndarray, y: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+        """Floored (float) cell coordinates; the one expression boxes
+        and points share."""
+        return np.floor((x - self.x0) / self.side), np.floor((y - self.y0) / self.side)
+
+    def query_points(self, px: np.ndarray, py: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+        """Bulk query: (point_idx, box_idx) pairs where the point lies
+        within the box (inclusive edges).  Points with a non-finite
+        coordinate or outside the grid match nothing: they are masked
+        on the float cell coordinates, before any integer cast."""
+        px = np.asarray(px, dtype=np.float64)
+        py = np.asarray(py, dtype=np.float64)
+        with np.errstate(invalid="ignore"):
+            fx, fy = self._cell(px, py)
+            ok = (fx >= 0) & (fx < self.nx) & (fy >= 0) & (fy < self.ny)
+        p = np.flatnonzero(ok)
+        cell = fy[p].astype(np.int64) * self.nx + fx[p].astype(np.int64)
+        start = self.offsets[cell]
+        owner, pos = _expand(start, self.offsets[cell + 1] - start)
+        p, box = p[owner], self.cell_boxes[pos]
+        b = self.boxes[box]
+        hit = (px[p] >= b[:, 0]) & (px[p] <= b[:, 2]) & (py[p] >= b[:, 1]) & (py[p] <= b[:, 3])
+        return p[hit], box[hit]
 
 
 # ---------------------------------------------------------------------------
@@ -252,34 +393,6 @@ class STRtree:
             if len(nodes) <= 1:
                 break
             cur = nodes
-
-    def query_points(self, px: np.ndarray, py: np.ndarray):
-        """Bulk query: returns (point_idx, box_idx) candidate pairs
-        where point lies within the rectangle (inclusive edges)."""
-        px = np.asarray(px, dtype=np.float64)
-        py = np.asarray(py, dtype=np.float64)
-        pts = np.arange(len(px))
-        # start at root level, descend; keep (point, node) frontier
-        frontier_p = pts
-        frontier_n = np.zeros(len(px), dtype=np.int64)
-        for depth in range(len(self.levels) - 1, -1, -1):
-            # expand each (p, node) to the node's children at depth-1
-            child0 = frontier_n * self.leaf_size
-            nchild = self.leaf_size
-            p_rep = np.repeat(frontier_p, nchild)
-            c_idx = (child0[:, None] + np.arange(nchild)[None, :]).ravel()
-            lower = self.levels[depth - 1] if depth > 0 else self.boxes
-            valid = c_idx < len(lower)
-            p_rep, c_idx = p_rep[valid], c_idx[valid]
-            b = lower[c_idx]
-            hit = (
-                (px[p_rep] >= b[:, 0])
-                & (px[p_rep] <= b[:, 2])
-                & (py[p_rep] >= b[:, 1])
-                & (py[p_rep] <= b[:, 3])
-            )
-            frontier_p, frontier_n = p_rep[hit], c_idx[hit]
-        return frontier_p, self.order[frontier_n]
 
     def query_boxes(self, qboxes: np.ndarray):
         """Bulk rectangle-overlap query: (query_idx, box_idx) pairs."""

@@ -1,54 +1,89 @@
-"""Broadcast-STRtree point-in-polygon join (north_star op).
+"""Broadcast point-in-polygon join (north_star op).
 
-Filter-refine, Spark-idiomatically:
+Filter-refine, Spark-idiomatically, with a fixed handful of numpy
+calls per Arrow batch:
 
 1. **Broadcast** the (small) AOI table — serialized once per executor
-   via ``SparkContext.broadcast``, STRtree built lazily on first
-   batch and cached per Python worker (module-level cache keyed by
-   broadcast id; workers are reused across batches so the build cost
-   amortizes to ~zero).
-2. **Filter**: STRtree envelope query per Arrow batch (vectorized
-   numpy, no per-row Python).
-3. **Refine**: vectorized ray-cast against the exact ring, grouped by
-   candidate polygon so each polygon's candidates are tested in one
-   numpy call.
+   via ``SparkContext.broadcast``; its indexes are built lazily on the
+   first batch and cached per Python worker (module-level cache keyed
+   by a driver-minted token; workers are reused across batches so the
+   build cost amortizes to ~zero).
+2. **Filter**: ``geom.BoxGrid`` — each point's grid cell, that cell's
+   boxes expanded with ``np.repeat``, the inclusive envelope test.
+3. **Refine**: ``geom.EdgeTable`` — every (candidate, edge) pair
+   ray-cast in one vectorized pass, crossings summed per candidate
+   with ``np.bincount``.  No per-polygon Python loop.
+4. **Arrow in, Arrow out** (``mapInArrow``): coordinates are read from
+   the batch's columns, and the output batch is the ``keep`` columns
+   ``take``n at the hit rows plus the AOI ids ``take``n at the hit
+   polygons.  No pandas.
 
-Emits (point columns…, aoi_id).  At 10^12 rows this is a map-only
+Emits (keep columns…, aoi_id).  At 10^12 rows this is a map-only
 stage — no shuffle at all; the output partitioning inherits the
 input's (ideal for a following groupBy(tile_id) if the input is
-already tile-partitioned).
-
-Scale note: for an AOI table too big to broadcast the same operator
-composes with a cell-equi-join prefilter (assign polygons to covering
-cells, join on cell) — ``cell_cover_join`` below.
+already tile-partitioned).  Points with a null or NaN coordinate
+match nothing.
 """
 
 from __future__ import annotations
 
+from functools import cached_property
 from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from ..geom import STRtree, points_in_polygon, wkb_rings
+from ..geom import BoxGrid, EdgeTable, STRtree, points_in_polygon, wkb_rings
 
-_TREE_CACHE: dict[str, tuple] = {}
+
+class _AoiSet:
+    """One broadcast AOI table's geometry on a worker; each index is
+    built on first use (zonal and rasterize use the tree, the PIP join
+    the grid, the edge table and the Arrow ids)."""
+
+    def __init__(self, aoi: pd.DataFrame):
+        self.boxes = aoi[["minx", "miny", "maxx", "maxy"]].to_numpy(dtype=np.float64)
+        self.rings = [wkb_rings(w) for w in aoi["wkb"]]
+        self.aoi_ids = aoi["aoi_id"].to_numpy()
+
+    @cached_property
+    def tree(self) -> STRtree:
+        return STRtree(self.boxes)
+
+    @cached_property
+    def grid(self) -> BoxGrid:
+        return BoxGrid(self.boxes)
+
+    @cached_property
+    def edges(self) -> EdgeTable:
+        return EdgeTable(self.rings)
+
+    @cached_property
+    def ids(self) -> pa.Array:
+        return pa.array(self.aoi_ids, type=pa.string())
+
+
+_AOI_CACHE: dict[str, _AoiSet] = {}
+
+
+def _aoi_set(bc, token: str) -> _AoiSet:
+    # keyed on a driver-minted uuid token, NOT id(bc): after a broadcast
+    # is garbage-collected CPython can reuse the same id for a new
+    # broadcast of a different AOI table, silently serving stale geometry
+    # in a long-lived reused Python worker
+    if token not in _AOI_CACHE:
+        _AOI_CACHE.clear()  # one AOI set live per worker
+        _AOI_CACHE[token] = _AoiSet(bc.value)
+    return _AOI_CACHE[token]
 
 
 def _tree_for(bc, token: str) -> tuple:
-    # keyed on a driver-minted uuid token, NOT id(bc): after a broadcast
-    # is garbage-collected CPython can reuse the same id for a new
-    # broadcast of a different AOI table, silently serving a stale tree
-    # in a long-lived reused Python worker
-    if token not in _TREE_CACHE:
-        aoi: pd.DataFrame = bc.value
-        boxes = aoi[["minx", "miny", "maxx", "maxy"]].to_numpy(dtype=np.float64)
-        rings = [wkb_rings(w) for w in aoi["wkb"]]
-        _TREE_CACHE.clear()  # one AOI set live per worker
-        _TREE_CACHE[token] = (STRtree(boxes), rings, aoi["aoi_id"].to_numpy())
-    return _TREE_CACHE[token]
+    """(STRtree, rings, aoi_ids) of the broadcast AOI table."""
+    s = _aoi_set(bc, token)
+    return s.tree, s.rings, s.aoi_ids
 
 
 def pip_join(
@@ -67,107 +102,25 @@ def pip_join(
     out_fields = [points.schema[c] for c in keep] + [
         T.StructField("aoi_id", T.StringType(), False)
     ]
-    schema = T.StructType(out_fields)
-    cols = list(keep) + [lon, lat]
+    names = [f.name for f in out_fields]
+    # by position: keep may name lon or lat too
+    ix, iy = len(keep), len(keep) + 1
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        tree, rings, aoi_ids = _tree_for(bc, token)
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        s = _aoi_set(bc, token)
         for b in batches:
-            px = b[lon].to_numpy(dtype=np.float64)
-            py = b[lat].to_numpy(dtype=np.float64)
-            p_idx, box_idx = tree.query_points(px, py)
-            if len(p_idx) == 0:
-                yield pd.DataFrame(columns=list(keep) + ["aoi_id"])
-                continue
-            # refine: group candidate pairs by polygon, one vectorized
-            # ray-cast per polygon
-            order = np.argsort(box_idx, kind="stable")
-            p_idx, box_idx = p_idx[order], box_idx[order]
-            keep_mask = np.zeros(len(p_idx), dtype=bool)
-            starts = np.flatnonzero(np.r_[True, np.diff(box_idx) != 0])
-            ends = np.r_[starts[1:], len(box_idx)]
-            for s, e in zip(starts, ends):
-                ring = rings[box_idx[s]]
-                sel = slice(s, e)
-                keep_mask[sel] = points_in_polygon(px[p_idx[sel]], py[p_idx[sel]], ring)
-            p_hit = p_idx[keep_mask]
-            out = b.iloc[p_hit][list(keep)].reset_index(drop=True)
-            out["aoi_id"] = aoi_ids[box_idx[keep_mask]]
-            yield out
+            px = b.column(ix).to_numpy(zero_copy_only=False).astype(np.float64, copy=False)
+            py = b.column(iy).to_numpy(zero_copy_only=False).astype(np.float64, copy=False)
+            p, box = s.grid.query_points(px, py)
+            inside = s.edges.contains(px[p], py[p], box)
+            p_hit = pa.array(p[inside])
+            yield pa.RecordBatch.from_arrays(
+                [b.column(i).take(p_hit) for i in range(len(keep))]
+                + [s.ids.take(pa.array(box[inside]))],
+                names=names,
+            )
 
-    return points.select(*cols).mapInPandas(run, schema)
-
-
-def cell_cover_join(
-    points: DataFrame,
-    aoi: DataFrame,
-    zoom: int = 6,
-    lon: str = "lon",
-    lat: str = "lat",
-    keep: tuple[str, ...] = ("key",),
-) -> DataFrame:
-    """PIP join for AOI tables too big to broadcast whole: polygons
-    are exploded to the z-cells their envelope covers (Catalyst
-    sequence explode), points carry their cell → distributed
-    EQUI-join on (row, col) — only same-cell pairs meet — then the
-    exact ray-cast refine runs per Arrow batch on the joined pairs
-    (the WKB rides the join).  A point has exactly one cell, so no
-    dedup.  Hot cells fall out to AQE skew split / salting upstream.
-    """
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    from ..functions.tiling import with_tile_columns
-
-    span = 180.0 / 2**zoom
-    pts = with_tile_columns(points, lon, lat, "geodetic", zoom).select(
-        *keep, lon, lat, "tile_row", "tile_col"
-    )
-    cells = (
-        aoi.withColumn(
-            "cr",
-            F.expr(
-                f"explode(sequence(greatest(cast(floor((90.0 - maxy) / {span!r}) as bigint), cast(0 as bigint)), "
-                f"least(cast(floor((90.0 - miny) / {span!r}) as bigint), cast({2**zoom - 1} as bigint))))"
-            ),
-        )
-        .withColumn(
-            "cc",
-            F.expr(
-                f"explode(sequence(greatest(cast(floor((minx + 180.0) / {span!r}) as bigint), cast(0 as bigint)), "
-                f"least(cast(floor((maxx + 180.0) / {span!r}) as bigint), cast({2 ** (zoom + 1) - 1} as bigint))))"
-            ),
-        )
-        .select("aoi_id", "wkb", "cr", "cc")
-    )
-    paired = pts.join(
-        cells, (pts.tile_row == cells.cr) & (pts.tile_col == cells.cc)
-    ).select(*keep, lon, lat, "aoi_id", "wkb")
-
-    schema = T.StructType(
-        [paired.schema[c] for c in keep]
-        + [T.StructField("aoi_id", paired.schema["aoi_id"].dataType, False)]
-    )
-
-    def refine(batches):
-        ring_cache: dict[bytes, np.ndarray] = {}
-        for b in batches:
-            if not len(b):
-                continue
-            px = b[lon].to_numpy(dtype=np.float64)
-            py = b[lat].to_numpy(dtype=np.float64)
-            mask = np.zeros(len(b), dtype=bool)
-            # convert the WKB column ONCE, then group row positions by
-            # polygon — one vectorized ray-cast per distinct polygon
-            # (O(N) instead of O(U×N) re-conversions per unique wkb)
-            wb = b["wkb"].map(bytes)
-            for key_w, pos in wb.groupby(wb, sort=False).indices.items():
-                ring = ring_cache.setdefault(key_w, wkb_rings(key_w))
-                mask[pos] = points_in_polygon(px[pos], py[pos], ring)
-            out = b.loc[mask, list(keep) + ["aoi_id"]]
-            yield out
-
-    return paired.mapInPandas(refine, schema)
+    return points.select(*keep, lon, lat).mapInArrow(run, T.StructType(out_fields))
 
 
 def pip_join_bruteforce(

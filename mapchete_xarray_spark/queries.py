@@ -264,7 +264,8 @@ def tiles_exist_resume_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # 3. point-in-rectangle spatial join (bbox prefilter half of PIP;
-#    polygons + STRtree refine live in operators/pip.py)
+#    polygons + bucket-grid filter / ray-cast refine live in
+#    operators/pip.py)
 # ---------------------------------------------------------------------------
 
 _AOI_N = 64
@@ -602,7 +603,7 @@ def dedup_exact_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# 7. spatial operators: ring kNN (oracle = brute force), STRtree PIP
+# 7. spatial operators: ring kNN (oracle = brute force), broadcast PIP
 #    (rows-only: polygon containment isn't ANSI-SQL without a spatial
 #    extension; parity vs brute force is in tests/test_spatial.py),
 #    salted hot-cell aggregation (oracle = the unsalted group-by)
@@ -695,7 +696,8 @@ def _pip_strtree_oracle() -> str:
     """Independent SQL ray-cast: the AOI ring EDGES are inlined as a
     literal table (E-notation doubles → DuckDB parses as DOUBLE, exact
     float64 roundtrip at 17 sig digits) and the PNPOLY crossing rule of
-    geom.points_in_polygon is transcribed with the IDENTICAL expression
+    geom._crossings (shared by points_in_polygon and the join's
+    EdgeTable refine) is transcribed with the IDENTICAL expression
     order, so IEEE arithmetic agrees bit-for-bit:
 
         cond  = (y0 > lat) != (y1 > lat)
@@ -705,7 +707,7 @@ def _pip_strtree_oracle() -> str:
     (y1 == y0 forces cond false, and DuckDB's double 0/0 → NULL is
     absorbed by the AND.)  No envelope prefilter needed: odd parity
     implies the point is inside the envelope, so all-pairs ray-cast
-    equals the STRtree filter-refine output.
+    equals the join's bucket-grid filter + all-pairs refine output.
 
     Holes and MultiPolygon parts (fixture round 7+) need NO SQL
     change: the parity is summed over ALL of an aoi's ring edges

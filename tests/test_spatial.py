@@ -1,5 +1,5 @@
-"""Spatial operator correctness: STRtree, ray-cast PIP, ring kNN,
-salted aggregation — each against a brute-force reference."""
+"""Spatial operator correctness: STRtree, bucket grid, ray-cast PIP,
+ring kNN, salted aggregation — each against a brute-force reference."""
 
 import numpy as np
 import pandas as pd
@@ -8,11 +8,14 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from mapchete_xarray_spark.geom import (
+    BoxGrid,
+    EdgeTable,
     STRtree,
     points_in_polygon,
     polygon_bounds,
     polygon_wkb,
     wkb_polygon,
+    wkb_rings,
 )
 from mapchete_xarray_spark.sources.aoi import aoi_pandas, aoi_ring
 
@@ -34,13 +37,32 @@ class TestWKB:
 
 
 class TestSTRtree:
-    def _brute(self, boxes, px, py):
-        hits = set()
-        for i, (x, y) in enumerate(zip(px, py)):
-            for j, b in enumerate(boxes):
-                if b[0] <= x <= b[2] and b[1] <= y <= b[3]:
-                    hits.add((i, j))
-        return hits
+    def test_box_query(self):
+        boxes = np.array([[0, 0, 10, 10], [20, 20, 30, 30], [5, 5, 25, 25]], dtype=float)
+        tree = STRtree(boxes)
+        q, b = tree.query_boxes(np.array([[8.0, 8.0, 22.0, 22.0]]))
+        assert set(b.tolist()) == {0, 1, 2}
+
+
+class TestBoxGrid:
+    """``BoxGrid.query_points`` returns exactly the pairs of a
+    brute-force inclusive envelope check, each once."""
+
+    @staticmethod
+    def _check(boxes, px, py):
+        boxes = np.asarray(boxes, dtype=np.float64).reshape(-1, 4)
+        px, py = np.asarray(px, dtype=np.float64), np.asarray(py, dtype=np.float64)
+        p, b = BoxGrid(boxes).query_points(px, py)
+        got = list(zip(p.tolist(), b.tolist()))
+        assert len(got) == len(set(got))
+        inside = (
+            (px[:, None] >= boxes[None, :, 0])
+            & (px[:, None] <= boxes[None, :, 2])
+            & (py[:, None] >= boxes[None, :, 1])
+            & (py[:, None] <= boxes[None, :, 3])
+        )
+        assert set(got) == set(zip(*(i.tolist() for i in np.nonzero(inside))))
+        return got
 
     def test_vs_bruteforce(self):
         boxes = np.column_stack(
@@ -53,39 +75,92 @@ class TestSTRtree:
         )
         boxes[:, 2] = boxes[:, 0] + RNG.uniform(0.1, 20, 300)
         boxes[:, 3] = boxes[:, 1] + RNG.uniform(0.1, 15, 300)
-        px = RNG.uniform(-110, 120, 500)
-        py = RNG.uniform(-90, 90, 500)
-        tree = STRtree(boxes)
-        p, b = tree.query_points(px, py)
-        assert set(zip(p.tolist(), b.tolist())) == self._brute(boxes, px, py)
+        self._check(boxes, RNG.uniform(-110, 120, 500), RNG.uniform(-90, 90, 500))
 
     def test_single_box(self):
-        tree = STRtree(np.array([[0.0, 0.0, 10.0, 10.0]]))
-        p, b = tree.query_points(np.array([5.0, 20.0]), np.array([5.0, 5.0]))
-        assert list(zip(p.tolist(), b.tolist())) == [(0, 0)]
+        got = self._check([[0.0, 0.0, 10.0, 10.0]], [5.0, 20.0, 10.0], [5.0, 5.0, 0.0])
+        assert sorted(got) == [(0, 0), (2, 0)]
 
-    def test_empty_tree(self):
-        tree = STRtree(np.empty((0, 4)))
-        p, b = tree.query_points(np.array([5.0]), np.array([5.0]))
-        assert len(p) == 0
+    def test_empty_grid(self):
+        assert self._check(np.empty((0, 4)), [5.0], [5.0]) == []
 
-    def test_box_query(self):
-        boxes = np.array([[0, 0, 10, 10], [20, 20, 30, 30], [5, 5, 25, 25]], dtype=float)
-        tree = STRtree(boxes)
-        q, b = tree.query_boxes(np.array([[8.0, 8.0, 22.0, 22.0]]))
-        assert set(b.tolist()) == {0, 1, 2}
+    def test_non_finite_coordinates(self):
+        """Non-finite or far-out points match nothing; a non-finite box
+        is refused."""
+        nan, inf = float("nan"), float("inf")
+        got = self._check(
+            [[0.0, 0.0, 10.0, 10.0]],
+            [nan, 5.0, inf, -inf, 5.0, 1e308, -1e308],
+            [5.0, nan, 5.0, 5.0, 5.0, 5.0, 5.0],
+        )
+        assert got == [(4, 0)]
+        with pytest.raises(ValueError, match="finite"):
+            BoxGrid(np.array([[-inf, 0.0, 1.0, 1.0]]))
 
-    @given(st.integers(1, 60), st.integers(1, 40), st.integers(2, 12))
-    @settings(max_examples=30, deadline=None)
-    def test_property(self, nb, npts, leaf):
-        rng = np.random.default_rng(nb * 1000 + npts)
-        boxes = rng.uniform(-50, 50, (nb, 4))
-        boxes[:, 2:] = boxes[:, :2] + np.abs(boxes[:, 2:]) / 5
-        px = rng.uniform(-60, 60, npts)
-        py = rng.uniform(-60, 60, npts)
-        tree = STRtree(boxes, leaf_size=leaf)
-        p, b = tree.query_points(px, py)
-        assert set(zip(p.tolist(), b.tolist())) == self._brute(boxes, px, py)
+    @given(
+        st.integers(0, 60),
+        st.integers(0, 40),
+        st.integers(0, 10**6),
+        st.booleans(),
+        st.booleans(),
+    )
+    @settings(max_examples=60, deadline=None)
+    def test_property(self, nb, npts, seed, snap, cover):
+        """Random boxes, snapped to integers when ``snap`` (shared
+        edges, zero-width and zero-height boxes), optionally one box
+        over the whole extent; points random plus every box corner,
+        every edge midpoint and every cell boundary of the grid."""
+        rng = np.random.default_rng(seed)
+        lo = rng.uniform(-50, 50, (nb, 2))
+        size = rng.exponential(5, (nb, 2)) * (rng.random((nb, 2)) > 0.2)
+        if snap:
+            lo, size = np.round(lo / 5) * 5, np.round(size / 5) * 5
+        boxes = np.column_stack([lo, lo + size])
+        if cover and nb:
+            boxes = np.vstack([boxes, [[boxes[:, 0].min(), boxes[:, 1].min(),
+                                        boxes[:, 2].max(), boxes[:, 3].max()]]])
+        px = [rng.uniform(-60, 60, npts)]
+        py = [rng.uniform(-60, 60, npts)]
+        for x, y in ((0, 1), (2, 3), (0, 3), (2, 1)):
+            px.append(boxes[:, x])
+            py.append(boxes[:, y])
+        px.append((boxes[:, 0] + boxes[:, 2]) / 2)
+        py.append(boxes[:, 1])
+        px.append(boxes[:, 0])
+        py.append((boxes[:, 1] + boxes[:, 3]) / 2)
+        g = BoxGrid(boxes)
+        cx = g.x0 + g.side * np.arange(g.nx + 1)
+        cy = g.y0 + g.side * np.arange(g.ny + 1)
+        px.append(np.repeat(cx, len(cy)))
+        py.append(np.tile(cy, len(cx)))
+        self._check(boxes, np.concatenate(px), np.concatenate(py))
+
+
+class TestEdgeTable:
+    def test_all_pairs_equal_points_in_polygon(self):
+        """The one-pass refine equals ``points_in_polygon`` per
+        geometry, bit for bit, on random points plus every ring vertex
+        and edge midpoint of the fixture (holes and multiparts)."""
+        aoi = aoi_pandas(60)
+        geoms = [wkb_rings(w) for w in aoi.wkb]
+        assert any(len(g) > 1 for g in geoms)
+        verts = np.vstack([r for g in geoms for r in g])
+        mids = np.vstack([(r[:-1] + r[1:]) / 2 for g in geoms for r in g])
+        pts = np.vstack([verts, mids, RNG.uniform([-180, -90], [180, 90], (2000, 2))])
+        table = EdgeTable(geoms)
+        pair_p = np.tile(np.arange(len(pts)), len(geoms))
+        pair_g = np.repeat(np.arange(len(geoms)), len(pts))
+        got = table.contains(pts[pair_p, 0], pts[pair_p, 1], pair_g)
+        want = np.concatenate(
+            [points_in_polygon(pts[:, 0], pts[:, 1], g) for g in geoms]
+        )
+        np.testing.assert_array_equal(got, want)
+        assert want.any()
+
+    def test_no_pairs(self):
+        table = EdgeTable([wkb_rings(w) for w in aoi_pandas(3).wkb])
+        empty = np.empty(0)
+        assert table.contains(empty, empty, empty.astype(np.int64)).shape == (0,)
 
 
 class TestRayCast:
@@ -208,28 +283,6 @@ class TestPipJoinSpark:
         got_set = {(r.key, r.aoi_id) for r in got.collect()}
         assert got_set == pip_join_bruteforce(pdf, aoi)
 
-    def test_cell_cover_join_matches_broadcast(self, spark):
-        """The non-broadcast scale path returns the identical pair set."""
-        from mapchete_xarray_spark.operators.pip import (
-            cell_cover_join,
-            pip_join_bruteforce,
-        )
-
-        n = 2000
-        pdf = pd.DataFrame(
-            {
-                "key": np.arange(n, dtype=np.int64),
-                "lon": RNG.uniform(-180, 180, n),
-                "lat": RNG.uniform(-90, 90, n),
-            }
-        )
-        aoi = aoi_pandas(40)
-        got = cell_cover_join(
-            spark.createDataFrame(pdf), spark.createDataFrame(aoi), zoom=6
-        )
-        got_set = {(r.key, r.aoi_id) for r in got.collect()}
-        assert got_set == pip_join_bruteforce(pdf, aoi)
-
     def test_hot_city_polygon_is_hit(self, spark):
         from mapchete_xarray_spark.operators.pip import pip_join
 
@@ -240,6 +293,43 @@ class TestPipJoinSpark:
         got = pip_join(spark.createDataFrame(pdf), aoi_pandas(10), keep=("key",))
         hit_aois = {r.aoi_id for r in got.collect()}
         assert {"aoi0000", "aoi0001", "aoi0002"} <= hit_aois
+
+
+    def test_null_and_nan_coordinates_match_nothing(self, spark):
+        from mapchete_xarray_spark.operators.pip import pip_join
+
+        pts = spark.createDataFrame(
+            [(0, None, 48.21), (1, 16.37, None), (2, float("nan"), 48.21), (3, 16.37, 48.21)],
+            "key long, lon double, lat double",
+        )
+        got = pip_join(pts, aoi_pandas(10), keep=("key",))
+        assert {(r.key, r.aoi_id) for r in got.collect()} == {(3, "aoi0000")}
+
+    def test_empty_aoi_table(self, spark):
+        from mapchete_xarray_spark.operators.pip import pip_join
+
+        pdf = pd.DataFrame({"key": [0, 1], "lon": [16.37, 0.0], "lat": [48.21, 0.0]})
+        got = pip_join(spark.createDataFrame(pdf), aoi_pandas(0), keep=("key",))
+        assert got.collect() == []
+
+    def test_keep_types_and_plan(self, spark):
+        """Any ``keep`` column type survives (Arrow ``take``), the
+        coordinates may be kept too, and the plan is one MapInArrow
+        with no MapInPandas."""
+        from mapchete_xarray_spark.operators.pip import pip_join
+
+        pts = spark.createDataFrame(
+            [(7, "vienna", [1, 2], 16.37, 48.21), (8, None, None, 0.0, 0.0)],
+            "key long, name string, tags array<int>, lon double, lat double",
+        )
+        got = pip_join(pts, aoi_pandas(10), keep=("key", "name", "tags", "lon"))
+        assert got.columns == ["key", "name", "tags", "lon", "aoi_id"]
+        assert got.schema["tags"].dataType == pts.schema["tags"].dataType
+        rows = [tuple(r) for r in got.collect()]
+        assert (7, "vienna", [1, 2], 16.37, "aoi0000") in rows
+        assert {r[0] for r in rows} == {7}
+        plan = got._jdf.queryExecution().executedPlan().toString()
+        assert "MapInArrow" in plan and "MapInPandas" not in plan, plan
 
 
 @pytest.mark.spark
@@ -831,3 +921,34 @@ def test_knn_job_budget(spark, spark_jobs, tmp_path):
     assert stats["rounds"] == 1
     assert len(rows) == 50 * 5
     assert jobs <= 3, jobs
+
+
+# Spark jobs of one warm tilebench-shaped PIP op (pip_join, then a
+# groupBy(aoi_id) aggregate, collected), measured 3 times: 2.
+PIP_JOBS = 2
+
+
+def test_pip_job_budget(spark, spark_jobs, tmp_path):
+    """A PIP op is the map-only join feeding the aggregate's shuffle
+    map stage, then the final aggregate: PIP_JOBS Spark jobs."""
+    from pyspark.sql import functions as F
+
+    from mapchete_xarray_spark.operators.pip import pip_join
+
+    rng = np.random.default_rng(11)
+    path = str(tmp_path / "points.parquet")
+    spark.createDataFrame(_blob_points(rng, 15.5, 47.5, 2.0, 5000, 5000)).write.parquet(path)
+    data = spark.read.parquet(path)
+    aoi = aoi_pandas(60)
+
+    def op():
+        return (
+            pip_join(data, aoi)
+            .groupBy("aoi_id")
+            .agg(F.count("*").alias("n"), F.sum("key").alias("s"))
+            .collect()
+        )
+
+    op()
+    rows, jobs = spark_jobs(op)
+    assert rows and jobs <= PIP_JOBS, jobs
