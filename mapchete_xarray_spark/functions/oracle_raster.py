@@ -4,7 +4,7 @@ generators behind the raster-family DuckDB oracles.
 
 The pattern matches ``queries._phash_near_dup_oracle``: re-derive the
 deterministic input driver-side with straightforward SERIAL numpy
-(full-tile PNPOLY, no STRtree, no window clipping, no Arrow batching),
+(full-tile PNPOLY, no index, no window clipping, no Arrow batching),
 inline the partial rows as a VALUES table, and let DuckDB run the
 distributed stage's algebra (moment merge + finalize, histogram →
 nearest-rank percentiles, recursive-CTE component union).  The oracle

@@ -14,6 +14,7 @@ to ``spark.sql`` users.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -113,17 +114,14 @@ def register_sql_functions(spark, grid: str = "geodetic", zoom: int = 5) -> None
     """Expose the assignment ops to SQL users as temp views would —
     via named expressions (Spark SQL lacks SQL macros pre-4.x; we
     register a vectorized fallback UDF only for ad-hoc zoom values)."""
-    from pyspark.sql.functions import PandasUDFType
-
     from .. import grid as g
 
     pyr = g.pyramid(grid)
 
-    # no type hints: `from __future__ import annotations` stringifies
-    # them, which pandas_udf's hint inference cannot parse
-    def _tile_id_udf(lon, lat, z):
+    # the hints resolve against this module's globals (pyspark calls
+    # get_type_hints), so ``pd`` is a module-level import
+    def _tile_id_udf(lon: pd.Series, lat: pd.Series, z: pd.Series) -> pd.Series:
         import numpy as np
-        import pandas as pd
 
         from .. import cells
 
@@ -131,6 +129,4 @@ def register_sql_functions(spark, grid: str = "geodetic", zoom: int = 5) -> None
         row, col = g.tile_from_xy(pyr, lon.to_numpy(), lat.to_numpy(), zv)
         return pd.Series(cells.cell_id(np.full(len(row), zv), row, col))
 
-    spark.udf.register(
-        "TILE_ID", F.pandas_udf(_tile_id_udf, "long", PandasUDFType.SCALAR)
-    )
+    spark.udf.register("TILE_ID", F.pandas_udf(_tile_id_udf, "long"))

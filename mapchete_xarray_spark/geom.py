@@ -4,13 +4,11 @@ this sandbox).
 Implements exactly what the spatial operators need, from public
 textbook algorithms:
 
-- ``STRtree``: Sort-Tile-Recursive packed R-tree (Leutenegger et al.
-  1997) over rectangles, bulk box-overlap queries fully vectorized
-  (the tile → zone lookups of ``operators/zonal.py`` and
-  ``operators/rasterize.py``).
 - ``BoxGrid``: uniform bucket grid over rectangles (CSR list of boxes
-  per cell), the PIP join's per-batch point → envelope filter: one
-  cell lookup, one ``np.repeat`` and the inclusive envelope test.
+  per cell), the one AOI index: the PIP join's per-batch point →
+  envelope filter (one cell lookup, one ``np.repeat`` and the
+  inclusive envelope test) and the tile → zone box-overlap queries of
+  ``operators/zonal.py`` and ``operators/rasterize.py``.
 - ``EdgeTable``: every ring edge of every polygon in one CSR table;
   ray-casts all (point, polygon) candidate pairs of a batch in one
   pass (the PIP join's refine).
@@ -38,7 +36,6 @@ import numpy as np
 __all__ = [
     "BoxGrid",
     "EdgeTable",
-    "STRtree",
     "points_in_polygon",
     "polygon_wkb",
     "multipolygon_wkb",
@@ -307,8 +304,8 @@ class BoxGrid:
         np.cumsum(np.bincount(cell, minlength=self.nx * self.ny), out=self.offsets[1:])
 
     def _cell(self, x: np.ndarray, y: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-        """Floored (float) cell coordinates; the one expression boxes
-        and points share."""
+        """Floored (float) cell coordinates; the one expression boxes,
+        points and query boxes share."""
         return np.floor((x - self.x0) / self.side), np.floor((y - self.y0) / self.side)
 
     def query_points(self, px: np.ndarray, py: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -330,92 +327,38 @@ class BoxGrid:
         hit = (px[p] >= b[:, 0]) & (px[p] <= b[:, 2]) & (py[p] >= b[:, 1]) & (py[p] <= b[:, 3])
         return p[hit], box[hit]
 
-
-# ---------------------------------------------------------------------------
-# STR-packed R-tree
-# ---------------------------------------------------------------------------
-
-class STRtree:
-    """Static packed R-tree over n rectangles, Sort-Tile-Recursive
-    bulk-load, node capacity ``leaf_size``.  Stored as flat numpy
-    level arrays → cheap to pickle into a Spark broadcast and shared
-    read-only across executor task threads.
-    """
-
-    def __init__(self, boxes: np.ndarray, leaf_size: int = 8):
-        """boxes: (n, 4) [minx, miny, maxx, maxy]."""
-        boxes = np.asarray(boxes, dtype=np.float64)
-        if boxes.ndim != 2 or boxes.shape[1] != 4:
-            raise ValueError("boxes must be (n, 4)")
-        if leaf_size < 2:
-            # the bottom-up level build shrinks by ceil(n/leaf_size):
-            # leaf_size=1 never shrinks → infinite loop
-            raise ValueError(f"leaf_size must be >= 2, got {leaf_size}")
-        self.leaf_size = leaf_size
-        n = len(boxes)
-        # STR ordering: sort by center x into vertical slabs, then by
-        # center y within each slab
-        cx = (boxes[:, 0] + boxes[:, 2]) / 2
-        cy = (boxes[:, 1] + boxes[:, 3]) / 2
-        nleaves = max(1, -(-n // leaf_size))
-        nslabs = max(1, int(np.ceil(np.sqrt(nleaves))))
-        slab_cap = -(-n // nslabs)
-        order = np.argsort(cx, kind="stable")
-        for s in range(nslabs):
-            sl = order[s * slab_cap : (s + 1) * slab_cap]
-            sl_sorted = sl[np.argsort(cy[sl], kind="stable")]
-            order[s * slab_cap : (s + 1) * slab_cap] = sl_sorted
-        self.order = order  # permutation: tree position -> original index
-        self.boxes = boxes[order]
-        # build levels bottom-up: level[i] = (m_i, 4) node bounds;
-        # always at least one level so the query descent runs even for n<=1
-        self.levels: list[np.ndarray] = []
-        cur = self.boxes
-        while True:
-            m = -(-max(len(cur), 1) // leaf_size)
-            pad = m * leaf_size - len(cur)
-            if pad:
-                padded = np.vstack(
-                    [cur, np.repeat([[np.inf, np.inf, -np.inf, -np.inf]], pad, 0)]
-                )
-            else:
-                padded = cur
-            g = padded.reshape(m, leaf_size, 4)
-            nodes = np.column_stack(
-                [
-                    g[:, :, 0].min(1),
-                    g[:, :, 1].min(1),
-                    g[:, :, 2].max(1),
-                    g[:, :, 3].max(1),
-                ]
+    def query_boxes(self, qboxes: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+        """Bulk query: (query_idx, box_idx) pairs whose boxes overlap
+        (inclusive edges: ``q.minx <= b.maxx & q.maxx >= b.minx``, the
+        same in y), each pair once, sorted by (query, box) — box order
+        is table order.  A query's floored corner cells are clipped to
+        the grid; a query wholly outside the grid, inverted
+        (min > max) or with a NaN corner matches nothing.  Any point
+        of an overlap lies in a cell both boxes cover (floor is
+        monotone), so every overlapping box is listed in one of the
+        query's cells; duplicates from boxes listed in several cells
+        are dropped."""
+        q = np.asarray(qboxes, dtype=np.float64).reshape(-1, 4)
+        with np.errstate(invalid="ignore"):
+            fx0, fy0 = self._cell(q[:, 0], q[:, 1])
+            fx1, fy1 = self._cell(q[:, 2], q[:, 3])
+            ok = (
+                (fx0 <= fx1) & (fy0 <= fy1)
+                & (fx1 >= 0) & (fx0 < self.nx) & (fy1 >= 0) & (fy0 < self.ny)
             )
-            self.levels.append(nodes)
-            if len(nodes) <= 1:
-                break
-            cur = nodes
-
-    def query_boxes(self, qboxes: np.ndarray):
-        """Bulk rectangle-overlap query: (query_idx, box_idx) pairs."""
-        qboxes = np.asarray(qboxes, dtype=np.float64)
-        qs = np.arange(len(qboxes))
-        frontier_q = qs
-        frontier_n = np.zeros(len(qboxes), dtype=np.int64)
-        for depth in range(len(self.levels) - 1, -1, -1):
-            child0 = frontier_n * self.leaf_size
-            p_rep = np.repeat(frontier_q, self.leaf_size)
-            c_idx = (
-                child0[:, None] + np.arange(self.leaf_size)[None, :]
-            ).ravel()
-            lower = self.levels[depth - 1] if depth > 0 else self.boxes
-            valid = c_idx < len(lower)
-            p_rep, c_idx = p_rep[valid], c_idx[valid]
-            b = lower[c_idx]
-            q = qboxes[p_rep]
-            hit = (
-                (q[:, 0] <= b[:, 2])
-                & (q[:, 2] >= b[:, 0])
-                & (q[:, 1] <= b[:, 3])
-                & (q[:, 3] >= b[:, 1])
-            )
-            frontier_q, frontier_n = p_rep[hit], c_idx[hit]
-        return frontier_q, self.order[frontier_n]
+        qi = np.flatnonzero(ok)
+        cx0, cy0 = (np.maximum(f[qi], 0).astype(np.int64) for f in (fx0, fy0))
+        cx1 = np.minimum(fx1[qi], self.nx - 1).astype(np.int64)
+        cy1 = np.minimum(fy1[qi], self.ny - 1).astype(np.int64)
+        # explode each query to its cells, as the boxes were in __init__
+        w = cx1 - cx0 + 1
+        owner, k = _expand(np.zeros(len(qi), dtype=np.int64), w * (cy1 - cy0 + 1))
+        cell = (cy0[owner] + k // w[owner]) * self.nx + cx0[owner] + k % w[owner]
+        start = self.offsets[cell]
+        slot, pos = _expand(start, self.offsets[cell + 1] - start)
+        qq, box = qi[owner[slot]], self.cell_boxes[pos]
+        a, b = q[qq], self.boxes[box]
+        hit = (a[:, 0] <= b[:, 2]) & (a[:, 2] >= b[:, 0]) & (a[:, 1] <= b[:, 3]) & (a[:, 3] >= b[:, 1])
+        n = max(len(self.boxes), 1)
+        pair = np.unique(qq[hit] * n + box[hit])
+        return pair // n, pair % n

@@ -36,22 +36,20 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from ..geom import BoxGrid, EdgeTable, STRtree, points_in_polygon, wkb_rings
+from .. import grid
+from ..geom import BoxGrid, EdgeTable, points_in_polygon, wkb_rings
 
 
 class _AoiSet:
     """One broadcast AOI table's geometry on a worker; each index is
-    built on first use (zonal and rasterize use the tree, the PIP join
-    the grid, the edge table and the Arrow ids)."""
+    built on first use.  The grid is the one AOI index: the PIP join
+    queries it with points (then the edge table and the Arrow ids),
+    zonal and rasterize with tile boxes through ``tile_windows``."""
 
     def __init__(self, aoi: pd.DataFrame):
         self.boxes = aoi[["minx", "miny", "maxx", "maxy"]].to_numpy(dtype=np.float64)
         self.rings = [wkb_rings(w) for w in aoi["wkb"]]
         self.aoi_ids = aoi["aoi_id"].to_numpy()
-
-    @cached_property
-    def tree(self) -> STRtree:
-        return STRtree(self.boxes)
 
     @cached_property
     def grid(self) -> BoxGrid:
@@ -64,6 +62,40 @@ class _AoiSet:
     @cached_property
     def ids(self) -> pa.Array:
         return pa.array(self.aoi_ids, type=pa.string())
+
+    def tile_windows(
+        self, pyr: grid.Pyramid, zoom: int, rows: np.ndarray, cols: np.ndarray
+    ) -> list[list[tuple]]:
+        """The tile × zone window kernel of zonal and rasterize: per
+        tile ``(rows[i], cols[i])`` at ``zoom``, its ``(zone, i0, i1,
+        j0, j1, mask)`` windows in zone-table order, non-empty masks
+        only.  The zones are the grid's box-overlap candidates of the
+        tile bounds; each one's window is the tile's pixel-centre
+        lattice (``grid.pixel_center_coords``) clipped to its
+        envelope, and ``mask`` is PNPOLY membership of the window's
+        pixel centres (``mask`` indexes ``plane[i0:i1, j0:j1]``)."""
+        tile_px = pyr.tile_size * pyr.metatiling
+        bounds = np.column_stack(list(grid.tile_bounds(pyr, zoom, rows, cols)))
+        qi, zi = self.grid.query_boxes(bounds)
+        first = np.searchsorted(qi, np.arange(len(bounds) + 1))
+        out: list[list[tuple]] = [[] for _ in range(len(bounds))]
+        for q in np.unique(qi).tolist():
+            xs, ys = grid.pixel_center_coords(bounds[q], (tile_px, tile_px), pyr, zoom)
+            for z in zi[first[q] : first[q + 1]].tolist():
+                minx, miny, maxx, maxy = self.boxes[z]
+                # xs ascending, ys descending → index windows
+                j0 = int(np.searchsorted(xs, minx, "left"))
+                j1 = int(np.searchsorted(xs, maxx, "right"))
+                i0 = int(np.searchsorted(-ys, -maxy, "left"))
+                i1 = int(np.searchsorted(-ys, -miny, "right"))
+                if i0 >= i1 or j0 >= j1:
+                    continue
+                wx = np.broadcast_to(xs[j0:j1], (i1 - i0, j1 - j0))
+                wy = np.broadcast_to(ys[i0:i1, None], (i1 - i0, j1 - j0))
+                m = points_in_polygon(wx.ravel(), wy.ravel(), self.rings[z])
+                if m.any():
+                    out[q].append((z, i0, i1, j0, j1, m.reshape(i1 - i0, j1 - j0)))
+        return out
 
 
 _AOI_CACHE: dict[str, _AoiSet] = {}
@@ -78,12 +110,6 @@ def _aoi_set(bc, token: str) -> _AoiSet:
         _AOI_CACHE.clear()  # one AOI set live per worker
         _AOI_CACHE[token] = _AoiSet(bc.value)
     return _AOI_CACHE[token]
-
-
-def _tree_for(bc, token: str) -> tuple:
-    """(STRtree, rings, aoi_ids) of the broadcast AOI table."""
-    s = _aoi_set(bc, token)
-    return s.tree, s.rings, s.aoi_ids
 
 
 def pip_join(

@@ -20,8 +20,9 @@ Distributed shape — what crosses the wire is tile KEYS, never pixels:
    serializing the burn behind it on one core).  A continent-sized
    zone fans out to its millions of tiles on executors, not on the
    driver.
-2. **Map-only burn**: per enumerated tile, an STRtree envelope query
-   finds candidate zones, each burns its window-clipped PNPOLY mask
+2. **Map-only burn**: per enumerated tile, a ``BoxGrid`` envelope
+   query finds candidate zones (``pip._AoiSet.tile_windows``, the
+   kernel zonal shares), each burns its window-clipped PNPOLY mask
    onto the tile canvas in zone-table ORDER (later zone wins on
    overlap — GDAL's paint-order rule), and the tile emits one
    TILE_BANDS_SCHEMA plane.  Tiles where no pixel center is inside
@@ -43,7 +44,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import grid
-from ..geom import points_in_polygon
+from ..geom import points_in_polygon, wkb_rings
 from .mosaic import TILE_BANDS_SCHEMA
 
 
@@ -113,7 +114,7 @@ def rasterize_zones(
     import math
     import uuid
 
-    from .pip import _tree_for
+    from .pip import _aoi_set
 
     vals = _burn_values(zones, burn, dtype)
     fill_v = np.dtype(dtype).type(fill)
@@ -122,7 +123,8 @@ def rasterize_zones(
     g_name, g_mt, g_tsz = pyr.grid, pyr.metatiling, pyr.tile_size
 
     rg = zone_tile_ranges(zones, pyr, zoom_v)
-    ranges = spark.createDataFrame(rg)
+    # explicit schema: an empty zone table has no rows to infer from
+    ranges = spark.createDataFrame(rg, "row0 long, row1 long, col0 long, col1 long")
     # The key shuffle is bytes while the burn behind it is the real
     # work, so AQE's size-based coalescing would collapse the distinct
     # output to ONE task and serialize the whole burn on one core.
@@ -160,72 +162,33 @@ def rasterize_zones(
 
     def emit(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         p = grid.Pyramid(g_name, metatiling=g_mt, tile_size=g_tsz)
-        tree, rings, _aoi_ids = _tree_for(bc, token)
-        zb = bc.value[["minx", "miny", "maxx", "maxy"]].to_numpy(np.float64)
+        s = _aoi_set(bc, token)
         burnv = bvals.value
         cols = [f.name for f in TILE_BANDS_SCHEMA.fields]
         for pdf in batches:
-            if not len(pdf):
-                yield pd.DataFrame([], columns=cols)
-                continue
-            qboxes = np.empty((len(pdf), 4), dtype=np.float64)
-            t_keys = []
-            for i, (tr, tc) in enumerate(
-                zip(pdf.tile_row.to_numpy(), pdf.tile_col.to_numpy())
-            ):
-                b = grid.tile_bounds(p, zoom_v, int(tr), int(tc))
-                qboxes[i] = (b.left, b.bottom, b.right, b.top)
-                t_keys.append((int(tr), int(tc), b))
-            qi, zi = tree.query_boxes(qboxes)
-            cand: dict[int, list] = {}
-            for q, z in zip(qi.tolist(), zi.tolist()):
-                cand.setdefault(q, []).append(z)
+            tr, tc = pdf.tile_row.to_numpy(), pdf.tile_col.to_numpy()
             rows = []
-            for q, (tr, tc, b) in enumerate(t_keys):
-                zs = cand.get(q)
-                if not zs:
+            for r, c, wins in zip(
+                tr.tolist(), tc.tolist(), s.tile_windows(p, zoom_v, tr, tc)
+            ):
+                if not wins:
                     continue
-                canvas = None
-                n_burned = 0
-                xs, ys = grid.pixel_center_coords(
-                    b, (tile_px, tile_px), p, zoom_v
-                )
+                canvas = np.full((tile_px, tile_px), fill_v, dtype=np.dtype(dtype))
                 # paint order = zone-table order: later zones win
-                for z in sorted(zs):
-                    minx, miny, maxx, maxy = zb[z]
-                    j0 = int(np.searchsorted(xs, minx, "left"))
-                    j1 = int(np.searchsorted(xs, maxx, "right"))
-                    i0 = int(np.searchsorted(-ys, -maxy, "left"))
-                    i1 = int(np.searchsorted(-ys, -miny, "right"))
-                    if i0 >= i1 or j0 >= j1:
-                        continue
-                    wx = np.broadcast_to(xs[j0:j1], (i1 - i0, j1 - j0))
-                    wy = np.broadcast_to(ys[i0:i1, None], (i1 - i0, j1 - j0))
-                    m = points_in_polygon(
-                        wx.ravel(), wy.ravel(), rings[z]
-                    ).reshape(i1 - i0, j1 - j0)
-                    if not m.any():
-                        continue
-                    if canvas is None:
-                        canvas = np.full(
-                            (tile_px, tile_px), fill_v, dtype=np.dtype(dtype)
-                        )
+                for z, i0, i1, j0, j1, m in wins:
                     canvas[i0:i1, j0:j1][m] = burnv[z]
-                    n_burned += 1
-                if canvas is None:
-                    continue
                 rows.append(
                     (
                         zoom_v,
-                        tr,
-                        tc,
+                        r,
+                        c,
                         int(band),
                         int(ts_idx),
                         tile_px,
                         tile_px,
                         str(np.dtype(dtype)),
-                        np.ascontiguousarray(canvas).tobytes(),
-                        n_burned,
+                        canvas.tobytes(),
+                        len(wins),
                     )
                 )
             yield pd.DataFrame(rows, columns=cols)
@@ -249,7 +212,7 @@ def rasterize_bruteforce(
     pixel."""
     vals = _burn_values(zones, burn, dtype)
     tile_px = pyr.tile_size * pyr.metatiling
-    rings = [_wkb(w) for w in zones["wkb"]]
+    rings = [wkb_rings(w) for w in zones["wkb"]]
     out = {}
     for tr, tc in tiles:
         b = grid.tile_bounds(pyr, zoom, int(tr), int(tc))
@@ -268,9 +231,3 @@ def rasterize_bruteforce(
         if burned:
             out[(int(tr), int(tc))] = canvas
     return out
-
-
-def _wkb(w: bytes) -> list[np.ndarray]:
-    from ..geom import wkb_rings
-
-    return wkb_rings(w)

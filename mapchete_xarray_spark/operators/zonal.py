@@ -10,13 +10,13 @@ is what crosses the wire:
 
 1. **Map-only partials** (``mapInPandas``): the zone table (small by
    contract — the AOI/broadcast side of every spatial join here, see
-   ``operators/pip.py``) is broadcast once; per tile-band plane an
-   STRtree envelope query finds the zones whose bbox intersects the
-   tile, the pixel-center lattice is **window-clipped** to the zone
+   ``operators/pip.py``) is broadcast once; per tile a ``BoxGrid``
+   envelope query finds the zones whose bbox intersects the tile,
+   the pixel-center lattice is **window-clipped** to the zone
    envelope (``grid.pixel_center_coords`` — the reference's own
    coord rule, ``_output.py:616-626``), membership is one vectorized
-   PNPOLY ray-cast per (tile, zone) — cached across the tile's bands
-   and time slices, which share the geometry — and each hit emits ONE
+   PNPOLY ray-cast per (tile, zone) — done once for all the tile's
+   bands and time slices, which share the geometry — and each hit emits ONE
    partial row: (count, sum, sumsq, min, max), ~80 bytes.
 2. **One tiny shuffle**: ``groupBy(aoi_id, band, ts_idx)`` over
    partial rows whose total volume is #zone-tile-intersections — at
@@ -81,12 +81,13 @@ def _zone_values_scan(
     aoi_id, band, ts_idx, vals)`` turns the member pixel values (mask
     + nodata already applied, ORIGINAL dtype preserved) into partial
     rows of ``schema``.  No shuffle at all; the output partitioning
-    inherits the input's.  Geometry work (STRtree envelope query,
-    window-clipped PNPOLY) is cached across each tile's bands and time
+    inherits the input's.  Geometry work (``pip._AoiSet.tile_windows``:
+    grid envelope query, window-clipped PNPOLY) runs once per batch
+    over its unique tiles and serves each tile's bands and time
     slices, which share it."""
     import uuid
 
-    from .pip import _tree_for
+    from .pip import _aoi_set
 
     spark = tiles.sparkSession
     bc = spark.sparkContext.broadcast(zones)
@@ -100,84 +101,34 @@ def _zone_values_scan(
 
     def emit(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         p = grid.Pyramid(g_name, metatiling=g_mt, tile_size=g_tsz)
-        tree, rings, aoi_ids = _tree_for(bc, token)
-        zb = bc.value[["minx", "miny", "maxx", "maxy"]].to_numpy(np.float64)
+        s = _aoi_set(bc, token)
         for pdf in batches:
-            if not len(pdf):
-                yield pd.DataFrame(
-                    [], columns=[f.name for f in schema.fields]
-                )
-                continue
             bad = pdf.tile_zoom.to_numpy()
             if (bad != zoom_v).any():
                 raise ValueError(
                     f"zonal_stats(zoom={zoom_v}) got a tile at zoom "
                     f"{bad[bad != zoom_v][0]} — single-zoom input by contract"
                 )
-            # one envelope query for the whole batch: unique tiles →
-            # candidate zones
+            # one kernel call for the batch's unique tiles; a tile's
+            # windows serve all its bands and time slices
             keys = pdf[["tile_row", "tile_col"]].drop_duplicates()
-            t_bounds = {}
-            qboxes = np.empty((len(keys), 4), dtype=np.float64)
-            t_keys = []
-            for i, (tr, tc) in enumerate(
-                zip(keys.tile_row.to_numpy(), keys.tile_col.to_numpy())
-            ):
-                b = grid.tile_bounds(p, zoom_v, int(tr), int(tc))
-                t_bounds[(int(tr), int(tc))] = b
-                qboxes[i] = (b.left, b.bottom, b.right, b.top)
-                t_keys.append((int(tr), int(tc)))
-            qi, zi = tree.query_boxes(qboxes)
-            cand: dict[tuple, list] = {}
-            for q, z in zip(qi.tolist(), zi.tolist()):
-                cand.setdefault(t_keys[q], []).append(z)
-
-            # PNPOLY masks cache: geometry is shared across a tile's
-            # bands and time slices
-            masks: dict[tuple, tuple] = {}
+            tr, tc = keys.tile_row.to_numpy(), keys.tile_col.to_numpy()
+            windows = dict(
+                zip(zip(tr.tolist(), tc.tolist()), s.tile_windows(p, zoom_v, tr, tc))
+            )
             rows = []
             for r in pdf.itertuples():
                 tkey = (int(r.tile_row), int(r.tile_col))
-                zs = cand.get(tkey)
-                if not zs:
+                wins = windows[tkey]
+                if not wins:
                     continue
                 h, w = int(r.height), int(r.width)
                 if h != tile_px or w != tile_px:
                     raise ValueError(
                         f"tile plane {h}x{w} != pyramid tile_px {tile_px}"
                     )
-                arr = None
-                for z in zs:
-                    mkey = (tkey[0], tkey[1], z)
-                    win = masks.get(mkey)
-                    if win is None:
-                        b = t_bounds[tkey]
-                        xs, ys = grid.pixel_center_coords(b, (h, w), p, zoom_v)
-                        minx, miny, maxx, maxy = zb[z]
-                        # xs ascending, ys descending → index windows
-                        j0 = int(np.searchsorted(xs, minx, "left"))
-                        j1 = int(np.searchsorted(xs, maxx, "right"))
-                        i0 = int(np.searchsorted(-ys, -maxy, "left"))
-                        i1 = int(np.searchsorted(-ys, -miny, "right"))
-                        if i0 >= i1 or j0 >= j1:
-                            masks[mkey] = (0, 0, 0, 0, None)
-                            continue
-                        wx = np.broadcast_to(xs[j0:j1], (i1 - i0, j1 - j0))
-                        wy = np.broadcast_to(
-                            ys[i0:i1, None], (i1 - i0, j1 - j0)
-                        )
-                        m = points_in_polygon(
-                            wx.ravel(), wy.ravel(), rings[z]
-                        ).reshape(i1 - i0, j1 - j0)
-                        win = (i0, i1, j0, j1, m if m.any() else None)
-                        masks[mkey] = win
-                    i0, i1, j0, j1, m = win
-                    if m is None:
-                        continue
-                    if arr is None:
-                        arr = np.frombuffer(
-                            r.payload, dtype=np.dtype(r.dtype)
-                        ).reshape(h, w)
+                arr = np.frombuffer(r.payload, dtype=np.dtype(r.dtype)).reshape(h, w)
+                for z, i0, i1, j0, j1, m in wins:
                     vals = arr[i0:i1, j0:j1][m]
                     if nd is not None:
                         vals = vals[vals != nd]
@@ -187,7 +138,7 @@ def _zone_values_scan(
                         rows_fn(
                             tkey[0],
                             tkey[1],
-                            aoi_ids[z],
+                            s.aoi_ids[z],
                             int(r.band),
                             int(r.ts_idx),
                             vals,

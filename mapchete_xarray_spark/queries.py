@@ -1811,8 +1811,8 @@ def dedup_survivors_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def zonal_stats_aoi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-AOI pixel statistics over the cached geodetic z6 base sink:
-    broadcast-STRtree envelope filter → window-clipped PNPOLY
-    membership (cached across each tile's bands) → 56-byte moment
+    broadcast BoxGrid envelope filter → window-clipped PNPOLY
+    membership (shared by each tile's bands) → 56-byte moment
     partials → ONE tiny shuffle merging them per (aoi_id, band).
     Pixel payloads never shuffle; integer planes make every sum exact
     in float64, so the output is bit-deterministic under any
@@ -1831,7 +1831,7 @@ def _zonal_stats_aoi_oracle() -> str:
     re-derived driver-side by a SERIAL numpy reimplementation of the
     synth→mosaic pipeline (functions/oracle_raster.py — parity vs the
     Spark sink pinned in tests/test_oracle_raster.py), per-(aoi, band,
-    tile) moment partials computed by full-tile PNPOLY (no STRtree, no
+    tile) moment partials computed by full-tile PNPOLY (no index, no
     window clipping), inlined as a VALUES table; DuckDB then runs the
     distributed stage's algebra — the moment MERGE + finalize
     (mean/population-std, round 6) — exactly like zonal_finalize.
@@ -1944,7 +1944,7 @@ def rasterize_aoi_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     bbox ranges via sequence() explode + key-only distinct/respread
     shuffles (the respread defeats AQE's size-based coalescing, which
     would serialize the burn on one task); the burn is map-only
-    (broadcast STRtree + window-clipped PNPOLY in paint order), and no
+    (broadcast BoxGrid + window-clipped PNPOLY in paint order), and no
     pixel crosses an Exchange.  crc32 checksums
     keep the rows-only entry deterministic (integer label planes are
     bit-stable under any partitioning)."""

@@ -259,9 +259,13 @@ class TestBucketedJoin:
 @pytest.mark.spark
 class TestRegisteredUdf:
     def test_tile_id_sql_function(self, spark):
+        import warnings
+
         from mapchete_xarray_spark.functions.tiling import register_sql_functions
 
-        register_sql_functions(spark)
+        with warnings.catch_warnings():
+            warnings.simplefilter("error", UserWarning)
+            register_sql_functions(spark)
         row = spark.sql(
             "select TILE_ID(cast(15.0064 as double), cast(48.7485 as double), 5) as t"
         ).collect()[0]

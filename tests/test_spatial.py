@@ -1,4 +1,4 @@
-"""Spatial operator correctness: STRtree, bucket grid, ray-cast PIP,
+"""Spatial operator correctness: bucket grid, ray-cast PIP,
 ring kNN, salted aggregation — each against a brute-force reference."""
 
 import numpy as np
@@ -10,7 +10,6 @@ from hypothesis import strategies as st
 from mapchete_xarray_spark.geom import (
     BoxGrid,
     EdgeTable,
-    STRtree,
     points_in_polygon,
     polygon_bounds,
     polygon_wkb,
@@ -36,12 +35,19 @@ class TestWKB:
             wkb_polygon(point_wkb)
 
 
-class TestSTRtree:
-    def test_box_query(self):
-        boxes = np.array([[0, 0, 10, 10], [20, 20, 30, 30], [5, 5, 25, 25]], dtype=float)
-        tree = STRtree(boxes)
-        q, b = tree.query_boxes(np.array([[8.0, 8.0, 22.0, 22.0]]))
-        assert set(b.tolist()) == {0, 1, 2}
+def _random_boxes(rng, nb, snap, cover):
+    """Random boxes, snapped to multiples of 5 when ``snap`` (shared
+    edges, zero-width and zero-height boxes), optionally plus one box
+    over the whole extent."""
+    lo = rng.uniform(-50, 50, (nb, 2))
+    size = rng.exponential(5, (nb, 2)) * (rng.random((nb, 2)) > 0.2)
+    if snap:
+        lo, size = np.round(lo / 5) * 5, np.round(size / 5) * 5
+    boxes = np.column_stack([lo, lo + size])
+    if cover and nb:
+        boxes = np.vstack([boxes, [[boxes[:, 0].min(), boxes[:, 1].min(),
+                                    boxes[:, 2].max(), boxes[:, 3].max()]]])
+    return boxes
 
 
 class TestBoxGrid:
@@ -106,19 +112,10 @@ class TestBoxGrid:
     )
     @settings(max_examples=60, deadline=None)
     def test_property(self, nb, npts, seed, snap, cover):
-        """Random boxes, snapped to integers when ``snap`` (shared
-        edges, zero-width and zero-height boxes), optionally one box
-        over the whole extent; points random plus every box corner,
+        """``_random_boxes``; points random plus every box corner,
         every edge midpoint and every cell boundary of the grid."""
         rng = np.random.default_rng(seed)
-        lo = rng.uniform(-50, 50, (nb, 2))
-        size = rng.exponential(5, (nb, 2)) * (rng.random((nb, 2)) > 0.2)
-        if snap:
-            lo, size = np.round(lo / 5) * 5, np.round(size / 5) * 5
-        boxes = np.column_stack([lo, lo + size])
-        if cover and nb:
-            boxes = np.vstack([boxes, [[boxes[:, 0].min(), boxes[:, 1].min(),
-                                        boxes[:, 2].max(), boxes[:, 3].max()]]])
+        boxes = _random_boxes(rng, nb, snap, cover)
         px = [rng.uniform(-60, 60, npts)]
         py = [rng.uniform(-60, 60, npts)]
         for x, y in ((0, 1), (2, 3), (0, 3), (2, 1)):
@@ -134,6 +131,39 @@ class TestBoxGrid:
         px.append(np.repeat(cx, len(cy)))
         py.append(np.tile(cy, len(cx)))
         self._check(boxes, np.concatenate(px), np.concatenate(py))
+
+    @given(
+        st.integers(0, 60),
+        st.integers(0, 30),
+        st.integers(0, 10**6),
+        st.booleans(),
+        st.booleans(),
+    )
+    @settings(max_examples=60, deadline=None)
+    def test_query_boxes_property(self, nb, nq, seed, snap, cover):
+        """``query_boxes`` returns exactly the pairs of a brute-force
+        inclusive overlap check, each once, sorted by (query, box).
+        Boxes: ``_random_boxes``.  Queries: random (snapped with the
+        boxes), every box itself and its edges as zero-width and
+        zero-height queries (touching its neighbours' edges), boxes
+        outside the grid, and one over the whole grid."""
+        rng = np.random.default_rng(seed)
+        boxes = _random_boxes(rng, nb, snap, cover)
+        q = _random_boxes(rng, nq, snap, False)
+        far = [[200.0, 200.0, 300.0, 300.0], [-300.0, -10.0, -200.0, 10.0],
+               [-10.0, 200.0, 10.0, 300.0]]
+        whole = [[-1e3, -1e3, 1e3, 1e3]]
+        qboxes = np.vstack([q, boxes, boxes[:, [0, 1, 0, 3]],
+                            boxes[:, [0, 3, 2, 3]], far, whole])
+        qi, bi = BoxGrid(boxes).query_boxes(qboxes)
+        got = list(zip(qi.tolist(), bi.tolist()))
+        assert got == sorted(set(got))
+        a, b = qboxes[:, None, :], boxes[None, :, :]
+        overlap = (
+            (a[..., 0] <= b[..., 2]) & (a[..., 2] >= b[..., 0])
+            & (a[..., 1] <= b[..., 3]) & (a[..., 3] >= b[..., 1])
+        )
+        assert set(got) == set(zip(*(i.tolist() for i in np.nonzero(overlap))))
 
 
 class TestEdgeTable:
@@ -708,20 +738,6 @@ class TestSaltedAgg:
         partials = {r.cell: r.n for r in p1.groupBy("cell").agg(F.count("*").alias("n")).collect()}
         assert partials[0] == 8  # hot key spread over all salts
         assert all(v == 1 for k, v in partials.items() if k != 0)  # no cold fan-out
-
-
-class TestStrTreeGuards:
-    def test_leaf_size_one_rejected(self):
-        """leaf_size=1 never shrinks the level build (ceil(n/1)==n) —
-        the constructor must reject it instead of hanging."""
-        import numpy as np
-        import pytest as _pytest
-
-        from mapchete_xarray_spark.geom import STRtree
-
-        boxes = np.array([[0.0, 0.0, 1.0, 1.0], [2.0, 2.0, 3.0, 3.0]])
-        with _pytest.raises(ValueError, match="leaf_size"):
-            STRtree(boxes, leaf_size=1)
 
 
 def _knn_brute(data, qs, k, haversine=False):

@@ -102,6 +102,24 @@ class TestZonal:
         df = spark.createDataFrame(planes, TILE_BANDS_SCHEMA)
         assert zonal_stats(df, zones, PYR, ZOOM).count() == 0
 
+    def test_non_finite_zone_box_raises(self, spark):
+        """A NaN envelope is refused, not left to drop zones silently."""
+        zones = aoi_pandas(20)
+        zones.loc[0, "minx"] = np.nan
+        df = spark.createDataFrame(_planes_pdf(), TILE_BANDS_SCHEMA)
+        with pytest.raises(Exception, match="boxes must be finite"):
+            zonal_stats(df, zones, PYR, ZOOM).collect()
+
+    def test_empty_zone_table(self, spark):
+        """An empty zone table gives zonal_stats no rows and
+        rasterize_zones no planes."""
+        from mapchete_xarray_spark.operators.rasterize import rasterize_zones
+
+        zones = aoi_pandas(20).iloc[:0]
+        df = spark.createDataFrame(_planes_pdf(), TILE_BANDS_SCHEMA)
+        assert zonal_stats(df, zones, PYR, ZOOM).count() == 0
+        assert rasterize_zones(spark, zones, PYR, ZOOM).count() == 0
+
     def test_wrong_zoom_raises(self, spark):
         planes = _planes_pdf(tiles=[(2, 3)])
         df = spark.createDataFrame(planes, TILE_BANDS_SCHEMA)
