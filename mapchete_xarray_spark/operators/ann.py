@@ -1,25 +1,30 @@
 """Similarity search over the embeddings table (array<float>, 64-d).
 
-Two paths, same engine-parameterized-SQL design as dedup.py:
+Same engine-parameterized-SQL design as dedup.py: each operator has
+one SQL text (``ann_topk_sql``, ``ann_topk_lsh_sql``,
+``ann_topk_ivf_sql``, ``cosine_pairs_sql``, ``cosine_pairs_lsh_sql``)
+that the DuckDB oracle runs.  Those texts keep the relational dot
+product: posexplode the vectors, equi-join on the component index, sum
+the products.  Cosines are rounded to 6 dp *before* ranking, so every
+engine ranks identically.  Sign-LSH buckets are md5-derived
+random-hyperplane sign bits (``lsh_bucket_sql``), so both engines draw
+the same planes with no RNG state; at 10^12 rows the bucket id is the
+shuffle key, and recall vs brute force is measured in
+tests/test_dedup_ann.py.
 
-- ``ann_topk_sql``: exact brute-force cosine top-k — the correctness
-  baseline.  The dot product is relational: posexplode the vectors,
-  equi-join on the component index, sum the products (Catalyst hash
-  join + partial agg; zero Python).  Cosines are rounded to 6 dp
-  *before* ranking so Spark and the DuckDB oracle rank identically.
-- ``lsh_bucket_sql`` / ``ann_topk_lsh``: the scale path — 12
-  md5-derived random-hyperplane sign bits bucket the vectors; top-k
-  runs only within a query's bucket.  At 10^12 rows the bucket id is
-  the shuffle key (same skew discipline as tile cells); recall vs
-  brute force is measured in tests/test_dedup_ann.py.
+The DataFrame EXECUTION paths share one kernel per decision:
 
-The SQL texts keep the relational dot product (posexplode +
-equi-join on the component index) — that is the DuckDB oracle.  The
-DataFrame EXECUTION paths compute candidate cosines map-side instead
-(``_pairwise_cosine``: one double array per side, zip_with+aggregate
-fold — 1/d-th the shuffle of the exploded join), and the exact
-all-pairs baseline runs as Arrow-batched numpy GEMM
-(``cosine_pairs_arrow_df``).
+- ``_lsh_buckets``: every vector's bucket in each sign-LSH table;
+- ``dedup.banded_pairs``: the first-collision banded self-join over
+  those buckets (the same join serves every near-duplicate path);
+- ``_pairwise_cosine``: candidate cosines, map-side (one double array
+  per side, zip_with+aggregate fold — 1/d-th the shuffle of the
+  exploded join);
+- ``_rank_topk``: the (cosine desc, vec_id asc) top-k of the exact,
+  LSH and IVF top-k paths;
+- ``_cosine_hits``: the numpy GEMM of the exact all-pairs baseline
+  (``cosine_pairs_arrow_df``), in both its broadcast and its
+  block-pair branch.
 """
 
 from __future__ import annotations
@@ -135,32 +140,27 @@ def ann_topk_lsh_sql(
 
 
 # ---------------------------------------------------------------------------
-# Spark DataFrame execution path for the LSH top-k (the SQL text above
-# stays the DuckDB oracle).  Fixes over executing the CTE text: the ±1
-# plane signs are a MATERIALIZED broadcast table of
-# n_tables×n_planes×dims rows (the inline expression recomputed the
-# md5 once per vector×plane×component — ~1.5M hashes for 500 vectors),
-# and the cosine refine over candidates is the map-side array fold
-# (_pairwise_cosine) instead of the CTE's exploded flat⋈flat join.
+# Spark DataFrame execution paths (the SQL texts above stay the DuckDB
+# oracles).  Each similarity decision lives in one kernel:
+#   - _lsh_buckets: the sign-LSH buckets, from a MATERIALIZED broadcast
+#     ±1 plane table of n_tables×n_planes×d rows (the inline expression
+#     recomputed the md5 once per vector×plane×component);
+#   - dedup.banded_pairs: the first-collision banded self-join over them;
+#   - _pairwise_cosine: the map-side array-fold cosine of candidates
+#     (instead of the CTEs' exploded flat⋈flat join);
+#   - _rank_topk: the (cosine desc, vec_id asc) top-k of every ANN path;
+#   - _cosine_hits: the numpy GEMM of both exact all-pairs branches.
 # ---------------------------------------------------------------------------
 
 
-def ann_topk_cosine_df(emb, k: int = 3, n_queries: int = 20):
-    """DataFrame execution of ann_topk_sql: the candidate set is the
-    constant-fan-out broadcast cross join (n_queries rows × corpus —
-    the same allowed BNLJ shape as the plane table), and each
-    candidate's cosine is the map-side array fold (_pairwise_cosine)
-    instead of the CTE's q·n·d exploded equi-join.  Same rows as the
-    SQL text (round-6 before ranking, (cosine desc, id asc) ties)."""
+def _rank_topk(cand, emb, k: int):
+    """(qid, did) candidates → top-k rows (qid, vec_id, cosine, rn):
+    the candidates' map-side cosine (_pairwise_cosine, rounded to 6 dp
+    before ranking, as in the SQL texts) ranked by row_number over
+    (cosine desc, vec_id asc)."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    q = emb.selectExpr("vec_id as qid").where(F.col("qid") < n_queries)
-    cand = (
-        F.broadcast(q)
-        .crossJoin(emb.selectExpr("vec_id as did"))
-        .where(F.col("did") != F.col("qid"))
-    )
     cos = _pairwise_cosine(cand, emb, "qid", "did").selectExpr(
         "qid", "did as vec_id", "cosine"
     )
@@ -172,57 +172,90 @@ def ann_topk_cosine_df(emb, k: int = 3, n_queries: int = 20):
     )
 
 
-def _first_table_pred(n_tables: int, a_prefix: str, b_prefix: str) -> str:
-    """First-table emission predicate (the shared first-collision rule
-    of dedup.first_collision_pred over the ``tbl`` column): true iff
-    every table EARLIER than the joining one has differing buckets."""
-    from .dedup import first_collision_pred
-
-    return first_collision_pred(
-        [(f"{a_prefix}{t}", f"{b_prefix}{t}") for t in range(n_tables - 1)],
-        level_col="tbl",
-    )
-
-
-def _sign_lsh_buckets(proj, n_tables: int):
-    """(vec_id, b0..b{T-1}, tbl, bucket) from the per-(vec_id, t, j)
-    projection sums: ONE shuffle to vec_id computes all T buckets
-    (the old per-(vec_id, tbl) grouping shuffled the same rows but
-    could not carry the sibling tables' buckets, forcing the
-    candidate join into a dedup distinct)."""
-    from pyspark import StorageLevel
+def ann_topk_cosine_df(emb, k: int = 3, n_queries: int = 20):
+    """DataFrame execution of ann_topk_sql: the candidate set is the
+    constant-fan-out broadcast cross join (n_queries rows × corpus —
+    the same allowed BNLJ shape as the plane table), ranked by
+    _rank_topk.  Same rows as the SQL text."""
     from pyspark.sql import functions as F
 
-    wide = proj.groupBy("vec_id").agg(
-        *[
-            F.sum(
-                F.expr(
-                    f"case when t = {t} and s > 0 then cast(pow(2, j) as bigint) "
-                    "else 0 end"
-                )
-            ).alias(f"b{t}")
-            for t in range(n_tables)
-        ]
+    q = emb.selectExpr("vec_id as qid").where(F.col("qid") < n_queries)
+    cand = (
+        F.broadcast(q)
+        .crossJoin(emb.selectExpr("vec_id as did"))
+        .where(F.col("did") != F.col("qid"))
     )
-    stacked = ", ".join(f"{t}, b{t}" for t in range(n_tables))
-    return wide.selectExpr(
-        "vec_id",
-        *[f"b{t}" for t in range(n_tables)],
-        f"stack({n_tables}, {stacked}) as (tbl, bucket)",
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    return _rank_topk(cand, emb, k)
+
+
+def _emb_dim(emb) -> int:
+    """Vector length from a ONE-row probe — an aggregate like
+    max(size(embedding)) would scan the whole n·d column just to size
+    it.  0 for an empty table."""
+    head = emb.selectExpr("size(embedding) as d").head(1)
+    return int(head[0].d) if head else 0
 
 
 def _emb_bytes_est(emb) -> int:
     """Sizing stats for broadcast decisions, not a data read: count(*)
-    over parquet is answered from footer metadata (no column IO) and
-    the dim probe reads ONE row — an aggregate like
-    max(size(embedding)) would scan the whole n·d column just to size
-    it.  One estimate (8 bytes/component + ~24 bytes row overhead)
-    shared by every gate so the caps can't drift apart."""
-    n = emb.count()
-    head = emb.selectExpr("size(embedding) as d").head(1)
-    d = int(head[0].d) if head else 0
-    return int(n) * (d * 8 + 24)
+    over parquet is answered from footer metadata (no column IO) plus
+    the one-row dim probe.  One estimate (8 bytes/component + ~24 bytes
+    row overhead) shared by every gate so the caps can't drift apart."""
+    return int(emb.count()) * (_emb_dim(emb) * 8 + 24)
+
+
+def _lsh_buckets(emb, n_planes: int, n_tables: int):
+    """(vec_id, b0..b{T-1}) — each vector's sign-LSH bucket in each of
+    ``n_tables`` tables, the rows of lsh_bucket_sql's (vec_id, tbl,
+    bucket) folded into one row per vector.  Persisted: banded_pairs
+    reads it on both join sides.
+
+    The plane table is one row per (t, j, i) with the ±1 sign — the
+    exact expression of lsh_bucket_sql, evaluated once per plane
+    component — for the d components of the data (the one-row
+    _emb_dim probe).  A vector of another length fails the query
+    instead of losing the components no plane covers."""
+    from pyspark import StorageLevel
+    from pyspark.sql import functions as F
+
+    d = _emb_dim(emb)
+    # flat is consumed ONCE (the plane projection) — no persist
+    flat = emb.selectExpr(
+        "vec_id",
+        f"posexplode(if(embedding is null or size(embedding) = {d}, embedding, "
+        f"raise_error('sign-LSH needs every embedding of length {d}'))) as (i, x)",
+    ).selectExpr("vec_id", "i", "cast(x as double) as x")
+    planes = emb.sparkSession.range(n_tables * n_planes * d).selectExpr(
+        f"cast(id div {n_planes * d} as bigint) as t",
+        f"cast((id div {d}) % {n_planes} as bigint) as j",
+        f"cast(id % {d} as int) as i",
+        "cast(conv(substring(md5(concat(cast((id div "
+        f"{n_planes * d}) * 1000 + (id div {d}) % {n_planes} as string), "
+        f"'-', cast(id % {d} as string))), 1, 8), 16, 10) as bigint) "
+        "% 2 * 2 - 1 as sign",
+    )
+    proj = (
+        flat.join(F.broadcast(planes), "i")
+        .groupBy("vec_id", "t", "j")
+        .agg(F.sum(F.col("x") * F.col("sign")).alias("s"))
+    )
+    # ONE shuffle to vec_id computes all T buckets, so the banded join
+    # can carry the sibling tables' buckets (first-table emission)
+    return (
+        proj.groupBy("vec_id")
+        .agg(
+            *[
+                F.sum(
+                    F.expr(
+                        f"case when t = {t} and s > 0 then cast(pow(2, j) as bigint) "
+                        "else 0 end"
+                    )
+                ).alias(f"b{t}")
+                for t in range(n_tables)
+            ]
+        )
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
 
 
 def _pairwise_cosine(cand, emb, a: str, b: str):
@@ -274,68 +307,22 @@ def ann_topk_lsh_df(
     n_queries: int = 20,
     n_planes: int = N_PLANES,
     n_tables: int = 1,
-    dims: int = 64,
 ):
-    from pyspark import StorageLevel
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
+    """DataFrame execution of ann_topk_lsh_sql: the queries' bucket
+    collisions over the n_tables sign-LSH tables (banded_pairs — a pair
+    colliding in several tables is emitted once, at its lowest), ranked
+    by _rank_topk.  Same rows as the SQL text."""
+    from .dedup import banded_pairs
 
-    spark = emb.sparkSession
-    # flat is consumed ONCE (the plane projection) now that the
-    # refine is the array-fold _pairwise_cosine — no persist
-    flat = emb.selectExpr("vec_id", "posexplode(embedding) as (i, x)").selectExpr(
-        "vec_id", "i", "cast(x as double) as x"
+    cand = banded_pairs(
+        _lsh_buckets(emb, n_planes, n_tables),
+        "vec_id",
+        [f"b{t}" for t in range(n_tables)],
+        "qid",
+        "did",
+        pair=f"qid < {n_queries} and did != qid",
     )
-    # plane table: one row per (t, j, i) with the ±1 sign — the exact
-    # expression of lsh_bucket_sql, evaluated once per plane component
-    planes = spark.range(n_tables * n_planes * dims).selectExpr(
-        f"cast(id div {n_planes * dims} as bigint) as t",
-        f"cast((id div {dims}) % {n_planes} as bigint) as j",
-        f"cast(id % {dims} as int) as i",
-        "cast(conv(substring(md5(concat(cast((id div "
-        f"{n_planes * dims}) * 1000 + (id div {dims}) % {n_planes} as string), "
-        f"'-', cast(id % {dims} as string))), 1, 8), 16, 10) as bigint) "
-        "% 2 * 2 - 1 as sign",
-    )
-    proj = (
-        flat.join(F.broadcast(planes), "i")
-        .groupBy("vec_id", "t", "j")
-        .agg(F.sum(F.col("x") * F.col("sign")).alias("s"))
-    )
-    buckets = _sign_lsh_buckets(proj, n_tables)
-    bq = buckets.selectExpr(
-        "vec_id as qid",
-        *[f"b{t} as qb{t}" for t in range(n_tables - 1)],
-        "tbl",
-        "bucket",
-    ).where(F.col("qid") < n_queries)
-    bd = buckets.selectExpr(
-        "vec_id as did",
-        *[f"b{t} as db{t}" for t in range(n_tables - 1)],
-        "tbl",
-        "bucket",
-    )
-    # first-table emission instead of distinct(): a pair colliding in
-    # several tables (the point of OR-amplification) is produced only
-    # at its lowest colliding table — every earlier table's buckets
-    # must differ (dedup._lsh_band_candidates' rule) — so the full
-    # candidate-set dedup exchange disappears
-    first_tbl = _first_table_pred(n_tables, "qb", "db")
-    cand = (
-        bq.join(bd, ["tbl", "bucket"])
-        .where(F.col("did") != F.col("qid"))
-        .where(F.expr(first_tbl))
-        .select("qid", "did")
-    )
-    cos = _pairwise_cosine(cand, emb, "qid", "did").selectExpr(
-        "qid", "did as vec_id", "cosine"
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
-    return (
-        cos.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k)
-        .select("qid", "vec_id", "cosine", F.col("rn").cast("int").alias("rn"))
-    )
+    return _rank_topk(cand, emb, k)
 
 
 _IVF_TRAIN_ITERS = 8
@@ -470,7 +457,6 @@ def ann_topk_ivf_df(
     broadcast TRAINED centroid components (the shipped quantizer
     artifact — see ivf_centroids); same rows as the oracle."""
     from pyspark import StorageLevel
-    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     from .. import sizing
@@ -557,15 +543,7 @@ def ann_topk_ivf_df(
         .where(F.col("vec_id") != F.col("qid"))
         .selectExpr("qid", "vec_id as did")
     )
-    cos = _pairwise_cosine(cand, emb, "qid", "did").selectExpr(
-        "qid", "did as vec_id", "cosine"
-    )
-    wq = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
-    return (
-        cos.withColumn("rn", F.row_number().over(wq))
-        .where(F.col("rn") <= k)
-        .select("qid", "vec_id", "cosine", F.col("rn").cast("int").alias("rn"))
-    )
+    return _rank_topk(cand, emb, k)
 
 
 def cosine_pairs_sql(engine: str, threshold: float = 0.4) -> str:
@@ -622,61 +600,71 @@ def cosine_pairs_lsh_df(
     threshold: float = 0.4,
     n_planes: int = N_PLANES,
     n_tables: int = 1,
-    dims: int = 64,
 ):
-    """DataFrame execution of cosine_pairs_lsh_sql (broadcast plane
-    table + persisted flat, like ann_topk_lsh_df)."""
-    from pyspark import StorageLevel
-    from pyspark.sql import functions as F
+    """DataFrame execution of cosine_pairs_lsh_sql: banded_pairs over
+    the sign-LSH buckets (each colliding pair once), then the
+    map-side cosine refine."""
+    from .dedup import banded_pairs
 
-    spark = emb.sparkSession
-    # single-use flat (see ann_topk_lsh_df) — no persist
-    flat = emb.selectExpr("vec_id", "posexplode(embedding) as (i, x)").selectExpr(
-        "vec_id", "i", "cast(x as double) as x"
-    )
-    planes = spark.range(n_tables * n_planes * dims).selectExpr(
-        f"cast(id div {n_planes * dims} as bigint) as t",
-        f"cast((id div {dims}) % {n_planes} as bigint) as j",
-        f"cast(id % {dims} as int) as i",
-        "cast(conv(substring(md5(concat(cast((id div "
-        f"{n_planes * dims}) * 1000 + (id div {dims}) % {n_planes} as string), "
-        f"'-', cast(id % {dims} as string))), 1, 8), 16, 10) as bigint) "
-        "% 2 * 2 - 1 as sign",
-    )
-    proj = (
-        flat.join(F.broadcast(planes), "i")
-        .groupBy("vec_id", "t", "j")
-        .agg(F.sum(F.col("x") * F.col("sign")).alias("s"))
-    )
-    buckets = _sign_lsh_buckets(proj, n_tables)
-    ba = buckets.selectExpr(
-        "vec_id as vec_a",
-        *[f"b{t} as ab{t}" for t in range(n_tables - 1)],
-        "tbl",
-        "bucket",
-    )
-    bb = buckets.selectExpr(
-        "vec_id as vec_b",
-        *[f"b{t} as bb{t}" for t in range(n_tables - 1)],
-        "tbl",
-        "bucket",
-    )
-    # first-table emission replaces the candidate distinct() (the same
-    # rule as the minhash/simhash/phash band joins): a pair is emitted
-    # only at its lowest colliding table
-    cand = (
-        ba.join(bb, ["tbl", "bucket"])
-        .where(F.col("vec_a") < F.col("vec_b"))
-        .where(F.expr(_first_table_pred(n_tables, "ab", "bb")))
-        .select("vec_a", "vec_b")
+    cand = banded_pairs(
+        _lsh_buckets(emb, n_planes, n_tables),
+        "vec_id",
+        [f"b{t}" for t in range(n_tables)],
+        "vec_a",
+        "vec_b",
     )
     return (
         _pairwise_cosine(cand, emb, "vec_a", "vec_b")
         # threshold on the UNROUNDED ratio, round for output — the SQL
         # text's predicate order
-        .where(F.expr(f"_dot / (_na * _nb) >= {threshold}"))
+        .where(f"_dot / (_na * _nb) >= {threshold}")
         .select("vec_a", "vec_b", "cosine")
     )
+
+
+# output of both exact all-pairs branches
+_PAIRS_SCHEMA = "vec_a long, vec_b long, cosine double"
+# cells of one cosine tile in _cosine_hits (≤ 32 MB of float64)
+_TILE_CELLS = 4 << 20
+
+
+def _unit(vectors):
+    """float64 matrix of an embedding column, rows scaled to unit norm."""
+    import numpy as np
+
+    m = np.stack(vectors.to_numpy()).astype(np.float64)
+    return m / np.linalg.norm(m, axis=1, keepdims=True)
+
+
+def _cosine_hits(ids_a, ua, ids_b, ub, thr: float, same: bool):
+    """THE exact-pairs GEMM: (vec_a, vec_b, cosine) arrays of every
+    (a, b) row pair of the unit matrices ``ua``/``ub`` whose cosine is
+    ≥ ``thr``.  The threshold sees the unrounded value and the output
+    is rounded to 6 dp (the SQL text's predicate order).  ``same``:
+    both sides come from one id set, so only id_a < id_b is kept;
+    otherwise each hit is emitted as (min, max).  Rows of ``ua`` are
+    chunked so one cosine tile holds at most _TILE_CELLS cells."""
+    import numpy as np
+
+    step = max(1, _TILE_CELLS // max(len(ids_b), 1))
+    va, vb, vc = [np.empty(0, np.int64)], [np.empty(0, np.int64)], [np.empty(0)]
+    for s in range(0, len(ids_a), step):
+        cos = ua[s : s + step] @ ub.T
+        keep = cos >= thr
+        if same:
+            keep &= ids_a[s : s + step, None] < ids_b[None, :]
+        hr, hc = np.nonzero(keep)
+        a, b = ids_a[s : s + step][hr], ids_b[hc]
+        va.append(np.minimum(a, b))
+        vb.append(np.maximum(a, b))
+        vc.append(np.round(cos[hr, hc], 6))
+    return np.concatenate(va), np.concatenate(vb), np.concatenate(vc)
+
+
+def _pairs_frame(va, vb, vc):
+    import pandas as pd
+
+    return pd.DataFrame({"vec_a": va, "vec_b": vb, "cosine": vc})
 
 
 def cosine_pairs_arrow_df(emb, threshold: float = 0.4):
@@ -688,7 +676,7 @@ def cosine_pairs_arrow_df(emb, threshold: float = 0.4):
 
     - under ``sizing.BROADCAST_MAX_BYTES`` (matrix bytes ≈ n·(8d+24),
       the `_jaccard_refine` sizing discipline): the unit-normalized
-      matrix is broadcast once, each id batch does ONE numpy GEMM
+      matrix is broadcast once, each id batch runs _cosine_hits
       against it — fastest shape when the matrix fits an executor.
     - over the cap: NO driver collect at all — the fully distributed
       block-pair GEMM (``cosine_pairs_blocked_df``) over
@@ -708,8 +696,6 @@ def cosine_pairs_arrow_df(emb, threshold: float = 0.4):
     import math
 
     import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
 
     from .. import sizing
 
@@ -719,43 +705,18 @@ def cosine_pairs_arrow_df(emb, threshold: float = 0.4):
         return cosine_pairs_blocked_df(emb, threshold, n_blocks)
 
     pdf = emb.select("vec_id", "embedding").toPandas()  # sized: fits the broadcast budget
-    ids = pdf.vec_id.to_numpy()
-    m = np.stack(pdf.embedding.to_numpy()).astype(np.float64)
-    u = m / np.linalg.norm(m, axis=1, keepdims=True)
+    ids = pdf.vec_id.to_numpy().astype(np.int64)
+    u = _unit(pdf.embedding)
     order = np.argsort(ids, kind="stable")
     ids, u = ids[order], u[order]
     bc = emb.sparkSession.sparkContext.broadcast((ids, u))
-
-    schema = T.StructType(
-        [
-            T.StructField("vec_a", T.LongType()),
-            T.StructField("vec_b", T.LongType()),
-            T.StructField("cosine", T.DoubleType()),
-        ]
-    )
-
     thr = float(threshold)
 
     def run(batches):
         ids, u = bc.value
-        pos = {int(v): i for i, v in enumerate(ids)}
         for b in batches:
-            ia = np.asarray([pos[int(v)] for v in b["vec_id"].to_numpy()])
-            cos = u[ia] @ u.T  # (batch, n)
-            for r, i in enumerate(ia):
-                # ids are sorted, so positions i+1.. are exactly the
-                # vec_b > vec_a half; threshold on the unrounded value,
-                # round for output — the SQL text's predicate order
-                row = cos[r, i + 1:]
-                hit = np.nonzero(row >= thr)[0]
-                if len(hit):
-                    yield pd.DataFrame(
-                        {
-                            "vec_a": np.full(len(hit), ids[i], dtype=np.int64),
-                            "vec_b": ids[i + 1:][hit].astype(np.int64),
-                            "cosine": np.round(row[hit], 6),
-                        }
-                    )
+            ia = np.searchsorted(ids, b["vec_id"].to_numpy())
+            yield _pairs_frame(*_cosine_hits(ids[ia], u[ia], ids, u, thr, True))
 
     # the id column is the only shuffled data (8 bytes/row); spreading
     # it across the executors parallelizes the per-batch GEMMs — the
@@ -772,7 +733,7 @@ def cosine_pairs_arrow_df(emb, threshold: float = 0.4):
             math.ceil(len(ids) / 512),
         ),
     )
-    return emb.select("vec_id").repartition(nparts).mapInPandas(run, schema)
+    return emb.select("vec_id").repartition(nparts).mapInPandas(run, _PAIRS_SCHEMA)
 
 
 def cosine_pairs_blocked_df(emb, threshold: float = 0.4, n_blocks: int = 8):
@@ -783,26 +744,15 @@ def cosine_pairs_blocked_df(emb, threshold: float = 0.4, n_blocks: int = 8):
     Rows are hashed into ``n_blocks`` blocks; each row is replicated
     to every unordered block pair it participates in (shuffle volume
     n·n_blocks rows — the standard O(n·√tasks) bound for exact
-    all-pairs), and each (gi, gj) group task GEMMs its two O(n/B·d)
-    slices, chunked so the cosine tile stays bounded regardless of
-    block size.  Every unordered vector pair lands in exactly ONE
-    group → no dedup shuffle on the output.  Same rows (round-6
-    doubles, vec_a < vec_b) as the broadcast path and
+    all-pairs), and each (gi, gj) group task runs _cosine_hits over
+    its two O(n/B·d) slices.  Every unordered vector pair lands in
+    exactly ONE group → no dedup shuffle on the output.  Same rows
+    (round-6 doubles, vec_a < vec_b) as the broadcast path and
     cosine_pairs_sql."""
     import numpy as np
-    import pandas as pd
     from pyspark.sql import functions as F
-    from pyspark.sql import types as T
 
-    schema = T.StructType(
-        [
-            T.StructField("vec_a", T.LongType()),
-            T.StructField("vec_b", T.LongType()),
-            T.StructField("cosine", T.DoubleType()),
-        ]
-    )
     thr = float(threshold)
-
     tagged = emb.select("vec_id", "embedding").withColumn(
         "blk", F.pmod(F.xxhash64("vec_id"), F.lit(n_blocks)).cast("int")
     )
@@ -816,68 +766,15 @@ def cosine_pairs_blocked_df(emb, threshold: float = 0.4, n_blocks: int = 8):
         "embedding",
     )
 
-    def _unit(col):
-        m = np.stack(col.to_numpy()).astype(np.float64)
-        return m / np.linalg.norm(m, axis=1, keepdims=True)
-
     def gemm(key, pdf):
         gi, gj = int(key[0]), int(key[1])
-        out = []
-        if gi == gj:
-            # diagonal block: sorted ids → positions i+1.. are exactly
-            # the vec_b > vec_a half (the broadcast path's rule)
-            pdf = pdf.sort_values("vec_id", kind="stable")
-            ids = pdf.vec_id.to_numpy().astype(np.int64)
-            u = _unit(pdf.embedding)
-            ncols = len(ids)
-            step = max(1, (4 << 20) // max(ncols, 1))  # ≤32 MB cosine tile
-            for s in range(0, ncols, step):
-                e = min(ncols, s + step)
-                cos = u[s:e] @ u.T
-                for r in range(e - s):
-                    i = s + r
-                    row = cos[r, i + 1 :]
-                    hit = np.nonzero(row >= thr)[0]
-                    if len(hit):
-                        out.append(
-                            pd.DataFrame(
-                                {
-                                    "vec_a": np.full(len(hit), ids[i], dtype=np.int64),
-                                    "vec_b": ids[i + 1 :][hit],
-                                    "cosine": np.round(row[hit], 6),
-                                }
-                            )
-                        )
-        else:
-            a, b = pdf[pdf.blk == gi], pdf[pdf.blk == gj]
-            if len(a) and len(b):
-                ia = a.vec_id.to_numpy().astype(np.int64)
-                ib = b.vec_id.to_numpy().astype(np.int64)
-                ua, ub = _unit(a.embedding), _unit(b.embedding)
-                step = max(1, (4 << 20) // max(len(ib), 1))
-                for s in range(0, len(ia), step):
-                    e = min(len(ia), s + step)
-                    cos = ua[s:e] @ ub.T
-                    hr, hc = np.nonzero(cos >= thr)
-                    if hr.size:
-                        aa, bb = ia[s:e][hr], ib[hc]
-                        out.append(
-                            pd.DataFrame(
-                                {
-                                    "vec_a": np.minimum(aa, bb),
-                                    "vec_b": np.maximum(aa, bb),
-                                    "cosine": np.round(cos[hr, hc], 6),
-                                }
-                            )
-                        )
-        if not out:
-            return pd.DataFrame(
-                {
-                    "vec_a": pd.Series(dtype="int64"),
-                    "vec_b": pd.Series(dtype="int64"),
-                    "cosine": pd.Series(dtype="float64"),
-                }
-            )
-        return pd.concat(out, ignore_index=True)
+        a, b = pdf[pdf.blk == gi], pdf[pdf.blk == gj]
+        if not (len(a) and len(b)):  # a block without rows: no pairs
+            return _pairs_frame(np.empty(0, "int64"), np.empty(0, "int64"), np.empty(0))
+        ia, ua = a.vec_id.to_numpy().astype("int64"), _unit(a.embedding)
+        if gi == gj:  # a diagonal group holds its one block once
+            return _pairs_frame(*_cosine_hits(ia, ua, ia, ua, thr, True))
+        ib, ub = b.vec_id.to_numpy().astype("int64"), _unit(b.embedding)
+        return _pairs_frame(*_cosine_hits(ia, ua, ib, ub, thr, False))
 
-    return rep.groupBy("gi", "gj").applyInPandas(gemm, schema)
+    return rep.groupBy("gi", "gj").applyInPandas(gemm, _PAIRS_SCHEMA)

@@ -57,6 +57,9 @@ MINHASH_COEFFS = [
 N_BANDS = 2
 ROWS_PER_BAND = 6
 SIMHASH_BITS = 32
+# exact (lang, length-band) blocking candidates past which the n-gram
+# Jaccard pairs swap to MinHash-LSH candidates (ngram_jaccard_pairs_df)
+NGRAM_MAX_CANDIDATES = 2_000_000
 
 
 def _hex2int(engine: str, h: str) -> str:
@@ -288,39 +291,20 @@ def _persist(df: DataFrame) -> DataFrame:
     return df.persist(StorageLevel.MEMORY_AND_DISK)
 
 
-def tokens_df(
-    docs: DataFrame, distinct: bool = True, with_h60: bool = False
-) -> DataFrame:
-    """(doc_id, tok, h[, h60]) — tokens with the md5-derived 32-bit
-    minhash input materialized once per row (the SQL text recomputed
-    the md5 once per aggregate-reference — 12x in minhash, 32x in
-    simhash).  The 60-bit refine fingerprint ``h60`` is OPT-IN: only
-    the exact-Jaccard refine reads it, and computing it
-    unconditionally charged minhash/simhash a second md5+conv per
-    token row (VERDICT r3 wrong #4 — minhash_signatures 0.35→0.72 s).
-
-    ``distinct`` dedups DOC-LOCALLY via ``array_distinct`` before the
-    explode (r9): (doc_id, tok) distinctness is per-doc by definition,
-    so the former global ``distinct()`` — a full Exchange+HashAggregate
-    over every token row — is replaced by a map-side in-row dedup and
-    the plan loses its widest shuffle."""
-    if distinct:
-        t = docs.selectExpr(
+def tokens_df(docs: DataFrame) -> DataFrame:
+    """(doc_id, tok, h) — every non-empty token ROW (multiplicity kept:
+    SimHash weights by term frequency) with its md5-derived 32-bit hash
+    materialized once per row (the SQL text recomputed the md5 once per
+    aggregate-reference — 32x in simhash)."""
+    return (
+        docs.select("doc_id", F.explode(F.split("text", " ")).alias("tok"))
+        .where(F.col("tok") != "")
+        .selectExpr(
             "doc_id",
-            "explode(filter(array_distinct(split(text, ' ')), t -> t != '')) as tok",
+            "tok",
+            "cast(conv(substring(md5(tok), 1, 8), 16, 10) as bigint) as h",
         )
-    else:
-        t = docs.select(
-            "doc_id", F.explode(F.split("text", " ")).alias("tok")
-        ).where(F.col("tok") != "")
-    cols = [
-        "doc_id",
-        "tok",
-        "cast(conv(substring(md5(tok), 1, 8), 16, 10) as bigint) as h",
-    ]
-    if with_h60:
-        cols.append("cast(conv(substring(md5(tok), 1, 15), 16, 10) as bigint) as h60")
-    return t.selectExpr(*cols)
+    )
 
 
 def doc_hash_sets(
@@ -400,37 +384,9 @@ def _minhash_sig_from_sets(sets: DataFrame) -> DataFrame:
     )
 
 
-def minhash_signatures_df(docs: DataFrame, toks: DataFrame | None = None) -> DataFrame:
-    if toks is not None:
-        # legacy shape: aggregate an exploded (doc_id, h) token table
-        return toks.groupBy("doc_id").agg(
-            *[
-                F.min(F.expr(f"({a} * h + {b}) % {MINHASH_P}")).alias(f"mh{i:02d}")
-                for i, (a, b) in enumerate(MINHASH_COEFFS)
-            ]
-        )
+def minhash_signatures_df(docs: DataFrame) -> DataFrame:
     # map-only path: per-doc hash arrays, zero Exchange (guide §2.4)
     return _minhash_sig_from_sets(doc_hash_sets(docs, with_h60=False, with_h=True))
-
-
-def _band_keys(sig: DataFrame) -> DataFrame:
-    """(doc_id, k0..k{N-1}, band, band_key) via a single stack() pass —
-    no N_BANDS-way union re-reading the signature stage.  ALL band keys
-    ride along so the candidate join can implement first-band emission
-    for any N_BANDS (every earlier band's keys must differ — the same
-    rule simhash_pairs_df uses; see lsh_near_dup_pairs_df)."""
-    keys = []
-    for b in range(N_BANDS):
-        cols = ", ".join(
-            f"mh{b * ROWS_PER_BAND + r:02d}" for r in range(ROWS_PER_BAND)
-        )
-        keys.append(f"md5(concat_ws('-', {cols})) as k{b}")
-    stacked = ", ".join(f"{b}, k{b}" for b in range(N_BANDS))
-    return sig.selectExpr("doc_id", *keys).selectExpr(
-        "doc_id",
-        *[f"k{b}" for b in range(N_BANDS)],
-        f"stack({N_BANDS}, {stacked}) as (band, band_key)",
-    )
 
 
 def lsh_near_dup_pairs_df(docs: DataFrame, jaccard_threshold: float = 0.8) -> DataFrame:
@@ -445,56 +401,74 @@ def lsh_near_dup_pairs_df(docs: DataFrame, jaccard_threshold: float = 0.8) -> Da
     return _jaccard_refine(cand, sets, jaccard_threshold)
 
 
-def first_collision_pred(pairs, level_col: str = "band") -> str:
-    """THE first-collision emission rule, shared by every banded join
-    (minhash bands, simhash bands, sign-LSH tables, phash byte-bands):
-    a pair joining at ``level_col`` = L is emitted iff every EARLIER
-    level's key pair differs — so a pair colliding at several levels
-    is produced exactly once (at its lowest), replacing a full
-    candidate-set distinct() shuffle.  ``pairs`` lists the
-    (a_expr, b_expr) key expressions for levels 0..n-2."""
-    pred = " and ".join(
-        f"({level_col} <= {i} or {a} <> {b})" for i, (a, b) in enumerate(pairs)
+def banded_pairs(
+    rows: DataFrame,
+    id_col: str,
+    keys,
+    a: str,
+    b: str,
+    carry=(),
+    pair: str | None = None,
+) -> DataFrame:
+    """THE banded self-join behind every near-duplicate path (minhash
+    bands, simhash bytes, phash bytes, sign-LSH tables).
+
+    ``rows`` holds one row per record: ``id_col``, the level-key
+    columns ``keys`` (k0..k{n-1}) and the ``carry`` columns.  One
+    ``stack`` turns them into (level, key) rows; the two aliased sides
+    equi-join on (level, key), so only same-bucket records meet (the
+    point of LSH), and first-collision emission (every earlier level's
+    keys must differ) yields each pair once without a dedup shuffle.
+    ``pair`` is the pair predicate over the id aliases ``a``/``b``
+    (default ``a < b``).  Output: ``a``, ``b`` and ``<c>_a``/``<c>_b``
+    per carried column.  Callers persist ``rows`` when computing them
+    is not cheap: both sides read it."""
+    keys, carry = list(keys), list(carry)
+    n = len(keys)
+    stacked = ", ".join(f"{lvl}, {k}" for lvl, k in enumerate(keys))
+    keyed = rows.selectExpr(
+        id_col, *keys[:-1], *carry, f"stack({n}, {stacked}) as (_level, _key)"
     )
-    return pred or "true"
+
+    def side(alias: str, s: str) -> DataFrame:
+        return keyed.select(
+            F.col(id_col).alias(alias),
+            *[F.col(c).alias(f"{c}_{s}") for c in keys[:-1] + carry],
+            "_level",
+            "_key",
+        )
+
+    # first-collision emission: a pair joining at level L is kept iff
+    # every EARLIER level's keys differ, so a pair colliding at several
+    # levels is produced once (at its lowest) with no distinct()
+    first_collision_pred = " and ".join(
+        [f"(_level <= {i} or {k}_a <> {k}_b)" for i, k in enumerate(keys[:-1])]
+        or ["true"]
+    )
+    return (
+        side(a, "a")
+        .join(side(b, "b"), ["_level", "_key"])
+        .where(F.expr(pair or f"{a} < {b}"))
+        .where(F.expr(first_collision_pred))
+        .select(a, b, *[f"{c}_{s}" for c in carry for s in ("a", "b")])
+    )
 
 
 def _lsh_band_candidates(sets: DataFrame) -> DataFrame:
     """MinHash-banded candidate pairs (doc_a, doc_b) over any
-    (doc_id, hs)-shaped per-doc hash-ARRAY table (doc_hash_sets).
-
-    Only same-bucket docs meet (the point of LSH).  First-band
-    emission instead of distinct(): a pair colliding in several bands
-    is emitted ONLY at its lowest colliding band — at band b, every
-    EARLIER band's keys must differ (the same rule as
-    simhash_pairs_df, correct for any N_BANDS) — which removes the
-    full candidate-set dedup shuffle; with the in-row signature fold
-    (r9) the bands table is now produced with ZERO exchanges and the
-    self-join broadcast is the plan's only wide node."""
-    # bands is self-joined → persist so the map-side md5+signature
-    # fold runs once (2 small rows per doc)
-    bands = _persist(_band_keys(_minhash_sig_from_sets(sets)))
-    b1 = bands.select(
-        F.col("doc_id").alias("doc_a"),
-        *[F.col(f"k{b}").alias(f"ka{b}") for b in range(N_BANDS - 1)],
-        "band",
-        "band_key",
-    )
-    b2 = bands.select(
-        F.col("doc_id").alias("doc_b"),
-        *[F.col(f"k{b}").alias(f"kb{b}") for b in range(N_BANDS - 1)],
-        "band",
-        "band_key",
-    )
-    first_band = first_collision_pred(
-        [(f"ka{b}", f"kb{b}") for b in range(N_BANDS - 1)]
-    )
-    return (
-        b1.join(b2, ["band", "band_key"])
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .where(F.expr(first_band))
-        .select("doc_a", "doc_b")
-    )
+    (doc_id, hs)-shaped per-doc hash-ARRAY table (doc_hash_sets): one
+    md5 key per band of ROWS_PER_BAND signature values, banded-joined.
+    The key rows are persisted (both join sides read them) and come
+    from the in-row signature fold with ZERO exchanges, so the band
+    join is the plan's only wide node."""
+    band_keys = [
+        "md5(concat_ws('-', "
+        + ", ".join(f"mh{b * ROWS_PER_BAND + r:02d}" for r in range(ROWS_PER_BAND))
+        + f")) as k{b}"
+        for b in range(N_BANDS)
+    ]
+    rows = _persist(_minhash_sig_from_sets(sets).selectExpr("doc_id", *band_keys))
+    return banded_pairs(rows, "doc_id", [f"k{b}" for b in range(N_BANDS)], "doc_a", "doc_b")
 
 
 def _jaccard_refine(cand: DataFrame, sets: DataFrame, threshold: float) -> DataFrame:
@@ -575,7 +549,7 @@ def simhash_df(docs: DataFrame) -> DataFrame:
     """(doc_id, simhash) — the hash is computed once per token ROW
     (tokens_df), not once per bit as in the SQL text's 32-way md5
     expansion (also a giant-expression codegen risk)."""
-    rawtoks = tokens_df(docs, distinct=False)
+    rawtoks = tokens_df(docs)
     bit_sums = [
         F.sum(
             F.expr(f"case when (h >> {i}) % 2 = 1 then 1 else -1 end")
@@ -592,46 +566,26 @@ def simhash_df(docs: DataFrame) -> DataFrame:
 
 def simhash_pairs_df(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Banded Hamming equi-join over the persisted simhash stage (same
-    pigeonhole shape as simhash_pairs_sql, zero recall loss)."""
+    pigeonhole shape as simhash_pairs_sql, zero recall loss): the
+    32-bit hash splits into max_hamming + 1 bands, then the exact
+    bit_count refine."""
     sh = _persist(simhash_df(docs))
     n_bands = max_hamming + 1
     width = SIMHASH_BITS // n_bands
     mask = (1 << width) - 1
-    vals = [f"(simhash >> {b * width}) & {mask} as v{b}" for b in range(n_bands)]
-    stacked = ", ".join(f"{b}, v{b}" for b in range(n_bands))
-    keyed = sh.selectExpr("doc_id", "simhash", *vals).selectExpr(
+    rows = sh.selectExpr(
         "doc_id",
         "simhash",
-        *[f"v{b}" for b in range(n_bands)],
-        f"stack({n_bands}, {stacked}) as (band, band_val)",
+        *[f"(simhash >> {b * width}) & {mask} as k{b}" for b in range(n_bands)],
     )
-    a = keyed.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("simhash").alias("sh_a"),
-        *[F.col(f"v{b}").alias(f"va{b}") for b in range(n_bands)],
-        "band",
-        "band_val",
-    )
-    b = keyed.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("simhash").alias("sh_b"),
-        *[F.col(f"v{b}").alias(f"vb{b}") for b in range(n_bands)],
-        "band",
-        "band_val",
-    )
-    # first-band emission replaces distinct(): a pair is produced only
-    # at its lowest colliding band (all earlier bands must differ)
-    first_band = first_collision_pred(
-        [(f"va{k}", f"vb{k}") for k in range(n_bands - 1)]
-    )
+    ham = "bit_count(simhash_a ^ simhash_b)"
     return (
-        a.join(b, ["band", "band_val"])
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .where(F.expr(first_band))
-        .where(F.expr(f"bit_count(sh_a ^ sh_b) <= {max_hamming}"))
-        .select(
-            "doc_a", "doc_b", F.expr("cast(bit_count(sh_a ^ sh_b) as int)").alias("hamming")
+        banded_pairs(
+            rows, "doc_id", [f"k{b}" for b in range(n_bands)], "doc_a", "doc_b",
+            carry=("simhash",),
         )
+        .where(F.expr(f"{ham} <= {max_hamming}"))
+        .select("doc_a", "doc_b", F.expr(f"cast({ham} as int)").alias("hamming"))
     )
 
 
@@ -652,12 +606,7 @@ def _ngram_candidate_estimate(meta: DataFrame) -> int:
     return est
 
 
-def ngram_jaccard_pairs_df(
-    docs: DataFrame,
-    threshold: float = 0.55,
-    max_candidates: int = 2_000_000,
-    on_oversize: str = "lsh",
-) -> DataFrame:
+def ngram_jaccard_pairs_df(docs: DataFrame, threshold: float = 0.55) -> DataFrame:
     """Same rows as ngram_jaccard_pairs_sql UNDER the candidate gate:
     |Δn_chars| ≤ 16 implies the 16-wide length bands differ by at most
     1, so candidates come from an EQUI-join on (lang, band) with one
@@ -669,45 +618,21 @@ def ngram_jaccard_pairs_df(
     1.81/decade, ~10 hours for this one query at 100× (BENCH/
     SCALING_SF1.md).  Before building anything, the exact blocking-join
     candidate count is computed from per-bucket sizes (a bounded stats
-    collect).  Over ``max_candidates``:
+    collect).  Over ``NGRAM_MAX_CANDIDATES`` the candidates swap to
+    MinHash-LSH bands over the SAME distinct-gram sets — the refine
+    (and thus every emitted jaccard value) stays exact; only recall
+    becomes the banded-LSH guarantee: the 0.29/decade path instead of
+    the 1.81 one.
 
-    - ``on_oversize='lsh'`` (default): candidates swap to MinHash-LSH
-      bands over the SAME distinct-gram sets — the refine (and thus
-      every emitted jaccard value) stays exact; only recall becomes
-      the banded-LSH guarantee.  This is the safe registry default —
-      the 0.29/decade path instead of the 1.81 one.
-    - ``on_oversize='raise'``: ValueError naming the threshold and the
-      LSH path, for callers that need all-pairs-exact or nothing.
-    - ``on_oversize='exact'``: explicit opt-in to the quadratic join
-      (small-scale parity tooling).
-
-    The 2M default keeps the refine in the tens-of-seconds range on a
+    The 2M cap keeps the refine in the tens-of-seconds range on a
     single node (each candidate costs one O(|a|+|b|) ≈ 400-long array
     intersection): the driver fixtures measure ~3.2k candidates at
     sf0.01 and ~300k at sf0.1 (both exact), while the full sf1
     fixture's ~31M crosses into hours-of-refine territory and swaps."""
-    if on_oversize not in ("lsh", "raise", "exact"):
-        # fail CLOSED: an unrecognized value must not fall through to
-        # the quadratic join the gate exists to prevent
-        raise ValueError(
-            f"unknown on_oversize {on_oversize!r}; use 'lsh', 'raise' or 'exact'"
-        )
     meta = docs.selectExpr(
         "doc_id", "lang", "n_chars", "cast(floor(n_chars / 16) as bigint) as band"
     )
-    # 'exact' is an explicit opt-in to the quadratic join — don't pay
-    # the estimator's stats job for a decision that's already made
-    est = 0 if on_oversize == "exact" else _ngram_candidate_estimate(meta)
-    oversize = est > max_candidates
-    if oversize and on_oversize == "raise":
-        raise ValueError(
-            f"ngram_jaccard_pairs: exact blocking join would produce {est:,} "
-            f"candidate pairs (> max_candidates={max_candidates:,}); the exact "
-            "all-pairs path is O(N²/B).  Use on_oversize='lsh' (MinHash-LSH "
-            "candidates + the same exact refine), raise max_candidates, or "
-            "use lsh_near_dup_pairs_df."
-        )
-    if oversize and on_oversize == "lsh":
+    if _ngram_candidate_estimate(meta) > NGRAM_MAX_CANDIDATES:
         grams = _persist(doc_hash_sets(docs, ngram=3, with_h=True))
         cand = _lsh_band_candidates(grams)
         # the (lang, |Δn_chars| <= 16) blocking is part of the

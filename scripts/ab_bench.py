@@ -17,7 +17,11 @@ Usage:
 
 The worker (``--worker``) imports ``mapchete_xarray_spark.queries``
 from the given tree, warms the JVM (parquet footers + a codegen
-compile), then times ``reps`` in-process runs and prints the min.
+compile), then times ``reps`` in-process runs and prints the min.  It
+runs with the tree as its working directory: Spark's Python workers
+put the working directory first on ``sys.path``, so their executors
+import the same tree's package as the driver, wherever the harness is
+started from.
 """
 
 from __future__ import annotations
@@ -72,9 +76,9 @@ def main() -> None:
         _worker(sys.argv[2], sys.argv[3], sys.argv[4])
         return
     query = sys.argv[1]
-    tree_a, tree_b = sys.argv[2], sys.argv[3]
+    tree_a, tree_b = os.path.abspath(sys.argv[2]), os.path.abspath(sys.argv[3])
     pairs = int(sys.argv[4]) if len(sys.argv) > 4 else 4
-    sf_dir = sys.argv[5] if len(sys.argv) > 5 else SF_DIR
+    sf_dir = os.path.abspath(sys.argv[5] if len(sys.argv) > 5 else SF_DIR)
     me = os.path.abspath(__file__)
     times: dict[str, list] = {"A": [], "B": []}
     rows: dict[str, int] = {}
@@ -90,6 +94,7 @@ def main() -> None:
                 capture_output=True,
                 text=True,
                 timeout=1800,
+                cwd=tree,
                 env={**os.environ, "PYTHONPATH": tree},
             )
             sec = None

@@ -292,9 +292,7 @@ occupancy 10x, candidates ~100x), not the engine.
   round 3.  The operator now counts the blocking join's candidates
   from per-bucket sizes before building anything and, past 2M,
   swaps candidates to MinHash-LSH over the same gram sets with the
-  exact refine (`on_oversize='raise'`/`'exact'` opt-outs exist), so
-  the 10x point above measures the gated path.  The ungated
-  quadratic is reachable only by explicit opt-in.
+  exact refine, so the 10x point above measures the gated path.
 """
     os.makedirs("BENCH", exist_ok=True)
     with open("BENCH/SCALING_SF1.md", "w") as f:

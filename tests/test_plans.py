@@ -5,6 +5,9 @@ where a side is small, partition pruning on the sink, no Python eval
 nodes in JVM-only pipelines, no BroadcastNestedLoopJoin anywhere in
 the registry."""
 
+import os
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -143,7 +146,7 @@ class TestPlanShapes:
         ANY hot set."""
         from pyspark.sql import functions as F
 
-        from mapchete_xarray_spark.operators.skew import hot_keys
+        from mapchete_xarray_spark.operators.skew import hot_keys_presampled
 
         pts = (
             spark.read.parquet(f"{sf_dir}/orders.parquet")
@@ -157,13 +160,96 @@ class TestPlanShapes:
         )
         n = pts.count()
         threshold = n // 20  # blob is ~5x over it
-        hot = {r.cell_key for r in hot_keys(pts, "cell_key", threshold, 0.01).collect()}
+        sample = pts.sample(fraction=0.01, seed=42)
+        hot = {
+            r.cell_key
+            for r in hot_keys_presampled(sample, "cell_key", threshold, 0.01).collect()
+        }
         assert 999 in hot, "1% census missed a 25%-of-input blob"
 
     def test_salted_agg_is_two_phase(self, spark, sf_dir):
         plan = _plan(_q.all_queries()["tile_count_salted_z5"](spark, sf_dir))
         # two HashAggregate pairs (partial+final per phase)
         assert plan.count("HashAggregate") >= 4
+
+
+def _formatted(df) -> str:
+    jvm = df.sparkSession._jvm
+    mode = jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    return df._jdf.queryExecution().explainString(mode)
+
+
+def _exchanges(df) -> int:
+    """Exchange nodes (shuffle and broadcast) of the formatted plan tree,
+    each counted once: a cached stage prints under every scan of it,
+    and an executed adaptive stage also prints its initial plan, which
+    is skipped."""
+    tree = _formatted(df).split("\n\n")[0]
+    ids, skip_below = set(), None
+    for line in tree.splitlines():
+        node = line.lstrip(" :+-*")
+        col = len(line) - len(node)
+        if skip_below is not None and col > skip_below:
+            continue
+        skip_below = col if node.startswith("== Initial Plan ==") else None
+        m = re.match(r"(?:Broadcast)?Exchange \((\d+)\)", node)
+        if m:
+            ids.add(m.group(1))
+    return len(ids)
+
+
+@pytest.mark.spark
+class TestBandedPlanBudgets:
+    """Plan budgets of the five banded near-duplicate queries and the
+    IVF top-k at sf0.01 (the first scale whose plans take the shuffle
+    paths the bench sees): one (level, key) band join, no distinct()
+    over the candidate pairs, and no more exchanges than measured when
+    the budgets were set."""
+
+    EXCHANGES = {
+        "lsh_near_dup_pairs": 5,
+        "simhash_near_pairs": 2,
+        "image_phash_near_dup": 1,
+        "ann_topk_lsh": 8,
+        "embedding_near_dup_lsh": 7,
+    }
+
+    @pytest.fixture(scope="class")
+    def sf001(self, sf_dir):
+        path = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.01")
+        if not os.path.isdir(path):
+            pytest.skip(f"no sf0.01 fixture beside {sf_dir}")
+        return path
+
+    @pytest.mark.parametrize("name", sorted(EXCHANGES))
+    def test_one_band_join_no_dedup(self, spark, sf001, name):
+        df = _q.all_queries()[name](spark, sf001)
+        plan = re.sub(r"#\d+L?", "", _plan(df))
+        levels = set(
+            re.findall(
+                r"Generate stack\(.*\), \[[^\]]*\], (?:false|true), \[(\w+), (\w+)\]",
+                plan,
+            )
+        )
+        assert len(levels) == 1, f"{name}: expected one banded stack, got {levels}"
+        joins = re.findall(
+            r"(?:BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin) \[(\w+), (\w+)\], \[",
+            plan,
+        )
+        assert joins.count(levels.pop()) == 1, f"{name}: not one (level, key) join"
+        assert not re.search(r"HashAggregate\(keys=\[[^\]]*\], functions=\[\]", plan), (
+            f"{name}: candidate pairs are deduplicated by an aggregate"
+        )
+        assert _exchanges(df) <= self.EXCHANGES[name]
+
+    def test_ivf_one_shuffle_six_windows(self, spark, sf001):
+        """ann_topk_ivf: the Arrow GEMM assigns and probes map-side, so
+        the only hash shuffle is the top-k ranking's, and its window
+        operators are one Window and two WindowGroupLimit nodes (six
+        mentions in the formatted plan: tree plus details)."""
+        text = _formatted(_q.all_queries()["ann_topk_ivf"](spark, sf001))
+        assert text.count("hashpartitioning") == 1
+        assert text.count("Window") == 6
 
 
 @pytest.mark.spark

@@ -683,7 +683,7 @@ class TestSaltedAgg:
     def test_equals_plain_groupby(self, spark):
         from pyspark.sql import functions as F
 
-        from mapchete_xarray_spark.operators.skew import hot_keys, salted_agg
+        from mapchete_xarray_spark.operators.skew import hot_keys_presampled, salted_agg
 
         df = spark.range(0, 20000).withColumn("cell", (F.col("id") % 7).cast("long"))
         plain = {(r.cell, r.n) for r in df.groupBy("cell").agg(F.count("*").alias("n")).collect()}
@@ -698,7 +698,7 @@ class TestSaltedAgg:
             ).collect()
         }
         assert plain == salted
-        hot = hot_keys(df, "cell", threshold=1000, sample_fraction=0.1)
+        hot = hot_keys_presampled(df.sample(fraction=0.1, seed=42), "cell", 1000, 0.1)
         assert hot.count() == 7  # every cell is hot in this uniform toy
 
     def test_hot_salted_agg_cold_path_no_fanout(self, spark):
@@ -706,13 +706,13 @@ class TestSaltedAgg:
         every cold key produces exactly one partial (salt 0)."""
         from pyspark.sql import functions as F
 
-        from mapchete_xarray_spark.operators.skew import hot_keys, hot_salted_agg
+        from mapchete_xarray_spark.operators.skew import hot_keys_presampled, hot_salted_agg
 
         # 1 hot key (90k rows) + 1000 cold keys (10 rows each)
         df = spark.range(0, 100_000).withColumn(
             "cell", F.expr("case when id < 90000 then 0 else 1 + id % 1000 end").cast("long")
         )
-        hot = hot_keys(df, "cell", threshold=5000, sample_fraction=0.1)
+        hot = hot_keys_presampled(df.sample(fraction=0.1, seed=42), "cell", 5000, 0.1)
         hot_set = {r.cell for r in hot.collect()}
         assert hot_set == {0}
         out = hot_salted_agg(
